@@ -32,7 +32,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Only successful runs compete — a fast failure must not report as a
   * fast query (a query with no successful run reports -1 and is
-  * excluded from totals).
+  * excluded from totals). A failed run is never silent: each failing
+  * query's first exception class and message ride the diag line's
+  * `failures` map, and the run exits 1 after printing both lines.
   */
 object Bench {
   /** Thrown ONLY by the expected-rows guards, so the catch blocks can
@@ -58,6 +60,19 @@ object Bench {
       .mkString("{", ",", "}")
   private[graft] def total(kvs: Seq[(String, Double)]): Double =
     r3(kvs.map(_._2).filter(_ >= 0).sum)
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in builder-authored SQL or an exception message would
+    * otherwise make the reader's json.load fail.
+    */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** The ONE driver-contract JSON line — always printed LAST, carrying
     * only the contract keys + scalar totals; everything per-query
@@ -251,6 +266,13 @@ object Bench {
     val preparedPhys = scala.collection.mutable.Map[
       String, org.apache.spark.sql.execution.SparkPlan]()
     val expectedRows = scala.collection.mutable.Map[String, Long]()
+    // first failure per query, in the order they happened
+    val failures = scala.collection.mutable.LinkedHashMap[String, String]()
+    def failed(d: QueryDef, e: Throwable): None.type = {
+      failures.getOrElseUpdate(d.name,
+        e.getClass.getName + ": " + String.valueOf(e.getMessage).take(300))
+      None
+    }
 
     // one timed execution; count() drains the whole plan. Returns
     // (wall sec, stage profile of exactly this run).
@@ -302,7 +324,7 @@ object Bench {
         // same contract as runUnprepared: a row-count mismatch from the
         // expected-rows guard is a correctness failure, not a timing gap
         case e: RowCountMismatch => throw e
-        case _: Throwable => None
+        case e: Throwable => failed(d, e)
       }
     }
 
@@ -350,7 +372,7 @@ object Bench {
         // the expected-rows guard must fail the bench loudly — a
         // correctness regression is not a missing timing
         case e: RowCountMismatch => throw e
-        case _: Throwable => None
+        case e: Throwable => failed(d, e)
       }
     }
 
@@ -410,6 +432,8 @@ object Bench {
       s""""queries_unprepared":${jsonMap(unprepared)},""" +
       s""""queries_cold":${jsonMap(cold)},""" +
       s""""profiles":$profiles,""" +
+      s""""failures":${failures.map { case (n, e) =>
+        jsonStr(n) + ":" + jsonStr(e) }.mkString("{", ",", "}")},""" +
       s""""bare_job_ms":${r3(bareJobMs)}}""")
     val line = metricLine(warm, total(unprepared), total(cold), cores,
       rawDir, fixture)
@@ -427,5 +451,10 @@ object Bench {
     catch { case _: Throwable => () } // diagnostics only — never fail the bench
     Caches.clear(spark)
     spark.stop()
+    if (failures.nonEmpty) {
+      System.err.println(s"bench: ${failures.size} headline queries " +
+        s"failed: ${failures.keys.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

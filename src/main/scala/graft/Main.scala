@@ -356,7 +356,10 @@ object Main {
           requiredExtensions = createExts)
         println(s"migrated ${result.tablesCreated.size} tables, " +
           s"${result.rowsLoaded.values.sum} rows, " +
-          s"${result.statementsExecuted} statements")
+          s"${result.statementsExecuted} statements (" +
+          MigrationPipeline.Phases.map(p => f"$p " +
+            f"${result.phaseSeconds.getOrElse(p, 0.0)}%.2f s")
+            .mkString(", ") + ")")
         if (result.validationMismatches.nonEmpty)
           throw new MigrationValidationException(
             s"VALIDATION MISMATCHES: ${result.validationMismatches}")

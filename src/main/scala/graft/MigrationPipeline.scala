@@ -48,7 +48,47 @@ final case class MigrationReport(
     rowsLoaded: Map[String, Long],
     validationMismatches: Map[String, (Long, Long)],
     statementsExecuted: Int,
-    checksumMismatches: Map[String, (String, String)] = Map.empty)
+    checksumMismatches: Map[String, (String, String)] = Map.empty,
+    phaseSeconds: Map[String, Double] = Map.empty)
+
+object MigrationPipeline {
+  /** The phases [[MigrationReport.phaseSeconds]] times, in run order. */
+  val Phases: Seq[String] = Seq("ddl", "load", "validate", "post")
+
+  /** The count half of a `"<count>:<sum>"` digest. */
+  private def digestCount(digest: String): Option[Long] =
+    digest.takeWhile(_ != ':').toLongOption
+
+  /** `f` over `items` on up to `width` threads, results in item order.
+    * After the first failure no further item starts; items already
+    * running finish (so a load's completed chunks still reach the
+    * checkpoint), then the first error is rethrown with the later ones
+    * attached as suppressed. Width 1 runs on the calling thread.
+    */
+  private def fanOut[A, B](items: Seq[A], width: Int)(
+      f: A => B): Seq[B] = {
+    val n = math.min(width, items.size)
+    if (n <= 1) return items.map(f)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    val results = try {
+      items.map(a => pool.submit(new java.util.concurrent.Callable[
+        Option[B]] {
+        def call(): Option[B] =
+          if (!errors.isEmpty) None
+          else try Some(f(a)) catch {
+            case e: Throwable => errors.add(e); None
+          }
+      })).map(_.get())
+    } finally pool.shutdown()
+    if (!errors.isEmpty) {
+      val first = errors.poll()
+      errors.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
+    results.map(_.get)
+  }
+}
 
 /** The reference's migration lifecycle (`main.go:125-348` +
   * `post.go:17-100`), re-expressed as driver-side orchestration around
@@ -65,6 +105,13 @@ final case class MigrationReport(
   * attaches constraints in 4; data_only skips 1 and all post DDL except
   * sequence resets (reference `main.go:288-326,350-402`,
   * `post.go:17-100`).
+  *
+  * Concurrency: the data phase loads up to `workers` tables at once (the
+  * reference puts every chunk of every table behind one `workers`
+  * semaphore, `migrate.go:65-120`); SQLite sources and `single_tx` load
+  * one table at a time. Validation runs each table's source and target
+  * scan as separate tasks in one pool of `min(workers, 2 × tables)`.
+  * DDL stays on the calling thread.
   */
 final class MigrationPipeline(
     cfg: JobConfig,
@@ -85,7 +132,15 @@ final class MigrationPipeline(
   def migrate(tables: Seq[TableMeta],
       enumValueSets: Seq[Seq[String]] = Nil,
       requiredExtensions: Seq[String] = Nil): MigrationReport = {
+    import MigrationPipeline.{digestCount, fanOut}
     val schema = cfg.targetSchema
+    val phaseSeconds = scala.collection.mutable.LinkedHashMap[String, Double]()
+    var phaseStart = System.nanoTime()
+    def endPhase(name: String): Unit = {
+      val now = System.nanoTime()
+      phaseSeconds(name) = (now - phaseStart) / 1e9
+      phaseStart = now
+    }
     // UNLOGGED only pays off for the bulk load; split modes force it off
     // (reference main.go:129-132)
     val unlogged = cfg.unloggedTables && !cfg.schemaOnly && !cfg.dataOnly
@@ -127,6 +182,7 @@ final class MigrationPipeline(
         }
       } finally checkpoint.foreach(_.flush())
     }
+    endPhase("ddl")
 
     // 2. data phase (hooks bracket the load, reference main.go:288-326).
     // data_only loads into a pre-existing constrained schema, so target
@@ -141,14 +197,19 @@ final class MigrationPipeline(
           (if (enable) "ENABLE" else "DISABLE") + " TRIGGER ALL"))
     // Fully-done tables are skipped outright on resume; partially-done
     // tables re-enter loader.load, which skips completed chunks
-    // internally. On ANY load failure the checkpoint flushes its partial
-    // progress before the error propagates (reference
-    // migrate.go:122-146); after a fully-successful data phase the file
-    // is deleted — nothing remains to resume (migrate.go:251-254).
+    // internally. Tables load concurrently (see the class doc); on
+    // ANY load failure no further table starts, the loads in flight
+    // finish, and the checkpoint flushes their partial progress before
+    // the first error propagates (reference migrate.go:122-146); after a
+    // fully-successful data phase the file is deleted — nothing remains
+    // to resume (migrate.go:251-254).
     def dataPhase(): Map[String, Long] = {
       runHooks("before_data")
+      val loadWidth =
+        if (cfg.mode == "single_tx") 1
+        else SourceDialect(cfg.sourceDialect).maxWorkers(cfg.workers)
       val loaded =
-        try tables.map { t =>
+        try fanOut(tables, loadWidth) { t =>
           checkpoint match {
             case Some(cp) if cp.isTableDone(t.name) =>
               t.name -> cp.rowsCopied(t.name)
@@ -186,50 +247,50 @@ final class MigrationPipeline(
         }
       }
 
+    endPhase("load")
+
     // 3. validation (reference validate.go:42-135; skipped in
     // schema_only — there is no data to compare, main.go:328-339).
-    // Counts run in parallel bounded by `workers`, like the reference's
-    // validation pool.
+    // Every table's source and target scan is its own task in one pool
+    // bounded by `workers`, like the reference's validation pool, so a
+    // large table's two scans overlap instead of queueing. checksum
+    // validation adds content equality to the reference's count compare
+    // and takes the counts from the same scan (a digest is
+    // "<count>:<sum>"); a table whose loader can't digest (None) falls
+    // back to the count compare. The largest tables (by rows loaded)
+    // start first, so the longest scans do not queue behind short ones.
+    val width = math.max(1, math.min(cfg.workers, 2 * tables.size))
+    val bySize = tables.sortBy(t => -loaded.getOrElse(t.name, 0L))
+    def bothSides[T](ts: Seq[TableMeta])(src: TableMeta => T,
+        tgt: TableMeta => T): Seq[(TableMeta, T, T)] = {
+      val r = fanOut(ts.flatMap(t => Seq((t, true), (t, false))), width) {
+        case (t, isSrc) => if (isSrc) src(t) else tgt(t)
+      }.toIndexedSeq
+      ts.indices.map(i => (ts(i), r(2 * i), r(2 * i + 1)))
+    }
     val validating =
       Set("row_count", "checksum")(cfg.validation) && !cfg.schemaOnly
-    val mismatches =
-      if (validating) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(cfg.workers, tables.size)))
-        try tables.map { t =>
-          t.name -> pool.submit(
-            new java.util.concurrent.Callable[(Long, Long)] {
-              def call(): (Long, Long) =
-                (loader.sourceCount(t), loader.targetCount(t))
-            })
-        }.flatMap { case (name, f) =>
-          val (src, tgt) = f.get()
-          if (src != tgt) Some(name -> (src, tgt)) else None
-        }.toMap
-        finally pool.shutdown()
-      } else Map.empty[String, (Long, Long)]
-    // checksum validation — content equality on top of the reference's
-    // count compare; a table whose loader can't digest (None) already
-    // had its counts checked above
-    val checksumMismatches =
-      if (cfg.validation == "checksum" && !cfg.schemaOnly) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(cfg.workers, tables.size)))
-        try tables.map { t =>
-          t.name -> pool.submit(new java.util.concurrent.Callable[
-            (Option[String], Option[String])] {
-            def call(): (Option[String], Option[String]) =
-              (loader.sourceDigest(t), loader.targetDigest(t))
-          })
-        }.flatMap { case (name, f) =>
-          f.get() match {
-            case (Some(src), Some(tgt)) if src != tgt =>
-              Some(name -> (src, tgt))
-            case _ => None
-          }
-        }.toMap
-        finally pool.shutdown()
-      } else Map.empty[String, (String, String)]
+    val digests =
+      if (validating && cfg.validation == "checksum")
+        bothSides(bySize)(loader.sourceDigest, loader.targetDigest)
+      else Nil
+    val digestCounts = digests.flatMap {
+      case (t, Some(s), Some(d)) =>
+        for (a <- digestCount(s); b <- digestCount(d)) yield (t, a, b)
+      case _ => None
+    }
+    val counted = digestCounts.map(_._1.name).toSet
+    val counts =
+      if (!validating) Nil
+      else digestCounts ++ bothSides(bySize.filterNot(t => counted(t.name)))(
+        loader.sourceCount, loader.targetCount)
+    val mismatches = counts.collect {
+      case (t, src, tgt) if src != tgt => t.name -> (src, tgt)
+    }.toMap
+    val checksumMismatches = digests.collect {
+      case (t, Some(src), Some(tgt)) if src != tgt => t.name -> (src, tgt)
+    }.toMap
+    endPhase("validate")
 
     // 4. post phase (reference post.go:17-100 order). data_only skips
     // all DDL (constraints already exist on the pre-created schema) —
@@ -283,8 +344,9 @@ final class MigrationPipeline(
           DdlGenerator.onUpdateTrigger(schema, t.name, c).foreach(run)))
     }
     runHooks("after_all")
+    endPhase("post")
 
     MigrationReport(tables.map(_.name), loaded, mismatches, stmtCount,
-      checksumMismatches)
+      checksumMismatches, phaseSeconds.toMap)
   }
 }

@@ -128,6 +128,18 @@ object Tables {
     }
 }
 
+/** Engine-neutral 4-dp rounding: floor(x*10^4 + 0.5)/10^4 as identical
+  * IEEE double ops in Spark and DuckDB. Engine round() builtins disagree
+  * on near-tie doubles (HALF_UP on exact binary vs scaled-multiply), so
+  * oracle queries use this form on BOTH sides.
+  */
+object Round4 {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions.floor
+  def apply(c: Column): Column = floor(c * 10000d + 0.5d) / 10000d
+  val sql: String => String = x => s"floor(($x) * 10000 + 0.5) / 10000"
+}
+
 /** One engine query: Spark builder + optional DuckDB oracle SQL.
   *
   * The oracle SQL must produce the same column NAMES (driver sorts columns
@@ -142,18 +154,6 @@ object Tables {
   * run). Plans must be correct under BOTH profiles — the flag only trades
   * runtime re-planning for scheduling floor.
   */
-/** Engine-neutral 4-dp rounding: floor(x*10^4 + 0.5)/10^4 as identical
-  * IEEE double ops in Spark and DuckDB. Engine round() builtins disagree
-  * on near-tie doubles (HALF_UP on exact binary vs scaled-multiply), so
-  * oracle queries use this form on BOTH sides.
-  */
-object Round4 {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.floor
-  def apply(c: Column): Column = floor(c * 10000d + 0.5d) / 10000d
-  val sql: String => String = x => s"floor(($x) * 10000 + 0.5) / 10000"
-}
-
 final case class QueryDef(
     name: String,
     build: (SparkSession, String) => DataFrame,

@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. Every query
+  * that throws is listed on stderr at the end and the run exits 1; the
+  * dump of the others still completes. */
 object Verify {
   def main(args: Array[String]): Unit = {
     if (args.length < 2 || args.length > 3) {
@@ -29,6 +31,7 @@ object Verify {
     // during planning/commit). Each query writes its own directory;
     // view/function registration is per-query-unique or idempotent.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val tasks = SparkEntry.queries.toSeq.filter(t => keep(t._1))
       .map { case (name, fn) =>
       pool.submit(new Runnable {
@@ -37,6 +40,8 @@ object Verify {
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            failed.add(s"$name: ${e.getClass.getName}: ${e.getMessage}")
+            ()
           }
       })
     }
@@ -45,18 +50,10 @@ object Verify {
     // release every corpus relation the query builders persisted —
     // without this a full-catalog session holds all of them for life
     Caches.clear(spark)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Bench.jsonStr escapes every control char: one left raw in
+    // builder-authored SQL would make the oracle compare's json.load
+    // fail and silently zero the correctness check
+    import Bench.{jsonStr => q}
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -76,5 +73,12 @@ object Verify {
     ).map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/env.json"), env)
     spark.stop()
+    if (!failed.isEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} of ${tasks.size} queries failed:")
+      failed.toArray.map(_.toString).sorted
+        .foreach(f => System.err.println(s"[verify]   $f"))
+      sys.exit(1)
+    }
   }
 }

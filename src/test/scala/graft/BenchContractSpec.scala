@@ -57,4 +57,14 @@ class BenchContractSpec extends AnyFunSuite {
     // q58 stays in the CATALOG (correctness + spec gates)
     assert(SparkEntry.defs.exists(_.name == "q58_embed_neardup_lsh"))
   }
+
+  test("a failed query's exception text stays one JSON string on the " +
+      "diag line") {
+    val msg = "bad \"quote\" \\ path\nsecond line\ttab"
+    val js = Bench.jsonStr(msg)
+    assert(!js.contains("\n") && !js.contains("\t"))
+    assert(js == "\"bad \\\"quote\\\" \\\\ path\\nsecond " +
+      "line\\ttab\"")
+    assert(Bench.jsonStr("\u0001") == "\"\\u0001\"")
+  }
 }

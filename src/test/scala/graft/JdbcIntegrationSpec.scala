@@ -156,6 +156,10 @@ class JdbcIntegrationSpec extends AnyFunSuite {
     assert(src == loader.targetDigest(meta).get,
       "digests differ after a faithful load")
     assert(src.startsWith("50:"))
+    // pinned to the value the digest definition has always produced
+    // (canonical \u0001-joined Spark strings, md5's first 15 hex chars,
+    // exact sum): a drift here would flag every faithful copy as corrupt
+    assert(src == "50:24342944566802710442")
     // corrupt ONE value without changing the row count — count
     // validation is blind to this, the digest is not
     val cc = DriverManager.getConnection(tgtUrl)
@@ -368,6 +372,112 @@ class JdbcIntegrationSpec extends AnyFunSuite {
         "SELECT COUNT(*) FROM \"accts\"")
       rs2.next(); assert(rs2.getLong(1) == 40L)
     } finally check.close()
+  }
+
+  /** Source tables `FAN<i>` (INT primary key `ID`, `TAG`, `AMT`) with the
+    * given row counts, plus one VARCHAR-keyed table that loads unchunked.
+    */
+  private def seedFanSource(url: String, rows: Seq[Int]): Unit = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val st = c.createStatement()
+      rows.zipWithIndex.foreach { case (n, t) =>
+        st.execute(s"CREATE TABLE FAN$t (ID INT NOT NULL PRIMARY KEY, " +
+          "TAG VARCHAR(20), AMT DOUBLE)")
+        val ins = c.prepareStatement(s"INSERT INTO FAN$t VALUES (?, ?, ?)")
+        (1 to n).foreach { i =>
+          ins.setInt(1, i)
+          if (i % 11 == 0) ins.setNull(2, java.sql.Types.VARCHAR)
+          else ins.setString(2, s"t${t}_$i")
+          ins.setDouble(3, i * 0.5); ins.addBatch()
+        }
+        ins.executeBatch()
+      }
+      st.execute("CREATE TABLE FANCODES (CODE VARCHAR(10) NOT NULL " +
+        "PRIMARY KEY, LABEL VARCHAR(20))")
+      val ins = c.prepareStatement("INSERT INTO FANCODES VALUES (?, ?)")
+      (1 to 30).foreach { i =>
+        ins.setString(1, f"c$i%03d"); ins.setString(2, s"label $i")
+        ins.addBatch()
+      }
+      ins.executeBatch()
+    } finally c.close()
+  }
+
+  /** Target DDL on Derby: everything but PostgreSQL's sequence resets. */
+  private final class DerbyTarget(url: String) extends SqlExecutor {
+    val jdbc = new JdbcExecutor(url)
+    def execute(sql: String): Unit =
+      if (!sql.startsWith("SELECT setval")) jdbc.execute(sql)
+  }
+
+  test("parallel migration on Derby with workers = 4: tables load side " +
+      "by side and end count- and checksum-equal") {
+    import graft.config.JobConfig
+    import graft.sources.{GenericJdbcDialect, Introspection, SchemaMapping,
+      TypeOptions}
+    val srcUrl = "jdbc:derby:memory:graftfansrc;create=true"
+    val tgtUrl = "jdbc:derby:memory:graftfantgt;create=true"
+    seedFanSource(srcUrl, Seq(450, 300, 120, 60))
+    val conn = DriverManager.getConnection(srcUrl)
+    val (sts, _) = try Introspection.fromJdbcMetadata(conn, "APP")
+      finally conn.close()
+    val metas = sts.map(st => SchemaMapping.toTableMeta(GenericJdbcDialect,
+      st, Nil, TypeOptions()))
+    val cfg = JobConfig(sourceDialect = "jdbc", sourceUrl = srcUrl,
+      targetUrl = tgtUrl, targetSchema = "fan", chunkSize = 100L,
+      workers = 4, validation = "checksum", unloggedTables = false)
+    val inner = new SparkTableLoader(spark, cfg, sts)
+    // a wrapping loader that counts the loads in flight
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger
+    val loader = new TableLoader {
+      def load(t: graft.sources.TableMeta): Long = {
+        maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+        try inner.load(t) finally { inFlight.decrementAndGet(); () }
+      }
+      def sourceCount(t: graft.sources.TableMeta): Long = inner.sourceCount(t)
+      def targetCount(t: graft.sources.TableMeta): Long = inner.targetCount(t)
+      override def sourceDigest(t: graft.sources.TableMeta) =
+        inner.sourceDigest(t)
+      override def targetDigest(t: graft.sources.TableMeta) =
+        inner.targetDigest(t)
+    }
+    val exec = new DerbyTarget(tgtUrl)
+    val report = try new MigrationPipeline(cfg, exec, loader).migrate(metas)
+      finally exec.jdbc.close()
+    assert(maxInFlight.get >= 2 && maxInFlight.get <= 4)
+    assert(report.rowsLoaded == Map("fan0" -> 450L, "fan1" -> 300L,
+      "fan2" -> 120L, "fan3" -> 60L, "fancodes" -> 30L))
+    assert(report.validationMismatches.isEmpty)
+    assert(report.checksumMismatches.isEmpty)
+  }
+
+  test("single_tx loads stay sequential: the snapshot loader opens one " +
+      "source connection under workers = 4") {
+    import graft.config.JobConfig
+    import graft.sources.{GenericJdbcDialect, Introspection, SchemaMapping,
+      SingleTxTableLoader, TypeOptions}
+    val srcUrl = "jdbc:derby:memory:graftstxfan;create=true"
+    val tgtUrl = "jdbc:derby:memory:graftstxfant;create=true"
+    seedFanSource(srcUrl, Seq(120, 80))
+    val conn = DriverManager.getConnection(srcUrl)
+    val (sts, _) = try Introspection.fromJdbcMetadata(conn, "APP")
+      finally conn.close()
+    val metas = sts.map(st => SchemaMapping.toTableMeta(GenericJdbcDialect,
+      st, Nil, TypeOptions()))
+    val cfg = JobConfig(mode = "single_tx", sourceDialect = "jdbc",
+      sourceUrl = srcUrl, targetUrl = tgtUrl, targetSchema = "stx",
+      workers = 4, validation = "row_count", unloggedTables = false)
+    val loader = new SingleTxTableLoader(cfg, sts)
+    val exec = new DerbyTarget(tgtUrl)
+    val report =
+      try new MigrationPipeline(cfg, exec, loader).migrate(metas)
+      finally { loader.close(); exec.jdbc.close() }
+    assert(loader.connectionsOpened == 1)
+    assert(report.rowsLoaded == Map("fan0" -> 120L, "fan1" -> 80L,
+      "fancodes" -> 30L))
+    assert(report.validationMismatches.isEmpty)
   }
 
   test("parallel index pool on Derby: builds all, first error cancels") {

@@ -5,6 +5,7 @@ import graft.operators.OrphanCleanup
 import graft.sources._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Config parsing/validation matrix (reference config_test.go shapes),
   * pipeline phase ordering (reference main.go:125-348 / post.go:17-100),
@@ -253,6 +254,136 @@ class PipelineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       JobConfig.fromToml("validation = \"sha\"")
     }
+  }
+
+  test("checksum validation takes counts from the digests: no count " +
+      "scans when both digests are present") {
+    val countCalls = new java.util.concurrent.atomic.AtomicInteger
+    val loader = new TableLoader {
+      def load(t: TableMeta): Long = 1L
+      def sourceCount(t: TableMeta): Long = {
+        countCalls.incrementAndGet(); 1L
+      }
+      def targetCount(t: TableMeta): Long = {
+        countCalls.incrementAndGet(); 1L
+      }
+      override def sourceDigest(t: TableMeta): Option[String] =
+        Some(if (t.name == "posts") "5:700" else "3:100")
+      override def targetDigest(t: TableMeta): Option[String] =
+        Some(if (t.name == "posts") "4:700" else "3:100")
+    }
+    val report = new MigrationPipeline(
+      JobConfig(validation = "checksum", workers = 4), new Recorder, loader)
+      .migrate(Seq(users, posts))
+    assert(countCalls.get == 0)
+    // the count half of the digests reaches the count report
+    assert(report.validationMismatches == Map("posts" -> ((5L, 4L))))
+    assert(report.checksumMismatches == Map("posts" -> (("5:700", "4:700"))))
+    assert(report.phaseSeconds.keySet == MigrationPipeline.Phases.toSet)
+    assert(report.phaseSeconds.values.forall(_ >= 0.0))
+  }
+
+  private val more = Seq("orders", "items", "tags").map(n =>
+    users.copy(name = n))
+
+  /** Declares no width of its own and records the most loads in flight.
+    * The first load waits (up to 1 s) for a second one to start, so a
+    * concurrent run overlaps for certain; rows per table are the name's
+    * length.
+    */
+  private class OverlapLoader extends TableLoader {
+    private val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger
+    private val met = new java.util.concurrent.CountDownLatch(2)
+    def load(t: TableMeta): Long = {
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      try {
+        met.countDown()
+        met.await(1, java.util.concurrent.TimeUnit.SECONDS)
+        Thread.sleep(20)
+        t.name.length.toLong
+      } finally { inFlight.decrementAndGet(); () }
+    }
+    def sourceCount(t: TableMeta): Long = t.name.length.toLong
+    def targetCount(t: TableMeta): Long = t.name.length.toLong
+    override def sourceDigest(t: TableMeta): Option[String] =
+      Some(s"${t.name.length}:1")
+    override def targetDigest(t: TableMeta): Option[String] =
+      Some(s"${t.name.length}:1")
+  }
+
+  test("tables load concurrently within workers and report exactly " +
+      "what a serial run reports") {
+    val tables = Seq(users, posts) ++ more
+    def run(cfg: JobConfig): (OverlapLoader, MigrationReport, Seq[String]) = {
+      val rec = new Recorder
+      val l = new OverlapLoader
+      val r = new MigrationPipeline(cfg, rec, l).migrate(tables)
+      (l, r, rec.stmts.toSeq)
+    }
+    val cfg = JobConfig(sourceDialect = "jdbc", validation = "checksum")
+    val (serial, serialReport, serialStmts) = run(cfg.copy(workers = 1))
+    val (parallel, parallelReport, parallelStmts) = run(cfg.copy(workers = 4))
+    assert(serial.maxInFlight.get == 1)
+    assert(parallel.maxInFlight.get >= 2 && parallel.maxInFlight.get <= 4)
+    assert(parallelReport.copy(phaseSeconds = Map.empty) ==
+      serialReport.copy(phaseSeconds = Map.empty))
+    assert(parallelStmts == serialStmts)
+    assert(parallelReport.rowsLoaded == tables.map(t =>
+      t.name -> t.name.length.toLong).toMap)
+    // single_tx (one snapshot connection) and SQLite sources (one worker)
+    // stay sequential whatever `workers` says
+    val (stx, _, _) = run(cfg.copy(workers = 4, mode = "single_tx"))
+    val (lite, _, _) = run(cfg.copy(workers = 4, sourceDialect = "sqlite"))
+    assert(stx.maxInFlight.get == 1 && lite.maxInFlight.get == 1)
+  }
+
+  test("a table failing while its siblings load: no new table starts, " +
+      "siblings' progress persists, the first error is rethrown") {
+    import graft.checkpoint.CheckpointManager
+    val cpPath = java.nio.file.Files.createTempDirectory("graft-fan")
+      .resolve("graft_checkpoint.json")
+    val parts = Seq("job" -> "fan-out")
+    val fp = CheckpointManager.fingerprint(parts)
+    val cp = CheckpointManager.load(cpPath.toString, fp, parts)
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    // users, posts and orders start together; posts fails at once, orders
+    // fails after users has finished, items and tags never start
+    val allIn = new java.util.concurrent.CountDownLatch(3)
+    val usersDone = new java.util.concurrent.CountDownLatch(1)
+    val loader = new TableLoader {
+      def load(t: TableMeta): Long = {
+        started.add(t.name)
+        allIn.countDown()
+        allIn.await(10, java.util.concurrent.TimeUnit.SECONDS)
+        t.name match {
+          case "posts" => sys.error("posts: copy failed")
+          case "orders" =>
+            usersDone.await(10, java.util.concurrent.TimeUnit.SECONDS)
+            sys.error("orders: copy failed")
+          case n =>
+            Thread.sleep(100)
+            cp.markDone(n, 0L, 5L)
+            usersDone.countDown()
+            5L
+        }
+      }
+      def sourceCount(t: TableMeta): Long = 0L
+      def targetCount(t: TableMeta): Long = 0L
+    }
+    val e = intercept[RuntimeException] {
+      new MigrationPipeline(JobConfig(resume = true, validation = "none",
+        workers = 3), new Recorder, loader, checkpoint = Some(cp))
+        .migrate(Seq(users, posts) ++ more)
+    }
+    assert(e.getMessage == "posts: copy failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq ==
+      Seq("orders: copy failed"))
+    assert(started.asScala == Set("users", "posts", "orders"))
+    assert(java.nio.file.Files.exists(cpPath))
+    val back = CheckpointManager.load(cpPath.toString, fp, parts)
+    assert(back.isTableDone("users") && back.isDone("users", 0L))
+    assert(!back.isTableDone("posts") && !back.isTableDone("orders"))
   }
 
   test("pipeline phase order matches the reference lifecycle") {
