@@ -89,6 +89,43 @@ object Bench {
       s""""cores":$cores,""" +
       s""""sf":"$sf","fixture":"$fixture"}"""
 
+  /** Classes Janino compiled and seconds it spent, from Spark's
+    * JVM-wide codegen counters; [[codegenNow]] deltas around a column's
+    * runs give that column's codegen cost. Warm columns should compile
+    * 0: the compiled-class cache is sized to the catalog (Sessions).
+    */
+  private[graft] final case class CodegenCost(classes: Long,
+      compileSec: Double) {
+    def -(o: CodegenCost): CodegenCost =
+      CodegenCost(classes - o.classes, compileSec - o.compileSec)
+  }
+  private[graft] def codegenNow(): CodegenCost = CodegenCost(
+    org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .compileTime / 1e9)
+
+  /** The diagnostics line, printed before [[metricLine]]: per-query
+    * unprepared and cold seconds, warm stage profiles (pre-rendered
+    * JSON), each failed query's exception, codegen cost per column and
+    * the bare-job telltale.
+    */
+  def diagLine(unprepared: Seq[(String, Double)],
+      cold: Seq[(String, Double)], profiles: String,
+      failures: Seq[(String, String)],
+      codegen: Seq[(String, CodegenCost)], bareJobMs: Double): String =
+    s"""{"diag":"bench_detail",""" +
+      s""""queries_unprepared":${jsonMap(unprepared)},""" +
+      s""""queries_cold":${jsonMap(cold)},""" +
+      s""""profiles":$profiles,""" +
+      s""""failures":${failures.map { case (n, e) =>
+        jsonStr(n) + ":" + jsonStr(e) }.mkString("{", ",", "}")},""" +
+      s""""codegen":${codegen.map { case (k, c) =>
+        s""""$k":{"classes":${c.classes},""" +
+          s""""compile_sec":${r3(c.compileSec)}}""" }
+        .mkString("{", ",", "}")},""" +
+      s""""bare_job_ms":${r3(bareJobMs)}}"""
+
   private final class RowCountMismatch(msg: String)
     extends RuntimeException(msg)
 
@@ -376,9 +413,12 @@ object Bench {
       }
     }
 
+    val cg0 = codegenNow()
     val cold = defs.map(d => d.name -> run(d).map(_._1).getOrElse(-1.0))
+    val cg1 = codegenNow()
     val backToBack = defs.map(d => (1 to 3).flatMap(_ => run(d)))
     val sweep = defs.map(d => run(d))
+    val cg2 = codegenNow()
     val warmRuns = defs.zipWithIndex.map { case (d, i) =>
       val runs = backToBack(i) ++ sweep(i)
       d.name -> (if (runs.nonEmpty) Some(runs.minBy(_._1)) else None)
@@ -389,6 +429,8 @@ object Bench {
     // the same sampling protocol as the prepared column
     val unpB2b = defs.map(d => (1 to 3).flatMap(_ => runUnprepared(d)))
     val unpSweep = defs.map(d => runUnprepared(d))
+    val codegen = Seq("cold" -> (cg1 - cg0), "prepared" -> (cg2 - cg1),
+      "unprepared" -> (codegenNow() - cg2))
     val unprepared = defs.zipWithIndex.map { case (d, i) =>
       val runs = unpB2b(i) ++ unpSweep(i)
       d.name -> (if (runs.nonEmpty) runs.min else -1.0)
@@ -428,13 +470,8 @@ object Bench {
     // whole line always lands inside the tail window; the per-query
     // unprepared/cold columns and stage profiles move to a "diag"
     // line that greps for '"metric"' skip.
-    println(s"""{"diag":"bench_detail",""" +
-      s""""queries_unprepared":${jsonMap(unprepared)},""" +
-      s""""queries_cold":${jsonMap(cold)},""" +
-      s""""profiles":$profiles,""" +
-      s""""failures":${failures.map { case (n, e) =>
-        jsonStr(n) + ":" + jsonStr(e) }.mkString("{", ",", "}")},""" +
-      s""""bare_job_ms":${r3(bareJobMs)}}""")
+    println(diagLine(unprepared, cold, profiles, failures.toSeq, codegen,
+      bareJobMs))
     val line = metricLine(warm, total(unprepared), total(cold), cores,
       rawDir, fixture)
     println(line)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted physical plan for the
   * named queries (or all bench queries) at the given sf dir. Used to
   * audit pushdown/broadcast/shuffle shape per SURVEY.md's 100 TB
@@ -16,16 +14,11 @@ object Explain {
     // query (lowLatency ⇒ AQE off + 8 shuffle partitions), so the
     // printed plan is the one the bench actually executes — the
     // default (unset) keeps the historical AQE-on/4-partition session
-    // PLANS.md was audited under.
+    // PLANS.md was audited under — the engine's own session defaults
+    // (graft_* functions, scan packing) on 4 cores.
     val benchProfile = sys.env.get("SPARK_GRAFT_EXPLAIN_PROFILE")
       .exists(_.equalsIgnoreCase("bench"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.build("graft-explain", Some("4"))
     spark.sparkContext.setLogLevel("ERROR")
     val aqeDefault = spark.conf.get("spark.sql.adaptive.enabled")
     val shuffleDefault = spark.conf.get("spark.sql.shuffle.partitions")

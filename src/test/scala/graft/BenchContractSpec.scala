@@ -67,4 +67,30 @@ class BenchContractSpec extends AnyFunSuite {
       "line\\ttab\"")
     assert(Bench.jsonStr("\u0001") == "\"\\u0001\"")
   }
+
+  test("the diag line carries classes compiled and compile seconds for " +
+      "the cold, prepared and unprepared columns") {
+    import Bench.CodegenCost
+    val line = Bench.diagLine(Seq("q01" -> 0.5), Seq("q01" -> 1.25), "{}",
+      Seq("q04" -> "boom"), Seq("cold" -> CodegenCost(148, 0.98765),
+        "prepared" -> CodegenCost(0, 0.0),
+        "unprepared" -> CodegenCost(0, 0.0)), 31.5)
+    assert(!line.contains("\n"))
+    assert(line.startsWith("""{"diag":"bench_detail","""))
+    assert(line.contains(""""codegen":{""" +
+      """"cold":{"classes":148,"compile_sec":0.988},""" +
+      """"prepared":{"classes":0,"compile_sec":0.0},""" +
+      """"unprepared":{"classes":0,"compile_sec":0.0}}"""))
+    assert(line.count(_ == '{') == line.count(_ == '}'))
+    assert(line.count(_ == '"') % 2 == 0)
+  }
+
+  test("codegenNow counts a class compiled between two readings") {
+    val before = Bench.codegenNow()
+    // a literal no earlier plan embedded: its generated source is new
+    SparkTestSession.spark.range(4)
+      .selectExpr(s"id * ${System.nanoTime()}L AS x").collect()
+    val d = Bench.codegenNow() - before
+    assert(d.classes >= 1 && d.compileSec > 0)
+  }
 }

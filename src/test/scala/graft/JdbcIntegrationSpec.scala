@@ -309,6 +309,57 @@ class JdbcIntegrationSpec extends AnyFunSuite {
       Main.checkpointPath(cfgPath)))
   }
 
+  test("CLI migrate under checksum validation: a content mismatch with " +
+      "equal counts warns on stderr with both digests and still " +
+      "succeeds") {
+    val srcUrl = "jdbc:derby:memory:graftcksrc;create=true"
+    val tgtUrl = "jdbc:derby:memory:graftcktgt;create=true"
+    val sc = DriverManager.getConnection(srcUrl)
+    try {
+      sc.createStatement().execute("CREATE TABLE PRODS (SKU VARCHAR(20) " +
+        "NOT NULL PRIMARY KEY, PRICE DOUBLE)")
+      val ins = sc.prepareStatement("INSERT INTO PRODS VALUES (?, ?)")
+      (1 to 20).foreach { i =>
+        ins.setString(1, f"sku_$i%03d"); ins.setDouble(2, i * 1.25)
+        ins.addBatch()
+      }
+      ins.executeBatch()
+    } finally sc.close()
+
+    val cfgDir = java.nio.file.Files.createTempDirectory("graft-cksum")
+    // after_data runs between the load and validation: it changes one
+    // loaded value, so counts agree and only the digests differ
+    java.nio.file.Files.writeString(cfgDir.resolve("skew.sql"),
+      "UPDATE \"{{schema}}\".\"prods\" SET \"price\" = 0 " +
+        "WHERE \"sku\" = 'sku_007'")
+    val cfgPath = cfgDir.resolve("migration.toml")
+    java.nio.file.Files.writeString(cfgPath,
+      s"""mode = "parallel"
+         |unlogged_tables = false
+         |validation = "checksum"
+         |[source]
+         |dialect = "jdbc"
+         |url = "$srcUrl"
+         |[target]
+         |url = "$tgtUrl"
+         |schema = "tgt"
+         |[hooks]
+         |after_data = ["skew.sql"]
+         |""".stripMargin)
+    val err = new java.io.ByteArrayOutputStream()
+    Console.withErr(err)(Main.runMigrateWith(cfgPath, spark))
+
+    val warnings = err.toString("UTF-8").linesIterator
+      .filter(_.startsWith("WARNING: checksum mismatch")).toSeq
+    assert(warnings.size == 1, err.toString("UTF-8"))
+    val Digests = ("WARNING: checksum mismatch on table prods: " +
+      "source (20:\\d+), target (20:\\d+)").r
+    warnings.head match {
+      case Digests(src, tgt) => assert(src != tgt)
+      case other => fail(s"unexpected warning: $other")
+    }
+  }
+
   test("single_tx on Derby: ALL tables read over ONE connection in one " +
       "transaction; counts snapshot-consistent (migrate.go:149-259)") {
     import graft.config.JobConfig
