@@ -248,30 +248,12 @@ object Bench {
     spark.sparkContext.addSparkListener(clock)
     val cores = spark.sparkContext.defaultParallelism
 
-    // Per-query execution profile. Low-latency queries run with AQE's
-    // stage-materialization barriers off: each AQE query stage submits
-    // as its own scheduler job, and a bare job costs a measured
-    // ~20-45 ms on this host (tools/MicroFloor) — the dominant term for
-    // sub-second queries. The adaptive profile stays the default for
-    // the heavy tier (skew/broadcast re-planning at scale) and for all
-    // correctness runs; flagged plans are correct under both.
-    val aqeDefault = spark.conf.get("spark.sql.adaptive.enabled")
-    val shuffleDefault = spark.conf.get("spark.sql.shuffle.partitions")
-    def setProfile(d: QueryDef): Unit = {
-      val aqe = if (d.lowLatency) "false" else aqeDefault
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-      // The interactive profile also right-sizes the shuffle: the
-      // low-latency tier moves at most a few hundred kB per exchange at
-      // bench scale, and with AQE's coalescing off each of the default
-      // 16 reduce partitions is a dispatched task (~1-2 ms apiece of
-      // pure scheduling). 8 partitions measured ~20-35% off q17/q40/q59
-      // walls with identical results; the heavy tier keeps the default
-      // and lets AQE coalesce instead (its exchanges are the ones that
-      // genuinely need width at scale).
-      spark.conf.set("spark.sql.shuffle.partitions",
-        if (d.lowLatency) "8" else shuffleDefault)
-    }
+    // Per-query execution profile (Sessions.setProfile): lowLatency
+    // queries run AQE-off on 8 shuffle partitions, because a bare job
+    // costs ~20-45 ms locally (graft.tools.Profile's bare_job_ms line);
+    // the adaptive profile stays the default for the heavy tier and
+    // for all correctness runs.
+    val setProfile = Sessions.setProfile(spark)
 
     // Prepared-plan cache: each query's DSL construction + analysis +
     // rule-based optimization runs once (in its cold run); warm runs

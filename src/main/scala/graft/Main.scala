@@ -558,8 +558,8 @@ final class SparkTableLoader(
     // order the DataFrame delivers
     val targetCols = df.columns.toSeq.map(c =>
       SchemaMapping.pgName(c, cfg.snakeCaseIdentifiers))
-    val sql = CopySink.insertSql(cfg.targetSchema, table.name, targetCols)
-    val copySql = PgCopy.copySql(cfg.targetSchema, table.name, targetCols)
+    val writer = CopySink.chooseWriter(targetUrl, cfg.targetSchema,
+      table.name, targetCols, 1000)
     // single source pass: each partition writes its rows and yields its
     // count (reference migrate.go:448-473 running counter). runJob's
     // result handler fires on the driver PER COMPLETED PARTITION, so
@@ -576,9 +576,8 @@ final class SparkTableLoader(
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     val writeChunk = (it: Iterator[org.apache.spark.sql.Row]) => {
       val res: Either[String, Long] =
-        try Right(CopySink.writePartitionAuto(targetUrl, it,
-          () => java.sql.DriverManager.getConnection(targetUrl),
-          sql, copySql, 1000))
+        try Right(CopySink.writePartition(it,
+          () => java.sql.DriverManager.getConnection(targetUrl), writer))
         catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
       res
     }

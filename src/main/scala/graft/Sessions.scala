@@ -82,6 +82,36 @@ object Sessions {
       "spark.ui.enabled" -> "false")
   }
 
+  /** The per-query execution profile that Bench times and Profile and
+    * StageBudgetSpec measure under. Reads `spark`'s own AQE and
+    * shuffle-partition values once, as the adaptive base (so
+    * `SPARK_GRAFT_AQE`, `SPARK_GRAFT_SHUFFLE` and
+    * `SPARK_GRAFT_EXTRA_CONF` still apply), and returns the switch that
+    * applies a query's profile to `spark`.
+    *
+    * A `lowLatency` query runs with AQE's stage-materialization
+    * barriers off: each AQE query stage submits as its own scheduler
+    * job, and a bare job costs ~20-45 ms locally (Profile's `bare_job_ms`
+    * line) — the dominant term for sub-second queries. With coalescing
+    * off each reduce partition is a dispatched task, so the tier also
+    * runs 8 shuffle partitions: it moves at most a few hundred kB per
+    * exchange at bench scale, and 8 measured ~20-35% off q17/q40/q59
+    * walls with identical results. Every other query gets the base back
+    * and lets AQE coalesce (its exchanges are the ones that need width
+    * at scale). Plans are correct under both profiles.
+    */
+  def setProfile(spark: SparkSession): QueryDef => Unit = {
+    val aqeBase = spark.conf.get("spark.sql.adaptive.enabled")
+    val shuffleBase = spark.conf.get("spark.sql.shuffle.partitions")
+    d => {
+      val aqe = if (d.lowLatency) "false" else aqeBase
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
+      spark.conf.set("spark.sql.shuffle.partitions",
+        if (d.lowLatency) "8" else shuffleBase)
+    }
+  }
+
   def build(appName: String, coresOverride: Option[String] = None)
       : SparkSession = {
     val n = coresOverride.getOrElse(cpus)

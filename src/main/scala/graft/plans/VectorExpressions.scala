@@ -22,35 +22,28 @@ case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.plans.DotProduct.compute($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DotProduct =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  /** Σ x_i·y_i over the shorter array's length, left to right. */
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
     while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
 }
 
 /** L2 norm of a double array — same sequential-accumulation contract. */
@@ -58,35 +51,26 @@ case class L2Norm(child: Expression)
     extends UnaryExpression {
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    L2Norm.compute(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.L2Norm.compute($a);")
+
+  override protected def withNewChildInternal(
+      newChild: Expression): L2Norm = copy(child = newChild)
+}
+
+object L2Norm {
+  def compute(x: ArrayData): Double = {
     var acc = 0.0
     var i = 0
     val n = x.numElements()
     while (i < n) { val v = x.getDouble(i); acc += v * v; i += 1 }
     math.sqrt(acc)
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = $a.getDouble($i);
-         |  $acc += $v * $v;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($acc);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): L2Norm = copy(child = newChild)
 }
 
 /** Per-component µ-quantization: `q_i = floor(x_i·10⁶ + 0.5)`, kept

@@ -14,7 +14,7 @@ import java.sql.Connection
   * against no PostgreSQL driver (none exists in the sandbox), but the
   * encoding — the part correctness lives in — is pure and fully
   * unit-tested. At runtime, a postgresql JDBC URL dispatches here
-  * ([[CopySink.writePartitionAuto]]); everything else keeps the
+  * ([[CopySink.chooseWriter]]); everything else keeps the
   * driver-agnostic batched INSERT.
   *
   * COPY TEXT format (PostgreSQL "COPY ... FROM STDIN" defaults): one
@@ -136,22 +136,12 @@ object PgCopy {
   }
 
   /** Stream one partition through pgjdbc's CopyManager (resolved
-    * reflectively — see class doc). Returns rows written.
-    */
-  def copyPartition(
-      rows: Iterator[Row],
-      connect: () => Connection,
-      sql: String): Long = {
-    val conn = connect()
-    try copyOnConnection(conn, rows, sql)
-    finally conn.close()
-  }
-
-  /** The COPY stream on an ALREADY-OPEN connection — for callers that
-    * own the transaction (the exactly-once ledger wraps this call and
-    * its ledger INSERT in one commit). Does not commit, roll back, or
-    * close; with autocommit off, the copied rows are invisible until
-    * the caller commits.
+    * reflectively — see class doc) on an ALREADY-OPEN connection whose
+    * owner holds the transaction ([[CopySink.writePartition]], or the
+    * exactly-once ledger, which commits this call with its ledger
+    * INSERT). Does not commit, roll back, or close; with autocommit
+    * off, the copied rows are invisible until the caller commits.
+    * Returns rows written.
     */
   def copyOnConnection(
       conn: Connection,

@@ -91,10 +91,8 @@ final class SingleTxTableLoader(
         val n = rs.getMetaData.getColumnCount
         val targetCols = st.columns.map(c =>
           SchemaMapping.pgName(c.name, cfg.snakeCaseIdentifiers))
-        val insertSql =
-          CopySink.insertSql(cfg.targetSchema, table.name, targetCols)
-        val copySql =
-          PgCopy.copySql(cfg.targetSchema, table.name, targetCols)
+        val writer = CopySink.chooseWriter(cfg.targetUrl,
+          cfg.targetSchema, table.name, targetCols, 1000)
         val rows = new Iterator[org.apache.spark.sql.Row] {
           private var advanced = false
           private var has = false
@@ -109,9 +107,8 @@ final class SingleTxTableLoader(
               (1 to n).map(i => colTransforms(i - 1)(rs.getObject(i))))
           }
         }
-        CopySink.writePartitionAuto(cfg.targetUrl, rows,
-          () => DriverManager.getConnection(cfg.targetUrl),
-          insertSql, copySql, 1000)
+        CopySink.writePartition(rows,
+          () => DriverManager.getConnection(cfg.targetUrl), writer)
       } finally rs.close()
     } finally stmt.close()
   }

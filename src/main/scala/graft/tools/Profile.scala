@@ -1,0 +1,225 @@
+package graft.tools
+
+import graft.{Bench, Caches, QueryDef, Sessions, SparkEntry, StageClock}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+
+/** Layer-by-layer profile of named catalog queries — the one hand-run
+  * profiling tool. A/B evidence across commits is perfbench's
+  * (`perfbench/run.py`); this tool explains where one query's wall goes.
+  *
+  * Once at startup it prints the wall of a bare one-task job (the
+  * scheduler floor every job pays). Then, for each query, it does one
+  * unmeasured run and [[Runs]] measured runs under the query's own bench
+  * profile ([[Sessions.setProfile]]), each an unprepared build + plan +
+  * count with every persisted relation dropped first, and prints one
+  * JSON line with the median and min of each field:
+  *
+  *  - `build_ms`, `build_jobs`, `build_task_sec`: the DSL build,
+  *    including the eager jobs it starts;
+  *  - `optimize_ms` (the count wrapper's analysis plus optimization)
+  *    and `plan_ms` (physical planning) of the same count-shaped
+  *    `QueryExecution` that is then executed, as Bench does;
+  *  - `execute_ms`, and the execution's `jobs`, `stages`, `task_sec`,
+  *    `cpu_sec`, `shuffle_write_bytes` and `max_task_shuffle_read`
+  *    (records) from [[StageClock]];
+  *  - `wall_ms`: the run's wall minus the listener drain between build
+  *    and optimization, so the four `_ms` parts above sum to it;
+  *
+  * plus every aggregate operator's input → output rows from the last
+  * run's SQL metrics (is a map-side partial earning its exchange?).
+  * After each JSON line comes that run's post-execution plan: with AQE
+  * on, the final re-optimized plan that `explain` cannot show.
+  *
+  * usage: runMain graft.tools.Profile <sfDir> <query> [query...]
+  * (names from `SparkEntry.defs`; cores from `SPARK_GRAFT_CPUS`, else
+  * the host's)
+  */
+object Profile {
+  val Runs = 3
+
+  final case class Stat(median: Double, min: Double) {
+    def json: String =
+      s"""{"median":${Bench.r3(median)},"min":${Bench.r3(min)}}"""
+  }
+  object Stat {
+    def of(xs: Seq[Double]): Stat = {
+      val s = xs.sorted
+      Stat(s(s.size / 2), s.head)
+    }
+  }
+
+  /** One aggregate operator's observed input → output rows (-1: the
+    * plan kept no count).
+    */
+  final case class AggRows(op: String, keys: String, in: Long, out: Long)
+
+  final case class Record(query: String, lowLatency: Boolean, rows: Long,
+      stats: Seq[(String, Stat)], aggregates: Seq[AggRows],
+      finalPlan: String) {
+    def json: String = {
+      import Bench.jsonStr
+      val aggs = aggregates.map(a =>
+        s"""{"op":${jsonStr(a.op)},"keys":${jsonStr(a.keys)},""" +
+          s""""in":${a.in},"out":${a.out}}""")
+      (Seq(s""""query":${jsonStr(query)}""",
+        s""""profile":"${if (lowLatency) "low_latency" else "adaptive"}"""",
+        s""""rows":$rows""", s""""runs":$Runs""") ++
+        stats.map { case (k, s) => s""""$k":${s.json}""" } :+
+        s""""aggregates":${aggs.mkString("[", ",", "]")}""")
+        .mkString("{", ",", "}")
+    }
+  }
+
+  /** The named queries, or an error naming every unknown one — checked
+    * before any session exists.
+    */
+  def resolve(names: Seq[String]): Seq[QueryDef] = {
+    val byName = SparkEntry.defs.map(d => d.name -> d).toMap
+    val unknown = names.filterNot(byName.contains)
+    require(unknown.isEmpty, "Profile: unknown quer" +
+      (if (unknown.size == 1) "y " else "ies ") + unknown.mkString(", ") +
+      " (names come from SparkEntry.defs)")
+    names.map(byName)
+  }
+
+  /** Wall of a bare one-task job, after one unmeasured job. */
+  def bareJobMs(spark: SparkSession): Stat = {
+    val sc = spark.sparkContext
+    sc.parallelize(Seq(1), 1).count()
+    Stat.of((1 to Runs).map { _ =>
+      val t0 = System.nanoTime()
+      sc.parallelize(Seq(1), 1).count()
+      (System.nanoTime() - t0) / 1e6
+    })
+  }
+
+  def profile(spark: SparkSession, sfDir: String, defs: Seq[QueryDef])
+      : Seq[Record] = {
+    val clock = new StageClock
+    spark.sparkContext.addSparkListener(clock)
+    val profileKeys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.shuffle.partitions")
+    val base = profileKeys.map(k => k -> spark.conf.get(k))
+    val setProfile = Sessions.setProfile(spark)
+    try defs.map { d =>
+      setProfile(d)
+      run(spark, sfDir, d, clock)
+      val runs = (1 to Runs).map(_ => run(spark, sfDir, d, clock))
+      val (fields, rows, qe) = runs.last
+      Record(d.name, d.lowLatency, rows,
+        fields.indices.map(i =>
+          fields(i)._1 -> Stat.of(runs.map(_._1(i)._2))),
+        aggregates(qe.executedPlan), qe.executedPlan.toString)
+    } finally {
+      base.foreach { case (k, v) => spark.conf.set(k, v) }
+      Caches.unpersistAll(spark)
+      spark.sparkContext.removeSparkListener(clock)
+    }
+  }
+
+  /** One unprepared run: (fields in print order, row count, the
+    * executed query).
+    */
+  private def run(spark: SparkSession, sfDir: String, d: QueryDef,
+      clock: StageClock)
+      : (Seq[(String, Double)], Long, QueryExecution) = {
+    def ms(from: Long, to: Long): Double = (to - from) / 1e6
+    Caches.unpersistAll(spark)
+    clock.quiesce(); clock.reset()
+    val t0 = System.nanoTime()
+    val df = d.build(spark, sfDir)
+    val t1 = System.nanoTime()
+    // untimed: the listener bus delivers the build's jobs
+    clock.quiesce()
+    val buildJobs = clock.jobs
+    val buildTaskSec = clock.snapshot()._2
+    clock.reset()
+    val t2 = System.nanoTime()
+    val qe = df.groupBy().count().queryExecution
+    qe.optimizedPlan
+    val t3 = System.nanoTime()
+    qe.executedPlan
+    val t4 = System.nanoTime()
+    val rows = qe.executedPlan.executeCollect().head.getLong(0)
+    val t5 = System.nanoTime()
+    clock.quiesce()
+    val (stages, taskSec, cpuSec, _) = clock.snapshot()
+    (Seq("build_ms" -> ms(t0, t1), "build_jobs" -> buildJobs.toDouble,
+      "build_task_sec" -> buildTaskSec, "optimize_ms" -> ms(t2, t3),
+      "plan_ms" -> ms(t3, t4), "execute_ms" -> ms(t4, t5),
+      "wall_ms" -> (ms(t0, t5) - ms(t1, t2)),
+      "jobs" -> clock.jobs.toDouble, "stages" -> stages.toDouble,
+      "task_sec" -> taskSec, "cpu_sec" -> cpuSec,
+      "shuffle_write_bytes" -> clock.shuffleBytes.toDouble,
+      "max_task_shuffle_read" -> clock.maxTaskShuffleRead.toDouble),
+      rows, qe)
+  }
+
+  /** Every aggregate operator in an executed plan, including those in
+    * AQE query stages, subqueries and persisted relations, each once.
+    */
+  private def aggregates(plan: SparkPlan): Seq[AggRows] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Seq[AggRows] =
+      if (!seen.add(p)) Nil
+      else {
+        val own = p match {
+          case a: BaseAggregateExec => Seq(AggRows(a.nodeName,
+            a.groupingExpressions.map(_.sql).mkString(",").take(200),
+            rowsOut(a.child), rowsOut(a)))
+          case _ => Nil
+        }
+        val inner = p match {
+          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+          case q: QueryStageExec => Seq(q.plan)
+          case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+          case _ => Nil
+        }
+        own ++ (p.children ++ p.subqueries ++ inner).flatMap(walk)
+      }
+    walk(plan)
+  }
+
+  /** Rows a node hands its parent: its own `numOutputRows`, an
+    * exchange's records written, else (wrappers that count nothing,
+    * such as InputAdapter, sorts and query stages) its child's.
+    */
+  private def rowsOut(p: SparkPlan): Long =
+    p.metrics.get("numOutputRows")
+      .orElse(p.metrics.get("shuffleRecordsWritten")) match {
+      case Some(m) => m.value
+      case None => p match {
+        case q: QueryStageExec => rowsOut(q.plan)
+        case r: ReusedExchangeExec => rowsOut(r.child)
+        case _ if p.children.size == 1 => rowsOut(p.children.head)
+        case _ => -1L
+      }
+    }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: Profile <sfDir> <query> [query...]")
+    val defs = resolve(args.drop(1).toSeq)
+    val spark = Sessions.build("graft-profile")
+    spark.sparkContext.setLogLevel("ERROR")
+    try {
+      println(s"""{"bare_job_ms":${bareJobMs(spark).json}}""")
+      // one query at a time, so each plan prints under its record
+      defs.foreach { d =>
+        profile(spark, args(0), Seq(d)).foreach { r =>
+          println(r.json)
+          println(r.finalPlan)
+        }
+      }
+    } finally {
+      Caches.clear(spark)
+      spark.stop()
+    }
+  }
+}

@@ -129,11 +129,10 @@ class PgCopySpec extends AnyFunSuite {
     try c.createStatement().execute(
       "CREATE TABLE \"cd\" (\"id\" INT, \"v\" VARCHAR(10))")
     finally c.close()
-    val written = CopySink.writePartitionAuto(url,
+    val written = CopySink.writePartition(
       Iterator(Row(1, "a"), Row(2, "b")),
       () => java.sql.DriverManager.getConnection(url),
-      CopySink.insertSql(null, "cd", Seq("id", "v")),
-      PgCopy.copySql(null, "cd", Seq("id", "v")), 10)
+      CopySink.chooseWriter(url, null, "cd", Seq("id", "v"), 10))
     assert(written == 2L)
     val chk = java.sql.DriverManager.getConnection(url)
     try {

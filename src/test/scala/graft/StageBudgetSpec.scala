@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * dropped persist made both self-join sides rebuild the whole index
   * chain, correctness stayed green, and only the bench wall moved.
   * These pins fail the build instead. Budgets are the counts the
-  * current plans execute (measured under the bench profile: AQE off +
-  * 8 shuffle partitions for lowLatency queries, adaptive otherwise) —
+  * current plans execute (measured under the bench profile,
+  * `Sessions.setProfile`: AQE off + 8 shuffle partitions for lowLatency
+  * queries, the session's adaptive base otherwise) —
   * if a change legitimately restructures a plan, re-measure and move
   * the pin in the same commit.
   */
@@ -95,6 +96,7 @@ class StageBudgetSpec extends AnyFunSuite {
     val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     val co0 = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
     val sh0 = spark.conf.get("spark.sql.shuffle.partitions")
+    val setProfile = Sessions.setProfile(spark)
     // q174's budget pins the SERVE path — ensure the on-disk index
     // artifact exists before measuring, or suite ordering decides
     // whether the build's write stages land in this spec's count
@@ -105,11 +107,7 @@ class StageBudgetSpec extends AnyFunSuite {
       val report = budgets.map { case (name, maxS, maxJ) =>
         val d = SparkEntry.benchDefs.find(_.name == name)
           .getOrElse(fail(s"$name is not a bench query"))
-        val aqe = (!d.lowLatency).toString
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-        spark.conf.set("spark.sql.shuffle.partitions",
-          if (d.lowLatency) "8" else sh0)
+        setProfile(d)
         Caches.clear(spark) // budgets include the cache-build stages
         clock.quiesce(); clock.reset()
         d.build(spark, dir).count()

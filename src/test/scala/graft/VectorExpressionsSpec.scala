@@ -316,4 +316,47 @@ class VectorExpressionsSpec extends AnyFunSuite {
       .select(VectorOps.bloomContains(col("k"), bits, 7)).collect()(0)
     assert(nul.isNullAt(0))
   }
+
+  test("dot and l2norm: interpreted and generated paths agree bit for " +
+      "bit on nulls, empty and ragged arrays, NaN, ±0.0 and ±Infinity") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // a child session: the codegen switches below stay off the shared
+    // session's conf
+    val s = spark.newSession()
+    VectorOps.register(s)
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    val inf = Double.PositiveInfinity
+    val arrays: Seq[Seq[Double]] = Seq(null, Nil, Seq(1.0, 1.0, 1.0),
+      Seq(0.1, 0.2, 0.3), Seq(0.1, -0.2), Seq(Double.NaN, 1.0),
+      Seq(-0.0, 0.0, -0.0), Seq(-0.0), Seq(inf, -inf), Seq(inf, 2.0),
+      Seq(-inf), Seq(1e308, 1e308, -1e308), Seq(4.9e-324, 3.0))
+    val schema = StructType(Seq(
+      StructField("a", ArrayType(DoubleType, containsNull = false)),
+      StructField("b", ArrayType(DoubleType, containsNull = false))))
+    // an RDD source, not a local relation: the optimizer would evaluate
+    // a projection over local rows itself, interpreted, in both modes
+    val pairs = for (a <- arrays; b <- arrays) yield Row(a, b)
+    val df = s.createDataFrame(s.sparkContext.parallelize(pairs, 3), schema)
+    def eval(mode: String): Seq[Seq[Option[Long]]] = {
+      s.conf.set("spark.sql.codegen.factoryMode", mode)
+      val out = df.select(col("a"), col("b"),
+        VectorOps.dot(col("a"), col("b")), VectorOps.l2norm(col("a")))
+      assert(out.queryExecution.executedPlan.collectFirst {
+        case p: org.apache.spark.sql.execution.ProjectExec => p }.isDefined)
+      out.collect().toSeq.map(r => (2 to 3).map(i =>
+        if (r.isNullAt(i)) None
+        else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))))
+    }
+    val interpreted = eval("NO_CODEGEN")
+    val generated = eval("CODEGEN_ONLY")
+    assert(interpreted.size == pairs.size)
+    interpreted.zip(generated).zip(pairs).foreach { case ((i, g), p) =>
+      assert(i == g, s"paths disagree on $p: interpreted $i, generated $g")
+    }
+    // null in, null out; an empty or absent overlap sums to +0.0
+    assert(interpreted.head == Seq(None, None))
+    assert(interpreted(arrays.size + 1) ==
+      Seq(Some(0L), Some(0L))) // (Nil, Nil)
+  }
 }
