@@ -37,12 +37,6 @@ import org.apache.spark.sql.SparkSession
   * `failures` map, and the run exits 1 after printing both lines.
   */
 object Bench {
-  /** Thrown ONLY by the expected-rows guards, so the catch blocks can
-    * rethrow exactly the correctness failure and keep swallowing every
-    * other per-query error into -1 — a generic IllegalArgumentException
-    * from query/analysis code (e.g. a registration builder's literal
-    * check) must not abort the whole bench run.
-    */
   /** Driver tail-window budget for [[metricLine]]: the round driver
     * keeps only the LAST ~2 KB of stdout and parses the metric line
     * out of that window, so the line must stay comfortably inside it
@@ -126,6 +120,12 @@ object Bench {
         .mkString("{", ",", "}")},""" +
       s""""bare_job_ms":${r3(bareJobMs)}}"""
 
+  /** Thrown ONLY by the expected-rows guards, so the catch blocks can
+    * rethrow exactly the correctness failure and keep swallowing every
+    * other per-query error into -1 — a generic IllegalArgumentException
+    * from query/analysis code (e.g. a SQL function's literal check)
+    * must not abort the whole bench run.
+    */
   private final class RowCountMismatch(msg: String)
     extends RuntimeException(msg)
 
@@ -150,8 +150,7 @@ object Bench {
     * 16 files × ~1 MB row groups under /tmp (same rows, same values —
     * only the physical layout changes) so warm timings measure the
     * engine, not a 1-core scan bottleneck. Rewrite time is NOT part of
-    * any query timing; BENCH_NOTES.md documents the swap, and
-    * SPARK_GRAFT_MRG=off benches the raw fixtures.
+    * any query timing; BENCH_NOTES.md documents the swap.
     */
   private def multiRowGroupCopy(spark: SparkSession, raw: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -227,19 +226,8 @@ object Bench {
     val spark = Sessions.build("graft-bench",
       coresOverride = Some(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
     spark.sparkContext.setLogLevel("ERROR")
-    val sfDir =
-      if (sys.env.get("SPARK_GRAFT_MRG").exists(_.equalsIgnoreCase("off")))
-        rawDir
-      else multiRowGroupCopy(spark, rawDir)
-
-    // Optional local-iteration filter (the driver never sets it):
-    // bench only queries whose name contains any given substring.
-    val defs = sys.env.get("SPARK_GRAFT_BENCH_FILTER") match {
-      case Some(pats) =>
-        val ps = pats.split(",").toSeq
-        SparkEntry.benchDefs.filter(d => ps.exists(d.name.contains))
-      case None => SparkEntry.benchDefs
-    }
+    val sfDir = multiRowGroupCopy(spark, rawDir)
+    val defs = SparkEntry.benchDefs
 
     // stage attribution: per-run stage counts / task time via listener,
     // reported for each query's min-warm run (the floor-vs-compute
@@ -439,8 +427,6 @@ object Bench {
       }
     }.mkString("{", ",", "}")
 
-    val fixture =
-      if (sfDir == rawDir) "raw" else "multi_row_group_rewrite"
     // TWO stdout lines, diagnostics FIRST and the metric line LAST —
     // deliberately. The driver stores only the last ~2 KB of output
     // and parses the metric line out of that window; with profiles +
@@ -455,7 +441,7 @@ object Bench {
     println(diagLine(unprepared, cold, profiles, failures.toSeq, codegen,
       bareJobMs))
     val line = metricLine(warm, total(unprepared), total(cold), cores,
-      rawDir, fixture)
+      rawDir, "multi_row_group_rewrite")
     println(line)
     // The driver recovers the metric line from the tail of stdout —
     // but sbt's forked-run logger prefixed every line with "[info] ",

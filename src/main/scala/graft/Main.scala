@@ -113,12 +113,10 @@ object Main {
   private def session(): SparkSession = Sessions.build("graft")
 
   /** MSSQL source schema — `source.source_schema` in migration.toml,
-    * defaulting to dbo like the reference (`config.go:127`); the env
-    * override predates the config key and still wins when set.
+    * defaulting to dbo like the reference (`config.go:127`).
     */
   private def mssqlSchema(cfg: JobConfig): String =
-    sys.env.getOrElse("GRAFT_MSSQL_SCHEMA",
-      if (cfg.sourceSchema.nonEmpty) cfg.sourceSchema else "dbo")
+    if (cfg.sourceSchema.nonEmpty) cfg.sourceSchema else "dbo"
 
   private def dbNameOf(url: String): String =
     url.split('/').last.takeWhile(_ != '?')

@@ -29,7 +29,7 @@ object Verify {
     // interleaves their jobs across the executor threads, roughly
     // halving wall time vs sequential (each query leaves cores idle
     // during planning/commit). Each query writes its own directory;
-    // view/function registration is per-query-unique or idempotent.
+    // view registration is per-query-unique or idempotent.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val tasks = SparkEntry.queries.toSeq.filter(t => keep(t._1))

@@ -1,235 +1,115 @@
 package graft.functions
 
 import graft.plans.{BigramCounts, ByteEntropy, CentroidTopK, DotProduct, L2Norm, MinHashSignature, PqAdcSum, PqCodes, PqLut, RollingHash, ShingleHashSet, ShingleSet, SignBandCodes, SignBandCodesBcast, SortedIntersectCount, SortedLongIntersectCount, TermCounts}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 
-/** Column-level API over the native vector expressions. Registration is
-  * per-session and idempotent; callers invoke `register` once (query
-  * builders do it defensively) and use the Column helpers.
+/** Column-level API over the native vector expressions. The graft_*
+  * SQL functions are injected into every session [[graft.Sessions.build]]
+  * makes (and so into its `newSession()` children); the Column helpers
+  * call them by name.
   */
 object VectorOps {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_l2norm",
-      exprs => L2Norm(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_quantize_micro",
-      exprs => graft.plans.QuantizeMicro(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_pack_f32",
-      exprs => graft.plans.PackF32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_unpack_f32",
-      exprs => graft.plans.UnpackF32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_ucos_packed_f32",
-      exprs => graft.plans.UcosPackedF32(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_rolling_hash",
-      exprs => RollingHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_byte_entropy",
-      exprs => ByteEntropy(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      exprs => {
-        val k = exprs(1) match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case n: Number => n.intValue()
-            case other => throw new IllegalArgumentException(
-              s"graft_minhash: numHashes must be an integer literal, " +
-                s"got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_minhash: numHashes must be a literal, not a column")
-        }
-        MinHashSignature(exprs(0), k)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      exprs => {
-        val len = exprs(1) match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case n: Number => n.intValue()
-            case other => throw new IllegalArgumentException(
-              s"graft_shingles: shingleLen must be an integer literal, " +
-                s"got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_shingles: shingleLen must be a literal, not a column")
-        }
-        ShingleSet(exprs(0), len)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      exprs => {
-        val len = exprs(1) match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case n: Number => n.intValue()
-            case other => throw new IllegalArgumentException(
-              s"graft_shingle_hashes: shingleLen must be an integer " +
-                s"literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_shingle_hashes: shingleLen must be a literal, not a column")
-        }
-        ShingleHashSet(exprs(0), len)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_long_intersect_count",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_term_counts",
-      exprs => TermCounts(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc_sum",
-      exprs => {
-        val k = exprs(2) match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case n: Number => n.intValue()
-            case other => throw new IllegalArgumentException(
-              s"graft_pq_adc_sum: numCentroids must be an integer " +
-                s"literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_pq_adc_sum: numCentroids must be a literal, not a column")
-        }
-        PqAdcSum(exprs(0), exprs(1), k)
-      }, "built-in")
-    def intLit(name: String, arg: String)(e: org.apache.spark.sql
-        .catalyst.expressions.Expression): Int = e match {
-      case lit if lit.foldable => lit.eval(null) match {
-        case n: Number => n.intValue()
-        case other => throw new IllegalArgumentException(
-          s"$name: $arg must be an integer literal, got $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        s"$name: $arg must be a literal, not a column")
-    }
-    reg.createOrReplaceTempFunction("graft_pq_codes",
-      exprs => PqCodes(exprs(0), exprs(1),
-        intLit("graft_pq_codes", "numCentroids")(exprs(2)),
-        intLit("graft_pq_codes", "subDim")(exprs(3))), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_lut",
-      exprs => PqLut(exprs(0), exprs(1),
-        intLit("graft_pq_lut", "numCentroids")(exprs(2)),
-        intLit("graft_pq_lut", "subDim")(exprs(3))), "built-in")
-    reg.createOrReplaceTempFunction("graft_centroid_topk",
-      exprs => CentroidTopK(exprs(0), exprs(1), exprs(2),
-        intLit("graft_centroid_topk", "k")(exprs(3))), "built-in")
-    reg.createOrReplaceTempFunction("graft_centroid_mu_assign",
-      exprs => graft.plans.CentroidMuAssign(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_sub_l2_argmin",
-      exprs => graft.plans.SubL2Argmin(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_bigram_counts",
-      exprs => BigramCounts(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_sign_band_codes",
-      exprs => {
-        // fold the packed plane literal to a PRIMITIVE double[] once
-        // at plan construction — the expression must never touch a
-        // boxed-element ArrayData on the per-row path (see
-        // SignBandCodes' codegen note)
-        val packed = exprs(1) match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-              a.toDoubleArray()
-            case other => throw new IllegalArgumentException(
-              "graft_sign_band_codes: packed planes must be an array " +
-                s"literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_sign_band_codes: packed planes must be a literal, " +
-              "not a column")
-        }
-        SignBandCodes(exprs(0), packed,
-          intLit("graft_sign_band_codes", "bBits")(exprs(2)))
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow",
-      exprs => graft.plans.Winnow(exprs(0),
-        intLit("graft_winnow", "k")(exprs(1)),
-        intLit("graft_winnow", "w")(exprs(2))), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      exprs => {
-        // fold the bitset literal to a PRIMITIVE long[] once at plan
-        // construction (the SignBandCodes constant-table discipline)
-        val bits = exprs(1) match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-              a.toLongArray()
-            case other => throw new IllegalArgumentException(
-              "graft_bloom_contains: bitset must be an array literal, " +
-                s"got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_bloom_contains: bitset must be a literal, not a column")
-        }
-        graft.plans.BloomContains(exprs(0), bits,
-          intLit("graft_bloom_contains", "numHashes")(exprs(2)))
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_count",
-      exprs => {
-        // fold the rank-order merge arrays to PRIMITIVE int[] once at
-        // plan construction (the constant-table discipline)
-        def intArr(e: org.apache.spark.sql.catalyst.expressions
-            .Expression, arg: String): Array[Int] = e match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-              a.toIntArray()
-            case other => throw new IllegalArgumentException(
-              s"graft_bpe_count: $arg must be an int array literal, " +
-                s"got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            s"graft_bpe_count: $arg must be a literal, not a column")
-        }
-        graft.plans.BpeTokenCount(exprs(0), intArr(exprs(1), "left"),
-          intArr(exprs(2), "right"))
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      exprs => graft.plans.NfcNormalize(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_ids",
-      exprs => {
-        def intArr(e: org.apache.spark.sql.catalyst.expressions
-            .Expression, arg: String): Array[Int] = e match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-              a.toIntArray()
-            case other => throw new IllegalArgumentException(
-              s"graft_bpe_ids: $arg must be an int array literal, " +
-                s"got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            s"graft_bpe_ids: $arg must be a literal, not a column")
-        }
-        graft.plans.BpeEncodeIds(exprs(0), intArr(exprs(1), "left"),
-          intArr(exprs(2), "right"))
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_hashed_logit",
-      exprs => {
-        // fold the weight table to a PRIMITIVE long[] once at plan
-        // construction (the constant-table discipline)
-        val w = exprs(1) match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-              a.toLongArray()
-            case other => throw new IllegalArgumentException(
-              "graft_hashed_logit: weights must be a long array " +
-                s"literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_hashed_logit: weights must be a literal, not a column")
-        }
-        val bias = exprs(2) match {
-          case lit if lit.foldable => lit.eval(null) match {
-            case n: Number => n.longValue()
-            case other => throw new IllegalArgumentException(
-              s"graft_hashed_logit: bias must be a long literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_hashed_logit: bias must be a literal, not a column")
-        }
-        graft.plans.HashedLogit(exprs(0), w, bias)
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_wav_wrap",
-      exprs => graft.plans.WavWrap(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_bmp_wrap",
-      exprs => graft.plans.BmpWrap(exprs.head), "built-in")
+  /** A plan-time constant argument: `take` picks the value out of the
+    * folded literal. A column, or a literal of the wrong type, fails
+    * analysis naming the function and the argument.
+    */
+  private def foldLit[T](fn: String, arg: String, what: String)(
+      e: Expression)(take: PartialFunction[Any, T]): T = {
+    if (!e.foldable) throw new IllegalArgumentException(
+      s"$fn: $arg must be a literal, not a column")
+    val v = e.eval(null)
+    take.applyOrElse(v, (other: Any) => throw new IllegalArgumentException(
+      s"$fn: $arg must be $what literal, got $other"))
   }
+  private def intLit(fn: String, arg: String)(e: Expression): Int =
+    foldLit(fn, arg, "an integer")(e) { case n: Number => n.intValue() }
+  // constant tables fold to PRIMITIVE arrays once at plan construction:
+  // the expression must never touch a boxed-element ArrayData on the
+  // per-row path (see SignBandCodes' codegen note)
+  private def arrayLit(fn: String, arg: String, what: String)(
+      e: Expression): ArrayData =
+    foldLit(fn, arg, what)(e) { case a: ArrayData => a }
+  private def intArr(fn: String, arg: String)(e: Expression): Array[Int] =
+    arrayLit(fn, arg, "an int array")(e).toIntArray()
+
+  /** Every graft_* SQL function, by name. */
+  private val functions: Seq[(String, FunctionBuilder)] = Seq(
+    "graft_dot" -> (e => DotProduct(e(0), e(1))),
+    "graft_l2norm" -> (e => L2Norm(e.head)),
+    "graft_quantize_micro" -> (e => graft.plans.QuantizeMicro(e.head)),
+    "graft_pack_f32" -> (e => graft.plans.PackF32(e.head)),
+    "graft_unpack_f32" -> (e => graft.plans.UnpackF32(e.head)),
+    "graft_ucos_packed_f32" ->
+      (e => graft.plans.UcosPackedF32(e(0), e(1))),
+    "graft_rolling_hash" -> (e => RollingHash(e.head)),
+    "graft_byte_entropy" -> (e => ByteEntropy(e.head)),
+    "graft_sorted_intersect_count" ->
+      (e => SortedIntersectCount(e(0), e(1))),
+    "graft_minhash" -> (e => MinHashSignature(e(0),
+      intLit("graft_minhash", "numHashes")(e(1)))),
+    "graft_shingles" -> (e => ShingleSet(e(0),
+      intLit("graft_shingles", "shingleLen")(e(1)))),
+    "graft_shingle_hashes" -> (e => ShingleHashSet(e(0),
+      intLit("graft_shingle_hashes", "shingleLen")(e(1)))),
+    "graft_sorted_long_intersect_count" ->
+      (e => SortedLongIntersectCount(e(0), e(1))),
+    "graft_term_counts" -> (e => TermCounts(e.head)),
+    "graft_pq_adc_sum" -> (e => PqAdcSum(e(0), e(1),
+      intLit("graft_pq_adc_sum", "numCentroids")(e(2)))),
+    "graft_pq_codes" -> (e => PqCodes(e(0), e(1),
+      intLit("graft_pq_codes", "numCentroids")(e(2)),
+      intLit("graft_pq_codes", "subDim")(e(3)))),
+    "graft_pq_lut" -> (e => PqLut(e(0), e(1),
+      intLit("graft_pq_lut", "numCentroids")(e(2)),
+      intLit("graft_pq_lut", "subDim")(e(3)))),
+    "graft_centroid_topk" -> (e => CentroidTopK(e(0), e(1), e(2),
+      intLit("graft_centroid_topk", "k")(e(3)))),
+    "graft_centroid_mu_assign" ->
+      (e => graft.plans.CentroidMuAssign(e(0), e(1), e(2))),
+    "graft_sub_l2_argmin" ->
+      (e => graft.plans.SubL2Argmin(e(0), e(1), e(2))),
+    "graft_bigram_counts" -> (e => BigramCounts(e.head)),
+    "graft_sign_band_codes" -> (e => SignBandCodes(e(0),
+      arrayLit("graft_sign_band_codes", "packed planes", "an array")(e(1))
+        .toDoubleArray(),
+      intLit("graft_sign_band_codes", "bBits")(e(2)))),
+    "graft_winnow" -> (e => graft.plans.Winnow(e(0),
+      intLit("graft_winnow", "k")(e(1)),
+      intLit("graft_winnow", "w")(e(2)))),
+    "graft_bloom_contains" -> (e => graft.plans.BloomContains(e(0),
+      arrayLit("graft_bloom_contains", "bitset", "an array")(e(1))
+        .toLongArray(),
+      intLit("graft_bloom_contains", "numHashes")(e(2)))),
+    "graft_bpe_count" -> (e => graft.plans.BpeTokenCount(e(0),
+      intArr("graft_bpe_count", "left")(e(1)),
+      intArr("graft_bpe_count", "right")(e(2)))),
+    "graft_nfc" -> (e => graft.plans.NfcNormalize(e(0))),
+    "graft_bpe_ids" -> (e => graft.plans.BpeEncodeIds(e(0),
+      intArr("graft_bpe_ids", "left")(e(1)),
+      intArr("graft_bpe_ids", "right")(e(2)))),
+    "graft_hashed_logit" -> (e => graft.plans.HashedLogit(e(0),
+      arrayLit("graft_hashed_logit", "weights", "a long array")(e(1))
+        .toLongArray(),
+      foldLit("graft_hashed_logit", "bias", "a long")(e(2)) {
+        case n: Number => n.longValue() })),
+    "graft_wav_wrap" -> (e => graft.plans.WavWrap(e.head)),
+    "graft_bmp_wrap" -> (e => graft.plans.BmpWrap(e.head)))
+
+  /** Registers [[functions]] in `ext`, for `SparkSession.Builder
+    * .withExtensions`: each session the builder makes, and each of its
+    * `newSession()` children, starts with them.
+    */
+  def inject(ext: SparkSessionExtensions): Unit =
+    functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(
+        builder.getClass.getName, null, name, null, "", "", "",
+        "", "", "", "built-in"), builder))
+    }
 
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
   def l2norm(a: Column): Column = call_function("graft_l2norm", a)
@@ -317,7 +197,7 @@ object VectorOps {
     * handle — for fixtures past the task-binary comfort zone (q135's
     * packed τ=0.4 table is ~3.5 MB; as a plan constant it serialized
     * into every task). Takes [[graft.Fixtures.planesBroadcast]]'s
-    * (handle, fingerprint, bBits) triple; bypasses the temp-function
+    * (handle, fingerprint, bBits) triple; bypasses the function
     * registry because a broadcast cannot ride a SQL literal.
     */
   def signBandCodesBcast(v: Column,
@@ -332,8 +212,7 @@ object VectorOps {
     * plans as HashAggregate instead of SortAggregate — see
     * [[graft.plans.PackStr8]] for the checked bounded-domain contract
     * (BCP-47 language subtags are the intended payload). Direct
-    * expression construction (no temp-function registry) so callers
-    * need no per-session registration.
+    * expression construction, no SQL function.
     */
   def packStr8(s: Column): Column =
     org.apache.spark.sql.GraftShims.column(graft.plans.PackStr8(

@@ -327,7 +327,6 @@ object Chat {
   val q192ChatRender: QueryDef = QueryDef(
     "q192_chat_render",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val (ml, mr) = graft.Fixtures.bpeMerges(s)
       val rendered = array_join(
         transform(col("m"), x => concat(lit("<|"),
@@ -374,7 +373,6 @@ object Chat {
   val q204ChatTruncate: QueryDef = QueryDef(
     "q204_chat_truncate",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val (ml, mr) = graft.Fixtures.bpeMerges(s)
       val turnNt = transform(col("m"), x =>
         graft.functions.VectorOps.bpeCount(
@@ -470,7 +468,6 @@ object Chat {
   val q200SftPipeline: QueryDef = QueryDef(
     "q200_sft_pipeline",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val BinTokens = 2048
       val (ml, mr) = graft.Fixtures.bpeMerges(s)
       val evalTexts = (0 until NumEvalPrompts)

@@ -73,7 +73,6 @@ object Dedup {
     * pipelines that need the shingle text back.
     */
   private def shingleSets(docs: DataFrame): DataFrame = {
-    graft.functions.VectorOps.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         graft.functions.VectorOps
@@ -420,7 +419,6 @@ object Dedup {
   val q23DedupMinhash: QueryDef = QueryDef(
     "q23_dedup_minhash",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       // persisted: the signature relation feeds three consumers
       // (buckets, both verify sides) and the r8 executed-plan audit
       // showed exchange reuse never applies to these self-joins — an
@@ -547,7 +545,6 @@ object Dedup {
   val q65Decontamination: QueryDef = QueryDef(
     "q65_decontamination",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       // hashed 5-grams: the semi-join key and its exchange go from
       // ~30-byte strings to 8-byte longs (the existence check never
       // needs the n-gram text back)
@@ -604,7 +601,6 @@ object Dedup {
   val q159ContamOverlap: QueryDef = QueryDef(
     "q159_contam_overlap",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val sh = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           graft.functions.VectorOps.shingleHashes(lower(col("text")), 5)
@@ -670,7 +666,6 @@ object Dedup {
   val q187SourceOverlap: QueryDef = QueryDef(
     "q187_source_overlap",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       // persisted: three consumers (per-source totals + both sides of
       // the self-join) would each re-run the corpus shingle pass —
       // same audit finding as q65's sets5.
@@ -759,7 +754,6 @@ object Dedup {
     "q138_decontam_bloom",
     (s, dir) => {
       import s.implicits._
-      graft.functions.VectorOps.register(s)
       // same persisted 5-gram relation as q65 (identical subtree —
       // the cache manager serves one copy to both queries)
       val sets5 = graft.Caches.persist(Tables.load(s, dir, "documents")
@@ -950,7 +944,6 @@ object Dedup {
   val q74IncrementalNeardup: QueryDef = QueryDef(
     "q74_incremental_neardup",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       // persisted: four consumers (base buckets, delta buckets, both
       // verify sides) and exchange reuse never applies (r8 audit)
       val docAgg = graft.Caches.persist(
@@ -1019,7 +1012,6 @@ object Dedup {
   def streamIncrementalNeardup(base: DataFrame,
       deltaStream: DataFrame,
       pairDedupState: Boolean = true): DataFrame = {
-    graft.functions.VectorOps.register(base.sparkSession)
     val baseAgg = graft.Caches.persist(
       shingleSets(base)
         .withColumn("sig",
@@ -1082,7 +1074,6 @@ object Dedup {
   val q119CrossShardDedup: QueryDef = QueryDef(
     "q119_cross_shard_dedup",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val docs = Tables.load(s, dir, "documents")
       // 2-shard split by id parity; each shard's signature relation is
       // persisted separately (its buckets AND the verify stage read it

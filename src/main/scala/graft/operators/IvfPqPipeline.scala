@@ -251,7 +251,6 @@ object IvfPqPipeline {
     val queries = n.filter(col("vec_id") < NumQ)
     val idx = buildBaseIndex(n)
 
-    graft.functions.VectorOps.register(s)
     val deltaStream = graft.streaming.EventsStream.readEmbeddings(s, dir)
       .filter(col("vec_id") >= NumQ && isDelta)
       .select(col("vec_id"),

@@ -53,7 +53,6 @@ object Kmeans {
 
   /** µ-quantized relation: vec_id, qv (integer-valued doubles), qn. */
   private[graft] def qrel(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorOps.register(s)
     Tables.load(s, dir, "embeddings")
       .select(col("vec_id"),
         graft.functions.VectorOps.quantizeMicro(

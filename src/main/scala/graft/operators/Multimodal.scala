@@ -414,7 +414,6 @@ object Multimodal {
     */
   def loadAssets(s: SparkSession, dir: String): Dataset[MediaAsset] = {
     import s.implicits._
-    graft.functions.VectorOps.register(s)
     val bytes = encode(col("text"), "UTF-8")
     Tables.load(s, dir, "documents")
       .select(col("doc_id"),

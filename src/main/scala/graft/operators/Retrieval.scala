@@ -174,7 +174,6 @@ object Retrieval {
   val q125HybridRrf: QueryDef = QueryDef(
     "q125_hybrid_rrf",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val text = scored(s, dir)
         .select(col("doc_id"), Round4(col("score")).as("s4"))
         .orderBy(col("s4").desc, col("doc_id"))
@@ -544,7 +543,6 @@ object Retrieval {
   val q150HybridEval: QueryDef = QueryDef(
     "q150_hybrid_eval",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val (e, q) = evalEmbeddings(s, dir)
       val vecScored = e.join(broadcast(q))
         .withColumn("sim", Round4(graft.functions.VectorOps.cosine(
@@ -580,7 +578,6 @@ object Retrieval {
   val q155HybridEvalAnn: QueryDef = QueryDef(
     "q155_hybrid_eval_ann",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val (e, q) = evalEmbeddings(s, dir)
       val codes = Similarity.signCodes(e)
       val masks = lit(0L) +: (0 until graft.tools.GenFixtures.LshBits)

@@ -48,7 +48,6 @@ object Similarity {
     * invariant rather than paying a per-row assert on the hot path).
     */
   private[graft] def normed(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorOps.register(s)
     Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", graft.functions.VectorOps.l2norm(col("v")))
@@ -326,7 +325,6 @@ object Similarity {
     * rebuild; same content re-serves across sessions).
     */
   private[graft] def signIndexLayout(s: SparkSession, dir: String): String = {
-    graft.functions.VectorOps.register(s)
     val eStamp = Tables.fileStamp(
       java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
     val pStamp = Tables.fileStamp(
@@ -504,7 +502,6 @@ object Similarity {
     * sessions (q155's recompute-codes-per-session cost gone).
     */
   private[graft] def annIndexLayout(s: SparkSession, dir: String): String = {
-    graft.functions.VectorOps.register(s)
     val eStamp = Tables.fileStamp(
       java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
     val cStamp = Tables.fileStamp(
@@ -740,7 +737,6 @@ object Similarity {
     // control only — drops the cross-batch dropDuplicates state so a
     // redelivered vector re-emits pairs, proving the spec's raw-count
     // guard detects a broken state store
-    graft.functions.VectorOps.register(s)
     val e = normed(s, dir)
     val baseC = signCodes(e).filter(!isDelta)
       .hint("shuffle_hash") // never broadcast the corpus side
@@ -1483,7 +1479,6 @@ object Similarity {
   val q128WideBandNeardup: QueryDef = QueryDef(
     "q128_wideband_neardup",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val e = graft.Fixtures.read(s, graft.Fixtures.neardupEmbeddingsPath)
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))
@@ -1721,7 +1716,6 @@ object Similarity {
   val q145PcaProject: QueryDef = QueryDef(
     "q145_pca_project",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))

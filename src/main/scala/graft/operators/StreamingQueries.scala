@@ -480,7 +480,6 @@ object StreamingQueries {
   private[graft] def decontamStatics(s: org.apache.spark.sql
       .SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, Array[Long]) = {
-    graft.functions.VectorOps.register(s)
     import s.implicits._
     val testG = graft.Caches.persist(
       Tables.load(s, dir, "documents")
@@ -834,7 +833,6 @@ object StreamingQueries {
   val q203StreamSftIntake: QueryDef = QueryDef(
     "q203_stream_sft_intake",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val (ml, mr) = graft.Fixtures.bpeMerges(s)
       val rendered = array_join(
         transform(col("m"), x => concat(lit("<|"),

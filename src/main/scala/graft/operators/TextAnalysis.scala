@@ -260,7 +260,6 @@ object TextAnalysis {
   val q48RollingHash: QueryDef = QueryDef(
     "q48_rolling_hash",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           graft.functions.VectorOps.rollingHash(col("text")).as("rh"))
@@ -290,7 +289,6 @@ object TextAnalysis {
   val q87CharEntropy: QueryDef = QueryDef(
     "q87_char_entropy",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       Tables.load(s, dir, "documents")
         .select(col("source"),
           graft.functions.VectorOps.byteEntropy(col("text")).as("ent"))
@@ -1021,7 +1019,6 @@ object TextAnalysis {
   val q183NfcNormalize: QueryDef = QueryDef(
     "q183_nfc_normalize",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val n = graft.Fixtures.read(s, graft.Fixtures.nfcDocsPath)
         .select(col("doc_id"), col("lang"), col("text"),
           graft.functions.VectorOps.nfc(col("text")).as("norm"))
@@ -1064,7 +1061,6 @@ object TextAnalysis {
   val q184NfcDedup: QueryDef = QueryDef(
     "q184_nfc_dedup",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       graft.Fixtures.read(s, graft.Fixtures.nfcDocsPath)
         .select(col("lang"),
           md5(col("text").cast(BinaryType)).as("hr"),
@@ -1409,7 +1405,6 @@ object TextAnalysis {
   private[graft] def tokenShardManifest(s: SparkSession,
       seed: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorOps.register(s)
     val NShards = 8
     val (ml, mr) = graft.Fixtures.bpeMerges(s)
     val base = graft.Fixtures.read(s, graft.Fixtures.bpeCorpusPath)
@@ -1500,7 +1495,6 @@ object TextAnalysis {
     "q178_packed_sequences",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.VectorOps.register(s)
       val SeqLen = 2048
       val (ml, mr) = graft.Fixtures.bpeMerges(s)
       val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
@@ -1601,7 +1595,6 @@ object TextAnalysis {
   val q68Tfidf: QueryDef = QueryDef(
     "q68_tfidf",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       // pairs feeds three consumers (df, N, the score pass); persist is
       // the Spark spelling of the oracle's materialized tf CTE (a
       // no-persist recompute measured ~20% slower at sf0.1 — the in-row
@@ -1665,7 +1658,6 @@ object TextAnalysis {
   val q70Repetition: QueryDef = QueryDef(
     "q70_repetition",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val w = split(lower(col("text")), " ")
       Tables.load(s, dir, "documents")
         .select(col("doc_id"),
@@ -1716,7 +1708,6 @@ object TextAnalysis {
     * the same rule columns to a micro-batch plan.
     */
   private[graft] def gopherCols(s: SparkSession, d: DataFrame): DataFrame = {
-    graft.functions.VectorOps.register(s)
     val w = split(lower(col("text")), " ")
     d
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
@@ -2404,7 +2395,6 @@ object TextAnalysis {
   val q79BigramPmi: QueryDef = QueryDef(
     "q79_bigram_pmi",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val docs = Tables.load(s, dir, "documents")
       // uni feeds ux/uy/n1 and bgAll feeds the PMI chain + n2; without
       // materialization every consumer re-derives the corpus pass
@@ -2509,7 +2499,6 @@ object TextAnalysis {
   val q129WinnowProvenance: QueryDef = QueryDef(
     "q129_winnow_provenance",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val fps = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
           explode(graft.functions.VectorOps.winnow(col("text"), WinK, WinW))
@@ -2835,7 +2824,6 @@ object TextAnalysis {
   val q147TrainingPipeline: QueryDef = QueryDef(
     "q147_training_pipeline",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       // train candidates with token counts
       val tr = Tables.load(s, dir, "documents")
         .filter(col("doc_id") % 100 < 80)
@@ -3109,7 +3097,6 @@ object TextAnalysis {
   val q197PaddingWaste: QueryDef = QueryDef(
     "q197_padding_waste",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val B = 16
       val (ml, mr) = graft.Fixtures.bpeMerges(s)
       val w = org.apache.spark.sql.expressions.Window
@@ -3157,7 +3144,6 @@ object TextAnalysis {
   val q148BpePack: QueryDef = QueryDef(
     "q148_bpe_pack",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val BinTokens = 2048
       val (ml, mr) = graft.Fixtures.bpeMerges(s)
       val w = org.apache.spark.sql.expressions.Window
@@ -3209,7 +3195,6 @@ object TextAnalysis {
   val q164TokenizerFertility: QueryDef = QueryDef(
     "q164_tokenizer_fertility",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val (ml, mr) = graft.Fixtures.bpeMerges(s)
       graft.Fixtures.read(s, graft.Fixtures.bpeCorpusPath)
         .select(col("lang"),
@@ -3272,7 +3257,6 @@ object TextAnalysis {
   val q153PipelineBpe: QueryDef = QueryDef(
     "q153_pipeline_bpe",
     (s, dir) => {
-      graft.functions.VectorOps.register(s)
       val (ml, mr) = graft.Fixtures.bpeMerges(s)
       val tr = graft.Fixtures.read(s, graft.Fixtures.bpeCorpusPath)
         .select(col("doc_id"), col("lang"), col("text"),

@@ -60,7 +60,6 @@ object TrainCentroids {
     */
   def lloyd(vecs: DataFrame, init: Seq[(Int, Array[Double])],
       iters: Int): Trained = {
-    graft.functions.VectorOps.register(vecs.sparkSession)
     var cents = init
     for (_ <- 1 to iters) {
       val dims = assign(vecs, cents)

@@ -14,7 +14,6 @@ class BitextSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   private def pool(vs: Seq[(Long, Array[Double])]): DataFrame = {
-    graft.functions.VectorOps.register(spark)
     import spark.implicits._
     operators.Bitext.qrel(vs.toDF("id", "v")
       .withColumn("v", col("v").cast("array<double>"))

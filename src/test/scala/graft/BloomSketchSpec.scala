@@ -55,7 +55,6 @@ class BloomSketchSpec extends AnyFunSuite {
   }
 
   test("bloom prunes >90% of the train side before the semi join") {
-    functions.VectorOps.register(spark)
     val sh = Tables.load(spark, dir, "documents")
       .select(col("doc_id"),
         functions.VectorOps.shingleHashes(lower(col("text")), 5).as("gs"))

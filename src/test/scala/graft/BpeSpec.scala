@@ -91,7 +91,6 @@ class BpeSpec extends AnyFunSuite {
 
   test("engine expression reproduces the kernel count for every sf0.01 " +
       "document inside whole-stage codegen") {
-    graft.functions.VectorOps.register(spark)
     val rows = Tables.load(spark, "/root/testdata/sf0.01", "documents")
       .select(col("doc_id"), col("text"),
         graft.functions.VectorOps.bpeCount(col("text"), mLeft, mRight)

@@ -180,7 +180,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
     // run the operator's expressions inline on the local corpus
     // (shingle sets come from the registered function)
-    graft.functions.VectorOps.register(spark)
     val sets = docs.select(col("doc_id"),
         graft.functions.VectorOps
           .shingleHashes(lower(col("text")), 3).as("gs"))

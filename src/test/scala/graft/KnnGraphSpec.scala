@@ -231,7 +231,6 @@ class KnnGraphSpec extends AnyFunSuite {
       "operating regime): near-perfect recall for in-cluster queries") {
     import spark.implicits._
     import scala.util.hashing.MurmurHash3
-    graft.functions.VectorOps.register(spark)
     val dim = graft.tools.GenFixtures.Dim
     def member(id: Long, d: Int): Double = {
       val j = id / 32

@@ -249,7 +249,6 @@ class ScaleGrowthSpec extends AnyFunSuite {
       // construction; HERE we bound the raw (uncapped) hot head and
       // the LSH band buckets the q23/q58 joins actually key on.
       val big = dirs.last
-      graft.functions.VectorOps.register(spark)
       val docs = spark.read.parquet(s"$big/documents.parquet")
       val maxDf = docs
         .select(explode(graft.functions.VectorOps
@@ -481,7 +480,6 @@ class ScaleGrowthSpec extends AnyFunSuite {
       "measures ~2) with recall >= 0.95 of true >0.4 twins") {
     val clock = new StageClock
     spark.sparkContext.addSparkListener(clock)
-    graft.functions.VectorOps.register(spark)
     try {
       val scales = Seq(250, 1000, 4000)
       val measured = scales.map { n =>
@@ -532,9 +530,21 @@ class ScaleGrowthSpec extends AnyFunSuite {
       "size (stats/summary/top-k only, never the token stream)") {
     val clock = new StageClock
     spark.sparkContext.addSparkListener(clock)
+    // One scan partition at every scale: both queries shuffle partial
+    // rows per scan partition (q124 exactly one), and under the
+    // engine's 512 KB openCostInBytes the 8000-doc corpus splits in 3,
+    // so q124's 1 -> 1 -> 3 read as growth. Rows are NOT divided by
+    // the partition count: a leaked token stream grows with it too.
+    val openCostKey = "spark.sql.files.openCostInBytes"
+    val openCost0 = spark.conf.get(openCostKey)
+    spark.conf.set(openCostKey, (64L << 20).toString)
     try {
       val scales = Seq(500, 2000, 8000)
       val dirs = scales.map(genCorpus)
+      val scanParts = dirs.map(d =>
+        spark.read.parquet(s"$d/documents.parquet").rdd.getNumPartitions)
+      assert(scanParts.distinct.size == 1,
+        s"scan partitions differ across scales: $scanParts")
       // (query, absolute row ceiling at 8000 docs). The ceilings are
       // generous multiples of the structural bounds (q124: one stats
       // row + per-partition top-k; q122: one MG map per task + ≤511
@@ -563,7 +573,10 @@ class ScaleGrowthSpec extends AnyFunSuite {
         assert(s3 < cap,
           s"$q shuffled $s3 rows at 8000 docs (ceiling $cap)")
       }
-    } finally spark.sparkContext.removeSparkListener(clock)
+    } finally {
+      spark.conf.set(openCostKey, openCost0)
+      spark.sparkContext.removeSparkListener(clock)
+    }
   }
 
   /** 90%-hot-source corpus for the q126 salted-cap skew pin. */
@@ -1000,7 +1013,6 @@ class ScaleGrowthSpec extends AnyFunSuite {
     import spark.implicits._
     val clock = new StageClock
     spark.sparkContext.addSparkListener(clock)
-    graft.functions.VectorOps.register(spark)
     try {
       val dim = graft.tools.GenFixtures.Dim
       val scales = Seq(512, 2048, 8192)
@@ -1067,7 +1079,6 @@ class ScaleGrowthSpec extends AnyFunSuite {
     import spark.implicits._
     val clock = new StageClock
     spark.sparkContext.addSparkListener(clock)
-    graft.functions.VectorOps.register(spark)
     try {
       val dim = graft.tools.GenFixtures.Dim
       val scales = Seq(1024, 4096)

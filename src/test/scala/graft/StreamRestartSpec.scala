@@ -168,8 +168,8 @@ class StreamRestartSpec extends AnyFunSuite {
     * checkpoints only — a checkpoint is provider-sticky). The
     * production-tier scenarios (frontier seen-set, near-dup pair
     * ledger — the two whose state grows with the corpus) run under
-    * BOTH the default in-memory provider and RocksDB
-    * ([[Sessions.stateStoreProvider]]'s profile), proving the
+    * BOTH the default in-memory provider and RocksDB (the provider a
+    * run selects through `SPARK_GRAFT_EXTRA_CONF`), proving the
     * checkpoint-restart contract is provider-portable.
     */
   private def withStateStore(provider: String)(body: => Unit): Unit = {
@@ -338,7 +338,6 @@ class StreamRestartSpec extends AnyFunSuite {
     // the bloom + semi filter ever reach the dropDuplicates state, so
     // redelivering a clean doc would exercise nothing (a broken
     // restored state would still pass). Compute the leak set exactly.
-    functions.VectorOps.register(spark)
     val leakedIds = trainRows.toSeq.toDF("doc_id", "lang", "text")
       .select(col("doc_id"), explode(functions.VectorOps
         .shingleHashes(lower(col("text")), 5)).as("g"))

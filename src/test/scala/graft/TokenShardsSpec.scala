@@ -20,7 +20,6 @@ class TokenShardsSpec extends AnyFunSuite {
   test("in-plan BpeEncodeIds equals the committed reference sequence " +
       "for every document") {
     val (ml, mr) = Fixtures.bpeMerges(spark)
-    graft.functions.VectorOps.register(spark)
     val mismatch = Fixtures.read(spark, Fixtures.bpeCorpusPath)
       .select(col("doc_id"),
         graft.functions.VectorOps.bpeIds(col("text"), ml, mr)

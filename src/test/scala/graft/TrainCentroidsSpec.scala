@@ -14,7 +14,6 @@ class TrainCentroidsSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def vecs = {
-    graft.functions.VectorOps.register(spark)
     Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", graft.functions.VectorOps.l2norm(col("v")))

@@ -36,7 +36,6 @@ class TrainWhitenerSpec extends AnyFunSuite {
 
   test("committed fixture: projected variance on the training corpus " +
       "matches each component's eigenvalue within 2%") {
-    functions.VectorOps.register(spark)
     val comps = Fixtures.pcaComponents(spark).collect()
       .map(r => (r.getInt(0),
         r.getAs[scala.collection.Seq[Double]](1).toArray,

@@ -13,7 +13,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("dot and norm match the higher-order-function formulation exactly") {
-    VectorOps.register(spark)
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (Seq(0.1, -0.2, 0.3), Seq(-0.7, 0.11, 13.0))).toDF("a", "b")
@@ -31,7 +30,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("null propagation") {
-    VectorOps.register(spark)
     val df = Seq((Some(Seq(1.0)), Option.empty[Seq[Double]]))
       .toDF("a", "b")
     val r = df.select(VectorOps.dot(col("a"), col("b"))).collect()(0)
@@ -39,7 +37,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("rolling hash: fold parity, codepoints, null, empty") {
-    VectorOps.register(spark)
     def ref(s: String): Long = {
       var h = 0L
       s.codePoints().toArray.foreach(cp => h = (h * 31 + cp) % 1000000007L)
@@ -58,7 +55,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("shingle set: parity with the split+transform+array_distinct " +
       "formulation on seeded random texts and edge cases") {
-    VectorOps.register(spark)
     // reference = the HOF pipeline ShingleSet replaced (len = 3)
     def ref(s: String): Seq[String] = {
       val w = s.split(" ", -1).toSeq
@@ -95,7 +91,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("sorted intersect count: parity with array_intersect on seeded " +
       "random duplicate-free sorted arrays; empty and disjoint edges") {
-    VectorOps.register(spark)
     val rnd = new scala.util.Random(11)
     val vocab = (1 to 60).map(i => s"tok$i")
     val cases = (1 to 150).map { _ =>
@@ -122,7 +117,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("shingle hash set: per-element xxhash64 parity with the string " +
       "shingle set, sortedness, dedup, null/short-text edges") {
-    VectorOps.register(spark)
     val rnd = new scala.util.Random(7)
     val words = Seq("the", "quick", "brown", "fox", "", "a", "über",
       "数据", "x'y", "z\"w")
@@ -158,7 +152,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("sorted long intersect count: parity with array_intersect on " +
       "seeded random sorted long arrays; empty/disjoint/null edges") {
-    VectorOps.register(spark)
     val rnd = new scala.util.Random(13)
     val vocab = (1 to 60).map(i => rnd.nextLong())
     val cases = (1 to 150).map { _ =>
@@ -185,7 +178,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("byte entropy: reference parity, closed forms, null, empty") {
-    VectorOps.register(spark)
     def ref(s: String): Double = {
       val bs = s.getBytes("UTF-8")
       if (bs.isEmpty) 0d
@@ -215,7 +207,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("bigram counts: parity with the filter-split-transform " +
       "relational spelling on seeded random texts and edge cases") {
-    VectorOps.register(spark)
     val rnd = new scala.util.Random(13)
     val words = Vector("a", "bb", "ccc", "dd", "e")
     val inputs = (Seq("", "a", "a b", "a  b", " a b ", "a a a",
@@ -245,7 +236,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("sign band codes: bit-parity with the relational dot-threshold " +
       "bit-sum over seeded random vectors and planes") {
-    VectorOps.register(spark)
     val rnd = new scala.util.Random(11)
     val dim = 16
     val bBits = 5
@@ -297,7 +287,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("bloom contains: codegen path agrees with the kernel probe, " +
       "null propagates") {
-    VectorOps.register(spark)
     val rnd = new scala.util.Random(23)
     val bits = new Array[Long]((1 << 12) >>> 6)
     val members = Array.fill(200)(rnd.nextLong())
@@ -324,7 +313,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
     // a child session: the codegen switches below stay off the shared
     // session's conf
     val s = spark.newSession()
-    VectorOps.register(s)
     s.conf.set("spark.sql.codegen.wholeStage", "false")
     val inf = Double.PositiveInfinity
     val arrays: Seq[Seq[Double]] = Seq(null, Nil, Seq(1.0, 1.0, 1.0),

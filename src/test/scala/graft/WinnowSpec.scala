@@ -78,7 +78,6 @@ class WinnowSpec extends AnyFunSuite {
 
   test("registered graft_winnow function evaluates in a plan") {
     val spark = SparkTestSession.spark
-    graft.functions.VectorOps.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val df = Seq((1L, "the quick brown fox jumps over the lazy dog"))
