@@ -223,8 +223,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val rawDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.build("graft-bench",
-      coresOverride = Some(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
+    val spark = Sessions.build("graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = multiRowGroupCopy(spark, rawDir)
     val defs = SparkEntry.benchDefs

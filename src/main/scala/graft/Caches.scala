@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped registry for the corpus relations query builders
@@ -21,11 +22,18 @@ object Caches {
       new java.util.concurrent.ConcurrentHashMap[DataFrame,
         java.lang.Boolean]())
 
-  /** Persist (MEMORY_AND_DISK) and register for later [[clear]]. */
-  def persist(df: DataFrame): DataFrame = {
-    reg.add(df)
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-  }
+  /** Persist (MEMORY_AND_DISK) and register for later [[clear]]. A
+    * plan Spark already caches (an earlier build registered it) is
+    * returned as is: it reads the cached copy anyway, and registering
+    * it again would keep one more DataFrame per rebuild alive.
+    */
+  def persist(df: DataFrame): DataFrame =
+    if (df.sparkSession.sharedState.cacheManager
+        .lookupCachedData(castToImpl(df)).isDefined) df
+    else {
+      reg.add(df)
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Release ONE registered relation early (an iterative operator's
     * per-call cache that should not wait for the session-level

@@ -21,8 +21,7 @@ object Verify {
         val pats = args(2).split(",").toSeq
         name => pats.exists(name.contains)
       } else _ => true
-    val spark = Sessions.build("graft-verify",
-      coresOverride = Some(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
+    val spark = Sessions.build("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // 4 concurrent query dumps: Spark's FAIR-ish FIFO scheduler

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -62,7 +62,8 @@ private[graft] object KcGreedy extends Serializable {
 
   /** Exact farthest-first (Gonzalez 1985) over `rows` in memory,
     * seeded at the minimum vid, argmin ties (maxu asc, vid asc) — the
-    * serial arm's exact per-round semantics. Returns min(k, n) picks
+    * exact arm's per-round semantics ([[KnnGraph.kcenterRounds]] runs
+    * the same rounds distributed). Returns min(k, n) picks
     * as (sel, row, farthest_u); the seed reports farthest_u = 10⁶.
     */
   def gonzalez(rows: Array[KcRow], k: Int): Vector[(Int, KcRow, Long)] = {
@@ -663,32 +664,16 @@ object KnnGraph {
   /** Coreset size for the k-center selection. */
   val CoresetK = 8
 
-  /** q217: farthest-point / k-center coreset selection (Gonzalez
-    * 1985, the 2-approximation greedy; the coreset construction of
-    * Sener & Savarese ICLR'18 and the DIVERSIFICATION half of the D4
-    * pipeline after SemDeDup prunes duplicates): iteratively pick
-    * the vector FARTHEST from everything selected so far — i.e. with
-    * the MINIMUM max-µcos to the current centers — so K rows span the
-    * embedding space instead of oversampling its dense core. The
-    * selection is inherently sequential (each pick depends on all
-    * prior picks), so the loop is K−1 rounds of one broadcast-center
-    * scan + one 1-row argmin — the per-round driver probe every
-    * iterative engine performs — with the per-vector `maxu` state
-    * localCheckpointed and superseded rounds released. All integer:
-    * µcos scores, GREATEST folds, (maxu, vec_id) tie-breaks; the
-    * oracle unrolls all [[CoresetK]] rounds. At corpus scale each
-    * round is one map-side scan of N rows against ONE broadcast
-    * center plus a K-row argmin — O(N·K) total, nothing quadratic.
-    */
-  /** Largest K the serial exact arm accepts: past this the round
-    * count — K−1 serial driver jobs at a ~40 ms scheduling floor each
-    * — dominates any data cost (at the D4-style production coreset
-    * sizes of 10⁴–10⁶ centers that is DAYS of pure scheduling), so
-    * the dispatcher swaps to the bounded-round composable arm. The
-    * same size-dispatch recipe as [[Kmeans.assignArm]]: both arms are
-    * spec-pinned at the boundary (exact equality is impossible across
-    * arms — composable is a bounded-approximation by construction —
-    * so the pin is the covering-radius bound, KnnGraphSpec).
+  /** Largest K the dispatcher gives an exact arm: past this the
+    * distributed rounds' count — K−1 serial driver jobs at a ~40 ms
+    * scheduling floor each — dominates any data cost (at the D4-style
+    * production coreset sizes of 10⁴–10⁶ centers that is DAYS of pure
+    * scheduling), so the dispatcher swaps to the bounded-round
+    * composable arm. The same size-dispatch recipe as
+    * [[Kmeans.assignArm]]: both arms are spec-pinned at the boundary
+    * (exact equality is impossible across arms — composable is a
+    * bounded-approximation by construction — so the pin is the
+    * covering-radius bound, KnnGraphSpec).
     */
   val KcenterSerialMaxK = 32
 
@@ -709,13 +694,17 @@ object KnnGraph {
     */
   val KcenterDispatchParts = 64
 
-  /** Largest stage-2 union (rows) the driver materializes for the
-    * final greedy. Past `2K·parts` over this, the ESCALATION arm runs
-    * one more local-oversample round over the union relation itself
-    * before collecting (the recursive MapReduce-clustering step —
-    * r19 VERDICT ask #4: previously scaladoc prose). 2²⁰ rows ≈
-    * 70 MB of 64-dim doubles — the broadcast-join-build class this
-    * driver materialization has always been budgeted as.
+  /** Largest relation (rows) the driver materializes for an in-memory
+    * Gonzalez greedy: the exact arm's whole corpus, and the composable
+    * arm's stage-2 union. Past `2K·parts` over this, the composable
+    * arm's ESCALATION runs one more local-oversample round over the
+    * union relation itself before collecting (the recursive
+    * MapReduce-clustering step). 2²⁰ rows × 64 dims × 8 B = 512 MiB
+    * of decoded doubles; collected as UnsafeRows (a 64-dim
+    * (long, array<double>, double) row is 560 B) the results are
+    * 560 MiB before compression, under `spark.driver.maxResultSize`'s
+    * 1 GiB default. Wider vectors reach that limit sooner: at 128
+    * dims the same row count is 1,072 MiB of rows.
     */
   val KcenterDriverMaxUnion: Long = 1L << 20
 
@@ -723,9 +712,9 @@ object KnnGraph {
   private[graft] case object KcSerialArm extends KcenterArm
   private[graft] case object KcComposableArm extends KcenterArm
 
-  /** The pure dispatch rule (unit-tested at the boundary): the exact
-    * serial greedy while K−1 driver rounds stay cheap, the two-round
-    * composable oversample past it.
+  /** The pure dispatch rule (unit-tested at the boundary): an exact
+    * greedy while K stays at or under [[KcenterSerialMaxK]], the
+    * two-round composable oversample past it.
     */
   private[graft] def kcenterArm(k: Int): KcenterArm =
     if (k <= KcenterSerialMaxK) KcSerialArm else KcComposableArm
@@ -733,9 +722,15 @@ object KnnGraph {
   /** Gonzalez greedy over a quantized relation (vec_id/qv/qn): K
     * rows (sel, vec_id, farthest_u), seeded at the minimum id.
     * Shared by q217 (whole corpus) and q218 (curation survivors).
-    * Dispatches on K like [[Kmeans.assignArm]]: the exact serial
-    * greedy to [[KcenterSerialMaxK]], the O(1)-round composable
-    * oversample ([[kcenterSelectComposable]]) past it.
+    * Three arms:
+    *  - K ≤ [[KcenterSerialMaxK]] and at most [[KcenterDriverMaxUnion]]
+    *    rows: the exact greedy on the driver over one bounded collect
+    *    ([[kcenterSerial]]);
+    *  - K ≤ [[KcenterSerialMaxK]] past the driver budget: the exact
+    *    greedy as K−1 distributed rounds ([[kcenterRounds]]);
+    *  - K past [[KcenterSerialMaxK]]: the O(1)-round composable
+    *    oversample ([[kcenterSelectComposable]]).
+    * The first two return the same rows bit for bit (KnnGraphSpec).
     */
   private[graft] def kcenterSelect(s: SparkSession, e0: DataFrame,
       k: Int = CoresetK): DataFrame = kcenterArm(k) match {
@@ -744,8 +739,57 @@ object KnnGraph {
       KcenterDispatchParts)
   }
 
+  /** The exact greedy, dispatched on the row count it observes: one
+    * collect bounded at `driverMax` + 1 rows; when the relation fits,
+    * [[KcGreedy.gonzalez]] runs on the driver (one scan job, where the
+    * rounds run 40 at K = 8 on the fixture), otherwise the distributed
+    * rounds run; the collect they discard costs about one round's
+    * scan. `driverMax` is a test seam for forcing the rounds arm.
+    * Both arms return min(K, n) picks.
+    */
   private[graft] def kcenterSerial(s: SparkSession, e0: DataFrame,
-      k: Int = CoresetK): DataFrame = {
+      k: Int = CoresetK,
+      driverMax: Long = KcenterDriverMaxUnion): DataFrame = {
+    val cap = math.min(driverMax, Int.MaxValue - 1L).toInt
+    val rows = kcRows(e0).limit(cap + 1).collect()
+    if (rows.length > cap) kcenterRounds(s, e0, k)
+    else driverGreedy(s, rows, k)
+  }
+
+  /** A quantized relation decoded straight to driver/executor rows
+    * (primitive `Array[Double]` vectors, no boxed Seq).
+    */
+  private def kcRows(e: DataFrame): Dataset[KcGreedy.KcRow] = {
+    val s = e.sparkSession
+    import s.implicits._
+    e.select(col("vec_id").cast("long").as("vid"), col("qv"),
+        col("qn").cast("double")).as[KcGreedy.KcRow]
+  }
+
+  /** [[KcGreedy.gonzalez]] on the driver, as the arms' relation. */
+  private def driverGreedy(s: SparkSession, rows: Array[KcGreedy.KcRow],
+      k: Int): DataFrame =
+    picksDf(s, KcGreedy.gonzalez(rows, k)
+      .map { case (i, r, u) => (i, r.vid, u) })
+
+  private def picksDf(s: SparkSession,
+      picks: Seq[(Int, Long, Long)]): DataFrame = {
+    import s.implicits._
+    picks.toDF("sel", "vec_id", "farthest_u").orderBy("sel")
+  }
+
+  /** The exact greedy above the driver budget: K−1 distributed
+    * rounds, each one broadcast-center scan of N rows plus a 1-row
+    * argmin (the per-round driver probe every iterative engine
+    * performs), with the per-vector `maxu` state localCheckpointed
+    * and superseded rounds released — O(N·K) total, nothing
+    * quadratic. All integer: µcos scores, GREATEST folds, (maxu,
+    * vec_id) tie-breaks, exactly [[KcGreedy.gonzalez]]'s rounds. Stops
+    * early when every row is picked, so fewer than K rows give n
+    * picks, as on the driver.
+    */
+  private[graft] def kcenterRounds(s: SparkSession, e0: DataFrame,
+      k: Int): DataFrame = {
     val e = graft.Caches.persist(
       e0.select(col("vec_id"), col("qv"), col("qn")))
     def ucosTo(cid: Long): DataFrame =
@@ -754,26 +798,30 @@ object KnnGraph {
         .crossJoin(broadcast(e.filter(col("vec_id") === cid)
           .select(col("qv").as("yq"), col("qn").as("yn"))))
         .select(col("vid"), Bitext.ucosCol.as("u"))
-    val c0 = e.agg(min(col("vec_id"))).head.getLong(0)
-    var sel = Vector((0, c0, 1000000L))
-    var state = ucosTo(c0).withColumnRenamed("u", "maxu")
+    val c0 = e.agg(min(col("vec_id"))).head
+    if (c0.isNullAt(0)) return picksDf(s, Nil)
+    var sel = Vector((0, c0.getLong(0), 1000000L))
+    var state = ucosTo(sel.head._2).withColumnRenamed("u", "maxu")
       .localCheckpoint()
-    for (i <- 1 until k) {
+    var exhausted = false
+    while (!exhausted && sel.length < k) {
       val selIds = sel.map(_._2)
       val nxt = state.filter(!col("vid").isin(selIds: _*))
-        .orderBy(col("maxu").asc, col("vid").asc).limit(1).head
-      val (cid, du) = (nxt.getLong(0), nxt.getLong(1))
-      sel = sel :+ ((i, cid, du))
-      val ns = state.join(ucosTo(cid), "vid")
-        .select(col("vid"),
-          greatest(col("maxu"), col("u")).as("maxu"))
-        .localCheckpoint()
-      graft.Caches.releaseLocalCheckpoint(state)
-      state = ns
+        .orderBy(col("maxu").asc, col("vid").asc).take(1)
+      if (nxt.isEmpty) exhausted = true
+      else {
+        val (cid, du) = (nxt(0).getLong(0), nxt(0).getLong(1))
+        sel = sel :+ ((sel.length, cid, du))
+        val ns = state.join(ucosTo(cid), "vid")
+          .select(col("vid"),
+            greatest(col("maxu"), col("u")).as("maxu"))
+          .localCheckpoint()
+        graft.Caches.releaseLocalCheckpoint(state)
+        state = ns
+      }
     }
     graft.Caches.releaseLocalCheckpoint(state)
-    import s.implicits._
-    sel.toDF("sel", "vec_id", "farthest_u").orderBy("sel")
+    picksDf(s, sel)
   }
 
   /** q232 / the production-K arm of [[kcenterSelect]]: COMPOSABLE
@@ -794,13 +842,14 @@ object KnnGraph {
     *     reduced by one exact Gonzalez greedy to the final K.
     *
     * ONE Spark job regardless of K (StageClock-receipted in
-    * KnnGraphSpec) vs the serial arm's K−1; the covering-radius cost
-    * of composing is bounded (local picks 2K ≥ K+1 centers, so every
-    * final center's class-local covering radius is ≤ its class's
-    * (K+1)-center Gonzalez radius; the standard analysis bounds the
-    * composed radius within a constant factor of the serial greedy's
-    * 2-approximation — spec-pinned at ≤ 2× the serial arm's measured
-    * radius on the fixtures). Memory model: a residue class must fit
+    * KnnGraphSpec) vs the distributed rounds' 2(K−1); the
+    * covering-radius cost of composing is bounded (local picks
+    * 2K ≥ K+1 centers, so every final center's class-local covering
+    * radius is ≤ its class's (K+1)-center Gonzalez radius; the
+    * standard analysis bounds the composed radius within a constant
+    * factor of the serial greedy's 2-approximation — spec-pinned at
+    * ≤ 2× the exact arm's measured radius on the fixtures). Memory
+    * model: a residue class must fit
     * one executor (|class| ≈ N/parts rows — `parts` IS the scale
     * knob, exactly a coreset pass's contract), and the stage-2 union
     * (≤ 2K·parts rows) plus its O(|union|·K) driver greedy must fit
@@ -819,7 +868,7 @@ object KnnGraph {
     * 2·10⁸ driver rows — the escalated route reduces it
     * executor-side to ≤ [[KcenterDriverMaxUnion]] first.
     *
-    * Output contract matches the serial arm — (sel, vec_id,
+    * Output contract matches the exact arms — (sel, vec_id,
     * farthest_u) seeded at the minimum vec_id — with farthest_u
     * measured within the final-stage union (the relation the final
     * greedy actually sees), not the corpus.
@@ -828,7 +877,6 @@ object KnnGraph {
       e0: DataFrame, k: Int = CoresetK,
       parts: Int = KcenterParts,
       driverMaxUnion: Long = KcenterDriverMaxUnion): DataFrame = {
-    import s.implicits._
     val over = 2 * k
     var rel = localOversample(e0, over, parts)
     var p = parts
@@ -841,12 +889,7 @@ object KnnGraph {
       p = math.max(1L, math.min(p - 1L, driverMaxUnion / over)).toInt
       rel = localOversample(rel, over, p)
     }
-    val union = rel.as[(Long, Seq[Double], Double)]
-      .collect()
-      .map { case (v, q, n) => KcGreedy.KcRow(v, q.toArray, n) }
-    KcGreedy.gonzalez(union, k)
-      .map { case (i, r, u) => (i, r.vid, u) }
-      .toDF("sel", "vec_id", "farthest_u").orderBy("sel")
+    driverGreedy(s, kcRows(rel).collect(), k)
   }
 
   /** ONE local-oversample round: each of `parts` residue classes of
@@ -861,16 +904,9 @@ object KnnGraph {
       parts: Int): DataFrame = {
     val s = e.sparkSession
     import s.implicits._
-    e.select(col("vec_id").cast("long"), col("qv"),
-        col("qn").cast("double"))
-      .as[(Long, Seq[Double], Double)]
-      .groupByKey(_._1 % parts)
+    kcRows(e).groupByKey(_.vid % parts)
       .flatMapGroups { (_, it) =>
-        val rows = it.map { case (v, q, n) =>
-          KcGreedy.KcRow(v, q.toArray, n)
-        }.toArray
-        KcGreedy.gonzalez(rows, over).iterator
-          .map { case (_, r, _) => (r.vid, r.qv.toSeq, r.qn) }
+        KcGreedy.gonzalez(it.toArray, over).iterator.map(_._2)
       }
       .toDF("vec_id", "qv", "qn")
   }
@@ -924,6 +960,19 @@ object KnnGraph {
        |ORDER BY sel""".stripMargin
   }
 
+  /** q217: farthest-point / k-center coreset selection (Gonzalez
+    * 1985, the 2-approximation greedy; the coreset construction of
+    * Sener & Savarese ICLR'18 and the DIVERSIFICATION half of the D4
+    * pipeline after SemDeDup prunes duplicates): iteratively pick
+    * the vector FARTHEST from everything selected so far — i.e. with
+    * the MINIMUM max-µcos to the current centers — so K rows span the
+    * embedding space instead of oversampling its dense core. The
+    * selection is inherently sequential (each pick depends on all
+    * prior picks); [[kcenterSelect]] runs it on the driver when the
+    * corpus fits [[KcenterDriverMaxUnion]] and as distributed rounds
+    * past it. All integer: µcos scores, GREATEST folds, (maxu,
+    * vec_id) tie-breaks; the oracle unrolls all [[CoresetK]] rounds.
+    */
   val q217KcenterCoreset: QueryDef = QueryDef(
     "q217_kcenter_coreset",
     (s, dir) => kcenterSelect(s,
@@ -1020,7 +1069,7 @@ object KnnGraph {
 
   /** q232: the COMPOSABLE k-center arm exercised end-to-end at
     * fixture scale (the dispatcher routes production K here — q217
-    * pins the serial arm, this pins the bounded-round one, the same
+    * pins the exact arm, this pins the bounded-round one, the same
     * both-arms-at-the-boundary discipline as the Kmeans dispatch).
     * The oracle unrolls all three greedy chains — one 2K-round
     * Gonzalez per residue class, then the K-round reduction over the

@@ -27,8 +27,7 @@ object Q147ScaleReceipt {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toLong else 1000000L
     val iters = if (args.length > 1) args(1).toInt else 3
-    val spark = graft.Sessions.build("graft-q147-scale",
-      coresOverride = Some(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
+    val spark = graft.Sessions.build("graft-q147-scale")
     spark.sparkContext.setLogLevel("ERROR")
     val clock = new graft.StageClock
     spark.sparkContext.addSparkListener(clock)
@@ -39,10 +38,10 @@ object Q147ScaleReceipt {
     // population, ~nDocs/1000 copies each), lang varies ACROSS
     // duplicate rows so the min_by(lang) payload is exercised.
     // Premise of the A/B: the 'adaptive' arm rebuilds Bench's
-    // adaptive-tier width from Sessions.cpus, which on the
-    // measurement box (SPARK_GRAFT_CPUS=32) is exactly what Bench
-    // times; on a box with different cores set SPARK_GRAFT_CPUS to
-    // the tier you mean to measure.
+    // adaptive-tier width from Sessions.cpus, the width both this
+    // session and Bench's take (SPARK_GRAFT_CPUS, else every
+    // processor); set SPARK_GRAFT_CPUS to the tier you mean to
+    // measure.
     val dir = graft.Scratch.layout("q147scale", s"n$nDocs", "sf")
     val docsPath = s"$dir/documents.parquet"
     spark.range(nDocs)

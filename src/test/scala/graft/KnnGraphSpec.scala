@@ -350,6 +350,70 @@ class KnnGraphSpec extends AnyFunSuite {
       s"similarity path ${picks.mkString(",")}")
   }
 
+  private def kcPicks(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getAs[Int]("sel"), r.getAs[Long]("vec_id"),
+      r.getAs[Long]("farthest_u"))).toVector
+
+  test("exact k-center: the driver arm and the distributed-rounds arm " +
+      "(forced through the budget) return identical picks bit for " +
+      "bit — fixture corpus, duplicate-vector ties, fewer rows than K") {
+    import operators.KnnGraph
+    val rel = operators.Bitext.qrel(
+      operators.Similarity.normed(spark, dir))
+      .select(col("vec_id"), col("qv"), col("qn"))
+    def arms(e: org.apache.spark.sql.DataFrame, k: Int) = {
+      val driver = kcPicks(KnnGraph.kcenterSerial(spark, e, k))
+      val rounds = kcPicks(KnnGraph.kcenterSerial(spark, e, k,
+        driverMax = 0L))
+      assert(driver == rounds,
+        s"driver arm $driver differs from the rounds arm $rounds")
+      driver
+    }
+    val fixture = arms(rel, KnnGraph.CoresetK)
+    assert(fixture.length == KnnGraph.CoresetK)
+
+    // three distinct vectors, four copies each under fresh ids: after
+    // the three distinct picks every remaining row's maxu is its own
+    // self-similarity, so the last five picks are decided by the
+    // (maxu, vid) tie-break alone
+    val base = rel.orderBy("vec_id").limit(3)
+    val dups = spark.range(4).crossJoin(base)
+      .select((col("id") * 1000000L + col("vec_id")).as("vec_id"),
+        col("qv"), col("qn"))
+    val tied = arms(dups, KnnGraph.CoresetK)
+    val distinct = base.collect().map(_.getLong(0)).toSet
+    assert(tied.take(3).map(_._2 % 1000000L).toSet == distinct,
+      s"the first three picks are not the three distinct vectors: $tied")
+    val tail = tied.drop(3)
+    assert(tail.length == KnnGraph.CoresetK - 3)
+    assert(tail == tail.sortBy(t => (t._3, t._2)),
+      s"tied picks are not in (maxu, vid) order: $tail")
+
+    // fewer rows than K: both arms return every row, sel 0..n-1
+    val few = arms(rel.orderBy("vec_id").limit(5), KnnGraph.CoresetK)
+    assert(few.map(_._1) == (0 until 5))
+    assert(few.map(_._2).distinct.length == 5)
+    assert(kcPicks(KnnGraph.kcenterRounds(spark, rel.limit(0),
+      KnnGraph.CoresetK)).isEmpty)
+    assert(kcPicks(KnnGraph.kcenterSerial(spark, rel.limit(0))).isEmpty)
+  }
+
+  test("q217 builds with at most 2 Spark jobs at fixture scale (the " +
+      "driver arm)") {
+    val q217 = SparkEntry.queries("q217_kcenter_coreset")
+    q217(spark, dir) // warm the table caches, as in a repeated pass
+    val clock = new StageClock
+    spark.sparkContext.addSparkListener(clock)
+    try {
+      Caches.unpersistAll(spark)
+      clock.quiesce(); clock.reset()
+      q217(spark, dir)
+      clock.quiesce()
+      assert(clock.jobs <= 2, s"q217's build ran ${clock.jobs} jobs")
+      info(s"q217 build jobs: ${clock.jobs}")
+    } finally spark.sparkContext.removeSparkListener(clock)
+  }
+
   test("q232 composable k-center: covering radius within 2x the " +
       "serial arm's; O(1) Spark jobs INDEPENDENT of K (the receipt " +
       "the serial arm cannot give); dispatch boundary pinned") {
@@ -384,10 +448,11 @@ class KnnGraphSpec extends AnyFunSuite {
         f"greedy's $rs%.4f rad — the composition bound is broken")
     info(f"radius serial=$rs%.4f comp=$rc%.4f ratio=${rc / rs}%.3f")
 
-    // O(1)-rounds receipt: job count does NOT grow with K (the serial
-    // arm runs K−1 argmin jobs + K−1 localCheckpoint materializations;
-    // the composable arm is one local-oversample job + one driver
-    // reduction whatever K is)
+    // O(1)-rounds receipt: job count does NOT grow with K (the exact
+    // greedy's distributed-rounds arm, which runs past the driver
+    // budget, runs K−1 argmin jobs + K−1 localCheckpoint
+    // materializations; the composable arm is one local-oversample
+    // job + one driver reduction whatever K is)
     val clock = new StageClock
     spark.sparkContext.addSparkListener(clock)
     try {
