@@ -267,39 +267,28 @@ object Fixtures {
       (SparkSession, (Long, Long, Int)), Array[Double]]()
 
   /** A (tbl, bit, plane) fixture packed for the in-row
-    * [[graft.plans.SignBandCodes]] kernel: plane (t, b) dim d at
+    * [[graft.plans.SignBandCodesBcast]] kernel: plane (t, b) dim d at
     * `((t*bBits)+b)*dim + d`. Driver-side collect of the plane fixture
-    * (same metadata class as the PQ codebook / IVF centroid collects),
-    * cached per (session, path). Returns (packed, bBits).
+    * (same metadata class as the PQ codebook / IVF centroid collects).
+    * Returns (packed, bBits).
     */
-  def planesPacked(s: SparkSession, path: String): (Array[Double], Int) =
-    getEvicting(planesPackedCache, (s, path, stamp(path)),
-      (a: (SparkSession, String, (Long, Long, Int)),
-       b: (SparkSession, String, (Long, Long, Int))) =>
-        (a._1 eq b._1) && a._2 == b._2) {
-      val rows = read(s, path).collect()
-      val bBits = rows.iterator.map(_.getAs[Int]("bit")).max + 1
-      val dim = rows.head.getAs[scala.collection.Seq[Double]]("plane")
-        .length
-      val flat = new Array[Double](rows.length * dim)
-      rows.foreach { r =>
-        val t = r.getAs[Int]("tbl")
-        val b = r.getAs[Int]("bit")
-        val plane = r.getAs[scala.collection.Seq[Double]]("plane")
-        val off = (t * bBits + b) * dim
-        var d = 0
-        while (d < dim) { flat(off + d) = plane(d); d += 1 }
-      }
-      (flat, bBits)
+  private def planesPacked(s: SparkSession,
+      path: String): (Array[Double], Int) = {
+    val rows = read(s, path).collect()
+    val bBits = rows.iterator.map(_.getAs[Int]("bit")).max + 1
+    val dim = rows.head.getAs[scala.collection.Seq[Double]]("plane")
+      .length
+    val flat = new Array[Double](rows.length * dim)
+    rows.foreach { r =>
+      val t = r.getAs[Int]("tbl")
+      val b = r.getAs[Int]("bit")
+      val plane = r.getAs[scala.collection.Seq[Double]]("plane")
+      val off = (t * bBits + b) * dim
+      var d = 0
+      while (d < dim) { flat(off + d) = plane(d); d += 1 }
     }
-
-  /** The q135 adaptive τ=0.4 plane fixture, packed. */
-  def adaptivePlanesPackedTau04(s: SparkSession): (Array[Double], Int) =
-    planesPacked(s, adaptivePlanesTau04Path)
-
-  private val planesPackedCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, (Long, Long, Int)), (Array[Double], Int)]()
+    (flat, bBits)
+  }
 
   /** Packed plane fixture as a BROADCAST handle + content fingerprint
     * + bBits — what [[graft.plans.SignBandCodesBcast]] takes so tasks
@@ -323,20 +312,13 @@ object Fixtures {
         bBits)
     }
 
-  /** Content fingerprint of a packed plane table: 64-bit FNV-1a over
-    * the raw double bits + the geometry — stands in for the payload in
-    * plan equality ([[graft.plans.SignBandCodesBcast]]'s equals).
+  /** Content fingerprint of a packed plane table: [[graft.plans.Fnv1a]]
+    * over the raw double bits, then the geometry — stands in for the
+    * payload in plan equality ([[graft.plans.SignBandCodesBcast]]'s
+    * equals).
     */
-  private def packedFingerprint(flat: Array[Double], bBits: Int): Long = {
-    var fp = 0xcbf29ce484222325L
-    var i = 0
-    while (i < flat.length) {
-      fp = (fp ^ java.lang.Double.doubleToLongBits(flat(i))) *
-        0x100000001b3L
-      i += 1
-    }
-    (fp ^ bBits.toLong) * 0x100000001b3L
-  }
+  private def packedFingerprint(flat: Array[Double], bBits: Int): Long =
+    graft.plans.Fnv1a.mix(graft.plans.Fnv1a.ofDoubles(flat), bBits.toLong)
 
   private val planesBcastCache =
     new java.util.concurrent.ConcurrentHashMap[
@@ -356,7 +338,7 @@ object Fixtures {
       Int.MaxValue.toDouble
 
   /** The adaptive (bBits × lTables × dim) plane table packed for the
-    * in-row [[graft.plans.SignBandCodes]] kernel, tabulated DRIVER-side
+    * in-row [[graft.plans.SignBandCodesBcast]] kernel, tabulated DRIVER-side
     * from [[adaptivePlaneComponent]] (no Spark job, no collect) and
     * shipped as a broadcast handle — the r20-opt twin of
     * [[planesBroadcast]] for geometries that are a pure function of
@@ -496,8 +478,6 @@ object Fixtures {
   private[graft] def dropSession(s: SparkSession): Unit = {
     val cit = packedCache.keySet.iterator()
     while (cit.hasNext) if (cit.next()._1 eq s) cit.remove()
-    val pit = planesPackedCache.keySet.iterator()
-    while (pit.hasNext) if (pit.next()._1 eq s) pit.remove()
     val bcit = planesBcastCache.entrySet.iterator()
     while (bcit.hasNext) {
       val e = bcit.next()

@@ -358,18 +358,17 @@ object Main {
           MigrationPipeline.Phases.map(p => f"$p " +
             f"${result.phaseSeconds.getOrElse(p, 0.0)}%.2f s")
             .mkString(", ") + ")")
-        // a checksum mismatch warns but does not fail the run:
-        // sourceDigest reads the source without Transforms.applyTo, so
-        // a faithful copy of an always-transformed column (MySQL year,
-        // MSSQL uniqueidentifier) digests differently on the two sides
-        result.checksumMismatches.toSeq.sortBy(_._1).foreach {
-          case (t, (src, tgt)) => Console.err.println(
-            s"WARNING: checksum mismatch on table $t: " +
-              s"source $src, target $tgt")
-        }
-        if (result.validationMismatches.nonEmpty)
-          throw new MigrationValidationException(
-            s"VALIDATION MISMATCHES: ${result.validationMismatches}")
+        // a checksum mismatch fails the run like a count mismatch: the
+        // source digest reads the source through the load's transforms
+        val failures =
+          (if (result.validationMismatches.isEmpty) Nil
+           else Seq(s"VALIDATION MISMATCHES: ${result.validationMismatches}")) ++
+            result.checksumMismatches.toSeq.sortBy(_._1).map {
+              case (t, (src, tgt)) =>
+                s"CHECKSUM MISMATCH on table $t: source $src, target $tgt"
+            }
+        if (failures.nonEmpty)
+          throw new MigrationValidationException(failures.mkString("\n"))
       } finally loader match {
         case c: AutoCloseable => c.close()
         case _ => ()
@@ -493,6 +492,33 @@ final class SparkTableLoader(
     }
   }
 
+  /** The source relation as the load copies it, one partition per
+    * predicate (empty `preds`: one unpartitioned read). S5: when any
+    * column's scan expression differs from the plain quoted name, the
+    * relation becomes a rewritten derived table — the source engine
+    * renders CLR/spatial values in target form.
+    */
+  private def sourceFrame(st: SourceTable, key: Option[String],
+      preds: Array[String]): org.apache.spark.sql.DataFrame = {
+    val scanQuery =
+      if (dialect.needsScanRewrite(st.columns, cfg.typeOptions, scanCaps))
+        Some(dialect.scanSql(st.name, st.columns,
+          cfg.typeOptions, scanCaps))
+      else None
+    transformed(st, JdbcSource.readWithPredicates(spark, dialect,
+      JdbcSource.ReadSpec(cfg.sourceUrl, st.name, key,
+        scanQuery = scanQuery), preds))
+  }
+
+  /** The config-selected per-column transforms (reference
+    * migrate.go:459-466) over a source read: what the load writes and
+    * what the source digest reads.
+    */
+  private[graft] def transformed(st: SourceTable,
+      raw: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    graft.functions.Transforms.applyTo(raw, st.columns, dialect.name,
+      cfg.typeOptions)
+
   def load(table: TableMeta): Long = {
     val st = bySource(table.name)
     val key = chunkKey(st)
@@ -534,22 +560,8 @@ final class SparkTableLoader(
     if (allPreds.nonEmpty && todo.isEmpty) return 0L
     if (allPreds.isEmpty && checkpoint.exists(_.isDone(table.name, 0L)))
       return 0L
-    // transform projection (reference migrate.go:459-466): the
-    // config-selected per-column transforms run between scan and sink
-    // S5: when any column's scan expression differs from the plain
-    // quoted name, the relation becomes a rewritten derived table —
-    // the source engine renders CLR/spatial values in target form
-    val scanQuery =
-      if (dialect.needsScanRewrite(st.columns, cfg.typeOptions, scanCaps))
-        Some(dialect.scanSql(st.name, st.columns,
-          cfg.typeOptions, scanCaps))
-      else None
-    val df = graft.functions.Transforms.applyTo(
-      JdbcSource.readWithPredicates(spark, dialect,
-        JdbcSource.ReadSpec(cfg.sourceUrl, st.name, key,
-          scanQuery = scanQuery),
-        if (allPreds.isEmpty) Array.empty else todo.map(_._1)),
-      st.columns, dialect.name, cfg.typeOptions)
+    val df = sourceFrame(st, key,
+      if (allPreds.isEmpty) Array.empty else todo.map(_._1))
     val targetUrl = cfg.targetUrl
     // target columns carry the MAPPED identifiers (snake_case /
     // lowercased) — the INSERT must use those, in the source column
@@ -631,12 +643,12 @@ final class SparkTableLoader(
     * to one number without any sort or row transfer to the driver.
     * Both digests canonicalize through SPARK casts on the SAME column
     * order (source order / its mapped target names), so engine-side
-    * formatting differences never enter the comparison; columns whose
-    * TYPE the migration intentionally rewrites (uuid reshaping, enum
-    * text) compare via their post-JDBC string forms, which Derby/PG
-    * round-trip exactly for the identity-mapped majority.
+    * formatting differences never enter the comparison. The source
+    * side digests [[sourceFrame]], so a column the load always
+    * transforms (MySQL `year`, MSSQL `uniqueidentifier`) digests in
+    * the form the target received.
     */
-  private def digest(df: org.apache.spark.sql.DataFrame,
+  private[graft] def digest(df: org.apache.spark.sql.DataFrame,
       cols: Seq[String]): String = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.DecimalType
@@ -654,10 +666,7 @@ final class SparkTableLoader(
 
   override def sourceDigest(table: TableMeta): Option[String] = {
     val st = bySource(table.name)
-    val cols = st.columns.map(_.name)
-    val df = spark.read.format("jdbc").option("url", srcUrl)
-      .option("dbtable", dialect.quote(st.name)).load()
-    Some(digest(df, cols))
+    Some(digest(sourceFrame(st, None, Array.empty), st.columns.map(_.name)))
   }
 
   override def targetDigest(table: TableMeta): Option[String] = {

@@ -4,71 +4,46 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Size-dispatched membership of a string column in a FROZEN list —
-  * the one spelling every blocklist / kept-vocab / frontier gate
-  * shares (q179 domain blocklist, q182 streaming frontier, q186
-  * kept-vocabulary rewrite), so "at a production list size this
-  * becomes a broadcast" is CODE here, not a comment at each call site
-  * (the [[graft.operators.Kmeans.assignArm]] recipe, third
-  * application — VERDICT r18 finding 2).
+/** Membership of a string column in a FROZEN list — the one spelling
+  * every blocklist / kept-vocab / frontier gate shares (q179 domain
+  * blocklist, q182 streaming frontier, q186 kept-vocabulary rewrite).
+  * The sorted, deduplicated list rides the block manager ONCE per
+  * executor and each probe is an exact O(log V) binary search
+  * ([[graft.plans.SetContainsBcast]]), so a 10⁵–10⁷-entry production
+  * blocklist or vocabulary never serializes into task binaries and
+  * never costs a per-token linear scan. MembershipSpec pins both
+  * entries against Scala `Set` membership.
   *
-  * Arms (both exact, equivalence-spec-pinned in MembershipSpec):
-  *  - literal: the list rides the plan as a `typedLit` array and the
-  *    probe is `array_contains` / `arrays_overlap` — codegen'd in-row
-  *    list ops, right while the list is committed-fixture-sized (the
-  *    linear per-token scan and the per-task plan copy are both
-  *    negligible below [[LiteralMaxKeys]]);
-  *  - broadcast: the sorted list rides the block manager ONCE per
-  *    executor and the probe is an exact O(log V) binary search
-  *    ([[graft.plans.SetContainsBcast]]) — a 10⁵–10⁷-entry production
-  *    blocklist or vocabulary never serializes into task binaries and
-  *    never costs a per-token linear scan.
-  *
-  * A Bloom front ([[BloomSketchAggregator]]) remains the right arm
+  * A Bloom front ([[BloomSketchAggregator]]) remains the right tool
   * when a downstream EXACT verify exists (the q138 decontamination
   * shape); these direct-consumer membership gates have none, so the
-  * at-scale arm must be exact — see the [[graft.plans.SetContainsBcast]]
+  * probe must be exact — see the [[graft.plans.SetContainsBcast]]
   * scaladoc.
   */
 object Membership {
-
-  /** Largest list the literal arm embeds in the plan. Past this the
-    * per-task plan copy and the linear `array_contains` scan both
-    * start to matter; the broadcast arm costs one handle fetch per
-    * executor and O(log V) per probe regardless of V.
-    */
-  val LiteralMaxKeys = 64
-
-  private[graft] sealed trait Arm
-  private[graft] case object LiteralArm extends Arm
-  private[graft] case object BcastArm extends Arm
-
-  /** The pure dispatch rule (unit-tested at the boundary). */
-  private[graft] def arm(n: Int): Arm =
-    if (n <= LiteralMaxKeys) LiteralArm else BcastArm
 
   /** FNV-1a over the sorted keys' bytes — the broadcast expression's
     * content fingerprint (see [[graft.plans.SetContainsBcast]]).
     */
   private def fingerprint(sorted: Array[UTF8String]): Long = {
-    var h = -3750763034362895579L
+    var h = graft.plans.Fnv1a.Offset
     var i = 0
     while (i < sorted.length) {
       val bytes = sorted(i).getBytes
       // length PREFIX, not an in-band separator byte: a separator
       // that can itself appear inside a key lets two different key
-      // sets hash the same byte stream (["ab"] vs
-      // ["a","b"]) — and equals/semanticEquals trusts this
+      // sets hash the same byte stream (["ab"] vs
+      // ["a","b"]) — and equals/semanticEquals trusts this
       // fingerprint, so a collision would let Catalyst conflate two
-      // different membership gates (r19 review finding)
+      // different membership gates
       var s = 0
       while (s < 32) { // fixed-width length → uniquely decodable
-        h = (h ^ ((bytes.length >>> s) & 0xff)) * 1099511628211L
+        h = graft.plans.Fnv1a.mix(h, (bytes.length >>> s) & 0xff)
         s += 8
       }
       var j = 0
       while (j < bytes.length) {
-        h = (h ^ bytes(j)) * 1099511628211L
+        h = graft.plans.Fnv1a.mix(h, bytes(j))
         j += 1
       }
       i += 1
@@ -76,12 +51,13 @@ object Membership {
     h
   }
 
+  /** The sorted, duplicate-free key table: dedupes adjacent keys after
+    * the sort — one linear pass, so a duplicate-heavy list broadcasts
+    * only its distinct keys.
+    */
   private def sortedKeys(keys: Seq[String]): Array[UTF8String] = {
     val arr = keys.map(UTF8String.fromString).toArray
     java.util.Arrays.sort(arr.asInstanceOf[Array[AnyRef]])
-    // dedupe adjacent post-sort — one linear pass instead of a
-    // second hash-based distinct (the public entries already dedupe
-    // for the dispatch; direct [[containsBcast]] callers may not)
     var n = 0
     var i = 0
     while (i < arr.length) {
@@ -91,56 +67,26 @@ object Membership {
     if (n == arr.length) arr else java.util.Arrays.copyOf(arr, n)
   }
 
-  /** The broadcast arm, callable directly (specs pin equivalence by
-    * forcing it below the threshold).
+  /** One broadcast of `keys` and its probe builder: every probe of a
+    * call site shares the handle (building it per probe would
+    * re-broadcast per element).
     */
-  private[graft] def containsBcast(c: Column,
-      keys: Seq[String]): Column = {
+  private def probe(keys: Seq[String]): Column => Column = {
     val arr = sortedKeys(keys)
     val bc = SparkSession.active.sparkContext.broadcast(arr)
-    import org.apache.spark.sql.GraftShims
-    GraftShims.column(graft.plans.SetContainsBcast(
-      GraftShims.expression(c), bc, fingerprint(arr)))
-  }
-
-  /** `c` (string) is a member of `keys`. Dedupes ONCE, then both the
-    * dispatch and the chosen arm consume the deduped list — so a
-    * duplicate-heavy list whose distinct size is literal-tier takes
-    * the literal arm AND embeds only the distinct keys in the plan
-    * (r19 ADVICE, plus the review catch that dispatching on distinct
-    * while embedding the raw list would serialize the duplicates into
-    * every task binary).
-    */
-  def contains(c: Column, keys: Seq[String]): Column = {
-    val ks = keys.distinct
-    arm(ks.size) match {
-      case LiteralArm => array_contains(typedLit(ks), c)
-      case BcastArm => containsBcast(c, ks)
-    }
-  }
-
-  /** ANY element of the string-array column `arrCol` is in `keys`. */
-  def overlaps(arrCol: Column, keys: Seq[String]): Column = {
-    val ks = keys.distinct
-    arm(ks.size) match {
-      case LiteralArm => arrays_overlap(arrCol, typedLit(ks))
-      case BcastArm => overlapsBcast(arrCol, ks)
-    }
-  }
-
-  /** The broadcast arm of [[overlaps]] — one probe per element inside
-    * an `exists` lambda (higher-order functions evaluate per-element
-    * in-row; no explode, no join).
-    */
-  private[graft] def overlapsBcast(arrCol: Column,
-      keys: Seq[String]): Column = {
-    // ONE broadcast shared by every per-element probe (building it
-    // inside the lambda would re-broadcast per call site)
-    val arr = sortedKeys(keys)
-    val bc = SparkSession.active.sparkContext.broadcast(arr)
-    import org.apache.spark.sql.GraftShims
     val fp = fingerprint(arr)
-    exists(arrCol, x => GraftShims.column(graft.plans.SetContainsBcast(
-      GraftShims.expression(x), bc, fp)))
+    import org.apache.spark.sql.GraftShims
+    x => GraftShims.column(graft.plans.SetContainsBcast(
+      GraftShims.expression(x), bc, fp))
   }
+
+  /** `c` (string) is a member of `keys`. */
+  def contains(c: Column, keys: Seq[String]): Column = probe(keys)(c)
+
+  /** ANY element of the string-array column `arrCol` is in `keys` —
+    * one probe per element inside an `exists` lambda (higher-order
+    * functions evaluate per-element in-row; no explode, no join).
+    */
+  def overlaps(arrCol: Column, keys: Seq[String]): Column =
+    exists(arrCol, probe(keys))
 }

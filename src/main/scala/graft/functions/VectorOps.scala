@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.plans.{BigramCounts, ByteEntropy, CentroidTopK, DotProduct, L2Norm, MinHashSignature, PqAdcSum, PqCodes, PqLut, RollingHash, ShingleHashSet, ShingleSet, SignBandCodes, SignBandCodesBcast, SortedIntersectCount, SortedLongIntersectCount, TermCounts}
+import graft.plans.{BigramCounts, ByteEntropy, CentroidTopK, DotProduct, L2Norm, MinHashSignature, PqAdcSum, PqCodes, PqLut, RollingHash, ShingleHashSet, ShingleSet, SignBandCodesBcast, SortedIntersectCount, SortedLongIntersectCount, TermCounts}
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
@@ -30,7 +30,8 @@ object VectorOps {
     foldLit(fn, arg, "an integer")(e) { case n: Number => n.intValue() }
   // constant tables fold to PRIMITIVE arrays once at plan construction:
   // the expression must never touch a boxed-element ArrayData on the
-  // per-row path (see SignBandCodes' codegen note)
+  // per-row path (per-element ArrayData reads of a plane table once
+  // measured ~7× on the whole q135 query)
   private def arrayLit(fn: String, arg: String, what: String)(
       e: Expression): ArrayData =
     foldLit(fn, arg, what)(e) { case a: ArrayData => a }
@@ -69,15 +70,7 @@ object VectorOps {
       intLit("graft_pq_lut", "subDim")(e(3)))),
     "graft_centroid_topk" -> (e => CentroidTopK(e(0), e(1), e(2),
       intLit("graft_centroid_topk", "k")(e(3)))),
-    "graft_centroid_mu_assign" ->
-      (e => graft.plans.CentroidMuAssign(e(0), e(1), e(2))),
-    "graft_sub_l2_argmin" ->
-      (e => graft.plans.SubL2Argmin(e(0), e(1), e(2))),
     "graft_bigram_counts" -> (e => BigramCounts(e.head)),
-    "graft_sign_band_codes" -> (e => SignBandCodes(e(0),
-      arrayLit("graft_sign_band_codes", "packed planes", "an array")(e(1))
-        .toDoubleArray(),
-      intLit("graft_sign_band_codes", "bBits")(e(2)))),
     "graft_winnow" -> (e => graft.plans.Winnow(e(0),
       intLit("graft_winnow", "k")(e(1)),
       intLit("graft_winnow", "w")(e(2)))),
@@ -188,17 +181,12 @@ object VectorOps {
       org.apache.spark.sql.functions.lit(numCentroids),
       org.apache.spark.sql.functions.lit(subDim))
 
-  /** All L sign-band LSH codes vs a packed constant plane table. */
-  def signBandCodes(v: Column, packed: Column, bBits: Int): Column =
-    call_function("graft_sign_band_codes", v, packed,
-      org.apache.spark.sql.functions.lit(bBits))
-
-  /** [[signBandCodes]] with the plane table riding as a BROADCAST
-    * handle — for fixtures past the task-binary comfort zone (q135's
-    * packed τ=0.4 table is ~3.5 MB; as a plan constant it serialized
-    * into every task). Takes [[graft.Fixtures.planesBroadcast]]'s
-    * (handle, fingerprint, bBits) triple; bypasses the function
-    * registry because a broadcast cannot ride a SQL literal.
+  /** All L sign-band LSH codes of `v` against a packed hyperplane
+    * table riding as a BROADCAST handle (q135's packed τ=0.4 table is
+    * ~3.5 MB; as a plan constant it would serialize into every task).
+    * Takes [[graft.Fixtures.planesBroadcast]]'s (handle, fingerprint,
+    * bBits) triple; bypasses the function registry because a broadcast
+    * cannot ride a SQL literal.
     */
   def signBandCodesBcast(v: Column,
       planes: (org.apache.spark.broadcast.Broadcast[Array[Double]],
@@ -225,20 +213,6 @@ object VectorOps {
   def centroidTopK(v: Column, nrm: Column, packed: Column, k: Int): Column =
     call_function("graft_centroid_topk", v, nrm, packed,
       org.apache.spark.sql.functions.lit(k))
-
-  /** `struct<u, cid>` µcos-argmax training assignment vs a packed
-    * `[cid, cn, cv…]` table — the production-K arm of
-    * [[graft.operators.Kmeans.withAssignment]].
-    */
-  def centroidMuAssign(v: Column, nrm: Column, packed: Column): Column =
-    call_function("graft_centroid_mu_assign", v, nrm, packed)
-
-  /** `struct<d, cid>` per-subspace squared-L2 argmin vs a packed
-    * `[sub, cid, cv…]` codebook — the production-K arm of
-    * [[graft.operators.Kmeans.withPqAssignment]].
-    */
-  def subL2Argmin(sv: Column, sub: Column, packed: Column): Column =
-    call_function("graft_sub_l2_argmin", sv, sub, packed)
 
   /** cosine(a, b) given precomputed norms — dot/(na*nb), matching the
     * lambda formulation bit-for-bit.

@@ -274,12 +274,11 @@ object Chat {
   // user message IS the unit of leakage — a training prompt equal to
   // an eval prompt leaks the benchmark even under a different
   // completion). The eval set here is the first [[NumEvalPrompts]]
-  // prompt-pool entries, probed through the size-dispatched
-  // [[graft.functions.Membership.contains]]: the fixture set rides
-  // the plan as a literal; a production benchmark set (10³–10⁵
-  // prompts) takes the exact broadcast binary-search arm with no
-  // change at this call site. One in-row normalized-prompt membership
-  // probe + one source-keyed agg.
+  // prompt-pool entries, probed through
+  // [[graft.functions.Membership.contains]] — an exact broadcast
+  // binary search, so a production benchmark set (10³–10⁵ prompts)
+  // needs no change at this call site. One in-row normalized-prompt
+  // membership probe + one source-keyed agg.
   val NumEvalPrompts = 10
 
   val q199ChatDecontam: QueryDef = QueryDef(

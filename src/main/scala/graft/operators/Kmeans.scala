@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** In-plan k-means training (Lloyd 1982) over the embeddings table —
@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
   * coarse quantizer q45/q72/q139 serve from has to come from
   * somewhere, and at 100 TB that training run is itself a distributed
   * job. This is the Spark-iterative-ML shape (MLlib's KMeans does
-  * exactly this): per round, ONE in-row assignment pass against K
-  * broadcast-literal centroids (no corpus×K join — the q139
+  * exactly this): per round, ONE in-row assignment pass against the
+  * broadcast K-centroid codebook (no corpus×K join — the q139
   * discipline) and ONE keyed aggregation whose partial-combined
   * output is K·dim rows collected to the driver, which folds them
-  * into the next round's literals. Per-round cost O(N·K·dim) map-side
+  * into the next round's codebook. Per-round cost O(N·K·dim) map-side
   * work + a K·dim-row exchange; the corpus never shuffles.
   *
   * Engine-exact integer spelling (the q210/q211 µcos contract —
@@ -60,120 +60,32 @@ object Kmeans {
       .withColumn("qn", graft.functions.VectorOps.l2norm(col("qv")))
   }
 
-  /** Largest codebook the literal-struct arms build into the
-    * expression tree; bigger codebooks dispatch to the packed kernels
-    * ([[graft.plans.CentroidMuAssign]]/[[graft.plans.SubL2Argmin]]).
-    * The literal tree grows one codegen'd struct per centroid — fine
-    * at the fixture K=8, unbuildable at the production K=4096/256 the
-    * serve tier handles via its packed kernels (the r17 grade:
-    * PLANS.md promised this swap in prose; this constant is the
-    * code). Both arms are bit-identical (KmeansSpec equivalence), so
-    * the dispatch never changes a result.
-    */
-  val LiteralArmMaxK = 16
-
-  /** Past this packed-table size the kernel arm ships its codebook as
-    * a BROADCAST handle instead of a plan constant: a `typedLit`
-    * table serializes into every task binary (TaskSetManager warns at
-    * 1 MiB), while a broadcast is fetched once per executor — the
-    * q135 SignBandCodesBcast discipline. A production coarse book
-    * (K=4096, dim 64) packs to ~2.2 MB and takes this arm.
-    */
-  val KernelLitMaxBytes: Long = 1L << 20
-
-  private[graft] sealed trait AssignArm
-  private[graft] case object LiteralArm extends AssignArm
-  private[graft] case object KernelLitArm extends AssignArm
-  private[graft] case object KernelBcastArm extends AssignArm
-
-  /** The pure dispatch rule all three assignment surfaces share
-    * (unit-tested in KmeansSpec): literal structs to
-    * [[LiteralArmMaxK]], then the packed kernel as a plan constant to
-    * [[KernelLitMaxBytes]], then the broadcast-handle kernel. All
-    * three arms are bit-identical (equivalence specs), so dispatch
-    * never changes a result.
-    */
-  private[graft] def assignArm(k: Int, packedBytes: Long): AssignArm =
-    if (k <= LiteralArmMaxK) LiteralArm
-    else if (packedBytes <= KernelLitMaxBytes) KernelLitArm
-    else KernelBcastArm
-
-  /** FNV-1a over the packed doubles' bit patterns — the broadcast
-    * expressions' content fingerprint (equality/canonicalization
-    * cannot use the handle; see [[graft.plans.CentroidMuAssignBcast]]).
-    */
-  private def fingerprint(packed: Array[Double]): Long =
-    packed.foldLeft(-3750763034362895579L)((h, x) =>
-      (h ^ java.lang.Double.doubleToLongBits(x)) * 1099511628211L)
-
-  /** best = (µcos, −cid) argmax over the K centroid literals as one
-    * in-row expression (array_max over 8 structs — codegen'd, no join).
-    */
-  private def bestCol(cents: Seq[Cent]): Column =
-    array_max(array(cents.map { c =>
-      struct(
-        floor(graft.functions.VectorOps.cosine(col("qv"),
-          typedLit(c.cv.toSeq), col("qn"), lit(c.cn)) *
-          lit(1000000.0) + lit(0.5)).cast("long").as("u"),
-        lit(-c.cid).as("nc"))
-    }: _*))
-
-  /** Small-K arm: one struct literal per centroid. */
-  private[graft] def withAssignmentLiteral(n: DataFrame,
-      cents: Seq[Cent]): DataFrame =
-    n.withColumn("best", bestCol(cents))
-      .withColumn("cid", -col("best.nc"))
-      .withColumn("ucos", col("best.u"))
-
   /** `[cid, cn, cv…]` per entry, cid-ascending — the
-    * [[graft.plans.CentroidMuAssign]] layout (ids ride IN the table:
-    * Lloyd's update drops empty clusters, so cids can be sparse).
+    * [[graft.plans.CentroidMuAssignBcast]] layout (ids ride IN the
+    * table: Lloyd's update drops empty clusters, so cids can be sparse).
     */
-  private[graft] def packCents(cents: Seq[Cent]): Seq[Double] =
-    cents.sortBy(_.cid).flatMap(c => c.cid.toDouble +: c.cn +: c.cv.toSeq)
+  private def packCents(cents: Seq[Cent]): Array[Double] =
+    cents.sortBy(_.cid)
+      .flatMap(c => c.cid.toDouble +: c.cn +: c.cv.toSeq).toArray
 
-  /** Production-K arm: one packed-kernel expression per row. */
-  private[graft] def withAssignmentKernel(n: DataFrame,
-      cents: Seq[Cent]): DataFrame =
-    n.withColumn("best", graft.functions.VectorOps.centroidMuAssign(
-        col("qv"), col("qn"), typedLit(packCents(cents))))
-      .withColumn("cid", col("best.cid"))
-      .withColumn("ucos", col("best.u"))
-
-  /** Broadcast-handle arm: the packed codebook rides the block
-    * manager, not the task binary. Each training round broadcasts its
-    * fresh codebook; superseded handles are reclaimed by Spark's
-    * ContextCleaner once the round's plan is unreachable (the same
-    * lifecycle as MLlib's per-iteration model broadcasts).
+  /** One broadcast-codebook µcos argmax per row. The packed codebook
+    * rides the block manager, not the task binary. Each training round
+    * broadcasts its fresh codebook; superseded handles are reclaimed by
+    * Spark's ContextCleaner once the round's plan is unreachable (the
+    * same lifecycle as MLlib's per-iteration model broadcasts).
     */
-  private[graft] def withAssignmentBcast(n: DataFrame,
-      cents: Seq[Cent]): DataFrame = {
-    val packed = packCents(cents).toArray
+  private[graft] def withAssignment(n: DataFrame, cents: Seq[Cent]): DataFrame = {
+    require(cents.nonEmpty,
+      "withAssignment: empty centroid set — nothing to assign against")
+    val packed = packCents(cents)
     val bc = n.sparkSession.sparkContext.broadcast(packed)
     import org.apache.spark.sql.GraftShims
     val best = GraftShims.column(graft.plans.CentroidMuAssignBcast(
       GraftShims.expression(col("qv")), GraftShims.expression(col("qn")),
-      bc, fingerprint(packed)))
+      bc, graft.plans.Fnv1a.ofDoubles(packed)))
     n.withColumn("best", best)
       .withColumn("cid", col("best.cid"))
       .withColumn("ucos", col("best.u"))
-  }
-
-  /** Packed-table size WITHOUT building the table (the dispatch
-    * probe must not pack twice — r18 review finding).
-    */
-  private def packedBytes(entries: Int, dim: Int): Long =
-    entries.toLong * (dim + 2) * 8
-
-  private[graft] def withAssignment(n: DataFrame, cents: Seq[Cent]): DataFrame = {
-    require(cents.nonEmpty,
-      "withAssignment: empty centroid set — nothing to assign against")
-    assignArm(cents.size, packedBytes(cents.size,
-        cents.headOption.map(_.cv.length).getOrElse(0))) match {
-      case LiteralArm => withAssignmentLiteral(n, cents)
-      case KernelLitArm => withAssignmentKernel(n, cents)
-      case KernelBcastArm => withAssignmentBcast(n, cents)
-    }
   }
 
   private def centOf(cid: Long, cv: Array[Double]): Cent =
@@ -355,86 +267,33 @@ object Kmeans {
   private[graft] def subrel(s: SparkSession, dir: String): DataFrame =
     subrelOf(qrel(s, dir), SubSpaces, SubDim)
 
-  /** Integer squared-L2 against a literal centroid:
-    * ‖x‖² − 2⟨x,c⟩ + ‖c‖² — exact on µ-int components.
-    */
-  private def distCol(cv: Array[Double]): Column = {
-    val c = typedLit(cv.toSeq)
-    (graft.functions.VectorOps.dot(col("sv"), col("sv")) -
-      lit(2.0) * graft.functions.VectorOps.dot(col("sv"), c) +
-      lit(cv.map(x => x * x).sum)).cast("long")
-  }
-
-  /** Per-subspace argmin over the codebook literals: one in-row
-    * array_min over (dist, cid) structs, dispatched on `sub`.
-    */
-  private[graft] def withPqAssignmentLiteral(sv: DataFrame,
-      book: Seq[SubCent]): DataFrame = {
-    val bySub = book.groupBy(_.sub)
-    val subIds = bySub.keys.toSeq.sorted
-    val perSub = subIds.map { b =>
-      b -> array_min(array(bySub(b).sortBy(_.cid).map { c =>
-        struct(distCol(c.cv).as("d"), lit(c.cid).as("cid"))
-      }: _*))
-    }
-    // sub is a literal-range dispatch: CASE WHEN sub = b THEN argmin_b
-    val best = perSub.foldRight(lit(null)
-        .cast(s"struct<d:bigint,cid:bigint>")) { case ((b, c), acc) =>
-      when(col("sub") === b, c).otherwise(acc)
-    }
-    sv.withColumn("best", best)
-      .withColumn("cid", col("best.cid"))
-      .withColumn("dist", col("best.d"))
-  }
-
   /** `[sub, cid, cv…]` per entry, (sub, cid)-ascending — the
-    * [[graft.plans.SubL2Argmin]] layout (explicit ids for the same
+    * [[graft.plans.SubL2ArgminBcast]] layout (explicit ids for the same
     * empty-cluster-drop reason as [[packCents]]).
     */
-  private[graft] def packBook(book: Seq[SubCent]): Seq[Double] =
+  private def packBook(book: Seq[SubCent]): Array[Double] =
     book.sortBy(c => (c.sub, c.cid))
-      .flatMap(c => c.sub.toDouble +: c.cid.toDouble +: c.cv.toSeq)
+      .flatMap(c => c.sub.toDouble +: c.cid.toDouble +: c.cv.toSeq).toArray
 
-  /** Production-K arm: one packed-kernel argmin per row. */
-  private[graft] def withPqAssignmentKernel(sv: DataFrame,
-      book: Seq[SubCent]): DataFrame =
-    sv.withColumn("best", graft.functions.VectorOps.subL2Argmin(
-        col("sv"), col("sub"), typedLit(packBook(book))))
-      .withColumn("cid", col("best.cid"))
-      .withColumn("dist", col("best.d"))
-
-  /** Broadcast-handle arm of the PQ argmin — see
-    * [[withAssignmentBcast]] for the lifecycle.
+  /** One broadcast-codebook squared-L2 argmin per (vector, subspace)
+    * row — see [[withAssignment]] for the broadcast lifecycle.
     */
-  private[graft] def withPqAssignmentBcast(sv: DataFrame,
+  private[graft] def withPqAssignment(sv: DataFrame,
       book: Seq[SubCent]): DataFrame = {
-    val packed = packBook(book).toArray
+    // an all-empty book is detectable HERE, at plan construction; the
+    // kernel's per-row failure is for per-SUBSPACE gaps, not a missing
+    // book
+    require(book.nonEmpty,
+      "withPqAssignment: empty codebook — nothing to assign against")
+    val packed = packBook(book)
     val bc = sv.sparkSession.sparkContext.broadcast(packed)
     import org.apache.spark.sql.GraftShims
     val best = GraftShims.column(graft.plans.SubL2ArgminBcast(
       GraftShims.expression(col("sv")), GraftShims.expression(col("sub")),
-      bc, fingerprint(packed)))
+      bc, graft.plans.Fnv1a.ofDoubles(packed)))
     sv.withColumn("best", best)
       .withColumn("cid", col("best.cid"))
       .withColumn("dist", col("best.d"))
-  }
-
-  private[graft] def withPqAssignment(sv: DataFrame,
-      book: Seq[SubCent]): DataFrame = {
-    // an all-empty book is detectable HERE, at plan construction —
-    // without this, packedBytes(0)=0 dispatches to the packed kernel,
-    // which throws per row inside executor tasks (the loud per-row
-    // failure is for per-SUBSPACE gaps, not a missing book)
-    require(book.nonEmpty,
-      "withPqAssignment: empty codebook — nothing to assign against")
-    val maxPerSub = book.groupBy(_.sub).valuesIterator
-      .map(_.size).maxOption.getOrElse(0)
-    assignArm(maxPerSub, packedBytes(book.size,
-        book.headOption.map(_.cv.length).getOrElse(0))) match {
-      case LiteralArm => withPqAssignmentLiteral(sv, book)
-      case KernelLitArm => withPqAssignmentKernel(sv, book)
-      case KernelBcastArm => withPqAssignmentBcast(sv, book)
-    }
   }
 
   /** Deterministic seeds per subspace: subvector of the minimum

@@ -669,8 +669,7 @@ object KnnGraph {
     * scheduling floor each — dominates any data cost (at the D4-style
     * production coreset sizes of 10⁴–10⁶ centers that is DAYS of pure
     * scheduling), so the dispatcher swaps to the bounded-round
-    * composable arm. The same size-dispatch recipe as
-    * [[Kmeans.assignArm]]: both arms are spec-pinned at the boundary
+    * composable arm. Both arms are spec-pinned at the boundary
     * (exact equality is impossible across arms — composable is a
     * bounded-approximation by construction — so the pin is the
     * covering-radius bound, KnnGraphSpec).

@@ -1048,7 +1048,7 @@ object Similarity {
     "q135_adaptive_neardup",
     (s, dir) => {
       val e = normed(s, dir)
-      // codes IN-ROW (codegen'd SignBandCodes over the packed plane
+      // codes IN-ROW (codegen'd SignBandCodesBcast over the packed plane
       // fixture): all 624 table codes per vector in one narrow map,
       // exploded straight into the bucket-key repartition — no
       // corpus × planes crossJoin, no (vec_id, tbl) hash agg over
@@ -1056,9 +1056,9 @@ object Similarity {
       // accumulation, so codes are bit-identical to the relational
       // spelling (the oracle recomputes them with list_inner_product).
       // In-row is the right call exactly while the plane table packs
-      // into a task constant (~7k planes here); wideBandNeardup keeps
-      // the streaming-plane relational spelling for geometries past
-      // that (see SignBandCodes' domain note).
+      // into one driver-side array (~7k planes here); wideBandNeardup
+      // keeps the streaming-plane relational spelling for geometries
+      // past that (see SignBandCodesBcast's domain note).
       // the ~3.5 MB packed table rides as a BROADCAST handle (one
       // torrent fetch per executor), not a plan constant serialized
       // into every task binary — see SignBandCodesBcast
@@ -1488,11 +1488,11 @@ object Similarity {
       // crossJoin + agg re-materialization (~2 jobs) per run on a
       // sub-100 ms query. The relational spelling stays exercised by
       // ScaleGrowthSpec's wideBandNeardup measurements at both τ.
-      val (packed, bBits) = graft.Fixtures.planesPacked(s,
+      val planes = graft.Fixtures.planesBroadcast(s,
         graft.Fixtures.widebandPlanesPath)
       val codes = e.select(col("vec_id"),
-        posexplode(graft.functions.VectorOps.signBandCodes(col("v"),
-          typedLit(packed.toSeq), bBits)).as(Seq("tbl", "code")))
+        posexplode(graft.functions.VectorOps.signBandCodesBcast(col("v"),
+          planes)).as(Seq("tbl", "code")))
       bandedSelfJoinVerify(e, codes, 0.9)
         .select(col("v1"), col("v2"), graft.Round4(col("sim")).as("sim"))
         .orderBy("v1", "v2")

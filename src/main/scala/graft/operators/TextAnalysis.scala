@@ -1093,7 +1093,7 @@ object TextAnalysis {
   // = top-V by (count DESC, token ASC) — a deterministic truncation,
   // collected once as the frozen artifact a production run ships
   // (cutpoint/classifier-weight class). The rewrite is ENTIRELY
-  // in-row (filter + transform + the size-dispatched
+  // in-row (filter + transform + the broadcast
   // Membership.contains probe — no explode, no join, no per-doc
   // reassembly exchange);
   // cost is the information-theoretic two passes (one tokenize to
@@ -1115,11 +1115,10 @@ object TextAnalysis {
       val kept = toks.groupBy(col("t")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("t")).limit(TopV)
         .collect().map(_.getString(0)).toSeq
-      // size-dispatched membership (Membership.contains): the
-      // fixture's 25-token vocabulary takes the literal
-      // array_contains arm; a production vocabulary (10⁵–10⁶ tokens)
-      // dispatches to the exact broadcast binary-search probe — no
-      // per-token linear scan, no vocabulary copy per task binary
+      // exact broadcast binary-search membership
+      // (Membership.contains): a production vocabulary (10⁵–10⁶
+      // tokens) costs no per-token linear scan and no vocabulary copy
+      // per task binary
       def inVocab(x: Column): Column =
         graft.functions.Membership.contains(x, kept)
       val words = filter(split(lower(col("text")), " "),

@@ -128,10 +128,8 @@ object Urls {
   // from the blocklist (a listed domain that matches nothing must
   // report 0 — silently dropping it hides a stale list); the
   // retention row checks membership in-row against the frozen list
-  // via the SIZE-DISPATCHED Membership.overlaps (the committed
-  // fixture takes the literal arrays_overlap arm; a production-size
-  // list dispatches to the exact broadcast binary-search probe — the
-  // swap is code, not a comment, with both arms equivalence-pinned in
+  // via Membership.overlaps (an exact broadcast binary-search probe
+  // per suffix, pinned against Scala `Set` membership in
   // MembershipSpec). One corpus scan feeds both consumers via the
   // persist cache.
   val q179DomainBlocklist: QueryDef = QueryDef(

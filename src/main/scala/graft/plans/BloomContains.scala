@@ -9,10 +9,9 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * runtime-filter pattern (Mullin, IEEE TSE 1990; Spark's own
   * InSubqueryExec runtime bloom pruning is the same idea).
   *
-  * The bitset rides as a PRIMITIVE long[] in the references array
-  * (the [[SignBandCodes]] constant-table discipline): one static call
-  * per row inside whole-stage codegen, no boxing, no per-row ArrayData
-  * walk. Double hashing g_i = h1 + i·h2 (Kirsch–Mitzenmacher, ESA'06:
+  * The bitset rides as a PRIMITIVE long[] in the references array:
+  * one static call per row inside whole-stage codegen, no boxing, no
+  * per-row ArrayData walk. Double hashing g_i = h1 + i·h2 (Kirsch–Mitzenmacher, ESA'06:
   * two mixes simulate k independent hashes with no asymptotic fpp
   * loss); both mixes are splitmix64 finalizers (Steele et al.,
   * OOPSLA'14 — public domain), so build and probe agree by

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * counts. One fused pass per row inside whole-stage codegen: the
   * pre-tokenize + merge loop runs in [[graft.functions.Bpe]] statics;
   * the trained table rides the references array as a prebuilt
-  * [[Bpe.Table]] (the SignBandCodes constant-table discipline — tasks
+  * [[Bpe.Table]] (the BloomContains constant-table discipline — tasks
   * carry a handle, rows never touch boxed ArrayData).
   *
   * `left`/`right` are the merge pairs in rank order, exactly as the

@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokens preserved.
   *
   * The weight table rides as a PRIMITIVE long[] in the references
-  * array (the [[SignBandCodes]] constant-table discipline — ~32 KB at
+  * array (the [[BloomContains]] constant-table discipline — ~32 KB at
   * dim 4096, one static call per row inside whole-stage codegen).
   * Content-based equality keeps canonicalized-plan equality working
   * across separately loaded fixture copies.

@@ -1,41 +1,35 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
-/** Production-K assignment kernels for the in-plan training loops
-  * (q221/q223/q225) — the packed-table counterpart of the
-  * literal-struct argmax/argmin arms in [[graft.operators.Kmeans]].
-  *
-  * The literal arms build one struct PER CENTROID into the expression
-  * tree (`array_max(array(struct…, struct…))`) — readable and
-  * codegen'd at the fixture K=8, but the tree grows linearly in K and
-  * is unbuildable at the production K=4096 coarse / 256 codewords the
-  * serve tier already handles via [[CentroidTopK]]/[[PqCodes]]
-  * (VERDICT r17 "What's wrong" #1: the swap existed only as PLANS.md
-  * prose). These kernels close that: ONE expression per row against a
-  * packed constant codebook, dispatched by
-  * [[graft.operators.Kmeans.LiteralArmMaxK]].
+/** Assignment kernels for the in-plan training loops (q221/q223/q225):
+  * ONE expression per row against a packed codebook that rides as a
+  * BROADCAST handle, so the tree stays one node at any K (a production
+  * coarse book, K=4096 × dim 64, packs to ~2.2 MB) and tasks carry a
+  * block-manager handle instead of the payload.
   *
   * Unlike [[CentroidTopK]] (raw-cosine ranking, positional ids) and
   * [[PqCodes]] (whole-vector encode, dense ids), the TRAINING loops
-  * need (a) the literal arms' exact integer ranking value carried out
-  * (µcos for the ledger / squared-L2 for the objective) and (b)
-  * robustness to NON-CONTIGUOUS centroid ids — Lloyd's update drops
-  * empty clusters (k-means--), so a mid-training codebook can have id
-  * gaps that positional layouts mis-assign. Entries therefore carry
-  * their id IN the table and the kernels return `struct<value, cid>`.
+  * need (a) the exact integer ranking value carried out (µcos for the
+  * ledger / squared-L2 for the objective) and (b) robustness to
+  * NON-CONTIGUOUS centroid ids — Lloyd's update drops empty clusters
+  * (k-means--), so a mid-training codebook can have id gaps that
+  * positional layouts mis-assign. Entries therefore carry their id IN
+  * the table and the kernels return `struct<value, cid>`.
   *
   * Exactness contract (the q221/q223 hash-match discipline): every
-  * double op replays the literal arm's sequence — sequential
+  * double op replays the oracle's definition — sequential
   * left-to-right dot ([[DotProduct]]'s loop), `dot / (nrm·cn)`,
-  * `·10⁶ + 0.5`, one floor (µcos); `aa − 2.0·ab + bb` then one
-  * long cast (L2) — so assignments, ranking values and ties are
-  * bit-identical to the literal arm, which the equivalence spec in
-  * `KmeansSpec` pins on the fixtures.
+  * `·10⁶ + 0.5`, one floor (µcos); `aa − 2.0·ab + bb` then one long
+  * cast (L2). `KmeansSpec` pins both against plain-Scala definitions.
+  *
+  * Equality/canonicalization uses the driver-computed content
+  * `fingerprint` ([[Fnv1a]]): two plans built from separate broadcasts
+  * of the same codebook must still match the persist cache.
   */
 
 /** µcos-argmax coarse assignment: `struct<u: bigint, cid: bigint>` of
@@ -44,64 +38,44 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   * `[cid, cn, cv(0), …, cv(dim-1)]` (stride `dim + 2`), entries
   * sorted by cid ascending; dim is taken from the input vector.
   */
-case class CentroidMuAssign(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = CentroidMuAssign.OutType
+case class CentroidMuAssignBcast(left: Expression, right: Expression,
+    book: org.apache.spark.broadcast.Broadcast[Array[Double]],
+    fingerprint: Long) extends BinaryExpression {
+  override def dataType: DataType = CentroidMuAssignBcast.OutType
 
-  override def nullSafeEval(v: Any, nrm: Any, packed: Any): Any =
-    CentroidMuAssign.compute(v.asInstanceOf[ArrayData],
-      nrm.asInstanceOf[Double], packed.asInstanceOf[ArrayData])
+  override def nullSafeEval(v: Any, nrm: Any): Any =
+    CentroidMuAssignBcast.compute(v.asInstanceOf[ArrayData],
+      nrm.asInstanceOf[Double], book.value)
 
   override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = graft.plans.CentroidMuAssign.compute($a, $b, $c);")
+      ev: ExprCode): ExprCode = {
+    val bcRef = ctx.addReferenceObj("muAssignBookBc", book,
+      "org.apache.spark.broadcast.Broadcast<double[]>")
+    val arr = ctx.addMutableState("double[]", "muAssignBookArr",
+      v => s"$v = (double[]) $bcRef.value();")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.plans.CentroidMuAssignBcast.compute($a, $b, $arr);")
+  }
 
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): CentroidMuAssign =
-    copy(first = newFirst, second = newSecond, third = newThird)
+  override def equals(other: Any): Boolean = other match {
+    case o: CentroidMuAssignBcast =>
+      left == o.left && right == o.right && fingerprint == o.fingerprint
+    case _ => false
+  }
+  override def hashCode(): Int =
+    java.util.Objects.hash(left, right,
+      java.lang.Long.valueOf(fingerprint))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CentroidMuAssignBcast =
+    copy(left = newLeft, right = newRight)
 }
 
-object CentroidMuAssign {
+object CentroidMuAssignBcast {
   val OutType: StructType = StructType(Seq(
     StructField("u", LongType, nullable = false),
     StructField("cid", LongType, nullable = false)))
 
-  def compute(v: ArrayData, nrm: Double, packed: ArrayData)
-      : InternalRow = {
-    val dim = v.numElements()
-    val stride = dim + 2
-    val nc = packed.numElements() / stride
-    var bestU = Long.MinValue
-    var bestCid = -1L
-    var e = 0
-    while (e < nc) {
-      val off = e * stride
-      val cid = packed.getDouble(off).toLong
-      val cn = packed.getDouble(off + 1)
-      var dot = 0.0
-      var d = 0
-      while (d < dim) {
-        dot += v.getDouble(d) * packed.getDouble(off + 2 + d)
-        d += 1
-      }
-      // the literal arm's exact op sequence: ((dot/(nrm·cn))·10⁶)+0.5
-      val u = math.floor(dot / (nrm * cn) * 1000000.0 + 0.5).toLong
-      // strict > with cid-ascending entries = (u DESC, cid ASC)
-      if (bestCid < 0 || u > bestU) { bestU = u; bestCid = cid }
-      e += 1
-    }
-    // a fabricated assignment from an empty table must not flow into
-    // ledgers looking real (r18 review finding)
-    if (bestCid < 0) throw new IllegalStateException(
-      "CentroidMuAssign: empty packed centroid table")
-    InternalRow(bestU, bestCid)
-  }
-
-  /** Primitive-table overload for the broadcast arm — same op
-    * sequence on the same values, so results are bit-identical to the
-    * ArrayData path.
-    */
   def compute(v: ArrayData, nrm: Double, packed: Array[Double])
       : InternalRow = {
     val dim = v.numElements()
@@ -120,58 +94,18 @@ object CentroidMuAssign {
         dot += v.getDouble(d) * packed(off + 2 + d)
         d += 1
       }
+      // the oracle's exact op sequence: ((dot/(nrm·cn))·10⁶)+0.5
       val u = math.floor(dot / (nrm * cn) * 1000000.0 + 0.5).toLong
+      // strict > with cid-ascending entries = (u DESC, cid ASC)
       if (bestCid < 0 || u > bestU) { bestU = u; bestCid = cid }
       e += 1
     }
+    // a fabricated assignment from an empty table must not flow into
+    // ledgers looking real
     if (bestCid < 0) throw new IllegalStateException(
-      "CentroidMuAssign: empty packed centroid table")
+      "CentroidMuAssignBcast: empty packed centroid table")
     InternalRow(bestU, bestCid)
   }
-}
-
-/** [[CentroidMuAssign]] with the packed codebook shipped as a
-  * BROADCAST handle instead of an expression-tree constant — the
-  * [[SignBandCodesBcast]] discipline: past ~1 MB a `typedLit` table
-  * serializes into EVERY task binary (TaskSetManager warns), while a
-  * broadcast serializes as a block-manager handle fetched once per
-  * executor. A production coarse book (K=4096, dim 64) is ~2.2 MB.
-  * Equality/canonicalization uses the driver-computed content
-  * `fingerprint` (two plans built from separate broadcasts of the
-  * same codebook must still match the persist cache).
-  */
-case class CentroidMuAssignBcast(left: Expression, right: Expression,
-    book: org.apache.spark.broadcast.Broadcast[Array[Double]],
-    fingerprint: Long)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = CentroidMuAssign.OutType
-
-  override def nullSafeEval(v: Any, nrm: Any): Any =
-    CentroidMuAssign.compute(v.asInstanceOf[ArrayData],
-      nrm.asInstanceOf[Double], book.value)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("muAssignBookBc", book,
-      "org.apache.spark.broadcast.Broadcast<double[]>")
-    val arr = ctx.addMutableState("double[]", "muAssignBookArr",
-      v => s"$v = (double[]) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.CentroidMuAssign.compute($a, $b, $arr);")
-  }
-
-  override def equals(other: Any): Boolean = other match {
-    case o: CentroidMuAssignBcast =>
-      left == o.left && right == o.right && fingerprint == o.fingerprint
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(left, right,
-      java.lang.Long.valueOf(fingerprint))
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CentroidMuAssignBcast =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Per-subspace squared-L2 argmin: `struct<d: bigint, cid: bigint>`
@@ -181,84 +115,53 @@ case class CentroidMuAssignBcast(left: Expression, right: Expression,
   * entries sorted by (sub, cid) ascending; only entries whose `sub`
   * matches the row's compete — skipping a foreign-sub entry costs one
   * double read, so a full-codebook scan is O(S·k + k·subDim) per row.
+  * A production PQ book at K=256 × 4×16 dims is ~150 KB.
   */
-case class SubL2Argmin(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = SubL2Argmin.OutType
+case class SubL2ArgminBcast(left: Expression, right: Expression,
+    book: org.apache.spark.broadcast.Broadcast[Array[Double]],
+    fingerprint: Long) extends BinaryExpression {
+  override def dataType: DataType = SubL2ArgminBcast.OutType
 
-  override def nullSafeEval(sv: Any, sub: Any, packed: Any): Any =
-    SubL2Argmin.compute(sv.asInstanceOf[ArrayData],
-      sub.asInstanceOf[Int], packed.asInstanceOf[ArrayData])
+  override def nullSafeEval(sv: Any, sub: Any): Any =
+    SubL2ArgminBcast.compute(sv.asInstanceOf[ArrayData],
+      sub.asInstanceOf[Int], book.value)
 
   override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = graft.plans.SubL2Argmin.compute($a, $b, $c);")
+      ev: ExprCode): ExprCode = {
+    val bcRef = ctx.addReferenceObj("subArgminBookBc", book,
+      "org.apache.spark.broadcast.Broadcast<double[]>")
+    val arr = ctx.addMutableState("double[]", "subArgminBookArr",
+      v => s"$v = (double[]) $bcRef.value();")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.plans.SubL2ArgminBcast.compute($a, $b, $arr);")
+  }
 
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): SubL2Argmin =
-    copy(first = newFirst, second = newSecond, third = newThird)
+  override def equals(other: Any): Boolean = other match {
+    case o: SubL2ArgminBcast =>
+      left == o.left && right == o.right && fingerprint == o.fingerprint
+    case _ => false
+  }
+  override def hashCode(): Int =
+    java.util.Objects.hash(left, right,
+      java.lang.Long.valueOf(fingerprint))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SubL2ArgminBcast =
+    copy(left = newLeft, right = newRight)
 }
 
-object SubL2Argmin {
+object SubL2ArgminBcast {
   val OutType: StructType = StructType(Seq(
     StructField("d", LongType, nullable = false),
     StructField("cid", LongType, nullable = false)))
 
-  def compute(sv: ArrayData, sub: Int, packed: ArrayData)
-      : InternalRow = {
-    val subDim = sv.numElements()
-    val stride = subDim + 2
-    val nc = packed.numElements() / stride
-    // ‖sv‖² once per row — the literal arm computes it per centroid,
-    // but on identical inputs the sequential fold is the same double
-    var aa = 0.0
-    var d = 0
-    while (d < subDim) {
-      val x = sv.getDouble(d); aa += x * x; d += 1
-    }
-    var bestD = Long.MaxValue
-    var bestCid = -1L
-    var e = 0
-    while (e < nc) {
-      val off = e * stride
-      if (packed.getDouble(off).toInt == sub) {
-        val cid = packed.getDouble(off + 1).toLong
-        var ab = 0.0
-        var bb = 0.0
-        d = 0
-        while (d < subDim) {
-          ab += sv.getDouble(d) * packed.getDouble(off + 2 + d)
-          d += 1
-        }
-        d = 0
-        while (d < subDim) {
-          val y = packed.getDouble(off + 2 + d); bb += y * y; d += 1
-        }
-        // the literal arm's exact op sequence: (aa − 2.0·ab) + bb,
-        // then ONE long cast
-        val dist = (aa - 2.0 * ab + bb).toLong
-        // strict < with cid-ascending entries = (d ASC, cid ASC)
-        if (bestCid < 0 || dist < bestD) { bestD = dist; bestCid = cid }
-      }
-      e += 1
-    }
-    // no codeword for this row's subspace: fail loudly — the literal
-    // arm's null would at least surface as a null key, a fabricated
-    // (MaxValue, -1) row would not (r18 review finding)
-    if (bestCid < 0) throw new IllegalStateException(
-      s"SubL2Argmin: no codebook entry for subspace $sub")
-    InternalRow(bestD, bestCid)
-  }
-
-  /** Primitive-table overload for the broadcast arm — bit-identical
-    * to the ArrayData path (same op sequence, same values).
-    */
   def compute(sv: ArrayData, sub: Int, packed: Array[Double])
       : InternalRow = {
     val subDim = sv.numElements()
     val stride = subDim + 2
     val nc = packed.length / stride
+    // ‖sv‖² once per row: on identical inputs the sequential fold is
+    // the same double for every centroid
     var aa = 0.0
     var d = 0
     while (d < subDim) {
@@ -282,52 +185,18 @@ object SubL2Argmin {
         while (d < subDim) {
           val y = packed(off + 2 + d); bb += y * y; d += 1
         }
+        // the oracle's exact op sequence: (aa − 2.0·ab) + bb, then ONE
+        // long cast
         val dist = (aa - 2.0 * ab + bb).toLong
+        // strict < with cid-ascending entries = (d ASC, cid ASC)
         if (bestCid < 0 || dist < bestD) { bestD = dist; bestCid = cid }
       }
       e += 1
     }
+    // no codeword for this row's subspace: fail loudly — a fabricated
+    // (MaxValue, -1) row would flow into ledgers looking real
     if (bestCid < 0) throw new IllegalStateException(
-      s"SubL2Argmin: no codebook entry for subspace $sub")
+      s"SubL2ArgminBcast: no codebook entry for subspace $sub")
     InternalRow(bestD, bestCid)
   }
-}
-
-/** [[SubL2Argmin]] with the packed codebook as a BROADCAST handle —
-  * see [[CentroidMuAssignBcast]] for the size rationale (a production
-  * PQ book at K=256 × 4×16 dims is ~150 KB; a production coarse book
-  * probed through this same kernel is ~2 MB).
-  */
-case class SubL2ArgminBcast(left: Expression, right: Expression,
-    book: org.apache.spark.broadcast.Broadcast[Array[Double]],
-    fingerprint: Long)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = SubL2Argmin.OutType
-
-  override def nullSafeEval(sv: Any, sub: Any): Any =
-    SubL2Argmin.compute(sv.asInstanceOf[ArrayData],
-      sub.asInstanceOf[Int], book.value)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("subArgminBookBc", book,
-      "org.apache.spark.broadcast.Broadcast<double[]>")
-    val arr = ctx.addMutableState("double[]", "subArgminBookArr",
-      v => s"$v = (double[]) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.SubL2Argmin.compute($a, $b, $arr);")
-  }
-
-  override def equals(other: Any): Boolean = other match {
-    case o: SubL2ArgminBcast =>
-      left == o.left && right == o.right && fingerprint == o.fingerprint
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(left, right,
-      java.lang.Long.valueOf(fingerprint))
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SubL2ArgminBcast =
-    copy(left = newLeft, right = newRight)
 }

@@ -6,18 +6,16 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** EXACT membership probe of a string key against a BROADCAST sorted
-  * key table — the at-scale arm of every "is this token/domain/id in
-  * the frozen list" membership the curation tier runs
-  * ([[graft.functions.Membership]] dispatches between this and the
-  * in-plan literal spelling on list size, the
-  * [[CentroidMuAssignBcast]] recipe).
+  * key table — every "is this token/domain/id in the frozen list"
+  * membership the curation tier runs ([[graft.functions.Membership]]
+  * builds it at every list size).
   *
   * Why not only the Bloom front ([[BloomContains]]): a Bloom filter's
   * false positives are fine when a downstream EXACT verify re-checks
   * candidates (the q138/q147 decontamination shape), but a membership
   * used directly in a rewrite or a retention predicate (q179/q182
   * blocklists, q186 kept-vocab) has no downstream verify — its answer
-  * IS the result, so the at-scale arm must be exact. A sorted-array
+  * IS the result, so the probe must be exact. A sorted-array
   * binary search over the broadcast table gives O(log V) per row with
   * zero false positives and no per-task copy of the list (the handle
   * rides the block manager, fetched once per executor; a 1M-domain

@@ -608,10 +608,11 @@ object PqCodes {
   }
 }
 
-/** All L sign-band LSH codes of one vector against a PACKED constant
-  * hyperplane table (plane (t, b) dim d at `((t*bBits)+b)*dim + d` —
-  * [[graft.Fixtures.adaptivePlanesPackedTau04]] packs the q135
-  * fixture): `out(t) = Σ_b [dot(v, plane(t,b)) > 0] << b`.
+/** All L sign-band LSH codes of one vector against a packed
+  * hyperplane table shipped as a BROADCAST handle (plane (t, b) dim d
+  * at `((t*bBits)+b)*dim + d` — [[graft.Fixtures.planesBroadcast]]
+  * packs the committed fixtures):
+  * `out(t) = Σ_b [dot(v, plane(t,b)) > 0] << b`.
   *
   * Replaces the corpus × planes `crossJoin(broadcast(planes))` +
   * `groupBy(vec_id, tbl)` spelling — an N·L·B-row join feeding a
@@ -622,48 +623,18 @@ object PqCodes {
   * every sign test — and therefore every code — is bit-identical to
   * the relational spelling and to the oracle's `list_inner_product`.
   * (Bit-sum order is immaterial: integer adds of distinct powers of
-  * two.) Domain note: viable while the plane table packs into a
-  * constant — the dispatcher's bound is `Similarity.PackedPlaneBound`
-  * = 2¹⁸ planes (~128 MB driver-side at dim 64, corpora to
-  * N ≈ 2·10⁵ at τ=0.4); past it the relational `wideBandNeardup`
-  * spelling streams the plane relation instead.
-  */
-case class SignBandCodes(child: Expression, packed: Array[Double],
-    bBits: Int) extends UnaryExpression {
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(a: Any): Any =
-    SignBandCodes.compute(a.asInstanceOf[ArrayData], packed, bBits)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    // the plane table rides as a PRIMITIVE double[] in the references
-    // array — never a boxed-element ArrayData literal, whose ~10⁵-10⁶
-    // per-row element touches (this kernel reads every plane component
-    // once per input row) measured ~7× on the whole q135 query
-    val packedRef = ctx.addReferenceObj("signBandPlanes", packed,
-      "double[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.SignBandCodes.compute($a, " +
-        s"$packedRef, $bBits);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SignBandCodes = copy(child = newChild)
-}
-
-/** [[SignBandCodes]] with the plane table shipped as a BROADCAST
-  * handle instead of an expression-tree constant. The packed q135
-  * fixture is ~3.5 MB of doubles; as a case-class field it serializes
-  * into EVERY task binary (TaskSetManager warns at >1 MiB), while a
-  * `Broadcast` serializes as a block-manager handle — executors fetch
-  * the payload once via torrent broadcast and every task on the
-  * executor shares the same array. Equality/canonicalization cannot
-  * use the handle (reference identity — two plans built from separate
-  * broadcasts of the same fixture must still match the persist cache),
-  * so the driver-computed content `fingerprint` stands in for the
-  * payload in equals/hashCode, the [[BloomContains]] discipline.
+  * two.) Domain note: the dispatcher's bound is
+  * `Similarity.PackedPlaneBound` = 2¹⁸ planes (~128 MB driver-side at
+  * dim 64, corpora to N ≈ 2·10⁵ at τ=0.4); past it the relational
+  * `wideBandNeardup` spelling streams the plane relation instead.
+  *
+  * The packed q135 fixture is ~3.5 MB of doubles; as a case-class
+  * field it would serialize into EVERY task binary (TaskSetManager
+  * warns at >1 MiB), while a `Broadcast` serializes as a block-manager
+  * handle — executors fetch the payload once via torrent broadcast and
+  * every task on the executor shares the same array. The
+  * driver-computed content `fingerprint` ([[Fnv1a]]) stands in for the
+  * payload in equals/hashCode, the [[BloomContains]] discipline;
   * [[graft.Fixtures.planesBroadcast]] caches the broadcast per
   * (session, fixture stamp) so plan re-construction reuses one handle.
   */
@@ -680,8 +651,10 @@ case class SignBandCodesBcast(child: Expression,
       ev: ExprCode): ExprCode = {
     // the references array carries the Broadcast HANDLE; the payload
     // double[] is resolved once per generated-class instance into a
-    // mutable-state field, so the per-row path still reads a primitive
-    // array (the SignBandCodes constant-table discipline)
+    // mutable-state field, so the per-row path reads a primitive array
+    // — never a boxed-element ArrayData, whose per-row element touches
+    // (this kernel reads every plane component once per input row)
+    // measured ~7× on the whole q135 query
     val bcRef = ctx.addReferenceObj("signBandPlanesBc", planes,
       "org.apache.spark.broadcast.Broadcast<double[]>")
     val arr = ctx.addMutableState("double[]", "signBandPlanesArr",

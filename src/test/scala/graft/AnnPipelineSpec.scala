@@ -125,21 +125,21 @@ class AnnPipelineSpec extends AnyFunSuite {
     // rebuild arm: train on base (same as append), then encode
     // base+delta in ONE pass with the frozen books — encode is a pure
     // per-row function of the books, so this must serve bit-equal
-    val n = operators.Kmeans.qrel(spark, dir)
-      .select(col("vec_id"), col("qv")).persist()
+    val n = Caches.persist(operators.Kmeans.qrel(spark, dir)
+      .select(col("vec_id"), col("qv")))
     n.count()
     val queries = n.filter(col("vec_id") < NumQ)
     val base = n.filter(col("vec_id") >= NumQ &&
       col("vec_id") % DeltaMod =!= DeltaMod - 1)
     val whole = n.filter(col("vec_id") >= NumQ)
-    val bsv = operators.Kmeans.subrelOf(base, 1, operators.Kmeans.Dim)
-      .persist()
+    val bsv = Caches.persist(
+      operators.Kmeans.subrelOf(base, 1, operators.Kmeans.Dim))
     val coarse = operators.Kmeans.lloydBook(bsv, CoarseK, CoarseRounds,
       operators.Kmeans.Dim)
-    val residB = operators.IvfPqPipeline.residualsOf(bsv, coarse)
-      .persist()
-    val rsvB = operators.Kmeans.subrelOf(residB,
-      operators.Kmeans.SubSpaces, operators.Kmeans.SubDim).persist()
+    val residB = Caches.persist(
+      operators.IvfPqPipeline.residualsOf(bsv, coarse))
+    val rsvB = Caches.persist(operators.Kmeans.subrelOf(residB,
+      operators.Kmeans.SubSpaces, operators.Kmeans.SubDim))
     val book = operators.Kmeans.lloydBook(rsvB, PqCodeK, PqRounds,
       operators.Kmeans.SubDim)
     val rebuilt = operators.IvfPqPipeline.serve(queries,
@@ -155,7 +155,7 @@ class AnnPipelineSpec extends AnyFunSuite {
     assert(appended.exists(_._3 % DeltaMod == DeltaMod - 1),
       "no delta vector surfaced in any served top-k — the append " +
         "path may be dead")
-    Seq(bsv, residB, rsvB, n).foreach(_.unpersist())
+    Seq(bsv, residB, rsvB, n).foreach(Caches.release)
   }
 
   test("q229: a 5-batch MemoryStream split of the delta encodes the " +
@@ -166,8 +166,8 @@ class AnnPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val n = operators.Kmeans.qrel(spark, dir)
-      .select(col("vec_id"), col("qv")).persist()
+    val n = Caches.persist(operators.Kmeans.qrel(spark, dir)
+      .select(col("vec_id"), col("qv")))
     n.count()
     val idx = operators.IvfPqPipeline.buildBaseIndex(n)
     val deltaRows = n
@@ -201,7 +201,7 @@ class AnnPipelineSpec extends AnyFunSuite {
       idx.coarse, idx.book))
     assert(streamed.nonEmpty && streamed == batch,
       "micro-batch split changed the encoded index")
-    n.unpersist()
+    Caches.release(n)
   }
 
   test("q231 rebalance: the split path is EXERCISED at every fixture " +
@@ -250,8 +250,8 @@ class AnnPipelineSpec extends AnyFunSuite {
     import operators.IvfPqPipeline._
     import org.apache.spark.sql.functions._
     val sf01 = "/root/testdata/sf0.01"
-    val n = operators.Kmeans.qrel(spark, sf01)
-      .select(col("vec_id"), col("qv")).persist()
+    val n = Caches.persist(operators.Kmeans.qrel(spark, sf01)
+      .select(col("vec_id"), col("qv")))
     n.count()
     val base = n.filter(col("vec_id") >= NumQ &&
       col("vec_id") % DeltaMod =!= DeltaMod - 1)
@@ -305,7 +305,7 @@ class AnnPipelineSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc0)
       spark.sparkContext.removeSparkListener(clock)
     }
-    n.unpersist()
+    Caches.release(n)
   }
 
   test("q233 tombstone compaction: ONLY affected list dirs are " +
@@ -318,8 +318,8 @@ class AnnPipelineSpec extends AnyFunSuite {
       .createTempDirectory("graft_tomb_spec").toString + "/index"
     // replicate the q233 body stepwise so the layout state BETWEEN
     // write and compact is observable
-    val n = operators.Kmeans.qrel(spark, dir)
-      .select(col("vec_id"), col("qv")).persist()
+    val n = Caches.persist(operators.Kmeans.qrel(spark, dir)
+      .select(col("vec_id"), col("qv")))
     n.count()
     val queries = n.filter(col("vec_id") < NumQ)
     val idx = operators.IvfPqPipeline.buildFullIndex(n)
@@ -409,7 +409,7 @@ class AnnPipelineSpec extends AnyFunSuite {
     assert(again.groupBy(col("vec_id"), col("sub")).count()
       .filter(col("count") > 1).count() == 0,
       "rerun left duplicated codes")
-    n.unpersist()
+    Caches.release(n)
   }
 
   test("q233 compaction runs O(1) Spark jobs regardless of how many " +
@@ -417,20 +417,20 @@ class AnnPipelineSpec extends AnyFunSuite {
       "discipline; r19 VERDICT ask #1)") {
     import operators.IvfPqPipeline._
     import org.apache.spark.sql.functions._
-    val n = operators.Kmeans.qrel(spark, dir)
-      .select(col("vec_id"), col("qv")).persist()
+    val n = Caches.persist(operators.Kmeans.qrel(spark, dir)
+      .select(col("vec_id"), col("qv")))
     n.count()
     val idx = operators.IvfPqPipeline.buildFullIndex(n)
-    val codes = idx.codesBase.persist()
+    val codes = Caches.persist(idx.codesBase)
     codes.count()
     val tombRows = n.filter(col("vec_id") >= NumQ &&
       col("vec_id") % TombMod === TombMod - 1)
     // tombstone → list assignment, reused to build a one-list delete
     // and the full delete
-    val assigned = operators.IvfPqPipeline.residualsOf(
+    val assigned = Caches.persist(operators.IvfPqPipeline.residualsOf(
         operators.Kmeans.subrelOf(tombRows, 1, operators.Kmeans.Dim),
         idx.coarse)
-      .select(col("vec_id"), col("lcid")).persist()
+      .select(col("vec_id"), col("lcid")))
     assigned.count()
     val allAffected = assigned.select(col("lcid")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
@@ -473,7 +473,7 @@ class AnnPipelineSpec extends AnyFunSuite {
           "(union read + counts + one staging write)")
     } finally {
       spark.sparkContext.removeSparkListener(clock)
-      assigned.unpersist(); codes.unpersist(); n.unpersist(); ()
+      Seq(assigned, codes, n).foreach(Caches.release)
     }
   }
 }

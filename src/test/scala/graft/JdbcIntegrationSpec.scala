@@ -310,8 +310,7 @@ class JdbcIntegrationSpec extends AnyFunSuite {
   }
 
   test("CLI migrate under checksum validation: a content mismatch with " +
-      "equal counts warns on stderr with both digests and still " +
-      "succeeds") {
+      "equal counts fails the run, naming the table and both digests") {
     val srcUrl = "jdbc:derby:memory:graftcksrc;create=true"
     val tgtUrl = "jdbc:derby:memory:graftcktgt;create=true"
     val sc = DriverManager.getConnection(srcUrl)
@@ -346,18 +345,71 @@ class JdbcIntegrationSpec extends AnyFunSuite {
          |[hooks]
          |after_data = ["skew.sql"]
          |""".stripMargin)
-    val err = new java.io.ByteArrayOutputStream()
-    Console.withErr(err)(Main.runMigrateWith(cfgPath, spark))
-
-    val warnings = err.toString("UTF-8").linesIterator
-      .filter(_.startsWith("WARNING: checksum mismatch")).toSeq
-    assert(warnings.size == 1, err.toString("UTF-8"))
-    val Digests = ("WARNING: checksum mismatch on table prods: " +
+    val e = intercept[Main.MigrationValidationException](
+      Main.runMigrateWith(cfgPath, spark))
+    val lines = e.getMessage.linesIterator.toSeq
+    assert(lines.size == 1, e.getMessage)
+    val Digests = ("CHECKSUM MISMATCH on table prods: " +
       "source (20:\\d+), target (20:\\d+)").r
-    warnings.head match {
+    lines.head match {
       case Digests(src, tgt) => assert(src != tgt)
-      case other => fail(s"unexpected warning: $other")
+      case other => fail(s"unexpected failure: $other")
     }
+  }
+
+  test("checksum validation digests an always-transformed column in " +
+      "its loaded form: a faithful copy of an MSSQL uniqueidentifier " +
+      "digests equal on both sides") {
+    import graft.config.JobConfig
+    import graft.sources.{Introspection, MssqlDialect, SchemaMapping,
+      TypeOptions}
+    val srcUrl = "jdbc:derby:memory:graftguids;create=true"
+    val tgtUrl = "jdbc:derby:memory:graftguidt;create=true"
+    val rnd = new scala.util.Random(5)
+    val sc = DriverManager.getConnection(srcUrl)
+    try {
+      sc.createStatement().execute("CREATE TABLE GUIDS (ID INT NOT NULL " +
+        "PRIMARY KEY, G CHAR(16) FOR BIT DATA)")
+      val ins = sc.prepareStatement("INSERT INTO GUIDS VALUES (?, ?)")
+      (1 to 30).foreach { i =>
+        ins.setInt(1, i)
+        if (i % 9 == 0) ins.setNull(2, java.sql.Types.BINARY)
+        else ins.setBytes(2, Array.fill(16)(rnd.nextInt(256).toByte))
+        ins.addBatch()
+      }
+      ins.executeBatch()
+    } finally sc.close()
+    val tc = DriverManager.getConnection(tgtUrl)
+    try tc.createStatement().execute(
+      "CREATE TABLE \"guids\" (\"id\" INT, \"g\" VARCHAR(36))")
+    finally tc.close()
+    val conn = DriverManager.getConnection(srcUrl)
+    val (sts, _) = try Introspection.fromJdbcMetadata(conn, "APP")
+      finally conn.close()
+    // the columns as SQL Server reports them: the load always rewrites
+    // a uniqueidentifier's GUID byte order to the uuid text form
+    val t = sts.find(_.name == "GUIDS").get
+    val st = t.copy(columns = t.columns.map(c =>
+      c.copy(dataType = if (c.name == "G") "uniqueidentifier" else "int")))
+    val cfg = JobConfig(sourceDialect = "mssql", sourceUrl = srcUrl,
+      targetUrl = tgtUrl, targetSchema = null, validation = "checksum")
+    val loader = new SparkTableLoader(spark, cfg, Seq(st))
+    val meta = SchemaMapping.toTableMeta(MssqlDialect, st, Nil,
+      TypeOptions())
+    // Derby cannot parse the MSSQL dialect's [bracket] quoting, so the
+    // raw scan is read here; everything after it is the loader's own
+    val raw = spark.read.jdbc(srcUrl, "GUIDS", new java.util.Properties())
+    val loaded = loader.transformed(st, raw)
+    CopySink.write(loaded.toDF("id", "g"), schema = null, table = "guids",
+      connect = () => DriverManager.getConnection(
+        "jdbc:derby:memory:graftguidt"))
+    val tgt = loader.targetDigest(meta).get
+    assert(tgt.startsWith("30:"))
+    assert(loader.digest(loaded, Seq("ID", "G")) == tgt,
+      "a faithful copy of a transformed column digests differently")
+    // the untransformed scan is what the source digest used to read:
+    // it flags the same faithful copy as corrupt
+    assert(loader.digest(raw, Seq("ID", "G")) != tgt)
   }
 
   test("single_tx on Derby: ALL tables read over ONE connection in one " +

@@ -34,7 +34,7 @@ class KmeansSpec extends AnyFunSuite {
     try {
       val parts = 4
       val n = operators.Kmeans.qrel(spark, "/root/testdata/sf0.01")
-        .repartition(parts).persist()
+        .repartition(parts).transform(Caches.persist)
       n.count()
       val init = operators.Kmeans.initCents(n)
       clock.quiesce(); clock.reset()
@@ -42,7 +42,7 @@ class KmeansSpec extends AnyFunSuite {
         operators.Kmeans.withAssignment(n, init))
       clock.quiesce()
       val recs = clock.shuffleRecords
-      n.unpersist()
+      Caches.release(n)
       // partial agg emits ≤ K·Dim rows per task; 2x slack for the
       // final-merge side of the exchange
       val bound = 2L * parts * K * operators.Kmeans.Dim
@@ -67,13 +67,13 @@ class KmeansSpec extends AnyFunSuite {
 
   test("the convergence arm reaches an exact integer fixed point: " +
       "one more update leaves every centroid component identical") {
-    val n = operators.Kmeans.qrel(spark, dir).persist()
+    val n = Caches.persist(operators.Kmeans.qrel(spark, dir))
     n.count()
     val (cents, rounds) = operators.Kmeans.trainToConvergence(n)
     assert(rounds < 64, s"no fixed point within 64 rounds")
     val again = operators.Kmeans.updated(
       operators.Kmeans.withAssignment(n, cents))
-    n.unpersist()
+    Caches.release(n)
     assert(cents.length == again.length)
     assert(cents.zip(again).forall { case (a, b) =>
       a.cid == b.cid && a.cv.sameElements(b.cv) },
@@ -83,7 +83,7 @@ class KmeansSpec extends AnyFunSuite {
   test("q223 PQ: every (vector, subspace) assigned once, Lloyd " +
       "monotonically shrinks the integer L2 objective, codebook is " +
       "partition-invariant") {
-    val sv = operators.Kmeans.subrel(spark, dir).persist()
+    val sv = Caches.persist(operators.Kmeans.subrel(spark, dir))
     val rows = sv.count()
     val vecs = operators.Kmeans.qrel(spark, dir).count()
     assert(rows == vecs * operators.Kmeans.SubSpaces)
@@ -102,7 +102,7 @@ class KmeansSpec extends AnyFunSuite {
     val b2 = operators.Kmeans.updatedBook(
       operators.Kmeans.withPqAssignment(sv, b1))
     val d2 = obj(b2)
-    sv.unpersist()
+    Caches.release(sv)
     // exact-L2 Lloyd is monotone up to the floor rounding of the mean
     // (≤ SubDim per centroid) — require genuine improvement anyway
     assert(d1 < d0, s"round 1 did not improve: $d0 -> $d1")
@@ -112,133 +112,143 @@ class KmeansSpec extends AnyFunSuite {
     assert(led.forall(_.getLong(3) >= 0))
   }
 
-  test("packed-kernel assignment arm is bit-identical to the " +
-      "literal-struct arm (µcos coarse + PQ L2), incl. a codebook " +
-      "with dropped (non-contiguous) cids") {
-    val n = operators.Kmeans.qrel(spark, dir).persist()
-    n.count()
-    def rowsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("cid"), col("ucos"))
+  import operators.Kmeans.{Cent, SubCent}
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
+  }
+  // µcos = floor(dot/(‖q‖·‖c‖)·10⁶ + 0.5), argmax ties to smaller cid
+  private def argmaxUcos(q: Array[Double], qn: Double,
+      cents: Seq[Cent]): (Long, Long) =
+    cents.map(c => (math.floor(dot(q, c.cv) / (qn * c.cn) *
+        1000000.0 + 0.5).toLong, c.cid))
+      .minBy { case (u, cid) => (-u, cid) }
+  // squared L2 = ‖s‖² − 2⟨s,c⟩ + ‖c‖², argmin ties to smaller cid
+  private def argminL2(sv: Array[Double], sub: Int,
+      book: Seq[SubCent]): (Long, Long) =
+    book.filter(_.sub == sub)
+      .map(c => ((dot(sv, sv) - 2.0 * dot(sv, c.cv) +
+        dot(c.cv, c.cv)).toLong, c.cid))
+      .min
+
+  /** (vec_id, cid, µcos) of `withAssignment` must equal the definition
+    * on every book.
+    */
+  private def checkCoarse(n: org.apache.spark.sql.DataFrame,
+      books: Seq[Seq[Cent]]): Unit = {
+    val vecs = n.collect().map(r => (r.getLong(0),
+      r.getSeq[Double](1).toArray, r.getDouble(2)))
+    books.foreach { cents =>
+      val got = operators.Kmeans.withAssignment(n, cents)
+        .select(col("vec_id"), col("cid"), col("ucos"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSet
-    // seeds AND a post-update codebook (non-trivial centroids)
-    val init = operators.Kmeans.initCents(n)
-    val c1 = operators.Kmeans.updated(
-      operators.Kmeans.withAssignmentLiteral(n, init))
-    Seq(init, c1).foreach { cents =>
-      assert(rowsOf(operators.Kmeans.withAssignmentKernel(n, cents)) ==
-        rowsOf(operators.Kmeans.withAssignmentLiteral(n, cents)))
+      val want = vecs.map { case (id, q, qn) =>
+        val (u, cid) = argmaxUcos(q, qn, cents)
+        (id, cid, u)
+      }.toSet
+      assert(got.size == want.size && (got diff want).isEmpty,
+        s"coarse assignment diverged on a ${cents.size}-centroid book: " +
+          (got diff want).take(3))
     }
-    // empty-cluster drop: a sparse-cid codebook must assign identically
-    val sparse = c1.filterNot(c => c.cid == 2 || c.cid == 5)
-    assert(rowsOf(operators.Kmeans.withAssignmentKernel(n, sparse)) ==
-      rowsOf(operators.Kmeans.withAssignmentLiteral(n, sparse)))
-    n.unpersist()
-    val sv = operators.Kmeans.subrel(spark, dir).persist()
-    sv.count()
-    def pqRowsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("sub"), col("cid"), col("dist"))
+  }
+
+  /** (vec_id, sub, cid, dist) of `withPqAssignment` must equal the
+    * definition on every book.
+    */
+  private def checkPq(sv: org.apache.spark.sql.DataFrame,
+      books: Seq[Seq[SubCent]]): Unit = {
+    val subs = sv.collect().map(r =>
+      (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray))
+    books.foreach { book =>
+      val got = operators.Kmeans.withPqAssignment(sv, book)
+        .select(col("vec_id"), col("sub"), col("cid"), col("dist"))
         .collect().map(r =>
           (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
         .toSet
-    val book0 = operators.Kmeans.initBook(sv)
-    val book1 = operators.Kmeans.updatedBook(
-      operators.Kmeans.withPqAssignmentLiteral(sv, book0))
-    Seq(book0, book1).foreach { book =>
-      assert(pqRowsOf(operators.Kmeans.withPqAssignmentKernel(sv, book)) ==
-        pqRowsOf(operators.Kmeans.withPqAssignmentLiteral(sv, book)))
+      val want = subs.map { case (id, sub, x) =>
+        val (d, cid) = argminL2(x, sub, book)
+        (id, sub, cid, d)
+      }.toSet
+      assert(got.size == want.size && (got diff want).isEmpty,
+        s"PQ assignment diverged on a ${book.size}-codeword book: " +
+          (got diff want).take(3))
     }
-    val sparseBook = book1.filterNot(c => c.sub == 1 && c.cid == 2)
-    assert(
-      pqRowsOf(operators.Kmeans.withPqAssignmentKernel(sv, sparseBook)) ==
-        pqRowsOf(operators.Kmeans.withPqAssignmentLiteral(sv, sparseBook)))
-    sv.unpersist()
   }
 
-  test("production K dispatches the packed kernel (the r17 " +
-      "prose-not-code gap): K > LiteralArmMaxK plans carry the kernel " +
-      "expression, train end-to-end, and partition the corpus") {
+  test("coarse µcos and PQ L2 assignment equal a plain-Scala argmax " +
+      "and argmin written from the definitions (seed, post-update, " +
+      "sparse-cid and tied books)") {
+    val n = Caches.persist(operators.Kmeans.qrel(spark, dir))
+    val init = operators.Kmeans.initCents(n)
+    val c1 = operators.Kmeans.updated(
+      operators.Kmeans.withAssignment(n, init))
+    // empty-cluster drop leaves a sparse-cid codebook
+    val sparse = c1.filterNot(c => c.cid == 2 || c.cid == 5)
+    // a duplicated centroid ties every µcos it scores: the smaller cid
+    // must win
+    val tied = c1 :+ c1.head.copy(cid = 99L)
+    checkCoarse(n, Seq(init, c1, sparse, tied))
+    Caches.release(n)
+
+    val sv = Caches.persist(operators.Kmeans.subrel(spark, dir))
+    val book0 = operators.Kmeans.initBook(sv)
+    val book1 = operators.Kmeans.updatedBook(
+      operators.Kmeans.withPqAssignment(sv, book0))
+    val sparseBook = book1.filterNot(c => c.sub == 1 && c.cid == 2)
+    val tiedBook = book1 :+ book1.head.copy(cid = 99L)
+    checkPq(sv, Seq(book0, book1, sparseBook, tiedBook))
+    Caches.release(sv)
+  }
+
+  test("K=48 coarse and 32-codeword PQ books assign as the definitions " +
+      "say, train a Lloyd round end-to-end, and partition the corpus") {
     val bigK = 48
-    assert(bigK > operators.Kmeans.LiteralArmMaxK)
-    val n = operators.Kmeans.qrel(spark, dir).persist()
+    val n = Caches.persist(operators.Kmeans.qrel(spark, dir))
     val total = n.count()
     val cents = operators.Kmeans.initCents(n, bigK)
     assert(cents.length == bigK)
-    val asn = operators.Kmeans.withAssignment(n, cents)
-    val plan = asn.queryExecution.executedPlan.toString.toLowerCase
-    assert(plan.contains("centroidmuassign"),
-      "big-K coarse assignment did not route through the packed kernel")
-    assert(!plan.contains("array_max"),
-      "big-K plan still builds the literal-struct argmax")
-    // a Lloyd round through the public dispatch stays a valid partition
-    val c1 = operators.Kmeans.updated(asn)
+    checkCoarse(n, Seq(cents))
+    // a Lloyd round through the public entry stays a valid partition
+    val c1 = operators.Kmeans.updated(
+      operators.Kmeans.withAssignment(n, cents))
     val led = operators.Kmeans.withAssignment(n, c1)
       .groupBy(col("cid")).agg(count(lit(1)).as("m")).collect()
     assert(led.map(_.getLong(1)).sum == total)
     assert(led.forall(r => r.getLong(0) >= 0 && r.getLong(0) < bigK))
-    n.unpersist()
-    // PQ side: a 32-codeword book routes through SubL2Argmin
-    val sv = operators.Kmeans.subrel(spark, dir).persist()
+    Caches.release(n)
+    val sv = Caches.persist(operators.Kmeans.subrel(spark, dir))
     val svRows = sv.count()
     val book = operators.Kmeans.initBook(sv, 32)
-    val pqAsn = operators.Kmeans.withPqAssignment(sv, book)
-    val pqPlan = pqAsn.queryExecution.executedPlan.toString.toLowerCase
-    assert(pqPlan.contains("subl2argmin"),
-      "big-K PQ assignment did not route through the packed kernel")
-    assert(pqAsn.count() == svRows)
-    sv.unpersist()
+    checkPq(sv, Seq(book))
+    assert(operators.Kmeans.withPqAssignment(sv, book).count() == svRows)
+    Caches.release(sv)
   }
 
-  test("broadcast-handle kernel arm is bit-identical to the other " +
-      "two arms, and its plan carries the broadcast expression (no " +
-      "codebook in the task binary)") {
-    val n = operators.Kmeans.qrel(spark, dir).persist()
-    n.count()
-    val init = operators.Kmeans.initCents(n)
-    def rowsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("cid"), col("ucos"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-    val bc = operators.Kmeans.withAssignmentBcast(n, init)
-    assert(rowsOf(bc) == rowsOf(operators.Kmeans.withAssignmentLiteral(n, init)))
-    assert(bc.queryExecution.executedPlan.toString.toLowerCase
-      .contains("centroidmuassignbcast"))
-    n.unpersist()
-    val sv = operators.Kmeans.subrel(spark, dir).persist()
-    sv.count()
-    val book = operators.Kmeans.initBook(sv)
-    def pqRowsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("sub"), col("cid"), col("dist"))
-        .collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-        .toSet
-    val pqBc = operators.Kmeans.withPqAssignmentBcast(sv, book)
-    assert(pqRowsOf(pqBc) ==
-      pqRowsOf(operators.Kmeans.withPqAssignmentLiteral(sv, book)))
-    assert(pqBc.queryExecution.executedPlan.toString.toLowerCase
-      .contains("subl2argminbcast"))
-    sv.unpersist()
-  }
-
-  test("the three-arm dispatch rule: literal to K=16, packed plan " +
-      "constant to 1 MiB, broadcast past it (production K=4096 " +
-      "coarse / K=256 PQ land where they should)") {
-    import operators.Kmeans._
-    def bytes(k: Int, dim: Int): Long = k.toLong * (dim + 2) * 8
-    assert(assignArm(8, bytes(8, 64)) == LiteralArm)
-    assert(assignArm(16, bytes(16, 64)) == LiteralArm)
-    assert(assignArm(17, bytes(17, 64)) == KernelLitArm)
-    assert(assignArm(48, bytes(48, 64)) == KernelLitArm)
-    // production PQ book: 256 codewords × 16 dims ≈ 37 KB → constant
-    assert(assignArm(256, bytes(256 * SubSpaces, SubDim)) == KernelLitArm)
-    // production coarse book: 4096 × 64 dims ≈ 2.2 MB → broadcast
-    assert(assignArm(4096, bytes(4096, 64)) == KernelBcastArm)
-    assert(bytes(4096, 64) > KernelLitMaxBytes)
+  test("the assignment plans carry the broadcast expressions, so no " +
+      "codebook rides in the task binary") {
+    val n = Caches.persist(operators.Kmeans.qrel(spark, dir))
+    Seq(operators.Kmeans.initCents(n),
+        operators.Kmeans.initCents(n, 48)).foreach { cents =>
+      val plan = operators.Kmeans.withAssignment(n, cents)
+        .queryExecution.executedPlan.toString.toLowerCase
+      assert(plan.contains("centroidmuassignbcast"), plan)
+    }
+    Caches.release(n)
+    val sv = Caches.persist(operators.Kmeans.subrel(spark, dir))
+    Seq(operators.Kmeans.initBook(sv),
+        operators.Kmeans.initBook(sv, 32)).foreach { book =>
+      val plan = operators.Kmeans.withPqAssignment(sv, book)
+        .queryExecution.executedPlan.toString.toLowerCase
+      assert(plan.contains("subl2argminbcast"), plan)
+    }
+    Caches.release(sv)
   }
 
   test("training moves the centroids and does not degrade the µcos " +
       "objective on the fixture") {
-    val n = operators.Kmeans.qrel(spark, dir).persist()
+    val n = Caches.persist(operators.Kmeans.qrel(spark, dir))
     n.count()
     val init = operators.Kmeans.initCents(n)
     def mass(cents: Seq[operators.Kmeans.Cent]): Long =
@@ -253,7 +263,7 @@ class KmeansSpec extends AnyFunSuite {
     val c2 = operators.Kmeans.updated(
       operators.Kmeans.withAssignment(n, c1))
     val m2 = mass(c2)
-    n.unpersist()
+    Caches.release(n)
     assert(m2 > m0,
       s"µcos mass did not improve: init=$m0 after-2-updates=$m2")
   }

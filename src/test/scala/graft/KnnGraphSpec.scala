@@ -418,7 +418,7 @@ class KnnGraphSpec extends AnyFunSuite {
       "serial arm's; O(1) Spark jobs INDEPENDENT of K (the receipt " +
       "the serial arm cannot give); dispatch boundary pinned") {
     import operators.{KcGreedy, KnnGraph}
-    // dispatch rule at the boundary — the assignArm recipe
+    // dispatch rule at the boundary
     assert(KnnGraph.kcenterArm(KnnGraph.KcenterSerialMaxK) ==
       KnnGraph.KcSerialArm)
     assert(KnnGraph.kcenterArm(KnnGraph.KcenterSerialMaxK + 1) ==

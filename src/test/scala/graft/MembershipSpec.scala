@@ -4,78 +4,74 @@ import graft.functions.Membership
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The size-dispatched membership swap (VERDICT r18 finding 2, the
-  * third application of the assignArm recipe): both arms must be
-  * EXACT and bit-identical — the dispatch can never change a result,
-  * only the physical shape (plan literal + linear scan vs broadcast
-  * handle + binary search).
+/** Frozen-list membership ([[Membership.contains]] /
+  * [[Membership.overlaps]]) is an exact broadcast binary search: every
+  * answer must equal Scala `Set` membership over the same list, at
+  * fixture size and past it, with duplicates, and with NULL keys.
   */
 class MembershipSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.01"
 
-  test("dispatch boundary: literal to LiteralMaxKeys, broadcast past " +
-      "it; a big list routes to the broadcast expression in the plan") {
-    spark // containsBcast broadcasts via the active session
-    assert(Membership.arm(Membership.LiteralMaxKeys) ==
-      Membership.LiteralArm)
-    assert(Membership.arm(Membership.LiteralMaxKeys + 1) ==
-      Membership.BcastArm)
-    // a list past the threshold must produce a SetContainsBcast node,
-    // not a typedLit the size of the list
-    val big = (0 until Membership.LiteralMaxKeys + 10)
-      .map(i => s"tok$i")
+  private def probeOf(c: org.apache.spark.sql.Column)
+      : Option[graft.plans.SetContainsBcast] = {
     import org.apache.spark.sql.GraftShims
-    val e = GraftShims.expression(Membership.contains(lit("tok3"), big))
-    assert(e.collectFirst {
+    GraftShims.expression(c).collectFirst {
       case b: graft.plans.SetContainsBcast => b
-    }.nonEmpty, s"expected a broadcast probe, got: $e")
-    // the overlaps PUBLIC route past the threshold also dispatches to
-    // the probe (inside the exists lambda), and answers correctly
-    // the probe sits inside the unresolved exists-lambda body, which
-    // collectFirst cannot descend before resolution — the string form
-    // shows it
-    val eo = GraftShims.expression(
-      Membership.overlaps(array(lit("x")), big)).toString
-    assert(eo.contains("setcontainsbcast"),
-      s"expected a broadcast probe in overlaps, got: $eo")
-    val got = spark.range(1).select(
-      Membership.overlaps(array(lit("tok7"), lit("zz")), big).as("a"),
-      Membership.overlaps(array(lit("zz")), big).as("b")).head
-    assert(got.getBoolean(0) && !got.getBoolean(1))
+    }
   }
 
-  test("a duplicate-heavy list dispatches on its DISTINCT size AND " +
-      "embeds only the distinct keys (r20 review: dispatching on " +
-      "distinct while embedding the raw list would serialize the " +
-      "duplicates into every task binary)") {
+  test("contains and overlaps equal Scala Set membership on small and " +
+      "large lists, and the plan carries the broadcast probe") {
+    spark // the probe broadcasts via the active session
+    Seq(8, 200).foreach { size =>
+      val keys = (0 until size).map(i => s"tok$i")
+      val set = keys.toSet
+      assert(probeOf(Membership.contains(lit("tok3"), keys)).nonEmpty)
+      // the overlaps probe sits inside the unresolved exists-lambda
+      // body, which collectFirst cannot descend before resolution —
+      // the string form shows it
+      import org.apache.spark.sql.GraftShims
+      assert(GraftShims.expression(Membership.overlaps(array(lit("x")),
+        keys)).toString.contains("setcontainsbcast"))
+      val probes = Seq("tok0", "tok7", s"tok${size - 1}", s"tok$size",
+        "zz", "", "TOK1")
+      val got = spark.range(1).select(probes.map(p =>
+        Membership.contains(lit(p), keys)): _*).head
+      probes.zipWithIndex.foreach { case (p, i) =>
+        assert(got.getBoolean(i) == set(p), s"contains($p), $size keys")
+      }
+      val arrs = Seq(Seq("tok7", "zz"), Seq("zz"), Seq.empty[String])
+      val gotO = spark.range(1).select(arrs.map(a =>
+        Membership.overlaps(typedLit(a), keys)): _*).head
+      arrs.zipWithIndex.foreach { case (a, i) =>
+        assert(gotO.getBoolean(i) == a.exists(set), s"overlaps($a)")
+      }
+      val nul = spark.range(1).select(
+        Membership.contains(lit(null).cast("string"), keys)).head
+      assert(nul.isNullAt(0), "a NULL key must probe NULL")
+    }
+  }
+
+  test("a duplicate-heavy list broadcasts only its distinct keys and " +
+      "answers like its Set") {
     spark
-    import org.apache.spark.sql.GraftShims
-    // 10x LiteralMaxKeys raw entries, 8 distinct — literal tier
-    val dupHeavy = Seq.fill(Membership.LiteralMaxKeys * 10)(
-      (0 until 8).map(i => s"k$i")).flatten
-    val e = GraftShims.expression(
-      Membership.contains(lit("k3"), dupHeavy))
-    assert(e.collectFirst {
-      case b: graft.plans.SetContainsBcast => b
-    }.isEmpty, "duplicate-heavy literal-tier list took the broadcast " +
-      "arm")
-    // the embedded literal carries the DISTINCT keys, not the raw
-    // list — counted in the rendered tree (robust to how the
-    // pre-resolution Column API wraps the literal node): 8 distinct
-    // keys + the probe's own k3, vs 640 raw entries
-    val toks = "k\\d+".r.findAllIn(e.toString).size
-    assert(toks <= 9, s"literal arm rendered $toks key tokens — the " +
-      "raw duplicate-heavy list leaked into the plan")
-    // and it still answers correctly
-    val got = spark.range(1).select(
-      Membership.contains(lit("k5"), dupHeavy).as("a"),
-      Membership.contains(lit("zz"), dupHeavy).as("b")).head
-    assert(got.getBoolean(0) && !got.getBoolean(1))
+    // 640 raw entries, 8 distinct
+    val dupHeavy = Seq.fill(80)((0 until 8).map(i => s"k$i")).flatten
+    val probe = probeOf(Membership.contains(lit("k3"), dupHeavy))
+    assert(probe.map(_.keys.value.length).contains(8),
+      "the broadcast table carries duplicates")
+    val set = dupHeavy.toSet
+    val probes = Seq("k0", "k5", "k7", "k8", "zz")
+    val got = spark.range(1).select(probes.map(p =>
+      Membership.contains(lit(p), dupHeavy)): _*).head
+    probes.zipWithIndex.foreach { case (p, i) =>
+      assert(got.getBoolean(i) == set(p), s"contains($p)")
+    }
   }
 
-  test("contains: broadcast arm equals the literal arm token-for-" +
-      "token on the q186 vocabulary rewrite (forced below threshold)") {
+  test("contains: the q186 vocabulary rewrite equals a Scala Set " +
+      "rewrite token-for-token") {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"),
         filter(split(lower(col("text")), " "), x => x =!= "")
@@ -84,21 +80,24 @@ class MembershipSpec extends AnyFunSuite {
       .groupBy("t").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("t")).limit(25)
       .collect().map(_.getString(0)).toSeq
-    val both = docs.select(col("doc_id"),
+    val set = vocab.toSet
+    val got = docs.select(col("words"),
       transform(col("words"), x =>
-        when(array_contains(typedLit(vocab), x), x)
-          .otherwise(lit("<unk>"))).as("lit_rw"),
-      transform(col("words"), x =>
-        when(Membership.containsBcast(x, vocab), x)
-          .otherwise(lit("<unk>"))).as("bc_rw"))
-    assert(both.filter(to_json(col("lit_rw")) =!=
-      to_json(col("bc_rw"))).count() == 0)
+        when(Membership.contains(x, vocab), x)
+          .otherwise(lit("<unk>"))).as("rw"))
+      .collect()
+    assert(got.nonEmpty)
+    got.foreach { r =>
+      val want = r.getSeq[String](0).map(w => if (set(w)) w else "<unk>")
+      assert(r.getSeq[String](1) == want)
+    }
   }
 
-  test("overlaps: broadcast arm equals the literal arm on the q179 " +
-      "suffix-blocklist relation, including rows with a NULL element") {
+  test("overlaps: the q179 suffix-blocklist relation equals Scala Set " +
+      "membership, including a row with a NULL element") {
     val domains = Fixtures.read(spark, Fixtures.domainBlocklistPath)
       .collect().map(_.getString(0)).toSeq
+    val set = domains.toSet
     val sufs = Fixtures.read(spark, Fixtures.urlCorpusPath)
       .withColumn("host",
         regexp_replace(regexp_replace(
@@ -111,16 +110,23 @@ class MembershipSpec extends AnyFunSuite {
           array_join(slice(col("labels"), i,
             size(col("labels")) - i + 1), ".")))
       .select(col("doc_id"), col("sufs"))
-      // a null element exercises the three-valued-logic agreement
-      // (arrays_overlap's null-on-unmatched-null == exists's
-      // null-propagating lambda)
       .unionByName(spark.range(1).select(
         lit(-1L).as("doc_id"),
         array(lit("no-match"), lit(null).cast("string")).as("sufs")))
-    val both = sufs.select(col("doc_id"),
-      arrays_overlap(col("sufs"), typedLit(domains)).as("lit_b"),
-      Membership.overlapsBcast(col("sufs"), domains).as("bc_b"))
-    assert(both.filter(coalesce(col("lit_b") =!= col("bc_b"),
-      col("lit_b").isNull =!= col("bc_b").isNull)).count() == 0)
+    val got = sufs.select(col("sufs"),
+      Membership.overlaps(col("sufs"), domains).as("b")).collect()
+    assert(got.exists(r => !r.isNullAt(1) && r.getBoolean(1)),
+      "no URL matched the blocklist — the comparison would be vacuous")
+    got.foreach { r =>
+      val xs = r.getSeq[String](0)
+      // exists' three-valued logic: a hit is true; no hit with a NULL
+      // element is NULL; otherwise false
+      val want: Option[Boolean] =
+        if (xs.exists(x => x != null && set(x))) Some(true)
+        else if (xs.contains(null)) None
+        else Some(false)
+      assert((if (r.isNullAt(1)) None else Some(r.getBoolean(1))) == want,
+        s"overlaps($xs)")
+    }
   }
 }

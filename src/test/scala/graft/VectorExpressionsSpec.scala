@@ -255,9 +255,11 @@ class VectorExpressionsSpec extends AnyFunSuite {
         }.sum
       }
     val vecs = (1 to 50).map(_ => Seq.fill(dim)(rnd.nextGaussian()))
+    val planesBc = (spark.sparkContext.broadcast(packed),
+      graft.plans.Fnv1a.ofDoubles(packed), bBits)
     val got = vecs.toDF("v")
-      .select(col("v"), VectorOps.signBandCodes(col("v"),
-        typedLit(packed.toSeq), bBits).as("codes"))
+      .select(col("v"),
+        VectorOps.signBandCodesBcast(col("v"), planesBc).as("codes"))
       .as[(Seq[Double], Seq[Long])].collect().toMap
     vecs.foreach { v =>
       assert(got(v) == ref(v), s"codes diverged for $v")
@@ -274,14 +276,14 @@ class VectorExpressionsSpec extends AnyFunSuite {
       .agg(sum(when(col("proj") > 0, expr("shiftleft(1, bit)"))
         .otherwise(0)).cast("long").as("code"))
     val inRow = e.select(col("vec_id"),
-      posexplode(VectorOps.signBandCodes(col("v"),
-        typedLit(packed.toSeq), bBits)).as(Seq("tbl", "code")))
+      posexplode(VectorOps.signBandCodesBcast(col("v"), planesBc))
+        .as(Seq("tbl", "code")))
     assert(inRow.exceptAll(relational).isEmpty &&
       relational.exceptAll(inRow).isEmpty,
       "in-row codes diverge from the relational spelling")
     val nul = Seq(Option.empty[Seq[Double]]).toDF("v")
-      .select(VectorOps.signBandCodes(col("v"),
-        typedLit(packed.toSeq), bBits)).collect()(0)
+      .select(VectorOps.signBandCodesBcast(col("v"), planesBc))
+      .collect()(0)
     assert(nul.isNullAt(0))
   }
 
@@ -346,5 +348,82 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(interpreted.head == Seq(None, None))
     assert(interpreted(arrays.size + 1) ==
       Seq(Some(0L), Some(0L))) // (Nil, Nil)
+  }
+
+  test("broadcast-table kernels: interpreted and generated paths agree " +
+      "on null rows, NaN and ±0.0 components, a sparse-cid book, and " +
+      "non-ASCII and empty keys") {
+    import org.apache.spark.sql.{GraftShims, Row}
+    import org.apache.spark.sql.types._
+    // a child session: the codegen switches below stay off the shared
+    // session's conf
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    val nan = Double.NaN
+    val vecs: Seq[Seq[Double]] = Seq(null, Seq(1.0, 2.0, 3.0, 4.0),
+      Seq(-0.0, 0.0, -0.0, 0.0), Seq(nan, 1.0, -1.0, 2.0),
+      Seq(-3.0, 0.5, 7.0, -0.0), Seq(1e6, -1e6, 2e6, 0.0))
+    val nrms: Seq[java.lang.Double] = Seq(null, 5.477, 0.0, nan, -0.0, 1.0)
+    val keys = Seq(null, "", "über", "uber", "数据", "😀", "a", "zz")
+    val rows = for {
+      (v, i) <- vecs.zipWithIndex
+      sub <- Seq(0, 1)
+      k <- keys
+    } yield Row(v, nrms(i), sub, k)
+    val schema = StructType(Seq(
+      StructField("v", ArrayType(DoubleType, containsNull = false)),
+      StructField("nrm", DoubleType),
+      StructField("sub", IntegerType, nullable = false),
+      StructField("key", StringType)))
+    // an RDD source, not a local relation: the optimizer would evaluate
+    // a projection over local rows itself, interpreted, in both modes
+    val df = s.createDataFrame(s.sparkContext.parallelize(rows, 3), schema)
+    def bc(xs: Array[Double]) = s.sparkContext.broadcast(xs)
+    // sparse cids (0, 2, 5), `[cid, cn, cv…]` entries
+    val cents = Array(
+      Array(0.0, 2.0, 1.0, 1.0, 1.0, 1.0),
+      Array(2.0, 1.0, -1.0, 0.0, 0.0, 0.0),
+      Array(5.0, 0.0, -0.0, 0.0, nan, 0.0)).flatten
+    // sparse (sub, cid) entries: sub 0 → cids 0, 3; sub 1 → cid 1
+    val book = Array(
+      Array(0.0, 0.0, 1.0, 1.0, 1.0, 1.0),
+      Array(0.0, 3.0, -2.0, 0.0, 4.0, -0.0),
+      Array(1.0, 1.0, nan, 0.5, 0.0, 1.0)).flatten
+    // 2 tables × 3 bits × dim 4
+    val planes = Array.tabulate(24)(i => if (i % 5 == 0) -0.0
+      else math.sin(i.toDouble))
+    def col2(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      GraftShims.column(e)
+    def ex(c: org.apache.spark.sql.Column) = GraftShims.expression(c)
+    val kernels = Seq(
+      col2(graft.plans.CentroidMuAssignBcast(ex(col("v")), ex(col("nrm")),
+        bc(cents), graft.plans.Fnv1a.ofDoubles(cents))).as("mu"),
+      col2(graft.plans.SubL2ArgminBcast(ex(col("v")), ex(col("sub")),
+        bc(book), graft.plans.Fnv1a.ofDoubles(book))).as("l2"),
+      VectorOps.signBandCodesBcast(col("v"),
+        (bc(planes), graft.plans.Fnv1a.ofDoubles(planes), 3)).as("sb"),
+      graft.functions.Membership.contains(col("key"),
+        keys.filter(k => k != null && k != "uber")).as("in"))
+    def eval(mode: String): Seq[Row] = {
+      s.conf.set("spark.sql.codegen.factoryMode", mode)
+      val out = df.select(kernels: _*)
+      assert(out.queryExecution.executedPlan.collectFirst {
+        case p: org.apache.spark.sql.execution.ProjectExec => p }.isDefined)
+      out.collect().toSeq
+    }
+    val interpreted = eval("NO_CODEGEN")
+    val generated = eval("CODEGEN_ONLY")
+    assert(interpreted.size == rows.size)
+    interpreted.zip(generated).zip(rows).foreach { case ((i, g), r) =>
+      assert(i == g, s"paths disagree on $r: interpreted $i, generated $g")
+    }
+    // null in, null out; the probe answers exact membership
+    val nullRow = interpreted.head
+    assert(nullRow.isNullAt(0) && nullRow.isNullAt(1) &&
+      nullRow.isNullAt(2) && nullRow.isNullAt(3))
+    assert(interpreted.take(keys.size).map(r =>
+      if (r.isNullAt(3)) None else Some(r.getBoolean(3))) ==
+      Seq(None, Some(true), Some(true), Some(false), Some(true),
+        Some(true), Some(true), Some(true)))
   }
 }
