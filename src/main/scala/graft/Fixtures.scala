@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.FrozenTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared engine-neutral fixtures (parquet files under `fixtures/`) that
@@ -196,16 +197,14 @@ object Fixtures {
 
   /** The PQ codebook flattened for the in-row [[graft.plans.PqCodes]] /
     * [[graft.plans.PqLut]] kernels: entry (m, cid) dim d at
-    * `(m*K + cid)*subDim + d`. Driver-side collect of a 128-row
-    * broadcast-sized fixture (same class as the chunk-bounds and
-    * k-means-training collects — metadata, not a data path), cached per
-    * session so repeated query builds don't re-read the parquet.
+    * `(m*K + cid)*subDim + d`, one table entry per codeword.
+    * Driver-side collect of a 128-row broadcast-sized fixture (same
+    * class as the chunk-bounds and k-means-training collects —
+    * metadata, not a data path).
     */
-  def pqCodebookFlat(s: SparkSession, k: Int, subDim: Int): Array[Double] =
-    getEvicting(flatCache, (s, k, subDim, stamp(pqCodebookPath)),
-      (a: (SparkSession, Int, Int, (Long, Long, Int)),
-       b: (SparkSession, Int, Int, (Long, Long, Int))) =>
-        (a._1 eq b._1) && a._2 == b._2 && a._3 == b._3) {
+  def pqCodebookFlat(s: SparkSession, k: Int,
+      subDim: Int): FrozenTable[Array[Double]] =
+    frozen(s, s"$pqCodebookPath#$k/$subDim", stamp(pqCodebookPath)) {
       val rows = pqCodebook(s).collect()
       val m = rows.length / k
       val flat = new Array[Double](m * k * subDim)
@@ -219,21 +218,17 @@ object Fixtures {
           d += 1
         }
       }
-      flat
+      FrozenTable.ofDoubles(s, flat, m * k)
     }
 
-  /** File-identity stamp for packed-cache keys — the same
-    * size/mtime/footer-tail contract as [[Tables.fileStamp]], so a
-    * fixture the driver regenerates mid-process re-packs instead of
-    * serving stale planes/centroids/codebooks for the session's
-    * lifetime (the staleness class TablesCacheSpec pins for tables).
+  /** File-identity stamp for table keys — the same size/mtime/
+    * footer-tail contract as [[Tables.fileStamp]], so a fixture the
+    * driver regenerates mid-process re-packs instead of serving stale
+    * planes/centroids/codebooks for the session's lifetime (the
+    * staleness class TablesCacheSpec pins for tables).
     */
   private def stamp(path: String): (Long, Long, Int) =
     Tables.fileStamp(java.nio.file.Paths.get(path))
-
-  private val flatCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, Int, Int, (Long, Long, Int)), Array[Double]]()
 
   /** The IVF centroid table packed for the in-row
     * [[graft.plans.CentroidTopK]] kernel: per cid (ascending, dense),
@@ -241,10 +236,8 @@ object Fixtures {
     * the same sequential accumulation as [[graft.plans.L2Norm]] (so
     * cosines downstream are bit-identical to the relational spelling).
     */
-  def ivfCentroidsPacked(s: SparkSession): Array[Double] =
-    getEvicting(packedCache, (s, stamp(ivfCentroidsPath)),
-      (a: (SparkSession, (Long, Long, Int)),
-       b: (SparkSession, (Long, Long, Int))) => a._1 eq b._1) {
+  def ivfCentroidsPacked(s: SparkSession): FrozenTable[Array[Double]] =
+    frozen(s, ivfCentroidsPath, stamp(ivfCentroidsPath)) {
       val rows = ivfCentroids(s).collect()
       val dim = rows.head.getAs[scala.collection.Seq[Double]]("cv").length
       val flat = new Array[Double](rows.length * (dim + 1))
@@ -259,71 +252,33 @@ object Fixtures {
         d = 0
         while (d < dim) { flat(off + 1 + d) = cv(d); d += 1 }
       }
-      flat
+      FrozenTable.ofDoubles(s, flat, rows.length)
     }
-
-  private val packedCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, (Long, Long, Int)), Array[Double]]()
 
   /** A (tbl, bit, plane) fixture packed for the in-row
     * [[graft.plans.SignBandCodesBcast]] kernel: plane (t, b) dim d at
-    * `((t*bBits)+b)*dim + d`. Driver-side collect of the plane fixture
-    * (same metadata class as the PQ codebook / IVF centroid collects).
-    * Returns (packed, bBits).
+    * `((t*bBits)+b)*dim + d`, one table entry per band table t.
+    * Driver-side collect of the plane fixture (same metadata class as
+    * the PQ codebook / IVF centroid collects).
     */
-  private def planesPacked(s: SparkSession,
-      path: String): (Array[Double], Int) = {
-    val rows = read(s, path).collect()
-    val bBits = rows.iterator.map(_.getAs[Int]("bit")).max + 1
-    val dim = rows.head.getAs[scala.collection.Seq[Double]]("plane")
-      .length
-    val flat = new Array[Double](rows.length * dim)
-    rows.foreach { r =>
-      val t = r.getAs[Int]("tbl")
-      val b = r.getAs[Int]("bit")
-      val plane = r.getAs[scala.collection.Seq[Double]]("plane")
-      val off = (t * bBits + b) * dim
-      var d = 0
-      while (d < dim) { flat(off + d) = plane(d); d += 1 }
+  def planesBroadcast(s: SparkSession,
+      path: String): FrozenTable[Array[Double]] =
+    frozen(s, path, stamp(path)) {
+      val rows = read(s, path).collect()
+      val bBits = rows.iterator.map(_.getAs[Int]("bit")).max + 1
+      val dim = rows.head.getAs[scala.collection.Seq[Double]]("plane")
+        .length
+      val flat = new Array[Double](rows.length * dim)
+      rows.foreach { r =>
+        val t = r.getAs[Int]("tbl")
+        val b = r.getAs[Int]("bit")
+        val plane = r.getAs[scala.collection.Seq[Double]]("plane")
+        val off = (t * bBits + b) * dim
+        var d = 0
+        while (d < dim) { flat(off + d) = plane(d); d += 1 }
+      }
+      FrozenTable.ofDoubles(s, flat, rows.length / bBits)
     }
-    (flat, bBits)
-  }
-
-  /** Packed plane fixture as a BROADCAST handle + content fingerprint
-    * + bBits — what [[graft.plans.SignBandCodesBcast]] takes so tasks
-    * carry a block-manager handle, not the multi-MB payload. One
-    * broadcast per (session, path, file stamp): plan re-construction
-    * (Bench's unprepared column rebuilds each run) reuses the same
-    * handle, and a superseded stamp unpersists the old executor copies
-    * (not destroy — a still-prepared plan holding the old handle can
-    * lazily re-fetch from the driver).
-    */
-  def planesBroadcast(s: SparkSession, path: String)
-      : (org.apache.spark.broadcast.Broadcast[Array[Double]], Long, Int) =
-    getEvicting(planesBcastCache, (s, path, stamp(path)),
-      (a: (SparkSession, String, (Long, Long, Int)),
-       b: (SparkSession, String, (Long, Long, Int))) =>
-        (a._1 eq b._1) && a._2 == b._2,
-      onEvict = (v: (org.apache.spark.broadcast.Broadcast[Array[Double]],
-        Long, Int)) => v._1.unpersist(blocking = false)) {
-      val (flat, bBits) = planesPacked(s, path)
-      (s.sparkContext.broadcast(flat), packedFingerprint(flat, bBits),
-        bBits)
-    }
-
-  /** Content fingerprint of a packed plane table: [[graft.plans.Fnv1a]]
-    * over the raw double bits, then the geometry — stands in for the
-    * payload in plan equality ([[graft.plans.SignBandCodesBcast]]'s
-    * equals).
-    */
-  private def packedFingerprint(flat: Array[Double], bBits: Int): Long =
-    graft.plans.Fnv1a.mix(graft.plans.Fnv1a.ofDoubles(flat), bBits.toLong)
-
-  private val planesBcastCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, (Long, Long, Int)),
-      (org.apache.spark.broadcast.Broadcast[Array[Double]], Long, Int)]()
 
   /** One component of the deterministic ρ-bound hyperplane relation —
     * THE formula (MurmurHash3 of a fixed tuple, scaled to [−1, 1]):
@@ -338,35 +293,27 @@ object Fixtures {
       Int.MaxValue.toDouble
 
   /** The adaptive (bBits × lTables × dim) plane table packed for the
-    * in-row [[graft.plans.SignBandCodesBcast]] kernel, tabulated DRIVER-side
-    * from [[adaptivePlaneComponent]] (no Spark job, no collect) and
-    * shipped as a broadcast handle — the r20-opt twin of
-    * [[planesBroadcast]] for geometries that are a pure function of
-    * (n, tau) rather than a committed fixture file. Callers dispatch on
-    * the packed size BEFORE calling (Similarity.PackedPlaneBound —
-    * 2¹⁸ planes, capping this driver-side array at 128 MB for dim 64):
-    * past the bound the relational `wideBandNeardup` spelling streams
-    * the plane relation instead, so this array stays broadcast-class.
-    * Cached per (session, geometry), and a NEW geometry for the same
-    * session evicts that session's older entries (the stamp-eviction
-    * pattern — r20 ADVICE #1: a long-lived session dispatching over
-    * varying n would otherwise pin every geometry's packed array +
-    * broadcast until Caches.clear); [[dropSession]] sweeps the rest.
-    * The single-entry-per-session policy trades that leak for a miss
-    * cost on geometry ALTERNATION (re-tabulate + re-broadcast, up to
-    * ~128 MB at the bound): no current caller alternates (Bench /
-    * Verify dispatch one corpus per query), so the simple policy
-    * wins; a workload that genuinely interleaves corpora wants a
-    * small bounded LRU here instead.
+    * in-row [[graft.plans.SignBandCodesBcast]] kernel, tabulated
+    * DRIVER-side from [[adaptivePlaneComponent]] (no Spark job, no
+    * collect) — the twin of [[planesBroadcast]] for geometries that
+    * are a pure function of (n, tau) rather than a committed fixture
+    * file. Callers dispatch on the packed size BEFORE calling
+    * (Similarity.PackedPlaneBound — 2¹⁸ planes, capping this
+    * driver-side array at 128 MB for dim 64): past the bound the
+    * relational `wideBandNeardup` spelling streams the plane relation
+    * instead, so this array stays broadcast-class. The geometry is the
+    * table's stamp, so a NEW geometry for the same session evicts the
+    * older one (a long-lived session dispatching over varying n would
+    * otherwise pin every geometry's broadcast until Caches.clear). The
+    * one-entry-per-session policy costs a re-tabulate on geometry
+    * ALTERNATION (up to ~128 MB at the bound): no current caller
+    * alternates (Bench / Verify dispatch one corpus per query); a
+    * workload that genuinely interleaves corpora wants a small bounded
+    * LRU here instead.
     */
   def adaptivePlanesBroadcast(s: SparkSession, bBits: Int, lTables: Int,
-      dim: Int)
-      : (org.apache.spark.broadcast.Broadcast[Array[Double]], Long, Int) =
-    getEvicting(adaptiveBcastCache, (s, (bBits, lTables, dim)),
-      (a: (SparkSession, (Int, Int, Int)),
-       b: (SparkSession, (Int, Int, Int))) => a._1 eq b._1,
-      onEvict = (v: (org.apache.spark.broadcast.Broadcast[Array[Double]],
-        Long, Int)) => v._1.unpersist(blocking = false)) {
+      dim: Int): FrozenTable[Array[Double]] =
+    frozen(s, "adaptive_planes", (bBits, lTables, dim)) {
       val flat = new Array[Double](lTables * bBits * dim)
       var t = 0
       while (t < lTables) {
@@ -382,123 +329,82 @@ object Fixtures {
         }
         t += 1
       }
-      (s.sparkContext.broadcast(flat), packedFingerprint(flat, bBits),
-        bBits)
+      FrozenTable.ofDoubles(s, flat, lTables)
     }
 
-  private val adaptiveBcastCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, (Int, Int, Int)),
-      (org.apache.spark.broadcast.Broadcast[Array[Double]], Long, Int)]()
-
-  /** The BPE merge fixture as rank-order (left, right) arrays — the
-    * shape [[graft.functions.VectorOps.bpeCount]] folds into the
-    * codegen'd expression. Driver-side collect of a few-hundred-row
-    * fixture (metadata class), stamp-keyed and superseded-stamp
-    * evicted like every packed fixture.
+  /** The BPE merge fixture as a built [[graft.functions.Bpe.Table]]
+    * (rank order) — what [[graft.plans.BpeTokenCount]] /
+    * [[graft.plans.BpeEncodeIds]] read. Driver-side collect of a
+    * few-hundred-row fixture (metadata class).
     */
-  def bpeMerges(s: SparkSession): (Array[Int], Array[Int]) =
-    getEvicting(bpeMergesCache, (s, stamp(bpeMergesPath)),
-      (a: (SparkSession, (Long, Long, Int)),
-       b: (SparkSession, (Long, Long, Int))) => a._1 eq b._1) {
+  def bpeMerges(s: SparkSession): FrozenTable[graft.functions.Bpe.Table] =
+    frozen(s, bpeMergesPath, stamp(bpeMergesPath)) {
       val rows = read(s, bpeMergesPath)
         .select("rank", "left", "right").collect()
         .sortBy(_.getAs[Int]("rank"))
-      (rows.map(_.getAs[Int]("left")), rows.map(_.getAs[Int]("right")))
+      graft.functions.Bpe.frozen(s, new graft.functions.Bpe.Table(
+        rows.map(_.getAs[Int]("left")), rows.map(_.getAs[Int]("right"))))
     }
 
-  private val bpeMergesCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, (Long, Long, Int)), (Array[Int], Array[Int])]()
-
-  /** The quality-classifier fixture as (dense µunit weight array
-    * indexed by bucket, µunit bias, µunit keep threshold) — the shape
-    * [[graft.plans.HashedLogit]] folds into the codegen'd expression.
+  /** The quality-classifier fixture packed in its own bucket numbering
+    * (bucket b at index b + 2: µunit keep threshold, µunit bias, then
+    * the dense µunit weights) — what [[graft.plans.HashedLogit]] reads.
     * Driver-side collect of a dim+2-row fixture (~32 KB — metadata
-    * class), stamp-keyed and superseded-stamp evicted like every
-    * packed fixture.
+    * class).
     */
-  def qualityClassifier(s: SparkSession): (Array[Long], Long, Long) =
-    getEvicting(qualityClassifierCache,
-      (s, stamp(qualityClassifierPath)),
-      (a: (SparkSession, (Long, Long, Int)),
-       b: (SparkSession, (Long, Long, Int))) => a._1 eq b._1) {
+  def qualityClassifier(s: SparkSession): FrozenTable[Array[Long]] =
+    frozen(s, qualityClassifierPath, stamp(qualityClassifierPath)) {
       val rows = read(s, qualityClassifierPath)
         .select("bucket", "w_mu").collect()
-      val dim = rows.map(_.getAs[Int]("bucket")).max + 1
-      val w = new Array[Long](dim)
-      var bias = 0L
-      var thr = 0L
-      rows.foreach { r =>
-        r.getAs[Int]("bucket") match {
-          case -2 => thr = r.getAs[Long]("w_mu")
-          case -1 => bias = r.getAs[Long]("w_mu")
-          case b => w(b) = r.getAs[Long]("w_mu")
-        }
-      }
-      (w, bias, thr)
+      val packed =
+        new Array[Long](rows.map(_.getAs[Int]("bucket")).max + 3)
+      rows.foreach(r => packed(r.getAs[Int]("bucket") + 2) =
+        r.getAs[Long]("w_mu"))
+      FrozenTable.ofLongs(s, packed, packed.length)
     }
 
-  private val qualityClassifierCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, (Long, Long, Int)), (Array[Long], Long, Long)]()
-
-  /** computeIfAbsent with superseded-stamp eviction: on a miss, every
-    * entry that shares the key's logical identity (same session +
-    * path/params, different file stamp) is dropped BEFORE computing —
-    * otherwise a driver that regenerates a fixture mid-process pins
-    * the old stamp's packed array until dropSession, a slow leak in
-    * long-lived sessions that retrain fixtures repeatedly. Eviction
-    * happens outside the compute closure because ConcurrentHashMap
-    * forbids mutating the map from inside computeIfAbsent.
+  /** Every table above, keyed by (session, table name, stamp). A miss
+    * first drops the same (session, name)'s entries under other stamps
+    * and unpersists their broadcasts — otherwise a driver that
+    * regenerates a fixture mid-process pins the old stamp's table until
+    * [[dropSession]]. Eviction happens outside the compute closure
+    * because ConcurrentHashMap forbids mutating the map from inside
+    * computeIfAbsent.
     */
-  private def getEvicting[K, V](
-      cache: java.util.concurrent.ConcurrentHashMap[K, V], key: K,
-      sameLogical: (K, K) => Boolean,
-      onEvict: V => Unit = (_: V) => ())(f: => V): V = {
-    val hit = cache.get(key)
-    if (hit != null) hit
+  private val tables = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, Any), FrozenTable[_]]()
+
+  private def frozen[T](s: SparkSession, name: String, stamp: Any)(
+      build: => FrozenTable[T]): FrozenTable[T] = {
+    val key = (s, name, stamp)
+    val hit = tables.get(key)
+    if (hit != null) hit.asInstanceOf[FrozenTable[T]]
     else {
-      val it = cache.entrySet.iterator()
+      val it = tables.entrySet.iterator()
       while (it.hasNext) {
         val e = it.next()
-        if (e.getKey != key && sameLogical(e.getKey, key)) {
-          onEvict(e.getValue)
+        val k = e.getKey
+        if ((k._1 eq s) && k._2 == name && k != key) {
+          e.getValue.unpersist()
           it.remove()
         }
       }
-      cache.computeIfAbsent(key, _ => f)
+      tables.computeIfAbsent(key, _ => build).asInstanceOf[FrozenTable[T]]
     }
   }
 
-  /** Drop this session's packed-fixture entries — called from
-    * [[Caches.clear]] so a long-lived process creating many sessions
-    * doesn't pin dead sessions (and their arrays) in these maps.
+  /** Drop this session's tables — called from [[Caches.clear]] so a
+    * long-lived process creating many sessions doesn't pin dead
+    * sessions (and their broadcasts) in the map.
     */
   private[graft] def dropSession(s: SparkSession): Unit = {
-    val cit = packedCache.keySet.iterator()
-    while (cit.hasNext) if (cit.next()._1 eq s) cit.remove()
-    val bcit = planesBcastCache.entrySet.iterator()
-    while (bcit.hasNext) {
-      val e = bcit.next()
+    val it = tables.entrySet.iterator()
+    while (it.hasNext) {
+      val e = it.next()
       if (e.getKey._1 eq s) {
-        e.getValue._1.unpersist(blocking = false)
-        bcit.remove()
+        e.getValue.unpersist()
+        it.remove()
       }
     }
-    val abit = adaptiveBcastCache.entrySet.iterator()
-    while (abit.hasNext) {
-      val e = abit.next()
-      if (e.getKey._1 eq s) {
-        e.getValue._1.unpersist(blocking = false)
-        abit.remove()
-      }
-    }
-    val bit = bpeMergesCache.keySet.iterator()
-    while (bit.hasNext) if (bit.next()._1 eq s) bit.remove()
-    val qit = qualityClassifierCache.keySet.iterator()
-    while (qit.hasNext) if (qit.next()._1 eq s) qit.remove()
-    val it = flatCache.keySet.iterator()
-    while (it.hasNext) if (it.next()._1 eq s) it.remove()
   }
 }

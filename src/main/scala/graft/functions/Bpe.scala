@@ -52,11 +52,14 @@ object Bpe {
   /** A trained merge table in apply form. `left`/`right` are in rank
     * order (rank r merges (left(r), right(r)) → 256 + r);
     * `sortedKeys`/`rankOf` are the binary-search index for the encode
-    * loop's pair→rank probe. Built once per plan from the rank-order
-    * arrays the fixture stores.
+    * loop's pair→rank probe. Built once on the driver from the
+    * rank-order arrays the fixture stores, and read by the row kernels
+    * as a [[frozen]] table.
     */
   final class Table(val left: Array[Int], val right: Array[Int])
       extends Serializable {
+    require(left.length == right.length,
+      s"rank-order merge arrays must align: ${left.length} vs ${right.length}")
     val sortedKeys: Array[Long] = {
       val ks = new Array[Long](left.length)
       var r = 0
@@ -76,6 +79,15 @@ object Bpe {
       if (i < 0) Int.MaxValue else rankAtSorted(i)
     }
   }
+
+  /** `t` broadcast for [[graft.plans.BpeTokenCount]] /
+    * [[graft.plans.BpeEncodeIds]], one entry per merge.
+    */
+  def frozen(s: org.apache.spark.sql.SparkSession,
+      t: Table): graft.plans.FrozenTable[Table] =
+    graft.plans.FrozenTable(s, t,
+      graft.plans.Fnv1a.ofLongs((t.left ++ t.right).map(_.toLong)),
+      t.left.length)
 
   /** Encode one pre-token's UTF-8 bytes: repeatedly merge the
     * lowest-rank adjacent pair (all its occurrences, left to right)

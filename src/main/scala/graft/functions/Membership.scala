@@ -22,35 +22,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object Membership {
 
-  /** FNV-1a over the sorted keys' bytes — the broadcast expression's
-    * content fingerprint (see [[graft.plans.SetContainsBcast]]).
-    */
-  private def fingerprint(sorted: Array[UTF8String]): Long = {
-    var h = graft.plans.Fnv1a.Offset
-    var i = 0
-    while (i < sorted.length) {
-      val bytes = sorted(i).getBytes
-      // length PREFIX, not an in-band separator byte: a separator
-      // that can itself appear inside a key lets two different key
-      // sets hash the same byte stream (["ab"] vs
-      // ["a","b"]) — and equals/semanticEquals trusts this
-      // fingerprint, so a collision would let Catalyst conflate two
-      // different membership gates
-      var s = 0
-      while (s < 32) { // fixed-width length → uniquely decodable
-        h = graft.plans.Fnv1a.mix(h, (bytes.length >>> s) & 0xff)
-        s += 8
-      }
-      var j = 0
-      while (j < bytes.length) {
-        h = graft.plans.Fnv1a.mix(h, bytes(j))
-        j += 1
-      }
-      i += 1
-    }
-    h
-  }
-
   /** The sorted, duplicate-free key table: dedupes adjacent keys after
     * the sort — one linear pass, so a duplicate-heavy list broadcasts
     * only its distinct keys.
@@ -73,11 +44,12 @@ object Membership {
     */
   private def probe(keys: Seq[String]): Column => Column = {
     val arr = sortedKeys(keys)
-    val bc = SparkSession.active.sparkContext.broadcast(arr)
-    val fp = fingerprint(arr)
+    val table = graft.plans.FrozenTable(SparkSession.active, arr,
+      arr.foldLeft(graft.plans.Fnv1a.Offset)((h, k) =>
+        graft.plans.Fnv1a.mixString(h, k.getBytes)), arr.length)
     import org.apache.spark.sql.GraftShims
     x => GraftShims.column(graft.plans.SetContainsBcast(
-      GraftShims.expression(x), bc, fp))
+      GraftShims.expression(x), table))
   }
 
   /** `c` (string) is a member of `keys`. */

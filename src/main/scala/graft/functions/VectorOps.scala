@@ -1,11 +1,10 @@
 package graft.functions
 
-import graft.plans.{BigramCounts, ByteEntropy, CentroidTopK, DotProduct, L2Norm, MinHashSignature, PqAdcSum, PqCodes, PqLut, RollingHash, ShingleHashSet, ShingleSet, SignBandCodesBcast, SortedIntersectCount, SortedLongIntersectCount, TermCounts}
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import graft.plans.{BigramCounts, ByteEntropy, CentroidTopK, DotProduct, FrozenTable, L2Norm, MinHashSignature, PqAdcSum, PqCodes, PqLut, RollingHash, ShingleHashSet, ShingleSet, SignBandCodesBcast, SortedIntersectCount, SortedLongIntersectCount, TermCounts}
+import org.apache.spark.sql.{Column, GraftShims, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 
 /** Column-level API over the native vector expressions. The graft_*
@@ -14,29 +13,18 @@ import org.apache.spark.sql.functions.call_function
   * call them by name.
   */
 object VectorOps {
-  /** A plan-time constant argument: `take` picks the value out of the
-    * folded literal. A column, or a literal of the wrong type, fails
-    * analysis naming the function and the argument.
+  /** A plan-time integer argument. A column, or a literal of another
+    * type, fails analysis naming the function and the argument.
     */
-  private def foldLit[T](fn: String, arg: String, what: String)(
-      e: Expression)(take: PartialFunction[Any, T]): T = {
+  private def intLit(fn: String, arg: String)(e: Expression): Int = {
     if (!e.foldable) throw new IllegalArgumentException(
       s"$fn: $arg must be a literal, not a column")
-    val v = e.eval(null)
-    take.applyOrElse(v, (other: Any) => throw new IllegalArgumentException(
-      s"$fn: $arg must be $what literal, got $other"))
+    e.eval(null) match {
+      case n: Number => n.intValue()
+      case other => throw new IllegalArgumentException(
+        s"$fn: $arg must be an integer literal, got $other")
+    }
   }
-  private def intLit(fn: String, arg: String)(e: Expression): Int =
-    foldLit(fn, arg, "an integer")(e) { case n: Number => n.intValue() }
-  // constant tables fold to PRIMITIVE arrays once at plan construction:
-  // the expression must never touch a boxed-element ArrayData on the
-  // per-row path (per-element ArrayData reads of a plane table once
-  // measured ~7× on the whole q135 query)
-  private def arrayLit(fn: String, arg: String, what: String)(
-      e: Expression): ArrayData =
-    foldLit(fn, arg, what)(e) { case a: ArrayData => a }
-  private def intArr(fn: String, arg: String)(e: Expression): Array[Int] =
-    arrayLit(fn, arg, "an int array")(e).toIntArray()
 
   /** Every graft_* SQL function, by name. */
   private val functions: Seq[(String, FunctionBuilder)] = Seq(
@@ -62,34 +50,11 @@ object VectorOps {
     "graft_term_counts" -> (e => TermCounts(e.head)),
     "graft_pq_adc_sum" -> (e => PqAdcSum(e(0), e(1),
       intLit("graft_pq_adc_sum", "numCentroids")(e(2)))),
-    "graft_pq_codes" -> (e => PqCodes(e(0), e(1),
-      intLit("graft_pq_codes", "numCentroids")(e(2)),
-      intLit("graft_pq_codes", "subDim")(e(3)))),
-    "graft_pq_lut" -> (e => PqLut(e(0), e(1),
-      intLit("graft_pq_lut", "numCentroids")(e(2)),
-      intLit("graft_pq_lut", "subDim")(e(3)))),
-    "graft_centroid_topk" -> (e => CentroidTopK(e(0), e(1), e(2),
-      intLit("graft_centroid_topk", "k")(e(3)))),
     "graft_bigram_counts" -> (e => BigramCounts(e.head)),
     "graft_winnow" -> (e => graft.plans.Winnow(e(0),
       intLit("graft_winnow", "k")(e(1)),
       intLit("graft_winnow", "w")(e(2)))),
-    "graft_bloom_contains" -> (e => graft.plans.BloomContains(e(0),
-      arrayLit("graft_bloom_contains", "bitset", "an array")(e(1))
-        .toLongArray(),
-      intLit("graft_bloom_contains", "numHashes")(e(2)))),
-    "graft_bpe_count" -> (e => graft.plans.BpeTokenCount(e(0),
-      intArr("graft_bpe_count", "left")(e(1)),
-      intArr("graft_bpe_count", "right")(e(2)))),
     "graft_nfc" -> (e => graft.plans.NfcNormalize(e(0))),
-    "graft_bpe_ids" -> (e => graft.plans.BpeEncodeIds(e(0),
-      intArr("graft_bpe_ids", "left")(e(1)),
-      intArr("graft_bpe_ids", "right")(e(2)))),
-    "graft_hashed_logit" -> (e => graft.plans.HashedLogit(e(0),
-      arrayLit("graft_hashed_logit", "weights", "a long array")(e(1))
-        .toLongArray(),
-      foldLit("graft_hashed_logit", "bias", "a long")(e(2)) {
-        case n: Number => n.longValue() })),
     "graft_wav_wrap" -> (e => graft.plans.WavWrap(e.head)),
     "graft_bmp_wrap" -> (e => graft.plans.BmpWrap(e.head)))
 
@@ -167,33 +132,27 @@ object VectorOps {
     call_function("graft_pq_adc_sum", codes, lut,
       org.apache.spark.sql.functions.lit(numCentroids))
 
-  /** All M PQ sub-codes of a vector vs a flattened constant codebook. */
-  def pqCodes(v: Column, book: Column, numCentroids: Int,
-      subDim: Int): Column =
-    call_function("graft_pq_codes", v, book,
-      org.apache.spark.sql.functions.lit(numCentroids),
-      org.apache.spark.sql.functions.lit(subDim))
+  // The kernels over a FrozenTable are built directly, not through the
+  // function registry: a broadcast handle cannot ride a SQL literal.
+
+  /** All M PQ sub-codes of a vector vs the flattened codebook. */
+  def pqCodes(v: Column, book: FrozenTable[Array[Double]],
+      numCentroids: Int, subDim: Int): Column =
+    GraftShims.column(PqCodes(GraftShims.expression(v), book,
+      numCentroids, subDim))
 
   /** Flattened M×K quantized ADC LUT of a query vector. */
-  def pqLut(v: Column, book: Column, numCentroids: Int,
-      subDim: Int): Column =
-    call_function("graft_pq_lut", v, book,
-      org.apache.spark.sql.functions.lit(numCentroids),
-      org.apache.spark.sql.functions.lit(subDim))
+  def pqLut(v: Column, book: FrozenTable[Array[Double]],
+      numCentroids: Int, subDim: Int): Column =
+    GraftShims.column(PqLut(GraftShims.expression(v), book,
+      numCentroids, subDim))
 
   /** All L sign-band LSH codes of `v` against a packed hyperplane
-    * table riding as a BROADCAST handle (q135's packed τ=0.4 table is
-    * ~3.5 MB; as a plan constant it would serialize into every task).
-    * Takes [[graft.Fixtures.planesBroadcast]]'s (handle, fingerprint,
-    * bBits) triple; bypasses the function registry because a broadcast
-    * cannot ride a SQL literal.
+    * table ([[graft.Fixtures.planesBroadcast]]).
     */
   def signBandCodesBcast(v: Column,
-      planes: (org.apache.spark.broadcast.Broadcast[Array[Double]],
-        Long, Int)): Column =
-    org.apache.spark.sql.GraftShims.column(SignBandCodesBcast(
-      org.apache.spark.sql.GraftShims.expression(v),
-      planes._1, planes._2, planes._3))
+      planes: FrozenTable[Array[Double]]): Column =
+    GraftShims.column(SignBandCodesBcast(GraftShims.expression(v), planes))
 
   /** Exact ≤8-byte NUL-free string ⟷ long codec so a `min_by` payload
     * keeps a primitive (mutable) aggregation buffer and the aggregate
@@ -209,10 +168,11 @@ object VectorOps {
     org.apache.spark.sql.GraftShims.column(graft.plans.UnpackStr8(
       org.apache.spark.sql.GraftShims.expression(h)))
 
-  /** Top-k centroid ids by cosine vs a packed constant centroid table. */
-  def centroidTopK(v: Column, nrm: Column, packed: Column, k: Int): Column =
-    call_function("graft_centroid_topk", v, nrm, packed,
-      org.apache.spark.sql.functions.lit(k))
+  /** Top-k centroid ids by cosine vs the packed centroid table. */
+  def centroidTopK(v: Column, nrm: Column,
+      packed: FrozenTable[Array[Double]], k: Int): Column =
+    GraftShims.column(CentroidTopK(GraftShims.expression(v),
+      GraftShims.expression(nrm), packed, k))
 
   /** cosine(a, b) given precomputed norms — dot/(na*nb), matching the
     * lambda formulation bit-for-bit.
@@ -228,19 +188,19 @@ object VectorOps {
       org.apache.spark.sql.functions.lit(k),
       org.apache.spark.sql.functions.lit(w))
 
-  /** Bloom membership probe of a long key against a constant bitset. */
-  def bloomContains(key: Column, bits: Array[Long], numHashes: Int): Column =
-    call_function("graft_bloom_contains", key,
-      org.apache.spark.sql.functions.typedLit(bits.toSeq),
-      org.apache.spark.sql.functions.lit(numHashes))
+  /** Bloom membership probe of a long key against a frozen bitset. */
+  def bloomContains(key: Column, bits: FrozenTable[Array[Long]],
+      numHashes: Int): Column =
+    GraftShims.column(graft.plans.BloomContains(GraftShims.expression(key),
+      bits, numHashes))
 
   /** Tokenizer-exact token count under a trained BPE merge table
-    * (rank-order left/right pair arrays — see [[graft.plans.BpeTokenCount]]).
+    * (see [[graft.plans.BpeTokenCount]]).
     */
-  def bpeCount(text: Column, left: Array[Int], right: Array[Int]): Column =
-    call_function("graft_bpe_count", text,
-      org.apache.spark.sql.functions.typedLit(left.toSeq),
-      org.apache.spark.sql.functions.typedLit(right.toSeq))
+  def bpeCount(text: Column,
+      merges: FrozenTable[graft.functions.Bpe.Table]): Column =
+    GraftShims.column(graft.plans.BpeTokenCount(
+      GraftShims.expression(text), merges))
 
   /** Unicode NFC normalization (see [[graft.plans.NfcNormalize]]). */
   def nfc(text: Column): Column = call_function("graft_nfc", text)
@@ -248,31 +208,26 @@ object VectorOps {
   /** Tokenizer-exact token-ID sequence under a trained BPE merge table
     * (see [[graft.plans.BpeEncodeIds]]).
     */
-  def bpeIds(text: Column, left: Array[Int], right: Array[Int]): Column =
-    call_function("graft_bpe_ids", text,
-      org.apache.spark.sql.functions.typedLit(left.toSeq),
-      org.apache.spark.sql.functions.typedLit(right.toSeq))
+  def bpeIds(text: Column,
+      merges: FrozenTable[graft.functions.Bpe.Table]): Column =
+    GraftShims.column(graft.plans.BpeEncodeIds(
+      GraftShims.expression(text), merges))
 
   /** struct(bu, iwu, nt) per-document CCNet/DSIR score under a frozen
-    * unigram model handle (see [[graft.plans.UnigramDsirScore]]) —
-    * direct construction: a model-table handle cannot ride a SQL
-    * literal, the [[signBandCodesBcast]] route.
+    * unigram model (see [[graft.plans.UnigramDsirScore]]).
     */
   def unigramDsirScore(text: Column,
-      model: graft.plans.DsirModelTable): Column =
-    org.apache.spark.sql.GraftShims.column(
-      graft.plans.UnigramDsirScore(
-        org.apache.spark.sql.GraftShims.expression(text), model))
+      model: FrozenTable[graft.plans.DsirModelTable]): Column =
+    GraftShims.column(graft.plans.UnigramDsirScore(
+      GraftShims.expression(text), model))
 
   /** Integer µunit logit of the trained hashed-unigram quality
-    * classifier (µunit weight table + bias — see
-    * [[graft.plans.HashedLogit]] / [[graft.Fixtures.qualityClassifier]]).
+    * classifier (packed model — see [[graft.plans.HashedLogit]] /
+    * [[graft.Fixtures.qualityClassifier]]).
     */
-  def hashedLogit(text: Column, weights: Array[Long],
-      biasMu: Long): Column =
-    call_function("graft_hashed_logit", text,
-      org.apache.spark.sql.functions.typedLit(weights.toSeq),
-      org.apache.spark.sql.functions.lit(biasMu))
+  def hashedLogit(text: Column, model: FrozenTable[Array[Long]]): Column =
+    GraftShims.column(graft.plans.HashedLogit(GraftShims.expression(text),
+      model))
 
   /** Raw bytes → canonical PCM WAV container (16-bit mono 8 kHz). */
   def wavWrap(bytes: Column): Column =

@@ -114,11 +114,11 @@ object Bitext {
     */
   private[graft] def probedUcos(s: SparkSession, x: DataFrame,
       y: DataFrame, nprobe: Int = NProbe,
-      packed: Seq[Double] = null): DataFrame = {
+      packed: graft.plans.FrozenTable[Array[Double]] = null): DataFrame = {
     // centroid count is the caller's k ∝ N operating point at scale
     // (the q139 contract); the committed fixture is the default
-    val cents = typedLit(Option(packed)
-      .getOrElse(graft.Fixtures.ivfCentroidsPacked(s).toSeq))
+    val cents = Option(packed)
+      .getOrElse(graft.Fixtures.ivfCentroidsPacked(s))
     def cids(df: DataFrame, k: Int): DataFrame =
       df.select(col("id"), col("qv"), col("qn"),
         explode(graft.functions.VectorOps.centroidTopK(
@@ -149,7 +149,7 @@ object Bitext {
   /** The miner over multiprobe candidates — the large-arm spelling. */
   private[graft] def mineMarginProbed(s: SparkSession, x: DataFrame,
       y: DataFrame, k: Int = MarginK, nprobe: Int = NProbe,
-      packed: Seq[Double] = null): DataFrame =
+      packed: graft.plans.FrozenTable[Array[Double]] = null): DataFrame =
     marginFromPairs(probedUcos(s, x, y, nprobe, packed), k)
 
   /** API-level dispatcher (the [[Similarity.oneShotNeardup]]

@@ -326,7 +326,7 @@ object Chat {
   val q192ChatRender: QueryDef = QueryDef(
     "q192_chat_render",
     (s, dir) => {
-      val (ml, mr) = graft.Fixtures.bpeMerges(s)
+      val merges = graft.Fixtures.bpeMerges(s)
       val rendered = array_join(
         transform(col("m"), x => concat(lit("<|"),
           x.getField("role"), lit("|>"), x.getField("content"))), "")
@@ -334,7 +334,7 @@ object Chat {
         .withColumn("rendered", rendered)
         .select(col("conv_id"), col("source"),
           md5(col("rendered")).as("render_md5"),
-          graft.functions.VectorOps.bpeCount(col("rendered"), ml, mr)
+          graft.functions.VectorOps.bpeCount(col("rendered"), merges)
             .cast("long").as("n_tokens"))
         .orderBy("conv_id")
     },
@@ -372,11 +372,11 @@ object Chat {
   val q204ChatTruncate: QueryDef = QueryDef(
     "q204_chat_truncate",
     (s, dir) => {
-      val (ml, mr) = graft.Fixtures.bpeMerges(s)
+      val merges = graft.Fixtures.bpeMerges(s)
       val turnNt = transform(col("m"), x =>
         graft.functions.VectorOps.bpeCount(
           concat(lit("<|"), x.getField("role"), lit("|>"),
-            x.getField("content")), ml, mr).cast("long"))
+            x.getField("content")), merges).cast("long"))
       dressed(s).filter(col("valid") === 1)
         .withColumn("tnt", turnNt)
         .withColumn("has_sys",
@@ -468,7 +468,7 @@ object Chat {
     "q200_sft_pipeline",
     (s, dir) => {
       val BinTokens = 2048
-      val (ml, mr) = graft.Fixtures.bpeMerges(s)
+      val merges = graft.Fixtures.bpeMerges(s)
       val evalTexts = (0 until NumEvalPrompts)
         .map(graft.tools.GenChatFixture.promptText)
       val rendered = array_join(
@@ -489,7 +489,7 @@ object Chat {
         .filter(col("conv_id") === col("keeper") &&
           !graft.functions.Membership.contains(col("pnorm"), evalTexts))
         .withColumn("nt", graft.functions.VectorOps
-          .bpeCount(rendered, ml, mr).cast("long"))
+          .bpeCount(rendered, merges).cast("long"))
         .withColumn("cum_excl",
           coalesce(sum(col("nt")).over(w), lit(0L)))
         .withColumn("bin", expr(s"cum_excl div $BinTokens"))

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * ([[graft.tools.TrainQualityClassifier]] — NB log-odds over hashed
   * unigrams, distilled from the q117 Gopher conjunction); applying is
   * ONE in-row codegen'd expression per document
-  * ([[graft.plans.HashedLogit]]) with the weight table riding the
-  * references array — zero shuffles before the report agg, the same
-  * map-only cost class as the rule gate it replaces at 100 TB.
+  * ([[graft.plans.HashedLogit]]) over the weight table broadcast as a
+  * [[graft.plans.FrozenTable]] — zero shuffles before the report agg,
+  * the same map-only cost class as the rule gate it replaces at 100 TB.
   */
 object Classifier {
 
@@ -90,13 +90,13 @@ object Classifier {
   val q166QualityClassifier: QueryDef = QueryDef(
     "q166_quality_classifier",
     (s, dir) => {
-      val (w, bias, thr) = graft.Fixtures.qualityClassifier(s)
+      val model = graft.Fixtures.qualityClassifier(s)
       def cnt(c: org.apache.spark.sql.Column, name: String) =
         sum(when(c, 1L).otherwise(0L)).as(name)
       TextAnalysis.gopherDoc(s, dir)
         .withColumn("kept",
-          graft.functions.VectorOps.hashedLogit(featureText, w, bias)
-            > thr)
+          graft.functions.VectorOps.hashedLogit(featureText, model)
+            > graft.plans.HashedLogit.threshold(model.value))
         .groupBy(col("lang"), col("source"))
         .agg(count(lit(1)).as("docs"),
           cnt(col("kept"), "kept"),
@@ -142,13 +142,13 @@ object Classifier {
   val q195ScoreCalibration: QueryDef = QueryDef(
     "q195_score_calibration",
     (s, dir) => {
-      val (w, bias, _) = graft.Fixtures.qualityClassifier(s)
+      val model = graft.Fixtures.qualityClassifier(s)
       val bp = broadcast(
         graft.Fixtures.read(s, graft.Fixtures.scoreCalibratorPath)
           .select("lo_mu", "cal_mu"))
       val scored = TextAnalysis.gopherDoc(s, dir)
         .select(col("doc_id"), col("pass"),
-          graft.functions.VectorOps.hashedLogit(featureText, w, bias)
+          graft.functions.VectorOps.hashedLogit(featureText, model)
             .as("s_mu"))
       scored.join(bp, col("s_mu") >= col("lo_mu"))
         .groupBy(col("doc_id"), col("pass"))

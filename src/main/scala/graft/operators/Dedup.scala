@@ -774,7 +774,8 @@ object Dedup {
       val bits = test.select(col("g")).as[Long]
         .select(bloom.toColumn).head()
       val train = sh.filter(col("doc_id") % 100 < 80).select(col("g"))
-        .filter(graft.functions.VectorOps.bloomContains(col("g"), bits,
+        .filter(graft.functions.VectorOps.bloomContains(col("g"),
+          graft.plans.FrozenTable.ofLongs(s, bits, bits.length),
           BloomHashes))
       val contaminated = test.join(train, Seq("g"), "left_semi")
         .select(col("doc_id")).distinct()

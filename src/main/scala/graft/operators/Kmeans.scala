@@ -77,12 +77,11 @@ object Kmeans {
   private[graft] def withAssignment(n: DataFrame, cents: Seq[Cent]): DataFrame = {
     require(cents.nonEmpty,
       "withAssignment: empty centroid set — nothing to assign against")
-    val packed = packCents(cents)
-    val bc = n.sparkSession.sparkContext.broadcast(packed)
     import org.apache.spark.sql.GraftShims
     val best = GraftShims.column(graft.plans.CentroidMuAssignBcast(
       GraftShims.expression(col("qv")), GraftShims.expression(col("qn")),
-      bc, graft.plans.Fnv1a.ofDoubles(packed)))
+      graft.plans.FrozenTable.ofDoubles(n.sparkSession, packCents(cents),
+        cents.size)))
     n.withColumn("best", best)
       .withColumn("cid", col("best.cid"))
       .withColumn("ucos", col("best.u"))
@@ -285,12 +284,11 @@ object Kmeans {
     // book
     require(book.nonEmpty,
       "withPqAssignment: empty codebook — nothing to assign against")
-    val packed = packBook(book)
-    val bc = sv.sparkSession.sparkContext.broadcast(packed)
     import org.apache.spark.sql.GraftShims
     val best = GraftShims.column(graft.plans.SubL2ArgminBcast(
       GraftShims.expression(col("sv")), GraftShims.expression(col("sub")),
-      bc, graft.plans.Fnv1a.ofDoubles(packed)))
+      graft.plans.FrozenTable.ofDoubles(sv.sparkSession, packBook(book),
+        book.size)))
     sv.withColumn("best", best)
       .withColumn("cid", col("best.cid"))
       .withColumn("dist", col("best.d"))

@@ -158,9 +158,9 @@ object KnnGraph {
     * candidate-volume exponent at ~1 under that contract.
     */
   private[graft] def probedScores(s: SparkSession, e: DataFrame,
-      packed: Seq[Double] = null): DataFrame = {
-    val cents = typedLit(Option(packed)
-      .getOrElse(graft.Fixtures.ivfCentroidsPacked(s).toSeq))
+      packed: graft.plans.FrozenTable[Array[Double]] = null): DataFrame = {
+    val cents = Option(packed)
+      .getOrElse(graft.Fixtures.ivfCentroidsPacked(s))
     val probed = graft.Caches.persist(
       e.select(col("vec_id"),
         explode(graft.functions.VectorOps.centroidTopK(
@@ -311,7 +311,7 @@ object KnnGraph {
     */
   private[graft] def nnDescent(s: SparkSession, e: DataFrame,
       rounds: Int = DescentRounds,
-      packed: Seq[Double] = null): DataFrame = {
+      packed: graft.plans.FrozenTable[Array[Double]] = null): DataFrame = {
     // localCheckpoint per round (the q66/ranksToConvergence loop
     // discipline): plan depth stays constant however many rounds run
     // — 3 unrolled rounds of window+join+window otherwise compound

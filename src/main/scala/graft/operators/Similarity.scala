@@ -404,14 +404,13 @@ object Similarity {
       val e = normed(s, dir)
       // in-row coarse assignment (same kernel as q72): CentroidTopK
       // evaluates the 16 cosines and the (csim DESC, cid ASC) top-k
-      // inside one narrow codegen'd map against the packed constant
+      // inside one narrow codegen'd map against the packed frozen
       // centroid table — no corpus × K join, no vec_id-keyed window
       // sort, no centroid broadcast build job. The earlier relational
       // spelling (cents crossJoin + row_number window) shuffled every
       // (vector, centroid) pair on vec_id — two exchanges and a sort
       // that grow with the corpus for a per-row-computable value.
-      val centsPacked = typedLit(graft.Fixtures
-        .ivfCentroidsPacked(s).toSeq)
+      val centsPacked = graft.Fixtures.ivfCentroidsPacked(s)
       def nearest(df: DataFrame, keep: Int): DataFrame =
         df.select(col("vec_id"),
           explode(graft.functions.VectorOps.centroidTopK(col("v"),
@@ -515,8 +514,7 @@ object Similarity {
       .stringHash(dir)}%08x"
     graft.sources.ArtifactCache.artifact(srcKey, stamp, tmp => {
       val e = normed(s, dir).filter(col("vec_id") >= NumQueryVecs)
-      val centsPacked = typedLit(graft.Fixtures
-        .ivfCentroidsPacked(s).toSeq)
+      val centsPacked = graft.Fixtures.ivfCentroidsPacked(s)
       graft.sources.LakehouseSink.writePartitioned(
         e.select(col("vec_id"), col("v"), col("nrm"),
           explode(graft.functions.VectorOps.centroidTopK(col("v"),
@@ -543,8 +541,7 @@ object Similarity {
     "q174_ann_served",
     (s, dir) => {
       val idx = s.read.parquet(annIndexLayout(s, dir))
-      val centsPacked = typedLit(graft.Fixtures
-        .ivfCentroidsPacked(s).toSeq)
+      val centsPacked = graft.Fixtures.ivfCentroidsPacked(s)
       val probes = normed(s, dir).filter(col("vec_id") < NumQueryVecs)
         .select(col("vec_id").as("qid"), col("v").as("qv"),
           col("nrm").as("qn"),
@@ -677,37 +674,21 @@ object Similarity {
       .orderBy("base_id", "delta_id")
   }
 
-  /** Stateless per-row sign codes from the plane fixture collected
-    * driver-side (32 tiny rows — the chunk-bounds collect class): for
-    * each table, the code is Σ (dot(v, plane) > 0) << bit computed as
-    * in-row Column arithmetic, exploded to (vec_id, tbl, code) with
-    * optional carried columns. The streaming-safe twin of
-    * [[signCodes]]: IDENTICAL dot + threshold arithmetic (same
-    * codegen'd DotProduct over the same plane doubles; integer bit-sum
-    * order is immaterial), but no groupBy — the aggregate formulation
-    * is a stateful streaming agg an append-mode ingest pipeline can't
-    * run, while this one is a pure per-row map.
+  /** Stateless per-row sign codes from the plane fixture: the same
+    * in-row [[graft.plans.SignBandCodesBcast]] kernel over the same
+    * packed plane table as [[signCodes]] (identical dot + `> 0`
+    * threshold arithmetic), exploded to (vec_id, tbl, code) with
+    * optional carried columns — but no repartition and no persist: the
+    * streaming-safe twin, a pure per-row map an append-mode ingest
+    * pipeline can run.
     */
   private def inRowCodes(e: DataFrame, keep: Seq[String] = Nil)
       : DataFrame = {
-    val planes = graft.Fixtures.lshPlanes(e.sparkSession).collect()
-    val codeCols = planes.groupBy(_.getAs[Int]("tbl")).toSeq
-      .sortBy(_._1).map { case (t, rows) =>
-        val bits = rows.sortBy(_.getAs[Int]("bit")).map { r =>
-          val plane = r.getAs[scala.collection.Seq[Double]]("plane")
-            .toArray
-          val bit = r.getAs[Int]("bit")
-          when(graft.functions.VectorOps
-            .dot(col("v"), typedLit(plane)) > 0, lit(1L << bit))
-            .otherwise(lit(0L))
-        }
-        struct(lit(t).as("tbl"),
-          bits.reduce(_ + _).cast("long").as("code"))
-      }
+    val planes = graft.Fixtures.planesBroadcast(e.sparkSession,
+      graft.Fixtures.lshPlanesPath)
     e.select(col("vec_id") +: keep.map(col) :+
-        explode(array(codeCols: _*)).as("tc"): _*)
-      .select(col("vec_id") +: keep.map(col) :+
-        col("tc.tbl").as("tbl") :+ col("tc.code").as("code"): _*)
+        posexplode(graft.functions.VectorOps.signBandCodesBcast(
+          col("v"), planes)).as(Seq("tbl", "code")): _*)
   }
 
   /** The STREAMING plan of q131 against an arbitrary delta vector
@@ -1005,8 +986,7 @@ object Similarity {
     * packed-plane budget.
     */
   private def inRowBandCodes(e: DataFrame,
-      planes: (org.apache.spark.broadcast.Broadcast[Array[Double]],
-        Long, Int)): DataFrame =
+      planes: graft.plans.FrozenTable[Array[Double]]): DataFrame =
     e.select(col("vec_id"),
       posexplode(graft.functions.VectorOps.signBandCodesBcast(
         col("v"), planes)).as(Seq("tbl", "code")))
@@ -1123,15 +1103,15 @@ object Similarity {
       // row_number formulation hash-matches); the ADC scan is then one
       // row per (query, corpus vector) from a bounded broadcast of the
       // 20 query LUTs — no (m, cid) join, no 8× row blowup, no re-agg
-      val bookLit = typedLit(graft.Fixtures
-        .pqCodebookFlat(s, PqNumCentroids, PqSubDim).toSeq)
+      val book = graft.Fixtures
+        .pqCodebookFlat(s, PqNumCentroids, PqSubDim)
       val codeArr = e.filter(col("vec_id") >= NumQueryVecs)
         .select(col("vec_id"),
-          graft.functions.VectorOps.pqCodes(col("v"), bookLit,
+          graft.functions.VectorOps.pqCodes(col("v"), book,
             PqNumCentroids, PqSubDim).as("code"))
       val lutArr = e.filter(col("vec_id") < NumQueryVecs)
         .select(col("vec_id").as("qid"),
-          graft.functions.VectorOps.pqLut(col("v"), bookLit,
+          graft.functions.VectorOps.pqLut(col("v"), book,
             PqNumCentroids, PqSubDim).as("lut"))
       val approx = codeArr.crossJoin(broadcast(lutArr))
         .withColumn("du", graft.functions.VectorOps
@@ -1248,10 +1228,9 @@ object Similarity {
       val e = normed(s, dir)
       // in-row coarse assignment: CentroidTopK evaluates the 16
       // cosines and the (csim DESC, cid ASC) top-k inside one narrow
-      // codegen'd map against the packed constant centroid table —
+      // codegen'd map against the packed frozen centroid table —
       // no corpus × K crossJoin, no vec_id-keyed window sort
-      val centsPacked = typedLit(graft.Fixtures
-        .ivfCentroidsPacked(s).toSeq)
+      val centsPacked = graft.Fixtures.ivfCentroidsPacked(s)
       def nearest(df: DataFrame, keep: Int): DataFrame =
         df.select(col("vec_id"),
           explode(graft.functions.VectorOps.centroidTopK(col("v"),
@@ -1272,19 +1251,19 @@ object Similarity {
       val cand = broadcast(probes).join(lists, "cid")
         .select(col("qid"), col("vec_id"))
       // in-row encode + LUT (the FAISS shape): the codebook is an ~8 KB
-      // constant, so PqCodes/PqLut compute each vector's 8 codes / each
+      // frozen table, so PqCodes/PqLut compute each vector's 8 codes / each
       // query's 8×16 quantized LUT inside one narrow codegen'd map —
       // no corpus × (M·K) crossJoin, no min_by re-aggregation, no
       // (qid, m, cid) LUT join. Distances use the same dot-form and
       // accumulation order as the relational spelling, so ties and
       // quantized values are bit-identical (the oracle asserts it).
-      val bookLit = typedLit(graft.Fixtures
-        .pqCodebookFlat(s, PqNumCentroids, PqSubDim).toSeq)
+      val book = graft.Fixtures
+        .pqCodebookFlat(s, PqNumCentroids, PqSubDim)
       val codeArr = corpus.select(col("vec_id"),
-        graft.functions.VectorOps.pqCodes(col("v"), bookLit,
+        graft.functions.VectorOps.pqCodes(col("v"), book,
           PqNumCentroids, PqSubDim).as("code"))
       val lutArr = queries.select(col("vec_id").as("qid"),
-        graft.functions.VectorOps.pqLut(col("v"), bookLit,
+        graft.functions.VectorOps.pqLut(col("v"), book,
           PqNumCentroids, PqSubDim).as("lut"))
       // ADC over candidates only, ONE ROW PER CANDIDATE: the per-query
       // LUT rides a broadcast array join and the codegen'd PqAdcSum
@@ -1552,10 +1531,10 @@ object Similarity {
     * to MEASURE the candidate-volume exponent instead of arguing it.
     */
   private[graft] def semanticDedupLedger(e: DataFrame,
-      centsPacked: Seq[Double], tau: Double): DataFrame = {
+      packed: graft.plans.FrozenTable[Array[Double]],
+      tau: Double): DataFrame = {
     // 3 consumers (two candidate sides + the accounting base):
     // persist, or each re-runs the scan + K-cosine assignment
-    val packed = typedLit(centsPacked)
     val asn = e.select(col("vec_id"),
       explode(graft.functions.VectorOps.centroidTopK(col("v"),
         col("nrm"), packed, 1)).as("cid"))
@@ -1583,7 +1562,7 @@ object Similarity {
   val q139SemanticDedup: QueryDef = QueryDef(
     "q139_semantic_dedup",
     (s, dir) => semanticDedupLedger(normed(s, dir),
-      graft.Fixtures.ivfCentroidsPacked(s).toSeq, NearDupThreshold),
+      graft.Fixtures.ivfCentroidsPacked(s), NearDupThreshold),
     Some(s"""WITH e AS (
             |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
             |  FROM embeddings),

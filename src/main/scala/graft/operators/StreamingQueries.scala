@@ -479,7 +479,8 @@ object StreamingQueries {
     */
   private[graft] def decontamStatics(s: org.apache.spark.sql
       .SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, Array[Long]) = {
+      : (org.apache.spark.sql.DataFrame,
+        graft.plans.FrozenTable[Array[Long]]) = {
     import s.implicits._
     val testG = graft.Caches.persist(
       Tables.load(s, dir, "documents")
@@ -489,7 +490,8 @@ object StreamingQueries {
     val bloom = new graft.functions.BloomSketchAggregator(
       graft.functions.BloomDefaults.NumBits,
       graft.functions.BloomDefaults.NumHashes)
-    (testG, testG.as[Long].select(bloom.toColumn).head())
+    val bits = testG.as[Long].select(bloom.toColumn).head()
+    (testG, graft.plans.FrozenTable.ofLongs(s, bits, bits.length))
   }
 
   /** q141's per-batch pipeline over an arbitrary (doc_id, lang, text)
@@ -497,7 +499,8 @@ object StreamingQueries {
     * is what makes the batch oracle apply).
     */
   private[graft] def streamDecontam(
-      testG: org.apache.spark.sql.DataFrame, bits: Array[Long],
+      testG: org.apache.spark.sql.DataFrame,
+      bits: graft.plans.FrozenTable[Array[Long]],
       docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     docs
@@ -596,12 +599,12 @@ object StreamingQueries {
   val q172StreamQualityGate: QueryDef = QueryDef(
     "q172_stream_quality_gate",
     (s, dir) => {
-      val (w, bias, thr) = graft.Fixtures.qualityClassifier(s)
+      val model = graft.Fixtures.qualityClassifier(s)
       val scored = TextAnalysis
         .gopherCols(s, EventsStream.readDocuments(s, dir))
         .withColumn("kept",
-          graft.functions.VectorOps.hashedLogit(
-            Classifier.featureText, w, bias) > thr)
+          graft.functions.VectorOps.hashedLogit(Classifier.featureText,
+            model) > graft.plans.HashedLogit.threshold(model.value))
       def cnt(c: org.apache.spark.sql.Column, name: String) =
         sum(when(c, 1L).otherwise(0L)).as(name)
       val agg = scored.groupBy(col("lang"))
@@ -653,8 +656,8 @@ object StreamingQueries {
   // select statelessly). The per-doc metrics that batch spells as
   // explode → join(model) → groupBy(doc_id) — unbounded per-doc state
   // inside micro-batches — run instead through the codegen'd in-row
-  // [[graft.plans.UnigramDsirScore]] (model table on the references
-  // array, the HashedLogit/BpeTokenCount discipline), so each
+  // [[graft.plans.UnigramDsirScore]] (the model a broadcast
+  // FrozenTable, like every table kernel's), so each
   // micro-batch plan is map-only scoring + integer compares against
   // driver-collected cutpoint literals (langs-sized + one scalar —
   // the "broadcast cutpoints from the static model" contract), and
@@ -673,7 +676,7 @@ object StreamingQueries {
     * share one float-rounding surface).
     */
   private[graft] def frozenSelectArtifacts(s: SparkSession,
-      dir: String): (graft.plans.DsirModelTable,
+      dir: String): (graft.plans.FrozenTable[graft.plans.DsirModelTable],
         org.apache.spark.sql.Column, Double) = {
     val model = TextAnalysis.dsirModelTable(s, dir)
     val staticScored = graft.Caches.persist(TextAnalysis.dsirScored(
@@ -698,7 +701,7 @@ object StreamingQueries {
     * restart spec.
     */
   private[graft] def selectGateAgg(docs: DataFrame,
-      model: graft.plans.DsirModelTable,
+      model: graft.plans.FrozenTable[graft.plans.DsirModelTable],
       c2Expr: org.apache.spark.sql.Column, c80: Double): DataFrame =
     TextAnalysis.dsirScored(docs, model)
       .withColumn("gated", col("bu") <= c2Expr)
@@ -833,14 +836,14 @@ object StreamingQueries {
   val q203StreamSftIntake: QueryDef = QueryDef(
     "q203_stream_sft_intake",
     (s, dir) => {
-      val (ml, mr) = graft.Fixtures.bpeMerges(s)
+      val merges = graft.Fixtures.bpeMerges(s)
       val rendered = array_join(
         transform(col("m"), x => concat(lit("<|"),
           x.getField("role"), lit("|>"), x.getField("content"))), "")
       val ledger = Chat.dress(EventsStream.readChatConvos(s))
         .filter(col("valid") === 1)
         .withColumn("nt",
-          graft.functions.VectorOps.bpeCount(rendered, ml, mr)
+          graft.functions.VectorOps.bpeCount(rendered, merges)
             .cast("long"))
         .groupBy(Chat.promptKey.as("prompt_key"))
         .agg(min(col("conv_id")).as("keeper"),

@@ -637,14 +637,14 @@ object TextAnalysis {
     * groupBy(doc_id) spelling without unbounded per-doc state.
     */
   private[graft] def dsirModelTable(s: SparkSession,
-      dir: String): graft.plans.DsirModelTable = {
+      dir: String): graft.plans.FrozenTable[graft.plans.DsirModelTable] = {
     val toks = unigramToks(s, dir)
     val rows = dsirModel(toks, "src0").collect()
     val (nr, v, ntt) = (rows.head.getAs[Long]("nr"),
       rows.head.getAs[Long]("v"), rows.head.getAs[Long]("ntt"))
-    graft.plans.DsirModelTable.build(
+    graft.plans.DsirModelTable.frozen(s, graft.plans.DsirModelTable.build(
       rows.map(r => (r.getAs[String]("t"), r.getAs[Long]("cr"),
-        r.getAs[Long]("ct"))).toSeq, nr, v, ntt)
+        r.getAs[Long]("ct"))).toSeq, nr, v, ntt))
   }
 
   /** (lang, bu, iwu, nt) per document via the IN-ROW scorer — the
@@ -652,7 +652,8 @@ object TextAnalysis {
     * zero in-vocabulary tokens drop, mirroring the inner model join.
     */
   private[graft] def dsirScored(df: DataFrame,
-      model: graft.plans.DsirModelTable): DataFrame =
+      model: graft.plans.FrozenTable[graft.plans.DsirModelTable])
+      : DataFrame =
     df.withColumn("sc__",
         graft.functions.VectorOps.unigramDsirScore(col("text"), model))
       .select(col("lang"), col("sc__.bu").as("bu"),
@@ -1405,10 +1406,10 @@ object TextAnalysis {
       seed: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val NShards = 8
-    val (ml, mr) = graft.Fixtures.bpeMerges(s)
+    val merges = graft.Fixtures.bpeMerges(s)
     val base = graft.Fixtures.read(s, graft.Fixtures.bpeCorpusPath)
       .select(col("doc_id"),
-        graft.functions.VectorOps.bpeIds(col("text"), ml, mr).as("ids"),
+        graft.functions.VectorOps.bpeIds(col("text"), merges).as("ids"),
         md5(col("text").cast(BinaryType)).as("fp"))
       .withColumn("ord",
         md5(concat(lit(seed + "|"), col("fp")).cast(BinaryType)))
@@ -1495,12 +1496,12 @@ object TextAnalysis {
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val SeqLen = 2048
-      val (ml, mr) = graft.Fixtures.bpeMerges(s)
+      val merges = graft.Fixtures.bpeMerges(s)
       val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
       val d = graft.Fixtures.read(s, graft.Fixtures.bpeCorpusPath)
         .select(col("lang"), col("doc_id"),
-          graft.functions.VectorOps.bpeIds(col("text"), ml, mr)
+          graft.functions.VectorOps.bpeIds(col("text"), merges)
             .as("ids"))
         .withColumn("nt", size(col("ids")).cast(LongType))
         .withColumn("cum_excl",
@@ -3097,12 +3098,12 @@ object TextAnalysis {
     "q197_padding_waste",
     (s, dir) => {
       val B = 16
-      val (ml, mr) = graft.Fixtures.bpeMerges(s)
+      val merges = graft.Fixtures.bpeMerges(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("lang")).orderBy(col("doc_id"))
       graft.Fixtures.read(s, graft.Fixtures.bpeCorpusPath)
         .select(col("lang"), col("doc_id"),
-          graft.functions.VectorOps.bpeCount(col("text"), ml, mr)
+          graft.functions.VectorOps.bpeCount(col("text"), merges)
             .cast(LongType).as("nt"))
         .withColumn("batch",
           expr(s"(row_number() OVER (PARTITION BY lang ORDER BY doc_id)"
@@ -3144,14 +3145,14 @@ object TextAnalysis {
     "q148_bpe_pack",
     (s, dir) => {
       val BinTokens = 2048
-      val (ml, mr) = graft.Fixtures.bpeMerges(s)
+      val merges = graft.Fixtures.bpeMerges(s)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("lang")).orderBy(col("doc_id"))
         .rowsBetween(org.apache.spark.sql.expressions.Window
           .unboundedPreceding, -1)
       graft.Fixtures.read(s, graft.Fixtures.bpeCorpusPath)
         .select(col("lang"), col("doc_id"),
-          graft.functions.VectorOps.bpeCount(col("text"), ml, mr)
+          graft.functions.VectorOps.bpeCount(col("text"), merges)
             .cast(LongType).as("nt"))
         .withColumn("cum_excl",
           coalesce(sum(col("nt")).over(w), lit(0L)))
@@ -3194,10 +3195,10 @@ object TextAnalysis {
   val q164TokenizerFertility: QueryDef = QueryDef(
     "q164_tokenizer_fertility",
     (s, dir) => {
-      val (ml, mr) = graft.Fixtures.bpeMerges(s)
+      val merges = graft.Fixtures.bpeMerges(s)
       graft.Fixtures.read(s, graft.Fixtures.bpeCorpusPath)
         .select(col("lang"),
-          graft.functions.VectorOps.bpeCount(col("text"), ml, mr)
+          graft.functions.VectorOps.bpeCount(col("text"), merges)
             .cast(LongType).as("nt"),
           length(col("text")).cast(LongType).as("nb"),
           size(filter(split(col("text"), " "), t => t =!= ""))
@@ -3256,10 +3257,10 @@ object TextAnalysis {
   val q153PipelineBpe: QueryDef = QueryDef(
     "q153_pipeline_bpe",
     (s, dir) => {
-      val (ml, mr) = graft.Fixtures.bpeMerges(s)
+      val merges = graft.Fixtures.bpeMerges(s)
       val tr = graft.Fixtures.read(s, graft.Fixtures.bpeCorpusPath)
         .select(col("doc_id"), col("lang"), col("text"),
-          graft.functions.VectorOps.bpeCount(col("text"), ml, mr)
+          graft.functions.VectorOps.bpeCount(col("text"), merges)
             .cast(LongType).as("nt"))
       val gated = tr.filter(col("nt") >= 40 && col("nt") <= 240)
       // q21's min_by keep-first, hash-aggregable — the shared

@@ -4,57 +4,42 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
-/** Membership probe of a 64-bit key against a CONSTANT Bloom bitset
+/** Membership probe of a 64-bit key against a FROZEN Bloom bitset
   * (Bloom, CACM 1970) — the map-side pruning half of the Bloom-join /
   * runtime-filter pattern (Mullin, IEEE TSE 1990; Spark's own
   * InSubqueryExec runtime bloom pruning is the same idea).
   *
-  * The bitset rides as a PRIMITIVE long[] in the references array:
-  * one static call per row inside whole-stage codegen, no boxing, no
-  * per-row ArrayData walk. Double hashing g_i = h1 + i·h2 (Kirsch–Mitzenmacher, ESA'06:
+  * The bitset is a [[FrozenTable]] of longs (one entry per 64-bit
+  * word): one static call per row inside whole-stage codegen on the
+  * fetched primitive long[], no boxing, no per-row ArrayData walk.
+  * Double hashing g_i = h1 + i·h2 (Kirsch–Mitzenmacher, ESA'06:
   * two mixes simulate k independent hashes with no asymptotic fpp
   * loss); both mixes are splitmix64 finalizers (Steele et al.,
   * OOPSLA'14 — public domain), so build and probe agree by
   * construction because [[BloomContains.set]] and
   * [[BloomContains.probe]] share the same code.
   *
-  * `bits.length` must be a power of two: index = hash & (64·len − 1)
+  * The word count must be a power of two: index = hash & (64·len − 1)
   * — a mask, not a mod, on the per-row path.
   */
-case class BloomContains(child: Expression, bits: Array[Long],
-    numHashes: Int) extends UnaryExpression {
-  require(bits.nonEmpty && (bits.length & (bits.length - 1)) == 0,
-    s"Bloom bitset word count must be a power of two, got ${bits.length}")
+case class BloomContains(child: Expression, table: FrozenTable[Array[Long]],
+    numHashes: Int)
+    extends UnaryExpression with FrozenTableKernel[Array[Long]] {
+  require(table.entries > 0 && (table.entries & (table.entries - 1)) == 0,
+    s"Bloom bitset word count must be a power of two, got ${table.entries}")
 
   override def dataType: DataType = BooleanType
 
   override protected def nullSafeEval(key: Any): Any =
-    BloomContains.probe(bits, numHashes, key.asInstanceOf[Long])
+    BloomContains.probe(table.value, numHashes, key.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    val bitsRef = ctx.addReferenceObj("bloomBits", bits, "long[]")
+    val bits = tableValue(ctx)
     nullSafeCodeGen(ctx, ev, key =>
-      s"${ev.value} = graft.plans.BloomContains.probe($bitsRef, " +
+      s"${ev.value} = graft.plans.BloomContains.probe($bits, " +
         s"$numHashes, $key);")
   }
-
-  // case-class equals on Array[Long] is reference identity, which
-  // would make canonicalized-plan equality / semanticEquals /
-  // subexpression elimination / the canonical-plan persist cache miss
-  // two structurally identical probes built from separately collected
-  // bitsets (e.g. q138 and q147 building the same bloom) — compare
-  // bitset CONTENT instead
-  override def equals(other: Any): Boolean = other match {
-    case b: BloomContains =>
-      numHashes == b.numHashes && child == b.child &&
-        java.util.Arrays.equals(bits, b.bits)
-    case _ => false
-  }
-
-  override def hashCode(): Int =
-    31 * (31 * child.hashCode() + numHashes) +
-      java.util.Arrays.hashCode(bits)
 
   override protected def withNewChildInternal(
       newChild: Expression): BloomContains = copy(child = newChild)

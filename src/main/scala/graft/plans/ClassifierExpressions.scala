@@ -23,47 +23,41 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark's `split(text, ' ')` and DuckDB's `string_split`, empty
   * tokens preserved.
   *
-  * The weight table rides as a PRIMITIVE long[] in the references
-  * array (the [[BloomContains]] constant-table discipline — ~32 KB at
-  * dim 4096, one static call per row inside whole-stage codegen).
-  * Content-based equality keeps canonicalized-plan equality working
-  * across separately loaded fixture copies.
+  * The model is one [[FrozenTable]] of µunit longs in the fixture's own
+  * bucket numbering: bucket b at index b + 2, so the threshold (bucket
+  * −2) sits at 0, the bias (bucket −1) at 1 and the hashed weights
+  * after them (~32 KB at dim 4096, one static call per row inside
+  * whole-stage codegen on the fetched primitive long[]).
   */
-case class HashedLogit(child: Expression, weights: Array[Long],
-    biasMu: Long) extends UnaryExpression {
-  require(weights.nonEmpty, "weight table must be non-empty")
+case class HashedLogit(child: Expression, table: FrozenTable[Array[Long]])
+    extends UnaryExpression with FrozenTableKernel[Array[Long]] {
+  require(table.entries > 2, "weight table must be non-empty")
 
   override def dataType: DataType = LongType
 
   override protected def nullSafeEval(text: Any): Any =
-    HashedLogit.score(text.asInstanceOf[UTF8String].toString, weights,
-      biasMu)
+    HashedLogit.score(text.asInstanceOf[UTF8String].toString, table.value)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("hashedLogitWeights", weights, "long[]")
+    val model = tableValue(ctx)
     nullSafeCodeGen(ctx, ev, text =>
       s"${ev.value} = graft.plans.HashedLogit.score(" +
-        s"$text.toString(), $wRef, ${biasMu}L);")
+        s"$text.toString(), $model);")
   }
-
-  override def equals(other: Any): Boolean = other match {
-    case h: HashedLogit =>
-      biasMu == h.biasMu && child == h.child &&
-        java.util.Arrays.equals(weights, h.weights)
-    case _ => false
-  }
-
-  override def hashCode(): Int =
-    31 * (31 * child.hashCode() +
-      java.lang.Long.hashCode(biasMu)) +
-      java.util.Arrays.hashCode(weights)
 
   override protected def withNewChildInternal(
       newChild: Expression): HashedLogit = copy(child = newChild)
 }
 
 object HashedLogit {
+
+  /** The packed model: `[thr, bias, w(0), …, w(dim-1)]`. */
+  def pack(weights: Array[Long], biasMu: Long, thrMu: Long): Array[Long] =
+    Array(thrMu, biasMu) ++ weights
+
+  /** The µunit keep threshold of a packed model (`logit > thr` keeps). */
+  def threshold(model: Array[Long]): Long = model(0)
 
   private val md5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -85,13 +79,16 @@ object HashedLogit {
     (v % dim).toInt
   }
 
-  /** bias + Σ_tokens weights[bucket(token)] — integer µunit logit. */
-  def score(text: String, weights: Array[Long], biasMu: Long): Long = {
+  /** bias + Σ_tokens w[bucket(token)] over a packed model — integer
+    * µunit logit.
+    */
+  def score(text: String, model: Array[Long]): Long = {
     val parts = text.split(" ", -1)
-    var sum = biasMu
+    val dim = model.length - 2
+    var sum = model(1)
     var i = 0
     while (i < parts.length) {
-      sum += weights(bucket(parts(i), weights.length))
+      sum += model(2 + bucket(parts(i), dim))
       i += 1
     }
     sum

@@ -9,12 +9,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Unigram-model lookup table for the in-row CCNet/DSIR scorer: token
   * → (raw count cr, smoothed-target count ct) plus the normalizing
-  * constants. Content `fingerprint` stands in for the payload in plan
-  * equality (the SignBandCodesBcast discipline — a handle's reference
-  * identity can't canonicalize). At fixture scale this is the whole
-  * corpus vocabulary; at 100 TB it is the trained top-K vocab + OOV
-  * floor every production perplexity filter ships (CCNet's KenLM is
-  * exactly such a frozen artifact).
+  * constants. The scorer reads it as a [[FrozenTable]] ([[frozen]]),
+  * whose content `fingerprint` stands in for the payload in plan
+  * equality. At fixture scale this is the whole corpus vocabulary; at
+  * 100 TB it is the trained top-K vocab + OOV floor every production
+  * perplexity filter ships (CCNet's KenLM is exactly such a frozen
+  * artifact).
   */
 final class DsirModelTable(
     val counts: java.util.HashMap[String, Array[Long]],
@@ -24,27 +24,31 @@ final class DsirModelTable(
 object DsirModelTable {
   /** Build from (token, cr, ct) triples + constants, fingerprinting
     * the full content so two separately collected copies of the same
-    * model compare equal in plan canonicalization.
+    * model compare equal in plan canonicalization. The fold is
+    * uniquely decodable — the row count, then per row a length-prefixed
+    * token ([[Fnv1a.mixString]]) and two whole words — so no two
+    * different models share a byte stream.
     */
   def build(rows: Iterable[(String, Long, Long)],
       nr: Long, v: Long, ntt: Long): DsirModelTable = {
     val m = new java.util.HashMap[String, Array[Long]](rows.size * 2)
-    var fp = 0xcbf29ce484222325L // FNV-1a over a canonical rendering
-    def mix(s: String): Unit = {
-      var i = 0
-      while (i < s.length) {
-        fp ^= s.charAt(i); fp *= 0x100000001b3L; i += 1
-      }
-    }
+    var fp = Fnv1a.mix(Fnv1a.Offset, rows.size.toLong)
     // fold tokens in sorted order so insertion order never changes
     // the fingerprint
     rows.toSeq.sortBy(_._1).foreach { case (t, cr, ct) =>
       m.put(t, Array(cr, ct))
-      mix(t); mix(s":$cr:$ct;")
+      fp = Fnv1a.mixString(fp,
+        t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      fp = Fnv1a.mix(Fnv1a.mix(fp, cr), ct)
     }
-    mix(s"#$nr/$v/$ntt")
+    fp = Fnv1a.mix(Fnv1a.mix(Fnv1a.mix(fp, nr), v), ntt)
     new DsirModelTable(m, nr, v, ntt, fp)
   }
+
+  /** `t` broadcast for [[UnigramDsirScore]], one entry per token. */
+  def frozen(s: org.apache.spark.sql.SparkSession,
+      t: DsirModelTable): FrozenTable[DsirModelTable] =
+    FrozenTable(s, t, t.fingerprint, t.counts.size)
 }
 
 object UnigramDsirScore {
@@ -106,12 +110,12 @@ object UnigramDsirScore {
 /** struct(bu, iwu, nt) of a text under a frozen unigram DSIR model —
   * the STATELESS per-row scorer that lets the CCNet gate + DSIR
   * selection run inside streaming micro-batches (q176): no explode,
-  * no per-doc_id aggregation state, the model rides the references
-  * array as a prebuilt [[DsirModelTable]]. Content-based equality via
-  * the table fingerprint.
+  * no per-doc_id aggregation state; the prebuilt [[DsirModelTable]]
+  * is a [[FrozenTable]].
   */
-case class UnigramDsirScore(child: Expression, model: DsirModelTable)
-    extends UnaryExpression {
+case class UnigramDsirScore(child: Expression,
+    table: FrozenTable[DsirModelTable])
+    extends UnaryExpression with FrozenTableKernel[DsirModelTable] {
 
   override def dataType: DataType = StructType(Seq(
     StructField("bu", LongType, nullable = false),
@@ -119,26 +123,15 @@ case class UnigramDsirScore(child: Expression, model: DsirModelTable)
     StructField("nt", LongType, nullable = false)))
 
   override protected def nullSafeEval(text: Any): Any =
-    UnigramDsirScore.compute(text.asInstanceOf[UTF8String], model)
+    UnigramDsirScore.compute(text.asInstanceOf[UTF8String], table.value)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("dsirModel", model,
-      classOf[DsirModelTable].getName)
+    val model = tableValue(ctx)
     nullSafeCodeGen(ctx, ev, text =>
       s"${ev.value} = graft.plans.UnigramDsirScore.compute(" +
-        s"$text, $tableRef);")
+        s"$text, $model);")
   }
-
-  override def equals(other: Any): Boolean = other match {
-    case o: UnigramDsirScore =>
-      child == o.child && model.fingerprint == o.model.fingerprint
-    case _ => false
-  }
-
-  override def hashCode(): Int =
-    java.util.Objects.hash(child,
-      java.lang.Long.valueOf(model.fingerprint))
 
   override protected def withNewChildInternal(
       newChild: Expression): UnigramDsirScore = copy(child = newChild)

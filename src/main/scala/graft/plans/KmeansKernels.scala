@@ -27,9 +27,9 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   * `·10⁶ + 0.5`, one floor (µcos); `aa − 2.0·ab + bb` then one long
   * cast (L2). `KmeansSpec` pins both against plain-Scala definitions.
   *
-  * Equality/canonicalization uses the driver-computed content
-  * `fingerprint` ([[Fnv1a]]): two plans built from separate broadcasts
-  * of the same codebook must still match the persist cache.
+  * The codebook is a [[FrozenTable]] (one entry per centroid), whose
+  * content equality keeps two plans built from separate broadcasts of
+  * the same codebook matching the persist cache.
   */
 
 /** µcos-argmax coarse assignment: `struct<u: bigint, cid: bigint>` of
@@ -39,32 +39,21 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   * sorted by cid ascending; dim is taken from the input vector.
   */
 case class CentroidMuAssignBcast(left: Expression, right: Expression,
-    book: org.apache.spark.broadcast.Broadcast[Array[Double]],
-    fingerprint: Long) extends BinaryExpression {
+    table: FrozenTable[Array[Double]])
+    extends BinaryExpression with FrozenTableKernel[Array[Double]] {
   override def dataType: DataType = CentroidMuAssignBcast.OutType
 
   override def nullSafeEval(v: Any, nrm: Any): Any =
     CentroidMuAssignBcast.compute(v.asInstanceOf[ArrayData],
-      nrm.asInstanceOf[Double], book.value)
+      nrm.asInstanceOf[Double], table.value)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("muAssignBookBc", book,
-      "org.apache.spark.broadcast.Broadcast<double[]>")
-    val arr = ctx.addMutableState("double[]", "muAssignBookArr",
-      v => s"$v = (double[]) $bcRef.value();")
+    val book = tableValue(ctx)
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.CentroidMuAssignBcast.compute($a, $b, $arr);")
+      s"${ev.value} = graft.plans.CentroidMuAssignBcast.compute($a, $b, " +
+        s"$book);")
   }
-
-  override def equals(other: Any): Boolean = other match {
-    case o: CentroidMuAssignBcast =>
-      left == o.left && right == o.right && fingerprint == o.fingerprint
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(left, right,
-      java.lang.Long.valueOf(fingerprint))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CentroidMuAssignBcast =
@@ -118,32 +107,20 @@ object CentroidMuAssignBcast {
   * A production PQ book at K=256 × 4×16 dims is ~150 KB.
   */
 case class SubL2ArgminBcast(left: Expression, right: Expression,
-    book: org.apache.spark.broadcast.Broadcast[Array[Double]],
-    fingerprint: Long) extends BinaryExpression {
+    table: FrozenTable[Array[Double]])
+    extends BinaryExpression with FrozenTableKernel[Array[Double]] {
   override def dataType: DataType = SubL2ArgminBcast.OutType
 
   override def nullSafeEval(sv: Any, sub: Any): Any =
     SubL2ArgminBcast.compute(sv.asInstanceOf[ArrayData],
-      sub.asInstanceOf[Int], book.value)
+      sub.asInstanceOf[Int], table.value)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("subArgminBookBc", book,
-      "org.apache.spark.broadcast.Broadcast<double[]>")
-    val arr = ctx.addMutableState("double[]", "subArgminBookArr",
-      v => s"$v = (double[]) $bcRef.value();")
+    val book = tableValue(ctx)
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.SubL2ArgminBcast.compute($a, $b, $arr);")
+      s"${ev.value} = graft.plans.SubL2ArgminBcast.compute($a, $b, $book);")
   }
-
-  override def equals(other: Any): Boolean = other match {
-    case o: SubL2ArgminBcast =>
-      left == o.left && right == o.right && fingerprint == o.fingerprint
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(left, right,
-      java.lang.Long.valueOf(fingerprint))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SubL2ArgminBcast =

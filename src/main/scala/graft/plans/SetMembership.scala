@@ -20,55 +20,34 @@ import org.apache.spark.unsafe.types.UTF8String
   * zero false positives and no per-task copy of the list (the handle
   * rides the block manager, fetched once per executor; a 1M-domain
   * blocklist ≈ 20 MB — broadcast-join-build-sized, far past the
-  * task-binary budget a `typedLit` literal would pay).
+  * task-binary budget a plan literal would pay).
   *
-  * Evaluation: codegen'd (`doGenCode` emits one static probe call
-  * with the broadcast fetched once into mutable state) when the probe
+  * Evaluation: codegen'd (one static probe call on the table fetched
+  * once into mutable state — [[FrozenTableKernel]]) when the probe
   * sits on a plain column — e.g. a `Membership.contains` gate
   * outside a lambda; inside higher-order lambda bodies
   * (`exists`/`transform`) Spark evaluates the lambda interpreted and
   * takes the `nullSafeEval` path. Both are the same one-binary-search
-  * probe. Equality/canonicalization uses the
-  * driver-computed content `fingerprint` (the [[BloomContains]] /
-  * [[CentroidMuAssignBcast]] discipline — two plans built from
-  * separate broadcasts of the same list must still semanticEquals).
+  * probe. The table is a [[FrozenTable]] with one entry per key: its
+  * content equality compares the key COUNT beside the 64-bit
+  * fingerprint, because this is an EXACT gate with no downstream
+  * verify.
   */
 case class SetContainsBcast(child: Expression,
-    keys: org.apache.spark.broadcast.Broadcast[Array[UTF8String]],
-    fingerprint: Long) extends UnaryExpression {
+    table: FrozenTable[Array[UTF8String]])
+    extends UnaryExpression with FrozenTableKernel[Array[UTF8String]] {
 
   override def dataType: DataType = BooleanType
 
   override protected def nullSafeEval(key: Any): Any =
-    SetContainsBcast.probe(keys.value, key.asInstanceOf[UTF8String])
+    SetContainsBcast.probe(table.value, key.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("setKeysBc", keys,
-      "org.apache.spark.broadcast.Broadcast")
-    val arr = ctx.addMutableState(
-      "org.apache.spark.unsafe.types.UTF8String[]", "setKeysArr",
-      v => s"$v = (org.apache.spark.unsafe.types.UTF8String[]) " +
-        s"$bcRef.value();")
+    val keys = tableValue(ctx)
     nullSafeCodeGen(ctx, ev, key =>
-      s"${ev.value} = graft.plans.SetContainsBcast.probe($arr, $key);")
+      s"${ev.value} = graft.plans.SetContainsBcast.probe($keys, $key);")
   }
-
-  // the content fingerprint is 64-bit FNV-1a (craftable collisions,
-  // and blocklists carry externally sourced strings) while this is an
-  // EXACT gate with no downstream verify — so equality also compares
-  // the key COUNT, a driver-local O(1) check that already breaks any
-  // same-hash-different-cardinality forgery and shrinks the practical
-  // collision surface to same-length same-hash pairs (r19 ADVICE)
-  override def equals(other: Any): Boolean = other match {
-    case o: SetContainsBcast =>
-      child == o.child && fingerprint == o.fingerprint &&
-        keys.value.length == o.keys.value.length
-    case _ => false
-  }
-
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, java.lang.Long.valueOf(fingerprint))
 
   override protected def withNewChildInternal(
       newChild: Expression): SetContainsBcast = copy(child = newChild)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
@@ -528,10 +528,10 @@ object PqAdcSum {
   * spelling they replace.
   */
 private[plans] object PqKernel {
-  /** book layout: flat array<double>, entry (m, cid) dim d at
+  /** book layout: flat double[], entry (m, cid) dim d at
     * `(m*k + cid)*subDim + d`.
     */
-  def subDist(v: ArrayData, book: ArrayData, m: Int, cid: Int,
+  def subDist(v: ArrayData, book: Array[Double], m: Int, cid: Int,
       k: Int, subDim: Int): Double = {
     val vOff = m * subDim
     val bOff = (m * k + cid) * subDim
@@ -544,12 +544,12 @@ private[plans] object PqKernel {
     }
     d = 0
     while (d < subDim) {
-      ab += v.getDouble(vOff + d) * book.getDouble(bOff + d)
+      ab += v.getDouble(vOff + d) * book(bOff + d)
       d += 1
     }
     d = 0
     while (d < subDim) {
-      val y = book.getDouble(bOff + d)
+      val y = book(bOff + d)
       bb += y * y
       d += 1
     }
@@ -557,39 +557,41 @@ private[plans] object PqKernel {
   }
 }
 
-/** In-row PQ encode: all M sub-codes of a vector against a constant
-  * flattened codebook (a `typedLit` — ~8 KB riding the task closure,
-  * the FAISS shape where encoding is a per-vector kernel, not a
-  * corpus × (M·K) `crossJoin` + min_by re-aggregation). Ties go to the
-  * lower cid, matching the `min_by(cid, struct(d2, cid))` order of the
-  * relational spelling.
+/** In-row PQ encode: all M sub-codes of a vector against the flattened
+  * codebook ([[graft.Fixtures.pqCodebookFlat]], a [[FrozenTable]] with
+  * one entry per codeword — the FAISS shape where encoding is a
+  * per-vector kernel, not a corpus × (M·K) `crossJoin` + min_by
+  * re-aggregation). Ties go to the lower cid, matching the
+  * `min_by(cid, struct(d2, cid))` order of the relational spelling.
   */
-case class PqCodes(left: Expression, right: Expression,
-    numCentroids: Int, subDim: Int) extends BinaryExpression {
+case class PqCodes(child: Expression, table: FrozenTable[Array[Double]],
+    numCentroids: Int, subDim: Int)
+    extends UnaryExpression with FrozenTableKernel[Array[Double]] {
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    PqCodes.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      numCentroids, subDim)
+  override def nullSafeEval(a: Any): Any =
+    PqCodes.compute(a.asInstanceOf[ArrayData], table.value, numCentroids,
+      subDim)
 
   override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.PqCodes.compute($a, $b, " +
+      ev: ExprCode): ExprCode = {
+    val book = tableValue(ctx)
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.PqCodes.compute($a, $book, " +
         s"$numCentroids, $subDim);")
+  }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqCodes =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildInternal(
+      newChild: Expression): PqCodes = copy(child = newChild)
 }
 
 object PqCodes {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  def compute(v: ArrayData, book: ArrayData, k: Int, subDim: Int)
+  def compute(v: ArrayData, book: Array[Double], k: Int, subDim: Int)
       : ArrayData = {
-    val m = book.numElements() / (k * subDim)
+    val m = book.length / (k * subDim)
     val out = new Array[Any](m)
     var mi = 0
     while (mi < m) {
@@ -609,9 +611,9 @@ object PqCodes {
 }
 
 /** All L sign-band LSH codes of one vector against a packed
-  * hyperplane table shipped as a BROADCAST handle (plane (t, b) dim d
-  * at `((t*bBits)+b)*dim + d` — [[graft.Fixtures.planesBroadcast]]
-  * packs the committed fixtures):
+  * hyperplane table (plane (t, b) dim d at `((t*bBits)+b)*dim + d`;
+  * one [[FrozenTable]] entry per band table t —
+  * [[graft.Fixtures.planesBroadcast]] packs the committed fixtures):
   * `out(t) = Σ_b [dot(v, plane(t,b)) > 0] << b`.
   *
   * Replaces the corpus × planes `crossJoin(broadcast(planes))` +
@@ -628,50 +630,27 @@ object PqCodes {
   * dim 64, corpora to N ≈ 2·10⁵ at τ=0.4); past it the relational
   * `wideBandNeardup` spelling streams the plane relation instead.
   *
-  * The packed q135 fixture is ~3.5 MB of doubles; as a case-class
-  * field it would serialize into EVERY task binary (TaskSetManager
-  * warns at >1 MiB), while a `Broadcast` serializes as a block-manager
-  * handle — executors fetch the payload once via torrent broadcast and
-  * every task on the executor shares the same array. The
-  * driver-computed content `fingerprint` ([[Fnv1a]]) stands in for the
-  * payload in equals/hashCode, the [[BloomContains]] discipline;
-  * [[graft.Fixtures.planesBroadcast]] caches the broadcast per
-  * (session, fixture stamp) so plan re-construction reuses one handle.
+  * The packed q135 fixture is ~3.5 MB of doubles; reading every plane
+  * component once per row from the fetched primitive array (never a
+  * boxed-element ArrayData) measured ~7× on the whole q135 query.
   */
 case class SignBandCodesBcast(child: Expression,
-    planes: org.apache.spark.broadcast.Broadcast[Array[Double]],
-    fingerprint: Long, bBits: Int) extends UnaryExpression {
+    table: FrozenTable[Array[Double]])
+    extends UnaryExpression with FrozenTableKernel[Array[Double]] {
   override def dataType: DataType =
     ArrayType(LongType, containsNull = false)
 
   override protected def nullSafeEval(a: Any): Any =
-    SignBandCodes.compute(a.asInstanceOf[ArrayData], planes.value, bBits)
+    SignBandCodes.compute(a.asInstanceOf[ArrayData], table.value,
+      table.entries)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
-    // the references array carries the Broadcast HANDLE; the payload
-    // double[] is resolved once per generated-class instance into a
-    // mutable-state field, so the per-row path reads a primitive array
-    // — never a boxed-element ArrayData, whose per-row element touches
-    // (this kernel reads every plane component once per input row)
-    // measured ~7× on the whole q135 query
-    val bcRef = ctx.addReferenceObj("signBandPlanesBc", planes,
-      "org.apache.spark.broadcast.Broadcast<double[]>")
-    val arr = ctx.addMutableState("double[]", "signBandPlanesArr",
-      v => s"$v = (double[]) $bcRef.value();")
+    val planes = tableValue(ctx)
     nullSafeCodeGen(ctx, ev, a =>
       s"${ev.value} = graft.plans.SignBandCodes.compute($a, " +
-        s"$arr, $bBits);")
+        s"$planes, ${table.entries});")
   }
-
-  override def equals(other: Any): Boolean = other match {
-    case o: SignBandCodesBcast =>
-      child == o.child && fingerprint == o.fingerprint && bBits == o.bBits
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(child, java.lang.Long.valueOf(fingerprint),
-      Integer.valueOf(bBits))
 
   override protected def withNewChildInternal(
       newChild: Expression): SignBandCodesBcast = copy(child = newChild)
@@ -680,22 +659,25 @@ case class SignBandCodesBcast(child: Expression,
 object SignBandCodes {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  def compute(v: ArrayData, packed: Array[Double], bBits: Int)
+  /** Codes against `lTables` band tables; the bits per table follow
+    * from the packed length and the vector's dim.
+    */
+  def compute(v: ArrayData, packed: Array[Double], lTables: Int)
       : ArrayData = {
     val vd = v.toDoubleArray()
     val dim = vd.length
     // a vector whose dimensionality differs from the packed fixture
-    // must fail loudly — integer-divided table counts would read
+    // must fail loudly — integer-divided plane counts would read
     // across plane boundaries and emit garbage codes silently
-    if (packed.length % (bBits * dim) != 0)
+    if (lTables <= 0 || dim == 0 || packed.length % (lTables * dim) != 0)
       throw new IllegalArgumentException(
         s"SignBandCodes: packed plane table (${packed.length} doubles) " +
-          s"is not a multiple of bBits*dim = ${bBits * dim} — vector " +
+          s"is not a multiple of lTables*dim = ${lTables * dim} — vector " +
           s"dim $dim does not match the fixture's")
-    val l = packed.length / (bBits * dim)
-    val out = new Array[Any](l)
+    val bBits = packed.length / (lTables * dim)
+    val out = new Array[Any](lTables)
     var t = 0
-    while (t < l) {
+    while (t < lTables) {
       var code = 0L
       var b = 0
       while (b < bBits) {
@@ -721,32 +703,34 @@ object SignBandCodes {
   * `m*K + cid`) for one query vector — the companion of [[PqCodes]]
   * on the query side, feeding [[PqAdcSum]].
   */
-case class PqLut(left: Expression, right: Expression,
-    numCentroids: Int, subDim: Int) extends BinaryExpression {
+case class PqLut(child: Expression, table: FrozenTable[Array[Double]],
+    numCentroids: Int, subDim: Int)
+    extends UnaryExpression with FrozenTableKernel[Array[Double]] {
   override def dataType: DataType =
     ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    PqLut.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      numCentroids, subDim)
+  override def nullSafeEval(a: Any): Any =
+    PqLut.compute(a.asInstanceOf[ArrayData], table.value, numCentroids,
+      subDim)
 
   override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.PqLut.compute($a, $b, " +
+      ev: ExprCode): ExprCode = {
+    val book = tableValue(ctx)
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.PqLut.compute($a, $book, " +
         s"$numCentroids, $subDim);")
+  }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqLut =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildInternal(
+      newChild: Expression): PqLut = copy(child = newChild)
 }
 
 object PqLut {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  def compute(v: ArrayData, book: ArrayData, k: Int, subDim: Int)
+  def compute(v: ArrayData, book: Array[Double], k: Int, subDim: Int)
       : ArrayData = {
-    val m = book.numElements() / (k * subDim)
+    val m = book.length / (k * subDim)
     val out = new Array[Any](m * k)
     var mi = 0
     while (mi < m) {
@@ -764,49 +748,53 @@ object PqLut {
 
 /** In-row top-k coarse-quantizer assignment: the ids of the `k`
   * centroids nearest (by cosine, ties to the lower cid) to a vector,
-  * against a PACKED constant centroid table (`typedLit` array laid out
-  * `[cn, cv(0), …, cv(dim-1)]` per cid — [[graft.Fixtures]] packs it).
-  * Replaces the corpus × K `crossJoin(centroids)` + `row_number`
-  * window (a K× row blowup and a vec_id-keyed exchange+sort) with one
-  * narrow codegen'd map. The cosine is evaluated EXACTLY as the
-  * relational spelling — sequential dot, `nrm * cn` product, one
-  * division — so assignments and ties are bit-identical.
+  * against the packed centroid table (`[cn, cv(0), …, cv(dim-1)]` per
+  * cid, one [[FrozenTable]] entry per centroid —
+  * [[graft.Fixtures.ivfCentroidsPacked]] packs it). Replaces the
+  * corpus × K `crossJoin(centroids)` + `row_number` window (a K× row
+  * blowup and a vec_id-keyed exchange+sort) with one narrow codegen'd
+  * map. The cosine is evaluated EXACTLY as the relational spelling —
+  * sequential dot, `nrm * cn` product, one division — so assignments
+  * and ties are bit-identical.
   */
-case class CentroidTopK(first: Expression, second: Expression,
-    third: Expression, k: Int) extends TernaryExpression {
+case class CentroidTopK(left: Expression, right: Expression,
+    table: FrozenTable[Array[Double]], k: Int)
+    extends BinaryExpression with FrozenTableKernel[Array[Double]] {
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
 
-  override def nullSafeEval(v: Any, nrm: Any, packed: Any): Any =
+  override def nullSafeEval(v: Any, nrm: Any): Any =
     CentroidTopK.compute(v.asInstanceOf[ArrayData],
-      nrm.asInstanceOf[Double], packed.asInstanceOf[ArrayData], k)
+      nrm.asInstanceOf[Double], table.value, k)
 
   override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c) =>
-      s"${ev.value} = graft.plans.CentroidTopK.compute($a, $b, $c, $k);")
+      ev: ExprCode): ExprCode = {
+    val packed = tableValue(ctx)
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.plans.CentroidTopK.compute($a, $b, $packed, $k);")
+  }
 
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): CentroidTopK =
-    copy(first = newFirst, second = newSecond, third = newThird)
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): CentroidTopK =
+    copy(left = newLeft, right = newRight)
 }
 
 object CentroidTopK {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
 
-  def compute(v: ArrayData, nrm: Double, packed: ArrayData, k: Int)
+  def compute(v: ArrayData, nrm: Double, packed: Array[Double], k: Int)
       : ArrayData = {
     val dim = v.numElements()
-    val nc = packed.numElements() / (dim + 1)
+    val nc = packed.length / (dim + 1)
     val sims = new Array[Double](nc)
     var cid = 0
     while (cid < nc) {
       val off = cid * (dim + 1)
-      val cn = packed.getDouble(off)
+      val cn = packed(off)
       var dot = 0.0
       var d = 0
       while (d < dim) {
-        dot += v.getDouble(d) * packed.getDouble(off + 1 + d)
+        dot += v.getDouble(d) * packed(off + 1 + d)
         d += 1
       }
       sims(cid) = dot / (nrm * cn)

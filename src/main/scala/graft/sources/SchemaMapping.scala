@@ -32,14 +32,8 @@ object SchemaMapping {
   /** FNV-1a 64-bit hash (reference uses FNV for enum type naming,
     * `ddl.go:117-128`).
     */
-  def fnv1a64(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    for (b <- s.getBytes("UTF-8")) {
-      h ^= (b & 0xffL)
-      h *= 0x100000001b3L
-    }
-    h
-  }
+  def fnv1a64(s: String): Long =
+    graft.plans.Fnv1a.mixBytes(graft.plans.Fnv1a.Offset, s.getBytes("UTF-8"))
 
   /** FNV-1a 32-bit hash (identifier-truncation suffix,
     * reference `post.go:185-203`).

@@ -103,8 +103,7 @@ object GenChatFixture {
     // reference token counts of the rendered template under the
     // committed BPE merges — the q148 oracle pattern: the q192 hash
     // match proves the in-plan render + merge loop per conversation
-    val (ml, mr) = Fixtures.bpeMerges(spark)
-    val table = new graft.functions.Bpe.Table(ml, mr)
+    val table = Fixtures.bpeMerges(spark).value
     val rows = (0L until NumConvos.toLong).map { c =>
       // per-turn reference counts: the BPE pre-token regex cannot form
       // a run spanning a turn joint (content ends alphanumeric, every

@@ -64,11 +64,11 @@ object TrainCalibrator {
     * the spec can re-derive the committed fixture byte-for-byte.
     */
   def train(spark: SparkSession, dir: String): Seq[(Long, Long, Long)] = {
-    val (w, bias, _) = Fixtures.qualityClassifier(spark)
     val pairs = graft.operators.TextAnalysis.gopherDoc(spark, dir)
       .select(
         graft.functions.VectorOps.hashedLogit(
-          graft.operators.Classifier.featureText, w, bias).as("s_mu"),
+          graft.operators.Classifier.featureText,
+          Fixtures.qualityClassifier(spark)).as("s_mu"),
         col("pass"))
       .collect()
       .map(r => (r.getAs[Long]("s_mu"), r.getAs[Boolean]("pass"))).toSeq

@@ -96,7 +96,10 @@ object TrainQualityClassifier {
     val scored = graft.operators.TextAnalysis.gopherDoc(spark, dir)
       .select(col("pass"),
         graft.functions.VectorOps.hashedLogit(
-          graft.operators.Classifier.featureText, w, bias).as("logit"))
+          graft.operators.Classifier.featureText,
+          graft.plans.FrozenTable.ofLongs(spark,
+            graft.plans.HashedLogit.pack(w, bias, 0L), Dim + 2))
+          .as("logit"))
       .collect()
       .map(r => (r.getAs[Long]("logit"), r.getAs[Boolean]("pass")))
       .sortBy(_._1)

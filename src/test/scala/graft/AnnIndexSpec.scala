@@ -31,7 +31,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val p2 = operators.Similarity.annIndexLayout(spark, dir)
     assert(p1 == p2, "content-keyed artifact path must be stable")
     val idx = spark.read.parquet(p1)
-    val centsPacked = typedLit(Fixtures.ivfCentroidsPacked(spark).toSeq)
+    val centsPacked = Fixtures.ivfCentroidsPacked(spark)
     // recompute rank-1 assignment from the index's OWN stored vectors:
     // a drifted write (stale cids, lossy vector round-trip) breaks this
     val bad = idx.withColumn("cid2",

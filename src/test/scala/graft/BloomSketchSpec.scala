@@ -67,7 +67,9 @@ class BloomSketchSpec extends AnyFunSuite {
     val train = sh.filter(col("doc_id") % 100 < 80).select(col("g"))
     val total = train.count()
     val kept = train.filter(
-      functions.VectorOps.bloomContains(col("g"), bits, 7)).count()
+      functions.VectorOps.bloomContains(col("g"),
+        graft.plans.FrozenTable.ofLongs(spark, bits, bits.length), 7))
+      .count()
     assert(kept < total / 10,
       s"bloom kept $kept of $total train grams — filter not selective")
   }

@@ -15,8 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class BpeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private lazy val (mLeft, mRight) = Fixtures.bpeMerges(spark)
-  private lazy val table = new Bpe.Table(mLeft, mRight)
+  private lazy val merges = Fixtures.bpeMerges(spark)
+  private lazy val table = merges.value
+  private lazy val (mLeft, mRight) = (table.left, table.right)
 
   /** Reference encoder: apply every merge in RANK ORDER, each to a
     * left-to-right fixpoint. Equivalent to the kernel's
@@ -93,7 +94,7 @@ class BpeSpec extends AnyFunSuite {
       "document inside whole-stage codegen") {
     val rows = Tables.load(spark, "/root/testdata/sf0.01", "documents")
       .select(col("doc_id"), col("text"),
-        graft.functions.VectorOps.bpeCount(col("text"), mLeft, mRight)
+        graft.functions.VectorOps.bpeCount(col("text"), merges)
           .as("n"))
       .collect()
     assert(rows.length == 500)

@@ -15,8 +15,7 @@ class ChatSpec extends AnyFunSuite {
       .map(r => r.getAs[Long]("conv_id") -> r).toMap
 
   test("committed fixture matches the generator rules (no stale parquet)") {
-    val (ml, mr) = Fixtures.bpeMerges(spark)
-    val table = new graft.functions.Bpe.Table(ml, mr)
+    val table = Fixtures.bpeMerges(spark).value
     val committed = Fixtures.read(spark, Fixtures.chatConvosPath)
       .collect()
       .map(r => (r.getAs[Long]("conv_id"), r.getAs[String]("source"),

@@ -17,7 +17,9 @@ class ClassifierSpec extends AnyFunSuite {
 
   test("trainer reproduces the committed fixture byte-for-byte") {
     val (w, bias, thr) = TrainQualityClassifier.train(spark, dir)
-    val (cw, cBias, cThr) = Fixtures.qualityClassifier(spark)
+    // packed in fixture bucket numbering: [thr, bias, w…]
+    val packed = Fixtures.qualityClassifier(spark).value
+    val (cThr, cBias, cw) = (packed(0), packed(1), packed.drop(2))
     assert(cw.length == TrainQualityClassifier.Dim)
     assert(java.util.Arrays.equals(w, cw),
       "retrained weights differ from fixtures/quality_classifier.parquet" +
@@ -26,13 +28,14 @@ class ClassifierSpec extends AnyFunSuite {
   }
 
   test("in-row HashedLogit equals the explode+join recomputation") {
-    val (w, bias, _) = Fixtures.qualityClassifier(spark)
+    val model = Fixtures.qualityClassifier(spark)
+    val bias = model.value(1)
     val gd = operators.TextAnalysis.gopherDoc(spark, dir)
       .select(col("doc_id"),
         operators.Classifier.featureText.as("ftext"))
     val inRow = gd
       .select(col("doc_id"),
-        functions.VectorOps.hashedLogit(col("ftext"), w, bias)
+        functions.VectorOps.hashedLogit(col("ftext"), model)
           .as("logit"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // independent path: SQL md5-prefix bucketing + a weights join —

@@ -301,7 +301,7 @@ class KnnGraphSpec extends AnyFunSuite {
     val eCorpus = e.filter(col("vec_id") >=
       operators.KnnGraph.BeamQueryVecs)
     val descentGraph = operators.KnnGraph.nnDescent(spark, eCorpus,
-      packed = packed.toSeq)
+      packed = graft.plans.FrozenTable.ofDoubles(spark, packed, 16))
     val got2 = operators.KnnGraph.beamSearch(e, descentGraph)
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("neighbor")))
       .groupBy(_._1).map { case (g, xs) => g -> xs.map(_._2).toSet }

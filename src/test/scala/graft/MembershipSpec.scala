@@ -59,7 +59,7 @@ class MembershipSpec extends AnyFunSuite {
     // 640 raw entries, 8 distinct
     val dupHeavy = Seq.fill(80)((0 until 8).map(i => s"k$i")).flatten
     val probe = probeOf(Membership.contains(lit("k3"), dupHeavy))
-    assert(probe.map(_.keys.value.length).contains(8),
+    assert(probe.map(_.table.value.length).contains(8),
       "the broadcast table carries duplicates")
     val set = dupHeavy.toSet
     val probes = Seq("k0", "k5", "k7", "k8", "zz")

@@ -641,4 +641,34 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert("Exchange hashpartitioning".r.findAllIn(p).size <= 1,
       s"corpus-side exchange crept in: ${p.take(1200)}")
   }
+
+  test("frozen tables stay out of the plan: no catalog entry that " +
+      "builds a table kernel holds an array literal over 256 elements") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // a persisted subtree is an InMemoryRelation leaf in the optimized
+    // plan: look inside it too
+    def exprs(p: LogicalPlan): Seq[Expression] = p.collectWithSubqueries {
+      case m: InMemoryRelation => exprs(m.cacheBuilder.logicalPlan)
+      case n => n.expressions
+    }.flatten
+    val kernels = Set("CentroidTopK", "PqCodes", "PqLut", "BloomContains",
+      "HashedLogit", "BpeTokenCount", "BpeEncodeIds")
+    Seq("q45_ann_ivf", "q64_ann_pq", "q72_ann_ivfpq",
+      "q138_decontam_bloom", "q139_semantic_dedup",
+      "q147_training_pipeline", "q148_bpe_pack",
+      "q166_quality_classifier", "q174_ann_served", "q175_token_shards",
+      "q192_chat_render", "q195_score_calibration").foreach { q =>
+      val es = exprs(clean(q).queryExecution.optimizedPlan)
+      assert(es.exists(_.exists(e => kernels(e.getClass.getSimpleName))),
+        s"$q builds no table kernel")
+      val big = es.flatMap(_.collect {
+        case Literal(a: ArrayData, _) if a.numElements() > 256 =>
+          a.numElements()
+      })
+      assert(big.isEmpty, s"$q carries array literals of sizes $big")
+    }
+  }
 }

@@ -899,6 +899,7 @@ class ScaleGrowthSpec extends AnyFunSuite {
         }
         packed(off) = math.sqrt(acc)
       }
+      val cents = graft.plans.FrozenTable.ofDoubles(spark, packed, k)
       // qrel adds the µ-quantized (qv, qn) columns the r15 exact-
       // integer µcos contract folds over — same wiring as the q188
       // catalog pools
@@ -911,9 +912,9 @@ class ScaleGrowthSpec extends AnyFunSuite {
         .select(col("vec_id").as("id"), col("v"), col("nrm"),
           col("qv"), col("qn"))
       val cands = operators.Bitext
-        .probedUcos(spark, x, y, packed = packed.toSeq).count()
+        .probedUcos(spark, x, y, packed = cents).count()
       val mined = operators.Bitext
-        .mineMarginProbed(spark, x, y, packed = packed.toSeq)
+        .mineMarginProbed(spark, x, y, packed = cents)
         .collect()
       Caches.clear(spark)
       // planted twins straddle the parity split: (10m, 10m+1)
@@ -959,7 +960,9 @@ class ScaleGrowthSpec extends AnyFunSuite {
         val e = operators.Similarity.normed(spark, dir)
         clock.quiesce(); clock.reset()
         val ledger = operators.Similarity
-          .semanticDedupLedger(e, packed.toSeq, 0.9).collect()
+          .semanticDedupLedger(e,
+            graft.plans.FrozenTable.ofDoubles(spark, packed, k), 0.9)
+          .collect()
         clock.quiesce()
         val sh = clock.shuffleRecords
         Caches.clear(spark)
@@ -1039,7 +1042,8 @@ class ScaleGrowthSpec extends AnyFunSuite {
               graft.functions.VectorOps.l2norm(col("v"))))
         clock.quiesce(); clock.reset()
         val edges = operators.KnnGraph.mutualTopK(
-          operators.KnnGraph.probedScores(spark, e, packed.toSeq))
+          operators.KnnGraph.probedScores(spark, e,
+            graft.plans.FrozenTable.ofDoubles(spark, packed, k)))
           .collect().map(r => (r.getLong(0), r.getLong(1)))
         clock.quiesce()
         val sh = clock.shuffleRecords
@@ -1106,7 +1110,8 @@ class ScaleGrowthSpec extends AnyFunSuite {
           .localCheckpoint()
         clock.quiesce(); clock.reset()
         val edges = operators.KnnGraph.mutualize(
-          operators.KnnGraph.nnDescent(spark, e, packed = packed.toSeq))
+          operators.KnnGraph.nnDescent(spark, e,
+            packed = graft.plans.FrozenTable.ofDoubles(spark, packed, k)))
           .collect().map(r => (r.getLong(0), r.getLong(1)))
         clock.quiesce()
         val sh = clock.shuffleRecords

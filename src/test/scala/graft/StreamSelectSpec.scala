@@ -18,6 +18,21 @@ class StreamSelectSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.01"
 
+  test("DSIR model fingerprint is uniquely decodable: a token that " +
+      "spells out another model's rows does not collide with it") {
+    import graft.plans.DsirModelTable
+    // under a separator-joined rendering both fold "a:1:2;b:3:4;"
+    val two = DsirModelTable.build(Seq(("a", 1L, 2L), ("b", 3L, 4L)),
+      10L, 2L, 6L)
+    val one = DsirModelTable.build(Seq(("a:1:2;b", 3L, 4L)), 10L, 2L, 6L)
+    assert(two.fingerprint != one.fingerprint,
+      "two different models share a fingerprint, so their scorers " +
+        "would compare equal in plan canonicalization")
+    // and the fingerprint is a function of content, not row order
+    assert(two.fingerprint == DsirModelTable.build(
+      Seq(("b", 3L, 4L), ("a", 1L, 2L)), 10L, 2L, 6L).fingerprint)
+  }
+
   test("in-row UnigramDsirScore == relational per-doc (bu, iwu, nt) " +
       "for every document") {
     val model = TextAnalysis.dsirModelTable(spark, dir)

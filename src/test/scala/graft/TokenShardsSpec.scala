@@ -19,10 +19,10 @@ class TokenShardsSpec extends AnyFunSuite {
 
   test("in-plan BpeEncodeIds equals the committed reference sequence " +
       "for every document") {
-    val (ml, mr) = Fixtures.bpeMerges(spark)
+    val merges = Fixtures.bpeMerges(spark)
     val mismatch = Fixtures.read(spark, Fixtures.bpeCorpusPath)
       .select(col("doc_id"),
-        graft.functions.VectorOps.bpeIds(col("text"), ml, mr)
+        graft.functions.VectorOps.bpeIds(col("text"), merges)
           .as("live"),
         col("bpe_ids").as("ref"))
       .filter(col("live") =!= col("ref"))
@@ -34,8 +34,8 @@ class TokenShardsSpec extends AnyFunSuite {
 
   test("ids decode losslessly back to the document's UTF-8 token " +
       "bytes (no id maps to the wrong merge)") {
-    val (ml, mr) = Fixtures.bpeMerges(spark)
-    val table = new Bpe.Table(ml, mr)
+    val table = Fixtures.bpeMerges(spark).value
+    val (ml, mr) = (table.left, table.right)
     val rows = Fixtures.read(spark, Fixtures.bpeCorpusPath)
       .select("text", "bpe_ids").limit(50).collect()
     assert(rows.nonEmpty)

@@ -255,8 +255,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
         }.sum
       }
     val vecs = (1 to 50).map(_ => Seq.fill(dim)(rnd.nextGaussian()))
-    val planesBc = (spark.sparkContext.broadcast(packed),
-      graft.plans.Fnv1a.ofDoubles(packed), bBits)
+    val planesBc = graft.plans.FrozenTable.ofDoubles(spark, packed, lTables)
     val got = vecs.toDF("v")
       .select(col("v"),
         VectorOps.signBandCodesBcast(col("v"), planesBc).as("codes"))
@@ -294,9 +293,10 @@ class VectorExpressionsSpec extends AnyFunSuite {
     val members = Array.fill(200)(rnd.nextLong())
     members.foreach(graft.plans.BloomContains.set(bits, 7, _))
     val keys = (members.toSeq ++ Seq.fill(800)(rnd.nextLong())).distinct
+    val table = graft.plans.FrozenTable.ofLongs(spark, bits, bits.length)
     val got = keys.toDF("k")
       .select(col("k"),
-        VectorOps.bloomContains(col("k"), bits, 7).as("hit"))
+        VectorOps.bloomContains(col("k"), table, 7).as("hit"))
       .as[(Long, Boolean)].collect().toMap
     keys.foreach { k =>
       assert(got(k) == graft.plans.BloomContains.probe(bits, 7, k),
@@ -304,7 +304,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
     }
     assert(members.forall(got(_)), "member keys must always probe true")
     val nul = Seq(Option.empty[java.lang.Long]).toDF("k")
-      .select(VectorOps.bloomContains(col("k"), bits, 7)).collect()(0)
+      .select(VectorOps.bloomContains(col("k"), table, 7)).collect()(0)
     assert(nul.isNullAt(0))
   }
 
@@ -360,11 +360,16 @@ class VectorExpressionsSpec extends AnyFunSuite {
     val s = spark.newSession()
     s.conf.set("spark.sql.codegen.wholeStage", "false")
     val nan = Double.NaN
+    // the last vector ties: equal cosine to three centroids of
+    // `dense`, equal distance to two codewords of `pq`
     val vecs: Seq[Seq[Double]] = Seq(null, Seq(1.0, 2.0, 3.0, 4.0),
       Seq(-0.0, 0.0, -0.0, 0.0), Seq(nan, 1.0, -1.0, 2.0),
-      Seq(-3.0, 0.5, 7.0, -0.0), Seq(1e6, -1e6, 2e6, 0.0))
-    val nrms: Seq[java.lang.Double] = Seq(null, 5.477, 0.0, nan, -0.0, 1.0)
-    val keys = Seq(null, "", "über", "uber", "数据", "😀", "a", "zz")
+      Seq(-3.0, 0.5, 7.0, -0.0), Seq(1e6, -1e6, 2e6, 0.0),
+      Seq(2.0, 2.0, 2.0, 2.0))
+    val nrms: Seq[java.lang.Double] =
+      Seq(null, 5.477, 0.0, nan, -0.0, 1.0, 4.0)
+    val keys = Seq(null, "", "über", "uber", "数据", "😀", "a", "zz",
+      "the quick 😀 fox über alles")
     val rows = for {
       (v, i) <- vecs.zipWithIndex
       sub <- Seq(0, 1)
@@ -378,7 +383,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
     // an RDD source, not a local relation: the optimizer would evaluate
     // a projection over local rows itself, interpreted, in both modes
     val df = s.createDataFrame(s.sparkContext.parallelize(rows, 3), schema)
-    def bc(xs: Array[Double]) = s.sparkContext.broadcast(xs)
     // sparse cids (0, 2, 5), `[cid, cn, cv…]` entries
     val cents = Array(
       Array(0.0, 2.0, 1.0, 1.0, 1.0, 1.0),
@@ -392,18 +396,57 @@ class VectorExpressionsSpec extends AnyFunSuite {
     // 2 tables × 3 bits × dim 4
     val planes = Array.tabulate(24)(i => if (i % 5 == 0) -0.0
       else math.sin(i.toDouble))
+    // dense `[cn, cv…]` entries: three unit axes, then a zero
+    // centroid (cn 0)
+    val dense = Array(
+      Array(1.0, 1.0, 0.0, 0.0, 0.0),
+      Array(1.0, 0.0, 1.0, 0.0, 0.0),
+      Array(1.0, 0.0, 0.0, 1.0, -0.0),
+      Array(0.0, -0.0, 0.0, 0.0, 0.0)).flatten
+    // PQ book, 2 subspaces × K=3 × subDim 2: a NaN and a -0.0
+    // component in subspace 1
+    val pq = Array(3.0, 1.0, 1.0, 3.0, -2.0, 0.5,
+      2.0, 2.0, nan, 1.0, -0.0, 3.0)
+    // merges t+h → 256, 256+e → 257, and the first two bytes of a
+    // 4-byte (astral) UTF-8 sequence → 258
+    val bpe = graft.functions.Bpe.frozen(s, new graft.functions.Bpe.Table(
+      Array(116, 256, 0xf0), Array(104, 101, 0x9f)))
+    // packed [thr, bias, w…], 7 buckets
+    val logit = graft.plans.FrozenTable.ofLongs(s,
+      graft.plans.HashedLogit.pack(Array(3L, -2L, 7L, 11L, -13L, 17L, 19L),
+        -5L, 0L), 9)
+    val dsir = graft.plans.DsirModelTable.frozen(s,
+      graft.plans.DsirModelTable.build(Seq(("über", 3L, 1L),
+        ("😀", 1L, 0L), ("a", 5L, 2L), ("the", 2L, 2L)), 11L, 4L, 5L))
+    // Bloom members: key lengths 0 and 2 ("", "数据", "zz")
+    val bloomBits = new Array[Long](4)
+    Seq(0L, 2L).foreach(graft.plans.BloomContains.set(bloomBits, 3, _))
+    val bloom = graft.plans.FrozenTable.ofLongs(s, bloomBits, 4)
+    val text = col("key")
     def col2(e: org.apache.spark.sql.catalyst.expressions.Expression) =
       GraftShims.column(e)
     def ex(c: org.apache.spark.sql.Column) = GraftShims.expression(c)
     val kernels = Seq(
       col2(graft.plans.CentroidMuAssignBcast(ex(col("v")), ex(col("nrm")),
-        bc(cents), graft.plans.Fnv1a.ofDoubles(cents))).as("mu"),
+        graft.plans.FrozenTable.ofDoubles(s, cents, 3))).as("mu"),
       col2(graft.plans.SubL2ArgminBcast(ex(col("v")), ex(col("sub")),
-        bc(book), graft.plans.Fnv1a.ofDoubles(book))).as("l2"),
+        graft.plans.FrozenTable.ofDoubles(s, book, 3))).as("l2"),
       VectorOps.signBandCodesBcast(col("v"),
-        (bc(planes), graft.plans.Fnv1a.ofDoubles(planes), 3)).as("sb"),
+        graft.plans.FrozenTable.ofDoubles(s, planes, 2)).as("sb"),
       graft.functions.Membership.contains(col("key"),
-        keys.filter(k => k != null && k != "uber")).as("in"))
+        keys.filter(k => k != null && k != "uber")).as("in"),
+      VectorOps.centroidTopK(col("v"), col("nrm"),
+        graft.plans.FrozenTable.ofDoubles(s, dense, 4), 3).as("topk"),
+      VectorOps.pqCodes(col("v"),
+        graft.plans.FrozenTable.ofDoubles(s, pq, 6), 3, 2).as("codes"),
+      VectorOps.pqLut(col("v"),
+        graft.plans.FrozenTable.ofDoubles(s, pq, 6), 3, 2).as("lut"),
+      VectorOps.hashedLogit(text, logit).as("logit"),
+      VectorOps.bpeCount(text, bpe).as("bpe_n"),
+      VectorOps.bpeIds(text, bpe).as("bpe_ids"),
+      VectorOps.unigramDsirScore(text, dsir).as("dsir"),
+      VectorOps.bloomContains(length(col("key")).cast("long"), bloom, 3)
+        .as("bloom"))
     def eval(mode: String): Seq[Row] = {
       s.conf.set("spark.sql.codegen.factoryMode", mode)
       val out = df.select(kernels: _*)
@@ -417,13 +460,15 @@ class VectorExpressionsSpec extends AnyFunSuite {
     interpreted.zip(generated).zip(rows).foreach { case ((i, g), r) =>
       assert(i == g, s"paths disagree on $r: interpreted $i, generated $g")
     }
-    // null in, null out; the probe answers exact membership
+    // null in, null out; the probes answer exact membership, and the
+    // Bloom probe never misses a member
     val nullRow = interpreted.head
-    assert(nullRow.isNullAt(0) && nullRow.isNullAt(1) &&
-      nullRow.isNullAt(2) && nullRow.isNullAt(3))
+    assert((0 until nullRow.size).forall(nullRow.isNullAt))
     assert(interpreted.take(keys.size).map(r =>
       if (r.isNullAt(3)) None else Some(r.getBoolean(3))) ==
       Seq(None, Some(true), Some(true), Some(false), Some(true),
-        Some(true), Some(true), Some(true)))
+        Some(true), Some(true), Some(true), Some(true)))
+    assert(interpreted.take(keys.size).zip(keys).forall { case (r, k) =>
+      !Set("", "数据", "zz").contains(k) || r.getBoolean(11) })
   }
 }
