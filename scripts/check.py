@@ -85,11 +85,12 @@ def main(sfdir, outdir):
             t0 = time.monotonic()
             dt = con.execute(oracle[name]).arrow()
             dur = time.monotonic() - t0
-            if dur > 30:
-                # tripwire for the q217 class: an unrolled CTE chain a
-                # future edit leaves un-MATERIALIZED re-inlines
+            if dur > 10:
+                # tripwire for the q217/q213 class: an unrolled CTE chain
+                # a future edit leaves un-MATERIALIZED re-inlines
                 # exponentially and can spill the disk at the next SF —
-                # surface it while it is still only slow
+                # surface it while it is still only slow (the slowest
+                # oracle at sf0.01, q214, takes ~6 s)
                 slow.append((name, dur))
             dcols = dt.column_names
             dd = dt.to_pydict()

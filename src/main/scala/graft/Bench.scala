@@ -8,11 +8,12 @@ import org.apache.spark.sql.SparkSession
   * Two timing surfaces, reported side by side so fixed per-query
   * overhead and steady-state compute separate cleanly:
   *
-  *  - cold: the FIRST execution of each plan in this JVM — pays codegen
-  *    compilation, file listing, JIT warmup (`queries_cold` /
+  *  - cold: the FIRST, unprepared run of each query in this JVM — pays
+  *    codegen compilation, file listing, JIT warmup (`queries_cold` /
   *    `cold_total`);
-  *  - warm: best of 3 subsequent runs — steady-state plan execution,
-  *    the number that tracks real compute (`queries` / `value`);
+  *  - warm: best of 3+1 later runs that re-run the cold run's
+  *    prepared plan — steady-state plan execution, the number that
+  *    tracks real compute (`queries` / `value`);
   *  - unprepared warm: best of 3+1 runs where EVERY run rebuilds the
   *    DataFrame from scratch — DSL construction, analysis, optimization
   *    and physical planning all inside the timed window, nothing cached
@@ -20,7 +21,8 @@ import org.apache.spark.sql.SparkSession
   *    `unprepared_total`). This is the DuckDB-comparable column: their
   *    warm runs re-parse + re-plan per execution too.
   *
-  * Warm samples come from 3 back-to-back runs per query PLUS one final
+  * Every run is one [[Measure]] run. Warm and unprepared samples come
+  * from 3 back-to-back runs per query PLUS one final
   * round-robin sweep over the whole set; the minimum over all four
   * counts. Back-to-back runs measure peak steady state (JIT, codegen
   * classes and footer caches stay CPU-cache-hot between runs — a fully
@@ -99,19 +101,39 @@ object Bench {
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
       .compileTime / 1e9)
 
+  /** A query's diag record for one run: its rows, [[Measure.Run.fields]]
+    * and the floor split. floor = wall − (build + execution task sec) /
+    * cores: the share of wall clock NOT explained by perfectly-parallel
+    * execution of the measured task work — scheduling gaps, AQE
+    * materialization barriers, driver-side broadcast collects, dispatch
+    * overhead of sub-ms tasks.
+    */
+  private[graft] def record(r: Measure.Run, cores: Int)
+      : Seq[(String, Double)] = {
+    val wall = r.wallMs / 1e3
+    val floor =
+      math.max(0.0, wall - (r.build.taskSec + r.exec.taskSec) / cores)
+    (("rows" -> r.rows.toDouble) +: r.fields) ++ Seq("floor_sec" -> floor,
+      "floor_share" -> (if (wall > 0) floor / wall else 0.0))
+  }
+
   /** The diagnostics line, printed before [[metricLine]]: per-query
-    * unprepared and cold seconds, warm stage profiles (pre-rendered
-    * JSON), each failed query's exception, codegen cost per column and
-    * the bare-job telltale.
+    * unprepared and cold seconds, each column's per-query [[record]]
+    * of its fastest run (`runs`), each failed query's exception,
+    * codegen cost per column and the bare-job telltale.
     */
   def diagLine(unprepared: Seq[(String, Double)],
-      cold: Seq[(String, Double)], profiles: String,
+      cold: Seq[(String, Double)],
+      runs: Seq[(String, Seq[(String, Seq[(String, Double)])])],
       failures: Seq[(String, String)],
       codegen: Seq[(String, CodegenCost)], bareJobMs: Double): String =
     s"""{"diag":"bench_detail",""" +
       s""""queries_unprepared":${jsonMap(unprepared)},""" +
       s""""queries_cold":${jsonMap(cold)},""" +
-      s""""profiles":$profiles,""" +
+      s""""runs":${runs.map { case (column, recs) =>
+        s""""$column":""" + recs.map { case (q, rec) =>
+          s""""$q":${jsonMap(rec)}""" }.mkString("{", ",", "}") }
+        .mkString("{", ",", "}")},""" +
       s""""failures":${failures.map { case (n, e) =>
         jsonStr(n) + ":" + jsonStr(e) }.mkString("{", ",", "}")},""" +
       s""""codegen":${codegen.map { case (k, c) =>
@@ -227,204 +249,105 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = multiRowGroupCopy(spark, rawDir)
     val defs = SparkEntry.benchDefs
-
-    // stage attribution: per-run stage counts / task time via listener,
-    // reported for each query's min-warm run (the floor-vs-compute
-    // split BENCH_NOTES reads)
-    val clock = new StageClock
-    spark.sparkContext.addSparkListener(clock)
     val cores = spark.sparkContext.defaultParallelism
-
-    // Per-query execution profile (Sessions.setProfile): lowLatency
-    // queries run AQE-off on 8 shuffle partitions, because a bare job
-    // costs ~20-45 ms locally (graft.tools.Profile's bare_job_ms line);
-    // the adaptive profile stays the default for the heavy tier and
-    // for all correctness runs.
-    val setProfile = Sessions.setProfile(spark)
+    // every run goes through Measure.run, under the query's bench
+    // profile (Sessions.setProfile)
+    val measure = new Measure(spark, sfDir)
 
     // Prepared-plan cache: each query's DSL construction + analysis +
     // rule-based optimization runs once (in its cold run); warm runs
-    // re-bind the optimized plan and re-run physical planning (join
-    // strategy selection included) and the FULL execution — no shuffle
-    // or result reuse, only the prepared-statement pass is amortized
+    // re-run that run's prepared plan (Measure.run: a physical clone
+    // for the AQE-off tier, the re-bound optimized plan otherwise) and
+    // the FULL execution — no shuffle or result reuse, only the
+    // prepared-statement pass is amortized
     // (DSL building re-analyzes the growing plan after every operator,
     // 50-200 ms on deep pipelines — work a production engine's prepared
     // plan cache amortizes the same way). One caveat the unprepared
     // column does NOT share: Caches.persist-ed intermediates (normed
-    // embeddings, shingle sets, sign codes) registered on a query's
-    // first run stay materialized across its warm runs, so for the
-    // persist-heavy tier "prepared warm" means "with the shared index
-    // relations resident" — the steady state of a long-lived session,
-    // stated as such in BENCH_NOTES.md.
-    val prepared = scala.collection.mutable.Map[
-      String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
-
-    // For the interactive (lowLatency, AQE-off) tier the prepared cache
-    // extends to the PHYSICAL plan: the cold run keeps the planned
-    // count()-shaped SparkPlan and every warm run executes a fresh
-    // clone() of it — new Exchange/Broadcast instances, so shuffles,
-    // broadcasts and every stage re-execute in full; only the
-    // per-run driver-side planning pass (measured 50-150 ms on the
-    // deep star-join pipelines, vs ~1 ms for DuckDB's planner) is
-    // amortized, exactly what a production prepared-statement cache
-    // holds. The adaptive tier cannot cache physical plans (AQE
-    // re-plans mid-flight) and keeps the logical-prepared path.
-    val preparedPhys = scala.collection.mutable.Map[
-      String, org.apache.spark.sql.execution.SparkPlan]()
+    // embeddings, shingle sets, sign codes) that a query's plan reads
+    // stay materialized across its warm runs, so for the persist-heavy
+    // tier "prepared warm" means "with the shared index relations
+    // resident" — the steady state of a long-lived session, stated as
+    // such in BENCH_NOTES.md.
+    val prepared = scala.collection.mutable.Map[String, Measure.Run]()
     val expectedRows = scala.collection.mutable.Map[String, Long]()
     // first failure per query, in the order they happened
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    def failed(d: QueryDef, e: Throwable): None.type = {
-      failures.getOrElseUpdate(d.name,
-        e.getClass.getName + ": " + String.valueOf(e.getMessage).take(300))
-      None
-    }
 
-    // one timed execution; count() drains the whole plan. Returns
-    // (wall sec, stage profile of exactly this run).
-    final case class Profile(stages: Int, jobs: Int, taskSec: Double,
-        cpuSec: Double, stageWallSec: Double)
-    def run(d: QueryDef): Option[(Double, Profile)] = {
-      setProfile(d)
-      clock.quiesce(); clock.reset()
-      val t0 = System.nanoTime()
+    // One timed run, unprepared unless an earlier run is given. A run that
+    // silently skipped work (reused state, empty execution) must not
+    // report a fast time: every run of a query must produce the same
+    // row count as its first; a mismatch is a correctness failure and
+    // aborts the bench, any other error reports the query as failed.
+    def run(d: QueryDef, from: Option[Measure.Run]): Option[Measure.Run] =
       try {
-        val n: Long = preparedPhys.get(d.name) match {
-          case Some(p) =>
-            val fresh = p.clone()
-              .asInstanceOf[org.apache.spark.sql.execution.SparkPlan]
-            fresh.executeCollect().head.getLong(0)
-          case None =>
-            val df = prepared.get(d.name) match {
-              case Some(p) =>
-                org.apache.spark.sql.GraftShims.ofRows(spark, p)
-              case None =>
-                val b = d.build(spark, sfDir)
-                prepared(d.name) = b.queryExecution.optimizedPlan
-                b
-            }
-            if (d.lowLatency) {
-              // same count()-shaped plan df.count() executes (so sort
-              // elimination etc. are identical), kept for warm clones
-              val cp = df.groupBy().count().queryExecution.executedPlan
-              preparedPhys(d.name) = cp
-              cp.clone()
-                .asInstanceOf[org.apache.spark.sql.execution.SparkPlan]
-                .executeCollect().head.getLong(0)
-            } else df.count()
-        }
-        // a cloned plan that silently skipped work (reused state, empty
-        // execution) must not report a fast time: every run of a query
-        // must produce the same row count as its first
+        val r = measure.run(d, from)
         expectedRows.get(d.name) match {
-          case Some(e) => if (n != e) throw new RowCountMismatch(
-            s"${d.name}: run produced $n rows, first run produced $e")
-          case None => expectedRows(d.name) = n
+          case Some(e) => if (r.rows != e) throw new RowCountMismatch(
+            s"${d.name}: run produced ${r.rows} rows, first run produced $e")
+          case None => expectedRows(d.name) = r.rows
         }
-        val wall = (System.nanoTime() - t0) / 1e9
-        clock.quiesce()
-        val (st, task, cpu, sw) = clock.snapshot()
-        Some((wall, Profile(st, clock.jobs, task, cpu, sw)))
-      }
-      catch {
-        // same contract as runUnprepared: a row-count mismatch from the
-        // expected-rows guard is a correctness failure, not a timing gap
+        Some(r)
+      } catch {
         case e: RowCountMismatch => throw e
-        case e: Throwable => failed(d, e)
+        case e: Throwable =>
+          failures.getOrElseUpdate(d.name,
+            e.getClass.getName + ": " + String.valueOf(e.getMessage).take(300))
+          None
       }
+    def runPrepared(d: QueryDef): Option[Measure.Run] =
+      run(d, prepared.get(d.name)).map { r =>
+        prepared.getOrElseUpdate(d.name, r)
+        r
+      }
+
+    // Each query's fastest of 3 back-to-back runs PLUS one final
+    // round-robin sweep over the whole set (see the object doc), as
+    // (wall sec, diag record); a run's plan handles are dropped at once.
+    type Column = Seq[(String, Option[(Double, Seq[(String, Double)])])]
+    def fastest(runOnce: QueryDef => Option[Measure.Run]): Column = {
+      def timed(d: QueryDef) =
+        runOnce(d).map(r => (r.wallMs / 1e3, record(r, cores)))
+      val backToBack = defs.map(d => (1 to 3).flatMap(_ => timed(d)))
+      val sweep = defs.map(timed)
+      defs.indices.map(i => defs(i).name ->
+        (backToBack(i) ++ sweep(i)).minByOption(_._1))
     }
 
     // host-state telltale: the wall of a bare 1-task job, min of 3,
     // measured before any query. On this box it is ~30-45 ms idle and
     // 150-300 ms under co-tenant contention (±30% per-query noise comes
     // with it) — readers should weight the warm numbers accordingly.
-    val bareJobMs = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      (System.nanoTime() - t0) / 1e6
-    }.min
+    val bareJobMs = Measure.bareJobMs(spark).min
 
-    // UNPREPARED warm run: a fresh DSL build + analysis + optimization +
-    // physical planning + full execution every time — nothing carried
-    // over from any earlier run of the query except JVM/JIT/codegen-
-    // class warmth and file-METADATA caches (parquet footers/schemas —
-    // DuckDB's warm runs keep both classes too). Materialized
-    // intermediates are explicitly dropped before every sample
-    // (Caches.unpersistAll): Spark's CacheManager substitutes
-    // InMemoryRelation into any fresh build whose subtree matches a
-    // persisted plan, so WITHOUT the drop an unprepared rebuild of a
-    // persist-heavy query (q22/q58/q118/q128/q135…) would skip
-    // recomputing scans, shingle/code relations and aggregations that
-    // DuckDB's warm runs do re-execute — flattering the column. The
-    // recompute happens INSIDE the timed window (the unpersist itself
-    // is outside: dropping an entry is bookkeeping, re-deriving it is
-    // the query's work). This is the DuckDB-comparable number: their
-    // warm runs re-parse and re-plan (~1 ms planner) per execution;
-    // ours re-drive the whole Catalyst pipeline AND re-materialize
-    // every intermediate.
-    def runUnprepared(d: QueryDef): Option[Double] = {
-      setProfile(d)
-      Caches.unpersistAll(spark)
-      val t0 = System.nanoTime()
-      try {
-        val n = d.build(spark, sfDir).count()
-        expectedRows.get(d.name) match {
-          case Some(e) => if (n != e) throw new RowCountMismatch(
-            s"${d.name}: unprepared run produced $n rows, expected $e")
-          case None => expectedRows(d.name) = n
-        }
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch {
-        // the expected-rows guard must fail the bench loudly — a
-        // correctness regression is not a missing timing
-        case e: RowCountMismatch => throw e
-        case e: Throwable => failed(d, e)
-      }
-    }
-
+    // The UNPREPARED column rebuilds every run: nothing carried over
+    // from any earlier run of the query except JVM/JIT/codegen-class
+    // warmth and file-METADATA caches (parquet footers/schemas —
+    // DuckDB's warm runs keep both classes too). Measure.run drops the
+    // materialized intermediates before every such run: Spark's
+    // CacheManager substitutes InMemoryRelation into any fresh build
+    // whose subtree matches a persisted plan, so WITHOUT the drop an
+    // unprepared rebuild of a persist-heavy query (q22/q58/q118/q128/
+    // q135…) would skip recomputing scans, shingle/code relations and
+    // aggregations that DuckDB's warm runs do re-execute. This is the
+    // DuckDB-comparable number: their warm runs re-parse and re-plan
+    // (~1 ms planner) per execution; ours re-drive the whole Catalyst
+    // pipeline AND re-materialize every intermediate. The cold run is
+    // each query's first, unprepared run.
     val cg0 = codegenNow()
-    val cold = defs.map(d => d.name -> run(d).map(_._1).getOrElse(-1.0))
+    val cold = defs.map(d =>
+      d.name -> runPrepared(d).fold(-1.0)(_.wallMs / 1e3))
     val cg1 = codegenNow()
-    val backToBack = defs.map(d => (1 to 3).flatMap(_ => run(d)))
-    val sweep = defs.map(d => run(d))
+    val warm = fastest(runPrepared)
     val cg2 = codegenNow()
-    val warmRuns = defs.zipWithIndex.map { case (d, i) =>
-      val runs = backToBack(i) ++ sweep(i)
-      d.name -> (if (runs.nonEmpty) Some(runs.minBy(_._1)) else None)
-    }
-    val warm = warmRuns.map { case (n, r) => n -> r.map(_._1).getOrElse(-1.0) }
-
-    // unprepared column: 3 back-to-back + 1 sweep, min of successes —
-    // the same sampling protocol as the prepared column
-    val unpB2b = defs.map(d => (1 to 3).flatMap(_ => runUnprepared(d)))
-    val unpSweep = defs.map(d => runUnprepared(d))
+    val unprepared = fastest(run(_, None))
     val codegen = Seq("cold" -> (cg1 - cg0), "prepared" -> (cg2 - cg1),
       "unprepared" -> (codegenNow() - cg2))
-    val unprepared = defs.zipWithIndex.map { case (d, i) =>
-      val runs = unpB2b(i) ++ unpSweep(i)
-      d.name -> (if (runs.nonEmpty) runs.min else -1.0)
-    }
-
-    // 3-decimal (ms) precision everywhere: keeps the one JSON line
-    // compact — r9's driver-side parse failed on the raw line once
-    // ("parsed": null), and sub-ms digits carry no information at a
-    // 30 ms scheduling floor anyway
-    // floor = wall − taskSec/cores: the share of wall clock NOT
-    // explained by perfectly-parallel execution of the measured task
-    // work — scheduling gaps, AQE materialization barriers, driver-side
-    // broadcast collects, dispatch overhead of sub-ms tasks.
-    val profiles = warmRuns.flatMap { case (n, r) =>
-      r.map { case (wall, p) =>
-        val ideal = p.taskSec / cores
-        val floor = math.max(0.0, wall - ideal)
-        s""""$n":{"stages":${p.stages},"jobs":${p.jobs},""" +
-          s""""task_sec":${r3(p.taskSec)},""" +
-          s""""cpu_sec":${r3(p.cpuSec)},""" +
-          s""""stage_wall_sec":${r3(p.stageWallSec)},""" +
-          s""""floor_sec":${r3(floor)},""" +
-          s""""floor_share":${r3(if (wall > 0) floor / wall else 0.0)}}"""
-      }
-    }.mkString("{", ",", "}")
+    measure.close()
+    def secs(col: Column) =
+      col.map { case (n, r) => n -> r.fold(-1.0)(_._1) }
+    def records(col: Column) =
+      col.flatMap { case (n, r) => r.map(n -> _._2) }
 
     // TWO stdout lines, diagnostics FIRST and the metric line LAST —
     // deliberately. The driver stores only the last ~2 KB of output
@@ -437,10 +360,11 @@ object Bench {
     // whole line always lands inside the tail window; the per-query
     // unprepared/cold columns and stage profiles move to a "diag"
     // line that greps for '"metric"' skip.
-    println(diagLine(unprepared, cold, profiles, failures.toSeq, codegen,
-      bareJobMs))
-    val line = metricLine(warm, total(unprepared), total(cold), cores,
-      rawDir, "multi_row_group_rewrite")
+    println(diagLine(secs(unprepared), cold, Seq("prepared" ->
+      records(warm), "unprepared" -> records(unprepared)), failures.toSeq,
+      codegen, bareJobMs))
+    val line = metricLine(secs(warm), total(secs(unprepared)), total(cold),
+      cores, rawDir, "multi_row_group_rewrite")
     println(line)
     // The driver recovers the metric line from the tail of stdout —
     // but sbt's forked-run logger prefixed every line with "[info] ",

@@ -23,11 +23,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * exceed the run's wall clock; it is a diagnostic, not a partition of
   * wall time.
   *
-  * Listener events arrive asynchronously on the listener bus;
-  * [[quiesce]] polls until all started jobs have ended and the counts
-  * stop moving, so a snapshot taken after an action covers exactly that
-  * action's work. Timing capture happens before quiesce, so the wait
-  * never pollutes the measured wall time.
+  * Listener events arrive asynchronously on the listener bus, so every
+  * reading goes through [[measure]], which waits for all started jobs
+  * to end and the counts to stop moving before and after the run: its
+  * [[StageClock.Receipt]] covers exactly that run's work.
   */
 final class StageClock extends SparkListener {
   private val lock = new Object
@@ -73,42 +72,33 @@ final class StageClock extends SparkListener {
       } yield c - s).getOrElse(0L)
     }
 
-  def reset(): Unit = lock.synchronized {
+  /** Runs `body` as one measured run: waits for the listener bus to
+    * drain earlier work, zeroes the counters, times `body`, drains this
+    * run's events and reads the counters. The drains sit outside the
+    * timed window, so the wait never pollutes the wall time.
+    */
+  def measure[T](body: => T): (T, StageClock.Receipt) = {
+    quiesce(); reset()
+    val t0 = System.nanoTime()
+    val out = body
+    val wallMs = (System.nanoTime() - t0) / 1e6
+    quiesce()
+    (out, lock.synchronized(StageClock.Receipt(wallMs, jobsCount, stages,
+      taskTimeMs / 1e3, cpuTimeNs / 1e9, stageWallMs / 1e3, shuffleRecs,
+      shuffleWriteBytes, maxTaskShuffleReadRecs)))
+  }
+
+  private def reset(): Unit = lock.synchronized {
     stages = 0; jobsCount = 0; taskTimeMs = 0L; cpuTimeNs = 0L
     stageWallMs = 0L; shuffleRecs = 0L; shuffleWriteBytes = 0L
     maxTaskShuffleReadRecs = 0L
   }
 
-  /** Jobs started since the last reset — each job in local mode costs a
-    * measured ~30-45 ms of scheduler floor regardless of task count, so
-    * job count (AQE stage materializations + broadcast builds + the
-    * final job) is the first-order floor model for sub-second queries.
-    */
-  def jobs: Int = lock.synchronized(jobsCount)
-
-  /** Total shuffle records WRITTEN since the last reset — the
-    * candidate-volume proxy the scale-growth property test fits its
-    * exponent over.
-    */
-  def shuffleRecords: Long = lock.synchronized(shuffleRecs)
-
-  /** Total shuffle bytes WRITTEN since the last reset — the wire-cost
-    * meter (the packed-vector tier's saving lives here, not in
-    * parquet-on-disk bytes, which snappy already squeezes).
-    */
-  def shuffleBytes: Long = lock.synchronized(shuffleWriteBytes)
-
-  /** Largest shuffle-read record count of any single task since the
-    * last reset — the skew diagnostic: a hot key that concentrates on
-    * one reducer shows up here long before it OOMs a real executor.
-    */
-  def maxTaskShuffleRead: Long = lock.synchronized(maxTaskShuffleReadRecs)
-
-  /** Wait (bounded) until the listener bus has drained this run's
+  /** Wait (at most 2 s) until the listener bus has drained this run's
     * events: no active jobs and stable counters twice in a row.
     */
-  def quiesce(maxWaitMs: Long = 2000): Unit = {
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
+  private def quiesce(): Unit = {
+    val deadline = System.nanoTime() + 2000L * 1000000L
     var last = (-1, -1L)
     while (System.nanoTime() < deadline) {
       val cur = lock.synchronized {
@@ -119,9 +109,28 @@ final class StageClock extends SparkListener {
       Thread.sleep(5)
     }
   }
+}
 
-  /** (stages, taskSec, cpuSec, stageWallSec) since the last reset. */
-  def snapshot(): (Int, Double, Double, Double) = lock.synchronized {
-    (stages, taskTimeMs / 1e3, cpuTimeNs / 1e9, stageWallMs / 1e3)
-  }
+object StageClock {
+  /** What one [[StageClock.measure]] run did.
+    *
+    *  - `wallMs`: the body's wall clock;
+    *  - `jobs`: jobs started — each job in local mode costs a measured
+    *    ~30-45 ms of scheduler floor regardless of task count, so job
+    *    count (AQE stage materializations + broadcast builds + the
+    *    final job) is the first-order floor model for sub-second runs;
+    *  - `stages`, `taskSec`, `cpuSec`, `stageWallSec`: see the class doc;
+    *  - `shuffleRecords`: shuffle records WRITTEN — the candidate-volume
+    *    proxy the scale-growth property test fits its exponent over;
+    *  - `shuffleBytes`: shuffle bytes WRITTEN — the wire-cost meter
+    *    (the packed-vector tier's saving lives here, not in
+    *    parquet-on-disk bytes, which snappy already squeezes);
+    *  - `maxTaskShuffleRead`: the largest shuffle-read record count of
+    *    any single task — the skew diagnostic: a hot key that
+    *    concentrates on one reducer shows up here long before it OOMs a
+    *    real executor.
+    */
+  final case class Receipt(wallMs: Double, jobs: Int, stages: Int,
+      taskSec: Double, cpuSec: Double, stageWallSec: Double,
+      shuffleRecords: Long, shuffleBytes: Long, maxTaskShuffleRead: Long)
 }

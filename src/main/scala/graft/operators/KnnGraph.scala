@@ -337,7 +337,10 @@ object KnnGraph {
     * (recall pinned in [[graft.KnnGraphSpec]]) while every stage
     * stays keyed — no N² anywhere. The oracle unrolls every round
     * relationally, so candidate membership of each round is pinned,
-    * not recall-gated.
+    * not recall-gated. Its CTEs are MATERIALIZED because round i+1
+    * reads k{i} three times: inlined, DuckDB re-evaluates the whole
+    * prior chain per reference (about 38 s at sf0.01, out of memory at
+    * sf0.1).
     */
   val q213NnDescent: QueryDef = QueryDef(
     "q213_nn_descent",
@@ -345,17 +348,17 @@ object KnnGraph {
       Bitext.qrel(Similarity.normed(s, dir)))).orderBy("a", "b"),
     Some {
       val rounds = (1 to DescentRounds).map { i =>
-        s"""u$i AS (
+        s"""u$i AS MATERIALIZED (
            |  SELECT sx AS u, ty AS v FROM k${i - 1}
            |  UNION SELECT ty AS u, sx AS v FROM k${i - 1}),
-           |c$i AS (
+           |c$i AS MATERIALIZED (
            |  SELECT DISTINCT a.v AS sx, b.v AS ty
            |  FROM u$i a JOIN u$i b ON a.u = b.u AND a.v <> b.v),
-           |p$i AS (
+           |p$i AS MATERIALIZED (
            |  ${Bitext.oracleUcosSelect("c.sx", "c.ty",
               s"c$i c JOIN n x ON x.vec_id = c.sx " +
                 "JOIN n y ON y.vec_id = c.ty")}),
-           |k$i AS (
+           |k$i AS MATERIALIZED (
            |  SELECT sx, ty, ucos FROM (
            |    SELECT sx, ty, ucos, ROW_NUMBER() OVER (
            |      PARTITION BY sx ORDER BY ucos DESC, ty) AS r
@@ -366,27 +369,27 @@ object KnnGraph {
       s"""${Bitext.oracleQuantCte},
          |ce AS (SELECT cid, cv
          |       FROM read_parquet('${graft.Fixtures.ivfCentroidsPath}')),
-         |asn AS (
+         |asn AS MATERIALIZED (
          |  SELECT n.vec_id, ce.cid,
          |    ROW_NUMBER() OVER (PARTITION BY n.vec_id ORDER BY
          |      list_cosine_similarity(v, cv) DESC, ce.cid) AS crnk
          |  FROM n CROSS JOIN ce),
-         |cand AS (
+         |cand AS MATERIALIZED (
          |  SELECT DISTINCT a.vec_id AS sx, b.vec_id AS ty
          |  FROM asn a JOIN asn b ON a.cid = b.cid
          |    AND a.crnk <= $NProbe AND b.crnk <= $NProbe
          |    AND a.vec_id <> b.vec_id),
-         |p0 AS (
+         |p0 AS MATERIALIZED (
          |  ${Bitext.oracleUcosSelect("c.sx", "c.ty",
             "cand c JOIN n x ON x.vec_id = c.sx " +
               "JOIN n y ON y.vec_id = c.ty")}),
-         |k0 AS (
+         |k0 AS MATERIALIZED (
          |  SELECT sx, ty, ucos FROM (
          |    SELECT sx, ty, ucos, ROW_NUMBER() OVER (
          |      PARTITION BY sx ORDER BY ucos DESC, ty) AS r
          |    FROM p0) t WHERE r <= $SearchK),
          |$rounds,
-         |kf AS (
+         |kf AS MATERIALIZED (
          |  SELECT sx, ty, ucos FROM (
          |    SELECT sx, ty, ucos, ROW_NUMBER() OVER (
          |      PARTITION BY sx ORDER BY ucos DESC, ty) AS r

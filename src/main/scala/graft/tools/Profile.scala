@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.{Bench, Caches, QueryDef, Sessions, SparkEntry, StageClock}
+import graft.{Bench, Caches, Measure, QueryDef, Sessions, SparkEntry}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -14,22 +14,20 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   *
   * Once at startup it prints the wall of a bare one-task job (the
   * scheduler floor every job pays). Then, for each query, it does one
-  * unmeasured run and [[Runs]] measured runs under the query's own bench
-  * profile ([[Sessions.setProfile]]), each an unprepared build + plan +
-  * count with every persisted relation dropped first, and prints one
-  * JSON line with each field's `median` (its value in the median run by
-  * `wall_ms`, so the parts of one run are reported together) and `min`:
+  * unmeasured run and [[Runs]] measured runs, each an unprepared
+  * [[Measure]] run (the query's bench profile, every persisted relation
+  * dropped, build + plan + count), and prints one JSON line with each
+  * field of [[Measure.Run.fields]]'s `median` (its value in the median
+  * run by `wall_ms`, so the parts of one run are reported together) and
+  * `min`:
   *
   *  - `build_ms`, `build_jobs`, `build_task_sec`: the DSL build,
   *    including the eager jobs it starts;
-  *  - `optimize_ms` (the count wrapper's analysis plus optimization)
-  *    and `plan_ms` (physical planning) of the same count-shaped
-  *    `QueryExecution` that is then executed, as Bench does;
-  *  - `execute_ms`, and the execution's `jobs`, `stages`, `task_sec`,
-  *    `cpu_sec`, `shuffle_write_bytes` and `max_task_shuffle_read`
-  *    (records) from [[StageClock]];
-  *  - `wall_ms`: the run's wall minus the listener drain between build
-  *    and optimization, so the four `_ms` parts above sum to it;
+  *  - `optimize_ms` (the count wrapper's analysis plus optimization),
+  *    `plan_ms` (physical planning) and `execute_ms`, and the
+  *    execution's `jobs`, `stages`, `task_sec`, `cpu_sec`,
+  *    `shuffle_write_bytes` and `max_task_shuffle_read` (records);
+  *  - `wall_ms`: the sum of the four `_ms` parts;
   *
   * plus every aggregate operator's input → output rows from the last
   * run's SQL metrics (is a map-side partial earning its exchange?).
@@ -99,76 +97,19 @@ object Profile {
     names.map(byName)
   }
 
-  /** Wall of a bare one-task job, after one unmeasured job. */
-  def bareJobMs(spark: SparkSession): Stat = {
-    val sc = spark.sparkContext
-    sc.parallelize(Seq(1), 1).count()
-    Stat.of((1 to Runs).map { _ =>
-      val t0 = System.nanoTime()
-      sc.parallelize(Seq(1), 1).count()
-      (System.nanoTime() - t0) / 1e6
-    })
-  }
-
   def profile(spark: SparkSession, sfDir: String, defs: Seq[QueryDef])
       : Seq[Record] = {
-    val clock = new StageClock
-    spark.sparkContext.addSparkListener(clock)
-    val profileKeys = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.shuffle.partitions")
-    val base = profileKeys.map(k => k -> spark.conf.get(k))
-    val setProfile = Sessions.setProfile(spark)
+    val m = new Measure(spark, sfDir)
     try defs.map { d =>
-      setProfile(d)
-      run(spark, sfDir, d, clock)
-      val runs = (1 to Runs).map(_ => run(spark, sfDir, d, clock))
-      val (_, rows, qe) = runs.last
-      Record(d.name, d.lowLatency, rows, stats(runs.map(_._1)),
-        aggregates(qe.executedPlan), qe.executedPlan.toString)
+      m.run(d)
+      val runs = (1 to Runs).map(_ => m.run(d))
+      val last = runs.last
+      Record(d.name, d.lowLatency, last.rows, stats(runs.map(_.fields)),
+        aggregates(last.qe.executedPlan), last.qe.executedPlan.toString)
     } finally {
-      base.foreach { case (k, v) => spark.conf.set(k, v) }
+      m.close()
       Caches.unpersistAll(spark)
-      spark.sparkContext.removeSparkListener(clock)
     }
-  }
-
-  /** One unprepared run: (fields in print order, row count, the
-    * executed query).
-    */
-  private def run(spark: SparkSession, sfDir: String, d: QueryDef,
-      clock: StageClock)
-      : (Seq[(String, Double)], Long, QueryExecution) = {
-    def ms(from: Long, to: Long): Double = (to - from) / 1e6
-    Caches.unpersistAll(spark)
-    clock.quiesce(); clock.reset()
-    val t0 = System.nanoTime()
-    val df = d.build(spark, sfDir)
-    val t1 = System.nanoTime()
-    // untimed: the listener bus delivers the build's jobs
-    clock.quiesce()
-    val buildJobs = clock.jobs
-    val buildTaskSec = clock.snapshot()._2
-    clock.reset()
-    val t2 = System.nanoTime()
-    val qe = df.groupBy().count().queryExecution
-    qe.optimizedPlan
-    val t3 = System.nanoTime()
-    qe.executedPlan
-    val t4 = System.nanoTime()
-    val rows = qe.executedPlan.executeCollect().head.getLong(0)
-    val t5 = System.nanoTime()
-    clock.quiesce()
-    val (stages, taskSec, cpuSec, _) = clock.snapshot()
-    (Seq("build_ms" -> ms(t0, t1), "build_jobs" -> buildJobs.toDouble,
-      "build_task_sec" -> buildTaskSec, "optimize_ms" -> ms(t2, t3),
-      "plan_ms" -> ms(t3, t4), "execute_ms" -> ms(t4, t5),
-      "wall_ms" -> (ms(t0, t5) - ms(t1, t2)),
-      "jobs" -> clock.jobs.toDouble, "stages" -> stages.toDouble,
-      "task_sec" -> taskSec, "cpu_sec" -> cpuSec,
-      "shuffle_write_bytes" -> clock.shuffleBytes.toDouble,
-      "max_task_shuffle_read" -> clock.maxTaskShuffleRead.toDouble),
-      rows, qe)
   }
 
   /** Every aggregate operator in an executed plan, including those in
@@ -219,7 +160,7 @@ object Profile {
     val spark = Sessions.build("graft-profile")
     spark.sparkContext.setLogLevel("ERROR")
     try {
-      println(s"""{"bare_job_ms":${bareJobMs(spark).json}}""")
+      println(s"""{"bare_job_ms":${Stat.of(Measure.bareJobMs(spark)).json}}""")
       // one query at a time, so each plan prints under its record
       defs.foreach { d =>
         profile(spark, args(0), Seq(d)).foreach { r =>

@@ -14,10 +14,12 @@ import org.apache.spark.sql.functions._
   *   interactive: AQE off, 8 shuffle partitions (what Bench times
   *                lowLatency entries with)
   *
-  * Every sample drops the registered caches first, so each run pays
-  * the full pipeline — gate, content-keyed dedup, shingle explode +
-  * bloom decontamination, α-budget, selection, packing — exactly the
-  * corpus-exchange work the flip's critics point at. The corpus is
+  * Every sample is one unprepared `graft.Measure` run under the arm's
+  * profile (`Sessions.setProfile` on a copy of q147's entry with
+  * `lowLatency` set per arm). It drops the registered caches first, so
+  * each run pays the full pipeline — gate, content-keyed dedup, shingle
+  * explode + bloom decontamination, α-budget, selection, packing —
+  * exactly the corpus-exchange work the flip's critics point at. The corpus is
   * deterministic (hash-derived words, ~10% planted exact duplicates,
   * 5 langs), written once per process under Scratch.
   *
@@ -29,19 +31,17 @@ object Q147ScaleReceipt {
     val iters = if (args.length > 1) args(1).toInt else 3
     val spark = graft.Sessions.build("graft-q147-scale")
     spark.sparkContext.setLogLevel("ERROR")
-    val clock = new graft.StageClock
-    spark.sparkContext.addSparkListener(clock)
 
     // deterministic synthetic documents: 20–80 words from a 1000-word
     // vocab; ~10% of rows (ids ≡ 0 mod 10) re-emit one of 100 planted
     // contents (id mod 1000 ∈ {0,10,…,990} — the exact-dup
     // population, ~nDocs/1000 copies each), lang varies ACROSS
     // duplicate rows so the min_by(lang) payload is exercised.
-    // Premise of the A/B: the 'adaptive' arm rebuilds Bench's
-    // adaptive-tier width from Sessions.cpus, the width both this
-    // session and Bench's take (SPARK_GRAFT_CPUS, else every
-    // processor); set SPARK_GRAFT_CPUS to the tier you mean to
-    // measure.
+    // Premise of the A/B: both arms run through Bench's own
+    // graft.Measure, so the 'adaptive' arm gets this session's base
+    // width, built from Sessions.cpus like Bench's (SPARK_GRAFT_CPUS,
+    // else every processor); set SPARK_GRAFT_CPUS to the tier you mean
+    // to measure.
     val dir = graft.Scratch.layout("q147scale", s"n$nDocs", "sf")
     val docsPath = s"$dir/documents.parquet"
     spark.range(nDocs)
@@ -61,26 +61,13 @@ object Q147ScaleReceipt {
 
     val defQ147 = graft.SparkEntry.defs
       .find(_.name == "q147_training_pipeline").get
+    val measure = new graft.Measure(spark, dir)
 
-    def setProfile(interactive: Boolean): Unit = {
-      val aqe = (!interactive).toString
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-      spark.conf.set("spark.sql.shuffle.partitions",
-        if (interactive) "8" else graft.Sessions.cpus.toInt.min(16)
-          .toString)
-    }
-
+    // every sample drops the registered caches and pays the pipeline
     def run(interactive: Boolean): (Double, Double, Int, Long) = {
-      setProfile(interactive)
-      graft.Caches.unpersistAll(spark) // every sample pays the pipeline
-      clock.quiesce(); clock.reset()
-      val t0 = System.nanoTime()
-      val rows = defQ147.build(spark, dir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      clock.quiesce()
-      val (_, task, _, _) = clock.snapshot()
-      (wall, task, clock.jobs, rows)
+      val r = measure.run(defQ147.copy(lowLatency = interactive))
+      (r.wallMs / 1e3, r.build.taskSec + r.exec.taskSec,
+        r.build.jobs + r.exec.jobs, r.rows)
     }
 
     // one warm-up each (codegen/JIT), then interleaved samples

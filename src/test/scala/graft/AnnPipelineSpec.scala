@@ -277,12 +277,10 @@ class AnnPipelineSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       def shuffleOf(slice: org.apache.spark.sql.DataFrame): Long = {
-        clock.quiesce(); clock.reset()
-        val got = operators.IvfPqPipeline.appendCodes(slice, coarse,
-          book).count()
-        clock.quiesce()
+        val (got, r) = clock.measure(operators.IvfPqPipeline
+          .appendCodes(slice, coarse, book).count())
         assert(got > 0, "vacuous append measurement")
-        clock.shuffleRecords
+        r.shuffleRecords
       }
       // the r18 join-free append spelling (assign → residual →
       // explode → argmin, all in-row) shuffles NO data rows at all —
@@ -450,11 +448,8 @@ class AnnPipelineSpec extends AnyFunSuite {
       def jobsOf(tombs: org.apache.spark.sql.DataFrame,
           affected: Seq[Long]): Int = {
         val layout = freshLayout()
-        clock.quiesce(); clock.reset()
-        operators.IvfPqPipeline.compactTombstones(spark, layout,
-          tombs, affected)
-        clock.quiesce()
-        clock.jobs
+        clock.measure(operators.IvfPqPipeline.compactTombstones(spark,
+          layout, tombs, affected))._2.jobs
       }
       val jobsOne = jobsOf(
         assigned.filter(col("lcid") === oneList).select(col("vec_id")),

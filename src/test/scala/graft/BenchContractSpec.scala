@@ -71,7 +71,7 @@ class BenchContractSpec extends AnyFunSuite {
   test("the diag line carries classes compiled and compile seconds for " +
       "the cold, prepared and unprepared columns") {
     import Bench.CodegenCost
-    val line = Bench.diagLine(Seq("q01" -> 0.5), Seq("q01" -> 1.25), "{}",
+    val line = Bench.diagLine(Seq("q01" -> 0.5), Seq("q01" -> 1.25), Nil,
       Seq("q04" -> "boom"), Seq("cold" -> CodegenCost(148, 0.98765),
         "prepared" -> CodegenCost(0, 0.0),
         "unprepared" -> CodegenCost(0, 0.0)), 31.5)
@@ -83,6 +83,40 @@ class BenchContractSpec extends AnyFunSuite {
       """"unprepared":{"classes":0,"compile_sec":0.0}}"""))
     assert(line.count(_ == '{') == line.count(_ == '}'))
     assert(line.count(_ == '"') % 2 == 0)
+  }
+
+  test("the diag line's per-query records parse as JSON and hold every " +
+      "field for every query in both columns") {
+    val spark = SparkTestSession.spark.newSession()
+    val defs = tools.Profile.resolve(Seq("q07_group_agg", "q37_asof_join"))
+    val measure = new Measure(spark, "/root/testdata/sf0.001")
+    val (prepared, unprepared) = try {
+      val cold = defs.map(d => measure.run(d))
+      (defs.zip(cold).map { case (d, c) => d.name -> Bench.record(
+        measure.run(d, Some(c)), 4) },
+        defs.map(d => d.name -> Bench.record(measure.run(d), 4)))
+    } finally {
+      measure.close()
+      Caches.unpersistAll(spark)
+    }
+    val line = Bench.diagLine(defs.map(_.name -> 0.5),
+      defs.map(_.name -> 1.25),
+      Seq("prepared" -> prepared, "unprepared" -> unprepared),
+      Seq("q04" -> "boom"), Nil, 31.5)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(line)
+    val fields = Seq("rows", "build_ms", "build_jobs", "build_task_sec",
+      "optimize_ms", "plan_ms", "execute_ms", "wall_ms", "jobs", "stages",
+      "task_sec", "cpu_sec", "shuffle_write_bytes",
+      "max_task_shuffle_read", "floor_sec", "floor_share")
+    for (column <- Seq("prepared", "unprepared"); d <- defs) {
+      val rec = json.path("runs").path(column).path(d.name)
+      fields.foreach(f =>
+        assert(rec.path(f).isNumber, s"$column/${d.name}/$f: $line"))
+      assert(rec.size == fields.size, s"$column/${d.name}: $rec")
+      assert(rec.path("rows").asLong > 0)
+    }
+    assert(json.path("failures").path("q04").asText == "boom")
   }
 
   test("codegenNow counts a class compiled between two readings") {

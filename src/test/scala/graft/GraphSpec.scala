@@ -200,11 +200,8 @@ class GraphSpec extends AnyFunSuite {
     try {
       val sh = Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
         .map { d =>
-          clock.quiesce(); clock.reset()
-          SparkEntry.queries("q208_supplier_pagerank")(spark, d)
-            .collect()
-          clock.quiesce()
-          val s = clock.shuffleRecords
+          val s = clock.measure(SparkEntry.queries(
+            "q208_supplier_pagerank")(spark, d).collect())._2.shuffleRecords
           Caches.clear(spark)
           s
         }

@@ -37,11 +37,8 @@ class KmeansSpec extends AnyFunSuite {
         .repartition(parts).transform(Caches.persist)
       n.count()
       val init = operators.Kmeans.initCents(n)
-      clock.quiesce(); clock.reset()
-      operators.Kmeans.updated(
-        operators.Kmeans.withAssignment(n, init))
-      clock.quiesce()
-      val recs = clock.shuffleRecords
+      val recs = clock.measure(operators.Kmeans.updated(
+        operators.Kmeans.withAssignment(n, init)))._2.shuffleRecords
       Caches.release(n)
       // partial agg emits ≤ K·Dim rows per task; 2x slack for the
       // final-merge side of the exchange

@@ -406,11 +406,9 @@ class KnnGraphSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(clock)
     try {
       Caches.unpersistAll(spark)
-      clock.quiesce(); clock.reset()
-      q217(spark, dir)
-      clock.quiesce()
-      assert(clock.jobs <= 2, s"q217's build ran ${clock.jobs} jobs")
-      info(s"q217 build jobs: ${clock.jobs}")
+      val jobs = clock.measure(q217(spark, dir))._2.jobs
+      assert(jobs <= 2, s"q217's build ran $jobs jobs")
+      info(s"q217 build jobs: $jobs")
     } finally spark.sparkContext.removeSparkListener(clock)
   }
 
@@ -456,13 +454,9 @@ class KnnGraphSpec extends AnyFunSuite {
     val clock = new StageClock
     spark.sparkContext.addSparkListener(clock)
     try {
-      def jobsFor(k: Int): Int = {
-        clock.quiesce(); clock.reset()
-        KnnGraph.kcenterSelectComposable(spark, rel, k,
-          KnnGraph.KcenterParts).count()
-        clock.quiesce()
-        clock.jobs
-      }
+      def jobsFor(k: Int): Int =
+        clock.measure(KnnGraph.kcenterSelectComposable(spark, rel, k,
+          KnnGraph.KcenterParts).count())._2.jobs
       val j8 = jobsFor(8)
       val j16 = jobsFor(16)
       assert(j16 <= j8,
@@ -512,13 +506,10 @@ class KnnGraphSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(clock)
     try {
       def run(b: Long): (Seq[(Int, Long, Long)], Int) = {
-        clock.quiesce(); clock.reset()
-        val got = KnnGraph.kcenterSelectComposable(spark, rel, k,
-          parts, b).collect()
-          .map(r => (r.getAs[Int]("sel"), r.getAs[Long]("vec_id"),
-            r.getAs[Long]("farthest_u"))).toSeq
-        clock.quiesce()
-        (got, clock.jobs)
+        val (got, receipt) = clock.measure(KnnGraph
+          .kcenterSelectComposable(spark, rel, k, parts, b).collect())
+        (got.map(r => (r.getAs[Int]("sel"), r.getAs[Long]("vec_id"),
+          r.getAs[Long]("farthest_u"))).toSeq, receipt.jobs)
       }
       val (esc, jobsEsc) = run(budget)
       val (flat, jobsFlat) = run(KnnGraph.KcenterDriverMaxUnion)

@@ -81,15 +81,11 @@ class PackedVectorSpec extends AnyFunSuite {
     val clock = new StageClock
     spark.sparkContext.addSparkListener(clock)
     val (wa, wp) = try {
-      def shuffled(df: org.apache.spark.sql.DataFrame): Long = {
-        clock.quiesce(); clock.reset()
-        // noop sink consumes whole rows — count() would let column
-        // pruning strip the vector payload below the exchange
-        df.repartition(16, col("vec_id"))
-          .write.mode("overwrite").format("noop").save()
-        clock.quiesce()
-        clock.shuffleBytes
-      }
+      // noop sink consumes whole rows — count() would let column
+      // pruning strip the vector payload below the exchange
+      def shuffled(df: org.apache.spark.sql.DataFrame): Long =
+        clock.measure(df.repartition(16, col("vec_id"))
+          .write.mode("overwrite").format("noop").save())._2.shuffleBytes
       (shuffled(big),
         shuffled(big.select(col("vec_id"),
           VectorOps.packF32(col("qv")).as("pb"))))

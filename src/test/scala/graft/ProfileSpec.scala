@@ -40,7 +40,7 @@ class ProfileSpec extends AnyFunSuite {
     spark.conf.set(shuffle, "4")
     val defs = Profile.resolve(Seq("q07_group_agg", "q37_asof_join"))
     assert(defs.map(_.lowLatency) == Seq(true, false))
-    assert(Profile.bareJobMs(spark).min > 0)
+    assert(Measure.bareJobMs(spark).min > 0)
     val records = Profile.profile(spark, dir, defs)
     assert(records.map(_.query) == defs.map(_.name))
     // the session's own settings are restored afterwards
@@ -64,6 +64,23 @@ class ProfileSpec extends AnyFunSuite {
       assert(stat("execute_ms").min > 0 && stat("jobs").min >= 1)
       assert(r.aggregates.exists(a => a.out >= 0), r.aggregates)
     }
+    // the one run function: a prepared re-run (q07's physical clone,
+    // q37's re-bound optimized plan) reports the unprepared run's rows,
+    // and each run's four parts sum to its wall
+    val measure = new Measure(spark, dir)
+    try defs.zip(records).foreach { case (d, r) =>
+      val unprepared = measure.run(d)
+      val prepared = measure.run(d, Some(unprepared))
+      assert(Seq(unprepared.rows, prepared.rows) == Seq(r.rows, r.rows),
+        d.name)
+      Seq(unprepared, prepared).foreach { run =>
+        val parts =
+          run.build.wallMs + run.optimizeMs + run.planMs + run.executeMs
+        assert(math.abs(parts - run.wallMs) <= math.max(0.05 * run.wallMs,
+          5.0), s"${d.name}: parts $parts ms vs wall ${run.wallMs} ms")
+      }
+    } finally measure.close()
+    assert(settings == Seq("true", "true", "4"))
     val Seq(low, adaptive) = records
     assert(low.json.contains(""""profile":"low_latency""""))
     assert(!low.finalPlan.contains("AdaptiveSparkPlan"), low.finalPlan)

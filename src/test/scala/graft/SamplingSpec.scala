@@ -93,15 +93,13 @@ class SamplingSpec extends AnyFunSuite {
     val clock = new StageClock
     spark.sparkContext.addSparkListener(clock)
     try {
-      clock.quiesce(); clock.reset()
-      val planSmall = operators.Sampling.pps(small, 11L)
-      val planBig = operators.Sampling.pps(big, 11L)
-      clock.quiesce()
+      val ((planSmall, planBig), built) = clock.measure(
+        (operators.Sampling.pps(small, 11L), operators.Sampling.pps(big, 11L)))
       // r17's dispatcher ran a full d.count() pass before the sampling
       // plan existed (VERDICT r17 What's-wrong #2); construction must
       // now be pure plan building
-      assert(clock.jobs == 0,
-        s"pps construction launched ${clock.jobs} driver jobs")
+      assert(built.jobs == 0,
+        s"pps construction launched ${built.jobs} driver jobs")
       assert(rows(planSmall) == rows(operators.Sampling.ppsGlobal(small, 11L)))
       assert(rows(planBig) == rows(operators.Sampling.ppsGlobal(big, 11L)))
     } finally spark.sparkContext.removeSparkListener(clock)
@@ -120,14 +118,10 @@ class SamplingSpec extends AnyFunSuite {
       val w = operators.Sampling.ShardWidth // 256 -> 32 shards
       val d = synthCorpus(n).cache()
       d.count()
-      clock.quiesce(); clock.reset()
-      operators.Sampling.ppsGlobal(d, 40L).count()
-      clock.quiesce()
-      val globalMax = clock.maxTaskShuffleRead
-      clock.reset()
-      operators.Sampling.ppsSharded(d, 40L).count()
-      clock.quiesce()
-      val shardedMax = clock.maxTaskShuffleRead
+      val globalMax = clock.measure(
+        operators.Sampling.ppsGlobal(d, 40L).count())._2.maxTaskShuffleRead
+      val shardedMax = clock.measure(
+        operators.Sampling.ppsSharded(d, 40L).count())._2.maxTaskShuffleRead
       d.unpersist()
       // the single-partition window reads every corpus row in one task
       assert(globalMax >= n,

@@ -165,16 +165,15 @@ class ScaleGrowthSpec extends AnyFunSuite {
       // (query -> per-scale (shuffleRows, resultRows))
       val measured = GrowthQueries.map { case (q, expMax, yieldCap) =>
         val rows = dirs.map { dir =>
-          clock.quiesce(); clock.reset()
           // collect(), not count(): under count() Catalyst prunes all
           // unreferenced aggregates and can then ELIMINATE a final
           // left join outright (q152's per-doc report collapses to a
           // scan of documents — measured 501 vs 411k shuffle records),
           // which would fit the exponent of a plan that never ran
-          val out = SparkEntry.queries(q)(spark, dir).collect().length
-            .toLong
-          clock.quiesce()
-          val sh = clock.shuffleRecords
+          val (out, receipt) = clock.measure {
+            SparkEntry.queries(q)(spark, dir).collect().length.toLong
+          }
+          val sh = receipt.shuffleRecords
           Caches.clear(spark)
           (sh, out)
         }
@@ -218,11 +217,11 @@ class ScaleGrowthSpec extends AnyFunSuite {
       // scale claim is the SHUFFLE exponent.
       {
         val rows = dirs.map { dir =>
-          clock.quiesce(); clock.reset()
-          val out = operators.Similarity.oneSidedBanded(spark, dir,
-            col("vec_id") % 10 === 1 && col("vec_id") < 500).count()
-          clock.quiesce()
-          val sh = clock.shuffleRecords
+          val (out, receipt) = clock.measure {
+            operators.Similarity.oneSidedBanded(spark, dir,
+              col("vec_id") % 10 === 1 && col("vec_id") < 500).count()
+          }
+          val sh = receipt.shuffleRecords
           Caches.clear(spark)
           (sh, out)
         }
@@ -276,31 +275,31 @@ class ScaleGrowthSpec extends AnyFunSuite {
       {
         import org.apache.spark.sql.expressions.Window
         val rows = dirs.map { dir =>
-          clock.quiesce(); clock.reset()
-          val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-          val d = spark.read.parquet(s"$dir/documents.parquet")
-            .select(col("lang"), col("doc_id"),
-              transform(filter(split(col("text"), " "), _ =!= ""),
-                t => pmod(hash(t), lit(1000))).as("ids"))
-            .withColumn("nt", size(col("ids")).cast("long"))
-            .withColumn("cum_excl",
-              coalesce(sum(col("nt")).over(w), lit(0L)))
-          val out = d.select(col("lang"), col("doc_id"),
-              col("cum_excl"),
-              posexplode(col("ids")).as(Seq("pos", "id")))
-            .withColumn("off", col("cum_excl") + col("pos"))
-            .withColumn("bin", expr("off div 2048"))
-            .groupBy(col("lang"), col("bin"))
-            .agg(count(lit(1)).as("n_tokens"),
-              md5(array_join(
-                transform(array_sort(collect_list(
-                  struct(col("off"), col("id")))), x =>
-                  x.getField("id").cast("string")), ":")
-                .cast("binary")).as("seq_digest"))
-            .collect().length.toLong
-          clock.quiesce()
-          val sh = clock.shuffleRecords
+          val (out, receipt) = clock.measure {
+            val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
+              .rowsBetween(Window.unboundedPreceding, -1)
+            val d = spark.read.parquet(s"$dir/documents.parquet")
+              .select(col("lang"), col("doc_id"),
+                transform(filter(split(col("text"), " "), _ =!= ""),
+                  t => pmod(hash(t), lit(1000))).as("ids"))
+              .withColumn("nt", size(col("ids")).cast("long"))
+              .withColumn("cum_excl",
+                coalesce(sum(col("nt")).over(w), lit(0L)))
+            d.select(col("lang"), col("doc_id"),
+                col("cum_excl"),
+                posexplode(col("ids")).as(Seq("pos", "id")))
+              .withColumn("off", col("cum_excl") + col("pos"))
+              .withColumn("bin", expr("off div 2048"))
+              .groupBy(col("lang"), col("bin"))
+              .agg(count(lit(1)).as("n_tokens"),
+                md5(array_join(
+                  transform(array_sort(collect_list(
+                    struct(col("off"), col("id")))), x =>
+                    x.getField("id").cast("string")), ":")
+                  .cast("binary")).as("seq_digest"))
+              .collect().length.toLong
+          }
+          val sh = receipt.shuffleRecords
           Caches.clear(spark)
           (sh, out)
         }
@@ -399,12 +398,12 @@ class ScaleGrowthSpec extends AnyFunSuite {
             .as("v"))
           .withColumn("nrm",
             graft.functions.VectorOps.l2norm(col("v")))
-        clock.quiesce(); clock.reset()
-        val found = operators.Similarity.wideBandNeardup(e, planes, 0.9)
-          .select("v1", "v2").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        clock.quiesce()
-        val sh = clock.shuffleRecords
+        val (found, receipt) = clock.measure {
+          operators.Similarity.wideBandNeardup(e, planes, 0.9)
+            .select("v1", "v2").collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+        }
+        val sh = receipt.shuffleRecords
         Caches.clear(spark)
         val trueTwins = (0L until n.toLong)
           .filter(id => id % 10 == 1 && twinCosine(id) > 0.9)
@@ -491,12 +490,12 @@ class ScaleGrowthSpec extends AnyFunSuite {
             .as("v"))
           .withColumn("nrm",
             graft.functions.VectorOps.l2norm(col("v")))
-        clock.quiesce(); clock.reset()
-        val found = operators.Similarity.wideBandNeardup(e, planes, 0.4)
-          .select("v1", "v2").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        clock.quiesce()
-        val sh = clock.shuffleRecords
+        val (found, receipt) = clock.measure {
+          operators.Similarity.wideBandNeardup(e, planes, 0.4)
+            .select("v1", "v2").collect()
+            .map(r => (r.getLong(0), r.getLong(1))).toSet
+        }
+        val sh = receipt.shuffleRecords
         Caches.clear(spark)
         val trueTwins = (0L until n.toLong)
           .filter(id => id % 10 == 1 && tau04TwinCosine(id) > 0.4)
@@ -555,10 +554,10 @@ class ScaleGrowthSpec extends AnyFunSuite {
         ("q122_heavy_hitters", 20000L))
       pins.foreach { case (q, cap) =>
         val rows = dirs.map { dir =>
-          clock.quiesce(); clock.reset()
-          SparkEntry.queries(q)(spark, dir).count()
-          clock.quiesce()
-          val sh = clock.shuffleRecords
+          val (_, receipt) = clock.measure {
+            SparkEntry.queries(q)(spark, dir).count()
+          }
+          val sh = receipt.shuffleRecords
           Caches.clear(spark)
           sh
         }
@@ -609,10 +608,10 @@ class ScaleGrowthSpec extends AnyFunSuite {
       val scales = Seq(500, 2000, 8000)
       val measured = scales.map { n =>
         val dir = capCorpus(n)
-        clock.quiesce(); clock.reset()
-        SparkEntry.queries("q126_source_cap")(spark, dir).count()
-        clock.quiesce()
-        val maxTask = clock.maxTaskShuffleRead
+        val (_, receipt) = clock.measure {
+          SparkEntry.queries("q126_source_cap")(spark, dir).count()
+        }
+        val maxTask = receipt.maxTaskShuffleRead
         // The hot source has 0.9N rows. Phase 1 partitions on
         // (source, doc_id % 32), so no phase-1 task reads more than a
         // ~1/32 slice of it (2.5x slack: co-resident groups +
@@ -690,11 +689,11 @@ class ScaleGrowthSpec extends AnyFunSuite {
       Seq(500, 2000, 8000).foreach { n =>
         val dir = genCorpus(n)
         def run(q: String): (Long, Seq[String]) = {
-          clock.quiesce(); clock.reset()
-          val rows = SparkEntry.queries(q)(spark, dir)
-            .collect().map(_.mkString("|")).toSeq
-          clock.quiesce()
-          val sh = clock.shuffleRecords
+          val (rows, receipt) = clock.measure {
+            SparkEntry.queries(q)(spark, dir)
+              .collect().map(_.mkString("|")).toSeq
+          }
+          val sh = receipt.shuffleRecords
           Caches.clear(spark)
           (sh, rows)
         }
@@ -730,11 +729,11 @@ class ScaleGrowthSpec extends AnyFunSuite {
     try {
       val rows = Seq(500, 2000, 8000).map { n =>
         val dir = genCorpus(n)
-        clock.quiesce(); clock.reset()
-        val out = SparkEntry.queries("q147_training_pipeline")(spark, dir)
-          .collect()
-        clock.quiesce()
-        val sh = clock.shuffleRecords
+        val (out, receipt) = clock.measure {
+          SparkEntry.queries("q147_training_pipeline")(spark, dir)
+            .collect()
+        }
+        val sh = receipt.shuffleRecords
         Caches.clear(spark)
         (sh, out.map(_.getAs[Long]("selected")).sum)
       }
@@ -765,11 +764,11 @@ class ScaleGrowthSpec extends AnyFunSuite {
     try {
       val rows = Seq(500, 2000, 8000).map { n =>
         val dir = genCorpus(n)
-        clock.quiesce(); clock.reset()
-        val out = SparkEntry.queries("q165_modern_pipeline")(spark, dir)
-          .collect()
-        clock.quiesce()
-        val sh = clock.shuffleRecords
+        val (out, receipt) = clock.measure {
+          SparkEntry.queries("q165_modern_pipeline")(spark, dir)
+            .collect()
+        }
+        val sh = receipt.shuffleRecords
         Caches.clear(spark)
         (sh, out.map(_.getAs[Long]("selected")).sum)
       }
@@ -821,13 +820,13 @@ class ScaleGrowthSpec extends AnyFunSuite {
         val r0 = n / (6.0 * sMod) // expected sample rank of the cutoff
         val margin = math.ceil(3 * math.sqrt(r0)).toLong + 2
         def run(arm: String): (Long, Set[(String, Long)]) = {
-          clock.quiesce(); clock.reset()
-          val out = operators.TextAnalysis.thresholdSelect(docs, "lang",
-            "hh", "doc_id", takes, sampleMod = sMod, margin = margin,
-            forceArm = Some(arm)).select("lang", "doc_id").collect()
-            .map(r => (r.getString(0), r.getLong(1))).toSet
-          clock.quiesce()
-          (clock.maxTaskShuffleRead, out)
+          val (out, receipt) = clock.measure {
+            operators.TextAnalysis.thresholdSelect(docs, "lang",
+              "hh", "doc_id", takes, sampleMod = sMod, margin = margin,
+              forceArm = Some(arm)).select("lang", "doc_id").collect()
+              .map(r => (r.getString(0), r.getLong(1))).toSet
+          }
+          (receipt.maxTaskShuffleRead, out)
         }
         val (winMax, winRows) = run("window")
         val (thrMax, thrRows) = run("threshold")
@@ -958,13 +957,13 @@ class ScaleGrowthSpec extends AnyFunSuite {
           packed(off) = math.sqrt(acc)
         }
         val e = operators.Similarity.normed(spark, dir)
-        clock.quiesce(); clock.reset()
-        val ledger = operators.Similarity
-          .semanticDedupLedger(e,
-            graft.plans.FrozenTable.ofDoubles(spark, packed, k), 0.9)
-          .collect()
-        clock.quiesce()
-        val sh = clock.shuffleRecords
+        val (ledger, receipt) = clock.measure {
+          operators.Similarity
+            .semanticDedupLedger(e,
+              graft.plans.FrozenTable.ofDoubles(spark, packed, k), 0.9)
+            .collect()
+        }
+        val sh = receipt.shuffleRecords
         Caches.clear(spark)
         (sh, ledger.map(_.getAs[Long]("dropped")).sum,
           ledger.map(_.getAs[Long]("cluster_size")).sum)
@@ -1040,13 +1039,13 @@ class ScaleGrowthSpec extends AnyFunSuite {
           }.toDF("vec_id", "v")
             .withColumn("nrm",
               graft.functions.VectorOps.l2norm(col("v"))))
-        clock.quiesce(); clock.reset()
-        val edges = operators.KnnGraph.mutualTopK(
-          operators.KnnGraph.probedScores(spark, e,
-            graft.plans.FrozenTable.ofDoubles(spark, packed, k)))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        clock.quiesce()
-        val sh = clock.shuffleRecords
+        val (edges, receipt) = clock.measure {
+          operators.KnnGraph.mutualTopK(
+            operators.KnnGraph.probedScores(spark, e,
+              graft.plans.FrozenTable.ofDoubles(spark, packed, k)))
+            .collect().map(r => (r.getLong(0), r.getLong(1)))
+        }
+        val sh = receipt.shuffleRecords
         Caches.clear(spark)
         val inCluster = edges.count { case (a, b) => a / 32 == b / 32 }
         (n, sh, edges.length, inCluster)
@@ -1108,13 +1107,13 @@ class ScaleGrowthSpec extends AnyFunSuite {
             .withColumn("nrm",
               graft.functions.VectorOps.l2norm(col("v"))))
           .localCheckpoint()
-        clock.quiesce(); clock.reset()
-        val edges = operators.KnnGraph.mutualize(
-          operators.KnnGraph.nnDescent(spark, e,
-            packed = graft.plans.FrozenTable.ofDoubles(spark, packed, k)))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        clock.quiesce()
-        val sh = clock.shuffleRecords
+        val (edges, receipt) = clock.measure {
+          operators.KnnGraph.mutualize(
+            operators.KnnGraph.nnDescent(spark, e,
+              packed = graft.plans.FrozenTable.ofDoubles(spark, packed, k)))
+            .collect().map(r => (r.getLong(0), r.getLong(1)))
+        }
+        val sh = receipt.shuffleRecords
         Caches.releaseLocalCheckpoint(e)
         Caches.clear(spark)
         val inCluster = edges.count { case (a, b) => a / 32 == b / 32 }

@@ -158,14 +158,12 @@ class SketchesSpec extends AnyFunSuite {
       val g = operators.Sketches.shingles(spark, dir)
         .repartition(parts).persist()
       g.count()
-      clock.quiesce(); clock.reset()
-      val est = operators.Sketches.kmvEstimate(g).collect()
-      clock.quiesce()
-      val sketchRecs = clock.shuffleRecords
-      clock.reset()
-      val exact = g.select(col("lang"), col("sh")).distinct().count()
-      clock.quiesce()
-      val exactRecs = clock.shuffleRecords
+      val (est, sketch) =
+        clock.measure(operators.Sketches.kmvEstimate(g).collect())
+      val sketchRecs = sketch.shuffleRecords
+      val (exact, exactRun) = clock.measure(
+        g.select(col("lang"), col("sh")).distinct().count())
+      val exactRecs = exactRun.shuffleRecords
       g.unpersist()
       val langs = est.length
       // partial buffers: ≤ one k-vector row per (task, lang), counted

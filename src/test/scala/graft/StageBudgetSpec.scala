@@ -3,7 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Executed stage/job budgets for the most expensive headline queries —
-  * the CI face of Bench's `StageClock` attribution.
+  * the CI face of Bench's attribution: each query is one unprepared
+  * [[Measure]] run, whose build and execution stages and jobs count
+  * together.
   *
   * The r8 q91 regression was exactly a silent stage-count double: a
   * dropped persist made both self-join sides rebuild the whole index
@@ -91,29 +93,21 @@ class StageBudgetSpec extends AnyFunSuite {
 
   test("the pinned expensive headline queries keep their executed " +
       "stage/job budgets under the bench profile") {
-    val clock = new StageClock
-    spark.sparkContext.addSparkListener(clock)
-    val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    val co0 = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    val sh0 = spark.conf.get("spark.sql.shuffle.partitions")
-    val setProfile = Sessions.setProfile(spark)
     // q174's budget pins the SERVE path — ensure the on-disk index
     // artifact exists before measuring, or suite ordering decides
     // whether the build's write stages land in this spec's count
     // (ArtifactCache publishes once per content stamp; any suite that
     // runs q45/q174 first would otherwise absorb them instead)
     operators.Similarity.annIndexLayout(spark, dir)
+    val measure = new Measure(spark, dir)
     try {
       val report = budgets.map { case (name, maxS, maxJ) =>
         val d = SparkEntry.benchDefs.find(_.name == name)
           .getOrElse(fail(s"$name is not a bench query"))
-        setProfile(d)
         Caches.clear(spark) // budgets include the cache-build stages
-        clock.quiesce(); clock.reset()
-        d.build(spark, dir).count()
-        clock.quiesce()
-        val (stages, _, _, _) = clock.snapshot()
-        val jobs = clock.jobs
+        val r = measure.run(d)
+        val stages = r.build.stages + r.exec.stages
+        val jobs = r.build.jobs + r.exec.jobs
         assert(stages <= maxS,
           s"$name executed $stages stages, budget $maxS — a shared " +
             "relation is probably being rebuilt per consumer")
@@ -123,11 +117,8 @@ class StageBudgetSpec extends AnyFunSuite {
       }
       info(report.mkString("\n"))
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqe0)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", co0)
-      spark.conf.set("spark.sql.shuffle.partitions", sh0)
+      measure.close()
       Caches.clear(spark)
-      spark.sparkContext.removeSparkListener(clock)
     }
   }
 }
